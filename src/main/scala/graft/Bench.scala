@@ -131,16 +131,14 @@ object Bench {
       allRuns += selected.map { case (name, fn) =>
         val t0 = System.nanoTime()
         // toRdd.count() materializes every output row (count() alone lets
-        // Catalyst prune the projections away) without driver transfer
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
+        // Catalyst prune the projections away) without driver transfer;
+        // one pin scope per query releases the caches its operators
+        // pinned once the query has been consumed
+        try graft.ext.Dedup.withPins { fn(spark, sfDir).queryExecution.toRdd.count() }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
           -1L
         }
-        // drop caches the dedup pair generators pinned for this query:
-        // 119 queries x 3 runs would otherwise accumulate pinned
-        // MEMORY_AND_DISK entries across the whole bench process
-        graft.ext.Dedup.releasePins()
         name -> (System.nanoTime() - t0) / 1e9
       }
       // reclaim the store-backed queries' scratch dirs BETWEEN runs

@@ -41,7 +41,6 @@ object PhaseProbe {
         even, "vec_id", "embedding", nlist = 8, seed = 42L, trainFraction = 0.25))
       time("pqTrain(solo)")(graft.ext.Pq.train(
         even, "vec_id", "embedding", m = 4, ksub = 4, iters = 2))
-      graft.ext.Dedup.releasePins()
       time("writeIvfPq")(VectorSink.writeIvfPq(store, "emb", even,
         "vec_id", "embedding", nlist = 8, m = 4, ksub = 4, iters = 2))
       time("append")(VectorSink.append(store, "emb", blob, "vec_id", "embedding"))

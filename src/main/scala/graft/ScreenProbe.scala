@@ -38,31 +38,33 @@ object ScreenProbe {
       .select("vec_id", "embedding")
     val dim = vecs.select(size(col("embedding"))).head().getInt(0)
     val n = vecs.count()
-    val exact = Dedup.pin(Dedup.embeddingCosinePairsTiled(
-      vecs, "vec_id", "embedding", threshold))
-    val nTrue = exact.count()
-    println(f"[screen] n=$n dim=$dim cosine_threshold=$threshold " +
-      f"full_triangle=${n * (n - 1) / 2}%d true_pairs=$nTrue%d")
-    val coded = Dedup.pin(vecs.select(col("vec_id").as("_id"),
-      graft.functions.VectorFunctions.packSignBits(col("embedding"))
-        .as("code")))
-    budgets.foreach { h =>
-      // per-budget pins scope with withPins — a global releasePins here
-      // would also drain `exact`/`coded`, recomputing them every budget
-      Dedup.withPins {
-        val banded = Dedup.pin(Dedup.bandedWords(
-          coded.select("_id", "code"), dim, h))
-        val cands = Dedup.bandSelfJoin(banded, Seq("widx", "blk", "blk_val"))
-          .select(col("a._id").as("id_a"), col("b._id").as("id_b"))
-          .filter(col("id_a") < col("id_b")).distinct().count()
-        // pairs satisfying BOTH contracts; true pairs above the budget
-        // are exactly what an in-exact-path screen would silently drop
-        val kept = Dedup.embeddingHammingPairs(
-          vecs, "vec_id", "embedding", threshold, h, dim)
-        val nKept = kept.count()
-        println(f"[screen] h=$h%3d band_candidates=$cands%10d " +
-          f"kept_true_pairs=$nKept%d lost_true_pairs=${nTrue - nKept}%d " +
-          f"candidate_cut=${n * (n - 1) / 2.0 / math.max(cands, 1)}%.1fx")
+    Dedup.withPins {
+      val exact = Dedup.pin(Dedup.embeddingCosinePairsTiled(
+        vecs, "vec_id", "embedding", threshold))
+      val nTrue = exact.count()
+      println(f"[screen] n=$n dim=$dim cosine_threshold=$threshold " +
+        f"full_triangle=${n * (n - 1) / 2}%d true_pairs=$nTrue%d")
+      val coded = Dedup.pin(vecs.select(col("vec_id").as("_id"),
+        graft.functions.VectorFunctions.packSignBits(col("embedding"))
+          .as("code")))
+      budgets.foreach { h =>
+        // per-budget pins get their own nested scope; `exact`/`coded`
+        // stay pinned in the outer one across every budget
+        Dedup.withPins {
+          val banded = Dedup.pin(Dedup.bandedWords(
+            coded.select("_id", "code"), dim, h))
+          val cands = Dedup.bandSelfJoin(banded, Seq("widx", "blk", "blk_val"))
+            .select(col("a._id").as("id_a"), col("b._id").as("id_b"))
+            .filter(col("id_a") < col("id_b")).distinct().count()
+          // pairs satisfying BOTH contracts; true pairs above the budget
+          // are exactly what an in-exact-path screen would silently drop
+          val kept = Dedup.embeddingHammingPairs(
+            vecs, "vec_id", "embedding", threshold, h, dim)
+          val nKept = kept.count()
+          println(f"[screen] h=$h%3d band_candidates=$cands%10d " +
+            f"kept_true_pairs=$nKept%d lost_true_pairs=${nTrue - nKept}%d " +
+            f"candidate_cut=${n * (n - 1) / 2.0 / math.max(cands, 1)}%.1fx")
+        }
       }
     }
     spark.stop()

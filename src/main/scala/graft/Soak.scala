@@ -73,11 +73,10 @@ object Soak {
       stageMax.clear(); stageSum.clear(); stageN.clear(); stageSite.clear()
       val t0 = System.nanoTime()
       val rows =
-        try fn(spark, dir).queryExecution.toRdd.count()
+        try graft.ext.Dedup.withPins { fn(spark, dir).queryExecution.toRdd.count() }
         catch { case e: Throwable =>
           System.err.println(s"[soak] $name FAILED: ${e.getMessage}"); -1L
         }
-      graft.ext.Dedup.releasePins()
       val wall = (System.nanoTime() - t0) / 1e9
       // listener events drain asynchronously; settle before reading
       // (the bus-drain API is private[spark] — a soak tool can wait)

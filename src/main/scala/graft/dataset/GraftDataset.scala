@@ -87,7 +87,6 @@ final class GraftDataset(val store: TableStore, val registry: SchemaRegistry,
     case Some(df) =>
       df.select("load_id").distinct().collect().map(_.getString(0)).sorted.toSeq
   }
-  def latestLoadId: Option[String] = loadIds.lastOption
 
   /** PIN a snapshot of a lakehouse table against retention — the
     * facade face of [[graft.write.TableStore.pinSnapshot]] (Iceberg tag
@@ -246,9 +245,6 @@ final class Relation(private val frame: DataFrame, val tableName: String,
     wrap(frame.orderBy(if (asc) col(column).asc else col(column).desc))
   def limit(n: Int): Relation = wrap(frame.limit(n))
   def head(n: Int = 5): Array[org.apache.spark.sql.Row] = frame.head(n)
-
-  def maxOf(column: String): DataFrame = frame.agg(max(col(column)).as(column))
-  def minOf(column: String): DataFrame = frame.agg(min(col(column)).as(column))
 
   /** Reference-driven join (relation.py:361-440, _join.py): the ON clause
     * comes from the schema registry — declared references first, then the

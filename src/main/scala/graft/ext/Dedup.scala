@@ -26,14 +26,6 @@ object Dedup {
       .agg(min(col(id)).as("keeper_id"),
         count(lit(1)).as("dup_count"))
 
-  /** Rows that survive exact dedup (the keeper of each group). */
-  def exactDedup(docs: DataFrame, id: String, text: String): DataFrame = {
-    val w = Window.partitionBy(TextOps.fingerprint(col(text)))
-      .orderBy(col(id))
-    docs.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-  }
-
   /** CORPUS RESOLUTION — the operation the pair generators exist for:
     * collapse each near-duplicate cluster to ONE canonical document.
     * `pairs` (id_a, id_b) from any generator → connected components →
@@ -84,61 +76,48 @@ object Dedup {
       .select(col("_id"),
         explode(TextOps.shinglesFromTokens(col("_ts"), n)).as("shingle"))
 
-  /** Caches pinned by the pair generators. `persist` registers the plan
-    * with the session's CacheManager, which holds it until an explicit
-    * unpersist — there is no automatic reclamation — so a long-lived
-    * service calling the pair generators per batch MUST release pins
-    * after consuming each result or the cache grows per call. One-shot
-    * jobs (the bench/verify processes) can ignore it.
-    *
-    * Preferred lifecycle: [[withPins]] — pins created inside the block
-    * are scoped to it and released when it exits, success or failure.
-    * Pins created OUTSIDE any scope land in a process-global fallback
-    * queue drained by [[releasePins]]; note the global queue is shared,
-    * so concurrent pipelines using it can release each other's pins
-    * (harmless for correctness — Spark recomputes — but the pinning
-    * benefit is lost; scope per pipeline to avoid it). */
-  private val pins =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
+  /** Caches pinned by the pair generators and by the other operators
+    * whose plans fan out over one frame. `persist` registers a plan with
+    * the session's CacheManager, which holds it until an explicit
+    * unpersist, so every pin belongs to a [[withPins]] scope and is
+    * released when that scope exits. One rule covers every pin site:
+    *  - an EAGER entry point (it runs its own actions on a pin and
+    *    returns nothing lazy that reads it) wraps its body in
+    *    [[withPins]];
+    *  - a LAZY generator (it returns a frame over its pins) pins into
+    *    the caller's scope, and the caller consumes the frame inside it;
+    *  - a pin made outside any scope is not persisted: the frame comes
+    *    back unchanged and its consumers recompute it, as frames that
+    *    escape a scope already do. */
   private val pinScope =
-    new ThreadLocal[java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
+    new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]()
 
-  /** Run `body` with its own pin scope: every cache the pair generators
-    * pin inside is unpersisted when the block exits — including on
-    * exception. Consume the pair frames INSIDE the block (they are lazy;
-    * escaping frames recompute without the pins). Scopes are per-thread,
-    * so concurrent pipelines cannot release each other's pins. */
+  /** Run `body` with its own pin scope: every cache pinned inside is
+    * unpersisted when the block exits, including on exception. Consume
+    * the lazy frames INSIDE the block. Scopes are per-thread, so
+    * concurrent pipelines cannot release each other's pins. */
   def withPins[A](body: => A): A = {
     val prev = pinScope.get()
-    val mine = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    val mine = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     pinScope.set(mine)
     try body
     finally {
       pinScope.set(prev)
-      drain(mine)
+      mine.foreach(_.unpersist(blocking = false))
     }
   }
 
-  /** Unpersist every cache pinned OUTSIDE a [[withPins]] scope so far.
-    * Call after the returned pair frames have been fully consumed. */
-  def releasePins(): Unit = drain(pins)
-
-  private def drain(q: java.util.concurrent.ConcurrentLinkedQueue[DataFrame]): Unit = {
-    var df = q.poll()
-    while (df != null) {
-      df.unpersist(blocking = false)
-      df = q.poll()
-    }
-  }
-
-  /** Library-visible so sibling operators with the same fan-out shape
-    * (e.g. [[TextIR.lmPerplexityBands]], [[graft.operators.Sketches]])
-    * share one pin lifecycle. */
-  private[graft] def pin(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Option(pinScope.get()).getOrElse(pins).add(p)
-    p
+  /** Pin `df` (MEMORY_AND_DISK) into the current [[withPins]] scope;
+    * outside any scope `df` comes back unpersisted. Library-visible so
+    * sibling operators with the same fan-out shape (e.g.
+    * [[TextIR.lmPerplexityBands]], [[graft.operators.Sketches]]) share
+    * the one lifecycle. */
+  private[graft] def pin(df: DataFrame): DataFrame = pinScope.get() match {
+    case null => df
+    case scope =>
+      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      scope += p
+      p
   }
 
   /** [[shingleIndex]] pinned for plans that fan out over it: the pair
@@ -146,7 +125,7 @@ object Dedup {
     * candidate join and the exact verify — unpinned, the tokenizer +
     * explode (the CPU hog) re-executes once per branch (6x in
     * containment; measured as the most expensive non-merge bench
-    * query). Lifecycle: see [[releasePins]]. */
+    * query). Lifecycle: see [[pin]]. */
   private def pinnedShingleIndex(docs: DataFrame, id: String, text: String,
       n: Int): DataFrame =
     pin(shingleIndex(docs, id, text, n))
@@ -285,16 +264,6 @@ object Dedup {
     * is itself expensive. */
   private def pinnedCand(cand: DataFrame): DataFrame = pin(cand)
 
-  /** MinHash signature of a shingle set: `perms` independent minimums
-    * of seeded xxhash64 over the shingles. Returned as an array column.
-    * NOTE: per-row HOF form, kept for expression-level use on an
-    * already-materialized array; [[minhashLshPairs]] uses the
-    * aggregate form (min over the exploded shingle index), which stays
-    * fully inside whole-stage codegen. */
-  def minhashSignature(shingleSet: Column, perms: Int): Column =
-    transform(sequence(lit(0), lit(perms - 1)), seed =>
-      array_min(transform(shingleSet, s => xxhash64(s, seed))))
-
   /** MinHash + LSH banding dedup.
     *
     * `perms` hashes split into `bands` bands of `perms/bands` rows; docs
@@ -421,14 +390,12 @@ object Dedup {
     * (block_idx, block_value) has perfect recall; hamming is then
     * verified exactly via bit_count(xor).
     *
-    * PIN LIFECYCLE (r14): the band table is pinned while the returned
-    * frame is consumed (it feeds the hot-key count and both join
-    * sides) — a long-lived caller wraps each consume in
-    * [[withPins]] or calls [[releasePins]] after it, the standard
-    * pair-generator contract ([[pins]]); one-shot jobs can ignore it.
-    * Same note applies to every generator riding [[hammingPairs]] /
-    * [[hammingPairsWide]] ([[Phash.pairs]], [[AudioFp.pairs]],
-    * [[embeddingHammingPairs]]).
+    * PIN LIFECYCLE: a lazy generator ([[pin]]). The band table feeds
+    * the hot-key count and both join sides, so it is pinned into the
+    * caller's [[withPins]] scope; consume the returned frame inside that
+    * scope. Same note applies to every generator riding
+    * [[hammingPairs]] / [[hammingPairsWide]] ([[Phash.pairs]],
+    * [[AudioFp.pairs]], [[embeddingHammingPairs]]).
     */
   def simhashPairs(docs: DataFrame, id: String, text: String,
       maxHamming: Int = 3): DataFrame =

@@ -74,74 +74,21 @@ object IncrementalDedup {
     }
   }
 
-  /** Stream-lifetime handle on a STATIC persisted minhash index: the
-    * meta is validated ONCE at open, and the band table + corpus docs
-    * are read once and pinned (MEMORY_AND_DISK), so every per-batch
-    * [[checkBatch]] probes the pinned frames instead of re-reading the
-    * store's parquet segments (+ one meta head() job) per micro-batch —
-    * at N batches the index is scanned once, not N times (§6 / §2.4:
-    * the FAISS searcher-resident serving shape; the seed side is
-    * bounded by the seed contract, so the pin is seed-sized, never
-    * unbounded-corpus-sized). STATIC contract: the handle snapshots the
-    * index at open — growing the index while a session is open is
-    * outside the contract (the streaming curate gates screen against a
-    * static seed by design; a caller composing appendBatch must reopen).
-    * The caller owns the lifecycle: `close()` releases the pins (wrap
-    * the stream drain in try/finally). Pins are deliberately NOT routed
-    * through [[Dedup.pin]]: the per-batch [[Dedup.withPins]] scopes
-    * must not release the stream-lifetime frames. */
-  final class MinhashIndex private[IncrementalDedup](
-      private[ext] val bands: DataFrame,
-      private[ext] val docs: DataFrame,
-      val n: Int, val perms: Int, val bandCount: Int) {
-    def close(): Unit = {
-      bands.unpersist(blocking = false)
-      docs.unpersist(blocking = false)
-    }
-  }
-
-  /** Open a [[MinhashIndex]] session over a persisted index (see the
-    * class doc for the static contract and pin lifecycle). */
-  def openIndex(store: TableStore, table: String, n: Int = 3,
-      perms: Int = 64, bands: Int = 16): MinhashIndex = {
-    requireMeta(store, table, n, perms, bands)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    new MinhashIndex(
-      store.read(s"${table}__minhash_bands").persist(lvl),
-      store.read(table).persist(lvl), n, perms, bands)
-  }
-
   /** Near-dup pairs of a NEW batch against the indexed corpus:
     * (new_id, old_id, jaccard >= threshold). Batch ids must be
     * disjoint from indexed ids (the corpus id contract).
     *
-    * PIN LIFECYCLE: the returned frame is lazy and the batch's shingle
-    * index is pinned into the AMBIENT pin scope while it is consumed —
-    * a long-lived caller (per-micro-batch screening) must wrap each
-    * consume in [[Dedup.withPins]] (or call [[Dedup.releasePins]]
-    * after it), or each batch permanently adds a persisted index to
-    * the cache. One-shot jobs can ignore this. Per-micro-batch callers
-    * should check through an open [[MinhashIndex]] session instead —
-    * this store-direct form re-reads the index segments on every call. */
+    * PIN LIFECYCLE: a lazy generator ([[Dedup.pin]]). The batch's
+    * shingle index and candidate set are pinned into the caller's
+    * [[Dedup.withPins]] scope; a per-micro-batch caller wraps each
+    * batch's consume in its own scope. Outside any scope nothing is
+    * pinned and the shared branches recompute. */
   def checkBatch(store: TableStore, table: String, batch: DataFrame,
       id: String, text: String, n: Int = 3, threshold: Double = 0.9,
       perms: Int = 64, bands: Int = 16): DataFrame = {
     requireMeta(store, table, n, perms, bands)
-    checkBatchAgainst(store.read(s"${table}__minhash_bands"),
-      store.read(table), batch, id, text, n, threshold, perms, bands)
-  }
-
-  /** [[checkBatch]] against an open session: identical plan shape, but
-    * the band/corpus sides read the session's pinned frames (and the
-    * meta was validated at open) — zero per-batch store reads. */
-  def checkBatch(idx: MinhashIndex, batch: DataFrame, id: String,
-      text: String, threshold: Double): DataFrame =
-    checkBatchAgainst(idx.bands, idx.docs, batch, id, text,
-      idx.n, threshold, idx.perms, idx.bandCount)
-
-  private def checkBatchAgainst(oldBands: DataFrame, oldDocs: DataFrame,
-      batch: DataFrame, id: String, text: String, n: Int,
-      threshold: Double, perms: Int, bands: Int): DataFrame = {
+    val oldBands = store.read(s"${table}__minhash_bands")
+    val oldDocs = store.read(table)
     // re-spread the batch before the compute-dense shingling/banding —
     // the [[checkVectorBatch]] discipline on the text plane: a
     // micro-batch arrives as ONE file (one row group — one task), and

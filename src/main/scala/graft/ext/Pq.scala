@@ -48,7 +48,7 @@ object Pq {
     * construction, so ksub ≤ 256; a larger band would switch to the
     * [[graft.functions.CentroidArgMin]] matrix path per subspace). */
   def train(vecs: DataFrame, id: String, vec: String,
-      m: Int, ksub: Int, iters: Int): PqModel = {
+      m: Int, ksub: Int, iters: Int): PqModel = Dedup.withPins {
     require(ksub >= 1 && ksub <= 64, "ksub in [1, 64]")
     require(iters >= 1, "at least one round")
     val v = Dedup.pin(vecs.select(col(id).as("__id"),

@@ -133,8 +133,8 @@ object TextIR {
     // the tokenized corpus fans out to four consumers (unigram counts,
     // bigram pairs, first-token frame, and through them the count
     // joins) — pin it, or the scan+tokenize re-executes per branch
-    // (lifecycle shared with Dedup's pin scopes; Bench/Verify release
-    // pins per query)
+    // (a lazy generator: the pins land in the caller's Dedup.withPins
+    // scope)
     val toks = Dedup.pin(docs
       .select(col(id), TextOps.tokens(col(text)).as("_toks"))
       .where(length(element_at(col("_toks"), 1)) > 0))

@@ -72,9 +72,6 @@ object Coerce {
   def textToTimestamp(c: Column): Column = trim(c).try_cast(TimestampType)
   def textToDate(c: Column): Column = trim(c).try_cast(DateType)
 
-  /** json ↔ text (type_helpers.py:181,221). */
-  def anyToJsonText(c: Column): Column = to_json(c)
-
   /** Best-effort coercion of a column to a dlt type; null when impossible. */
   def to(c: Column, t: DltType): Column = t match {
     case DltType.Bigint => textToBigint(c.cast(StringType))

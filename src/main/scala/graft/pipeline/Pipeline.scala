@@ -30,12 +30,11 @@ final case class Resource(
     driftCheck: Option[Resource.DriftCheck] = None,
     retention: Option[Resource.Retention] = None) {
 
-  /** MapItem (items_transform.py:103-122) — 1→1 transform. */
+  /** MapItem (items_transform.py:103-122) — 1→1 transform; also
+    * YieldMapItem (items_transform.py:125-145), 1→N, when `f` explodes. */
   def addMap(f: DataFrame => DataFrame): Resource = copy(frame = f(frame))
   /** FilterItem (items_transform.py:77-100). */
   def addFilter(cond: Column): Resource = copy(frame = frame.filter(cond))
-  /** YieldMapItem (items_transform.py:125-145) — 1→N. */
-  def addYieldMap(f: DataFrame => DataFrame): Resource = copy(frame = f(frame))
   /** LimitItem (items_transform.py:174-239): row-count limit. The
     * reference's max_time / max_pages variants bound the GENERATOR, so
     * their Spark analog lives at the source: [[graft.sources.Rest
@@ -99,7 +98,6 @@ final case class Resource(
     * The distinct value set must be small (it becomes the table list). */
   def withTableDispatch(column: String): Resource = copy(dispatchColumn = Some(column))
 
-  def withHints(h: TableHints): Resource = copy(hints = h)
   def withMerge(cfg: MergeConfig, disposition: String = "merge"): Resource =
     copy(mergeConfig = cfg, hints = hints.copy(writeDisposition = disposition,
       primaryKey = cfg.primaryKey, mergeKey = cfg.mergeKey))
@@ -674,10 +672,19 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
       case other => throw new IllegalArgumentException(s"unknown disposition $other")
     }
 
-    // register evolved schemas + advance incremental state
+    // register evolved schemas + advance incremental state. A child
+    // table's parent is the longest other table of this load whose name
+    // plus `__` prefixes it, so Relation.withLoadIdCol / fromLoads walk
+    // `orders__lines` up to `orders`
     enforced.foreach { case (t, df) =>
-      registry.evolve(t, df.schema)
-      if (t == tableName) registry.register(t, registry.get(t).get._1, r.hints)
+      val schema = registry.evolve(t, df.schema)
+      if (t == tableName) registry.register(t, schema, r.hints)
+      else enforced.keys.filter(p => p != t && t.startsWith(p + "__"))
+        .maxByOption(_.length).foreach { parent =>
+          val hints = registry.hints(t)
+          if (!hints.parent.contains(parent))
+            registry.register(t, schema, hints.copy(parent = Some(parent)))
+        }
     }
     // profiled drift gate: seed (first load) or fold this PASSING
     // load's gate values into the rolling baseline, in two halves.

@@ -29,9 +29,6 @@ object DltType {
   val all: Seq[DltType] = Seq(Text, Double, Bool, Timestamp, Bigint, Binary,
     Json, Decimal, Wei, Date, Time)
 
-  def fromName(n: String): DltType =
-    all.find(_.name == n).getOrElse(throw new IllegalArgumentException(s"unknown dlt type: $n"))
-
   /** dlt type (+ optional precision/scale/timezone hints) → Spark DataType. */
   def toSpark(t: DltType, precision: Option[Int] = None, scale: Option[Int] = None,
               timezone: Boolean = true): DataType = t match {

@@ -77,7 +77,6 @@ final class SchemaRegistry(val name: String) {
 
   def get(table: String): Option[(StructType, TableHints)] =
     tables.get(Naming.normalizeTableName(table))
-  def tableNames: Seq[String] = tables.keys.toSeq
   def hints(table: String): TableHints =
     get(table).map(_._2).getOrElse(TableHints())
   def lineage: List[String] = previousHashes

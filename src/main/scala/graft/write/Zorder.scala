@@ -61,7 +61,7 @@ object Zorder {
     * values); the boundary buckets stay balanced to the sketch's
     * relative error. */
   def overwrite(store: TableStore, table: String, df: DataFrame,
-      cols: Seq[String], segments: Int, bits: Int = 16): Unit = {
+      cols: Seq[String], segments: Int, bits: Int = 16): Unit = graft.ext.Dedup.withPins {
     require(segments >= 2, "need at least two segments to skip any")
     val keyed = graft.ext.Dedup.pin(withKey(df, cols, bits))
     val bounds = keyed.stat

@@ -69,7 +69,6 @@ class BpeFuzzSpec extends SparkSpec {
           r.getString(3), r.getLong(4))).toSeq
       val (want, _) = refTrain(corpus, rounds = 6)
       assert(got === want, s"merge table diverged for seed $seed: $corpus")
-      Dedup.releasePins()
     }
   }
 
@@ -87,7 +86,6 @@ class BpeFuzzSpec extends SparkSpec {
           ws.map(w => vocab(w).trim.split(" ").length.toLong).sum)
       }
       assert(got === want, s"segment counts diverged for seed $seed")
-      Dedup.releasePins()
     }
   }
 }

@@ -59,7 +59,6 @@ class ClusteringSpec extends SparkSpec {
       Clustering.lloydAssign(empty, "vec_id", "embedding", k = 2, iters = 1)
     }
     assert(e.getMessage.contains("non-empty"))
-    Dedup.releasePins()
   }
 
   test("semanticPairs: within-cluster pairs only (the SemDeDup trade)") {
@@ -72,35 +71,41 @@ class ClusteringSpec extends SparkSpec {
       k = 2, iters = 3, threshold = 0.9)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     assert(out === Set((0L, 1L, 1.0), (2L, 3L, 1.0)))
-    Dedup.releasePins()
   }
 
   test("matrix argmin path is byte-identical to the literal-array path") {
-    val v = Dedup.pin(vecs(
-      0L -> Seq(0.0, 0.0), 1L -> Seq(0.3, 0.9), 2L -> Seq(1.0, 0.0),
-      3L -> Seq(5.0, 5.0), 4L -> Seq(2.5, 2.5), 5L -> Seq(1.0, 1.0))
-      .selectExpr("vec_id as __id", "cast(embedding as array<double>) as __e"))
-    val cents = Array(Array(0.0, 0.0), Array(5.0, 5.0), Array(2.5, 2.5))
-    def run(force: Boolean) = Clustering.assign(v, cents, forceMatrix = force)
-      .select("__id", "__cl", "__d").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1).toSeq
-    assert(run(force = true) === run(force = false))
-    Dedup.releasePins()
+    // pinned inside a scope, so both paths run as compiled plans over a
+    // cached input instead of being folded into a local relation
+    Dedup.withPins {
+      val v = Dedup.pin(vecs(
+        0L -> Seq(0.0, 0.0), 1L -> Seq(0.3, 0.9), 2L -> Seq(1.0, 0.0),
+        3L -> Seq(5.0, 5.0), 4L -> Seq(2.5, 2.5), 5L -> Seq(1.0, 1.0))
+        .selectExpr("vec_id as __id", "cast(embedding as array<double>) as __e"))
+      val cents = Array(Array(0.0, 0.0), Array(5.0, 5.0), Array(2.5, 2.5))
+      def run(force: Boolean) = Clustering.assign(v, cents, forceMatrix = force)
+        .select("__id", "__cl", "__d").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1).toSeq
+      assert(run(force = true) === run(force = false))
+    }
   }
 
   test("k=1024 assignment plan carries no 1024-wide expression array") {
-    val many = (0L until 1100L).map(i =>
-      (i, Seq((i % 37).toDouble, (i % 11).toDouble))).toDF("vec_id", "embedding")
-    val out = Clustering.lloydAssign(many, "vec_id", "embedding",
-      k = 1024, iters = 1)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("graft_centroid_argmin"), s"matrix path not taken:\n${plan.take(2000)}")
-    assert(!plan.contains("graft_sqdist"), "literal-array path leaked into a k>threshold plan")
-    // the plan string itself must stay small — the matrix rides as a
-    // reference object, not as k inlined literals
-    assert(plan.length < 100000, s"plan blew up: ${plan.length} chars")
-    assert(out.limit(5).count() === 5)
-    Dedup.releasePins()
+    // consumed inside a pin scope, like any lazy generator: the pinned
+    // input is what keeps the optimizer from folding the whole
+    // assignment into a local relation
+    Dedup.withPins {
+      val many = (0L until 1100L).map(i =>
+        (i, Seq((i % 37).toDouble, (i % 11).toDouble))).toDF("vec_id", "embedding")
+      val out = Clustering.lloydAssign(many, "vec_id", "embedding",
+        k = 1024, iters = 1)
+      val plan = out.queryExecution.executedPlan.toString
+      assert(plan.contains("graft_centroid_argmin"), s"matrix path not taken:\n${plan.take(2000)}")
+      assert(!plan.contains("graft_sqdist"), "literal-array path leaked into a k>threshold plan")
+      // the plan string itself must stay small — the matrix rides as a
+      // reference object, not as k inlined literals
+      assert(plan.length < 100000, s"plan blew up: ${plan.length} chars")
+      assert(out.limit(5).count() === 5)
+    }
   }
 
   test("the assignment pass is map-only: no exchange below the final sort") {
@@ -114,6 +119,5 @@ class ClusteringSpec extends SparkSpec {
     val exchanges = plan.collect { case e: Exchange => e }
     assert(exchanges.size <= 1, s"assignment shuffled:\n$plan")
     assert(!plan.toString.contains("Join"), s"assignment joined:\n$plan")
-    Dedup.releasePins()
   }
 }

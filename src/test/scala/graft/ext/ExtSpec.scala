@@ -79,6 +79,10 @@ class ExtSpec extends SparkSpec {
       }
     }
     assert(cm.isEmpty, "a failing scope must still release its pins")
+    // outside any scope a pin persists nothing
+    Dedup.pin(docs).count()
+    Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 0.5).count()
+    assert(cm.isEmpty, "an unscoped pin must not persist its frame")
   }
 
   test("resolveNearDups keeps one canonical doc per cluster") {

@@ -17,11 +17,19 @@ class PipelineSpec extends SparkSpec {
   test("append pipeline run: normalize + system columns + loads table") {
     val p = newPipeline()
     val df = Seq(("a", 1), ("b", 2)).toDF("k", "v")
-    val written = p.run(Seq(Resource("My Table", df)), "1")
+    val written = p.run(Seq(Resource("My Table", df),
+      // MapItem (1→1), YieldMapItem (1→N through explode), FilterItem
+      Resource("mapped", df).addMap(_.withColumn("v10", $"v" * 10)),
+      Resource("yielded", df).addMap(_.withColumn("n", explode(array(lit(1), lit(2))))),
+      Resource("filtered", df).addFilter($"v" > 1)), "1")
     assert(written("My Table") == Seq("my_table"))
     val out = p.store.read("my_table")
     assert(out.columns.toSet == Set("k", "v", "_dlt_id", "_dlt_load_id"))
     assert(out.count() == 2)
+    assert(p.store.read("mapped").select("v10").as[Int].collect().sorted.toSeq == Seq(10, 20))
+    assert(p.store.read("yielded").select("k", "n").as[(String, Int)].collect().sorted.toSeq ==
+      Seq(("a", 1), ("a", 2), ("b", 1), ("b", 2)))
+    assert(p.store.read("filtered").select("k").as[String].collect().toSeq == Seq("b"))
     assert(p.dataset.loadIds == Seq("1"))
   }
 
@@ -78,6 +86,21 @@ class PipelineSpec extends SparkSpec {
     // row counts
     val rc = ds.rowCounts()
     assert(rc.filter($"table_name" === "fact__tags").select("row_count").as[Long].head() == 3L)
+  }
+
+  test("fromLoads on pipeline child tables walks the parent chain") {
+    val p = newPipeline()
+    // orders → orders__lines (one row per sku) → orders__lines__tags
+    def res(rows: Seq[(Long, String)]) = Resource("orders", rows.toDF("id", "skus")
+      .selectExpr("id", "transform(split(skus, ','), " +
+        "s -> named_struct('sku', s, 'tags', array(s, upper(s)))) as lines"))
+    p.run(Seq(res(Seq((1L, "a,b"), (2L, "c")))), "1")
+    p.run(Seq(res(Seq((3L, "d,e")))), "2")
+    val ds = p.dataset
+    val lines = ds.table("orders__lines").fromLoads(Seq("2")).df()
+    assert(lines.select("sku").as[String].collect().sorted.toSeq == Seq("d", "e"))
+    val tags = ds.table("orders__lines__tags").fromLoads(Seq("2")).df()
+    assert(tags.select("value").as[String].collect().sorted.toSeq == Seq("D", "E", "d", "e"))
   }
 
   test("tables contract DiscardValue silently skips a new root table") {

@@ -17,6 +17,14 @@ class SourcesSpec extends SparkSpec {
     assert(back.count() == 2)
     assert(back.columns.contains("_file_name"))
     assert(back.select("id").as[Int].collect().sorted.toSeq == Seq(1, 2))
+    // the jsonl and parquet readers carry the same provenance column
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.json(s"$dir/jsonl")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/pq")
+    Seq(Filesystem.readJsonl(spark, s"$dir/jsonl"),
+        Filesystem.readParquet(spark, s"$dir/pq")).foreach { r =>
+      assert(r.columns.contains("_file_name"))
+      assert(r.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    }
   }
 
   test("filesystem: file listing returns FileItem metadata") {

@@ -257,12 +257,17 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedupByKeyUnbounded keeps one row per key") {
-    val store = new TableStore(tmp("st-dd"), spark)
     val src = Streaming.fileStream(spark, writeSourceDir())
       .withColumn("_c", explode(array(lit(1), lit(2)))).drop("_c")
-    Streaming.drainAvailableNow(Streaming.dedupByKeyUnbounded(src, Seq("id")))(
-      (b, _) => store.append("dd", b))
-    assert(store.read("dd").select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+      .withColumn("ts", timestamp_seconds(col("v")))
+    // the same input through the watermarked dedupByKey
+    Seq("dd" -> Streaming.dedupByKeyUnbounded(src, Seq("id")),
+        "ddw" -> Streaming.dedupByKey(src, "ts", "1 hour", Seq("id"))).foreach {
+      case (t, deduped) =>
+        val store = new TableStore(tmp(s"st-$t"), spark)
+        Streaming.drainAvailableNow(deduped)((b, _) => store.append(t, b))
+        assert(store.read(t).select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    }
   }
 
   test("statefulCounts keeps running per-key state across batches") {
