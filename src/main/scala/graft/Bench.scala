@@ -1,18 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Harness.session()
     // Contention sentinel: the round-6 gate registered 335 s purely from
     // box contention (judge quiet-box median: 210 s, same code). Record
     // (a) the 1-min load average and (b) a fixed-work spin calibration —
@@ -23,7 +14,7 @@ object Bench {
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     def spinCalibrateMs(): Double = {
-      val n = cpus.toInt.max(1)
+      val n = cpus.max(1)
       val work = 200000000L // ~0.3-1 s of adds/xors per thread on a quiet core
       val threads = (1 to n).map { i =>
         new Thread(() => {
@@ -129,17 +120,7 @@ object Bench {
     val allRuns = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
     (1 to runs).foreach { _ =>
       allRuns += selected.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        // toRdd.count() materializes every output row (count() alone lets
-        // Catalyst prune the projections away) without driver transfer;
-        // one pin scope per query releases the caches its operators
-        // pinned once the query has been consumed
-        try graft.ext.Dedup.withPins { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-          -1L
-        }
-        name -> (System.nanoTime() - t0) / 1e9
+        name -> Harness.run(spark, "bench", name, fn, sfDir)._2
       }
       // reclaim the store-backed queries' scratch dirs BETWEEN runs
       // (every query in the run just materialized): 3 runs × ~30

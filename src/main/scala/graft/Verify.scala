@@ -1,22 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark cannot
-      // represent; read as LongType epoch-nanos (= DuckDB epoch_ns).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val selected = only.fold(SparkEntry.queries)(names =>
@@ -36,7 +25,7 @@ object Verify {
     // round's correctness artifact
     val dumpThreads = sys.env.get("SPARK_GRAFT_DUMP_THREADS")
       .flatMap(_.trim.toIntOption).getOrElse(3).max(1)
-    val work = new java.util.concurrent.ConcurrentLinkedQueue[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
+    val work = new java.util.concurrent.ConcurrentLinkedQueue[(String, queries.Q)]()
     selected.foreach(work.add)
     val total = selected.size
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -72,6 +61,8 @@ object Verify {
     }
     workers.foreach(_.start())
     workers.foreach(_.join())
+    // the workers share one cache manager, so the leak check runs once
+    Harness.checkNoLeak(spark, "verify", "dump")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

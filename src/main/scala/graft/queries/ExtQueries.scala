@@ -1699,8 +1699,7 @@ object ExtQueries {
     // stop-word floor lifted (the synthetic corpus has no English stop
     // words; bands are corpus-tuned in the published pipelines).
     // Corpus/benchmark/config construction lives in [[AssemblyFixture]]
-    // — ONE owner shared by the three gates and the PlanDump evidence
-    // case, so the committed plan dumps cannot drift from the gates.
+    // — ONE owner shared by the three gates.
     "ops_corpus_assembly" -> q { c =>
       import graft.ext.CorpusAssembly
       val (corpus, bench) = AssemblyFixture.corpusAndBench(c)
@@ -3341,10 +3340,8 @@ object ExtQueries {
 }
 
 /** The shared corpus/benchmark/config fixture of the three
-  * `ops_corpus_assembly*` gates AND the `assembly_packed` PlanDump
-  * evidence case — one owner, so the committed plan dumps can never
-  * capture a configuration the gates no longer run. The v2 gate layers
-  * its extra stages with `baseCfg.copy(...)`. */
+  * `ops_corpus_assembly*` gates. The v2 gate layers its extra stages
+  * with `baseCfg.copy(...)`. */
 private[graft] object AssemblyFixture {
   import graft.ext.{AssemblyConfig, TextOps}
 

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ext.Dedup
 import graft.normalize.{NormalizeConfig, Normalizer, RootIdType}
 import graft.write._
 
@@ -102,37 +103,30 @@ object MergeQueries {
       // array_sort order, a constant shifts every element alike). The
       // two-load protocol then pays the extract once, as a real
       // pipeline pinning its extracted package would.
-      val li = c.t("lineitem")
+      val li = Dedup.pin(c.t("lineitem")
         .groupBy(col("l_orderkey"))
         .agg(array_sort(collect_list(struct(
-          col("l_linenumber"), col("l_quantity")))).as("items0"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          col("l_linenumber"), col("l_quantity")))).as("items0")))
 
       def chain(keyFilter: org.apache.spark.sql.Column, qtyBump: Double,
-                loadId: String): (TableChain, DataFrame) = {
-        val doc = c.t("orders").filter(keyFilter)
+                loadId: String): TableChain = {
+        val doc = Dedup.pin(c.t("orders").filter(keyFilter)
           .join(li, col("o_orderkey") === col("l_orderkey"), "inner")
           .select(col("o_orderkey"),
             transform(col("items0"), x => struct(
               x.getField("l_linenumber").as("l_linenumber"),
               (x.getField("l_quantity") + qtyBump).as("l_quantity")))
-              .as("items"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              .as("items")))
         val tables = Normalizer.normalize(doc, "ord",
           NormalizeConfig(loadId = loadId,
             rootIdType = RootIdType.KeyHash(Seq("o_orderkey")),
             propagate = Map("_dlt_id" -> "_dlt_root_id",
               "o_orderkey" -> "order_key")))
-        (TableChain("ord", tables("ord"), Map("ord__items" -> tables("ord__items"))), doc)
+        TableChain("ord", tables("ord"), Map("ord__items" -> tables("ord__items")))
       }
 
-      val (chain1, doc1) = chain(col("o_orderkey") % 3 === 1, 0.0, "1")
-      MergeChain.deleteInsert(store, chain1, cfg, "1")
-      doc1.unpersist(blocking = false)
-      val (chain2, doc2) = chain(col("o_orderkey") % 2 === 0, 100.0, "2")
-      MergeChain.deleteInsert(store, chain2, cfg, "2")
-      doc2.unpersist(blocking = false)
-      li.unpersist(blocking = false)
+      MergeChain.deleteInsert(store, chain(col("o_orderkey") % 3 === 1, 0.0, "1"), cfg, "1")
+      MergeChain.deleteInsert(store, chain(col("o_orderkey") % 2 === 0, 100.0, "2"), cfg, "2")
       store.read("ord__items")
         .select("order_key", "_dlt_list_idx", "l_linenumber", "l_quantity")
         .orderBy("order_key", "_dlt_list_idx")
