@@ -193,15 +193,14 @@ object Similarity {
         .setFeaturesCol("__fv").setPredictionCol("__list")
         .fit(train.withColumn("__fv", array_to_vector(col(vec))))
     if (trainFraction >= 1.0) fit(corpus)
-    else {
+    else Dedup.withPins {
       // pin the sample ONCE: the size guard's count doubles as the cache
       // materialization KMeans's iterative passes then reuse — the
       // previous limit-count was a separate uncached sample scan per
       // index build, pure overhead at scale
-      val pinned = graft.operators.HashSplit.sample(corpus, id, trainFraction)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try fit(if (pinned.count() >= 4L * nlist) pinned else corpus)
-      finally pinned.unpersist(blocking = false)
+      val pinned = Dedup.pin(
+        graft.operators.HashSplit.sample(corpus, id, trainFraction))
+      fit(if (pinned.count() >= 4L * nlist) pinned else corpus)
     }
   }
 

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.ext.Dedup
 
 /** Connected components over an undirected edge list — the step that
   * turns pairwise near-duplicate MATCHES into duplicate CLUSTERS (pick
@@ -33,16 +34,17 @@ object ConnectedComponents {
     * The iteration shape is identical in both. */
   def components(edges: DataFrame, srcCol: String, dstCol: String,
       idCol: String = "id", maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = Dedup.withPins {
     checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
     def snap(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(eager = true)
       else df.localCheckpoint(true)
-    // symmetrize once: propagation then only needs one direction
-    val sym = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    // symmetrize once: propagation then only needs one direction. The
+    // pin is eager: every round's labels are checkpointed, so the
+    // returned frame never reads it
+    val sym = Dedup.pin(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .unionByName(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // init = round 1's result directly: label₀ = min(id, neighbors).
     // The previous identity init (label₀ = id) spent a whole
     // join+checkpoint round computing exactly this aggregate — one
@@ -85,7 +87,6 @@ object ConnectedComponents {
       labels = next.select("id", "label")
       iter += 1
     }
-    sym.unpersist(blocking = false)
     labels.select(col("id").as(idCol), col("label").as("component"))
   }
 
@@ -113,8 +114,8 @@ object ConnectedComponents {
     val orderable = srcT == dstT && (integral(srcT) || srcT == StringType)
     if (!orderable)
       return components(edges, srcCol, dstCol, idCol, maxIter, checkpointDir)
-    val pinned = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Dedup.withPins {
+      val pinned = Dedup.pin(edges)
       if (pinned.count() > collectThreshold)
         components(pinned, srcCol, dstCol, idCol, maxIter, checkpointDir)
       else {
@@ -152,6 +153,6 @@ object ConnectedComponents {
           new java.util.ArrayList[org.apache.spark.sql.Row](
             scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
       }
-    } finally pinned.unpersist(blocking = false)
+    }
   }
 }

@@ -1,8 +1,11 @@
 package graft.pipeline
 
+import org.apache.spark.GraftAccess
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.dataset.GraftDataset
+import graft.ext.Dedup
 import graft.incremental.{Incremental, StateStore}
 import graft.normalize.{Ids, NormalizeConfig, Normalizer, RootIdType}
 import graft.schema.{Contracts, Naming, SchemaRegistry, TableHints}
@@ -302,12 +305,7 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
           "split the resource per routing value for a custom destination")
     }
     val out = resources.map { r0 =>
-      // time budget: same semantics as runOne — past the deadline the
-      // extraction admits nothing, but the (empty) load still flows
-      val r =
-        if (r0.deadlineNanos.exists(System.nanoTime() >= _))
-          r0.copy(frame = r0.frame.limit(0))
-        else r0
+      val r = admitted(r0)
       // cursor state, boundary tables and metrics key under the
       // PIPELINE's own normalization — the SAME key the store path
       // uses, so the cursor truly is destination-agnostic: re-routing a
@@ -316,31 +314,12 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
       // of silently re-extracting history into an irreversible sink.
       // The destination's convention names only what the sink receives.
       val stateKey = Naming.normalizeTableName(r.name)
-      val (windowed, incPin) = r.incremental match {
-        case None => (r.frame, None)
-        case Some(cfg) =>
-          val st = states.load(name, s"$stateKey/${cfg.cursorColumn}")
-          val fps = store.readOption(boundaryTable(stateKey, cfg))
-          // pinned for the same reason as the store path: the advance
-          // must aggregate the rows that were SENT, not a re-executed
-          // window over a live source
-          val w = Incremental(r.frame, cfg, st, fps).persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          (w, Some((w, cfg, st)))
-      }
-      // MetricsItem rides the sink action, no extra scan — but unlike
-      // the store path NOTHING here guarantees the sink executes one:
-      // metrics resolve non-blockingly (absent, not a hang, when the
-      // callback never ran a full action over the delivered frame)
-      val observation = Option.when(r.metrics.nonEmpty)(
-        new org.apache.spark.sql.Observation(s"$stateKey-$loadId-to"))
-      val frame = observation match {
-        case Some(obs) =>
-          windowed.observe(obs, r.metrics.head._2.as(r.metrics.head._1),
-            r.metrics.tail.map { case (n, c) => c.as(n) }: _*)
-        case None => windowed
-      }
-      try {
+      Dedup.withPins {
+        val (windowed, advance) = window(r, stateKey)
+        // unlike the store path NOTHING here guarantees the sink runs
+        // an action over the delivered frame: metrics resolve
+        // non-blockingly (absent, not a hang, when it never did)
+        val (frame, observation) = observed(r, windowed, s"$stateKey-$loadId-to")
         val tables = Normalizer.normalize(frame, r.name,
           NormalizeConfig(loadId, maxNesting = dest.maxTableNesting,
             naming = naming))
@@ -348,63 +327,39 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
         // cached: observe is a no-op wrapper whose scan routes through
         // the child cache — a second persist would hold the same rows
         // twice
-        val fanoutPin = Option.when(tables.size > 1 && incPin.isEmpty)(
-          frame.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        try {
-          val sent = tables.toSeq.sortBy(_._1).map { case (t, df0) =>
-            val df =
-              if (dest.skipDltColumns)
-                df0.drop(df0.columns.filter(_.startsWith("_dlt_"))
-                  .toIndexedSeq: _*)
-              else df0
-            // the registry tracks the SENT schema (post-strip), but
-            // keys it under ITS OWN snake_case normalization — distinct
-            // direct names that normalize identically share one entry
-            // (a registry-view limitation; destination tables are
-            // unaffected, the sink received the verbatim name)
-            registry.evolve(t, df.schema)
-            dest.sinkFrame(df, SinkTable(t, loadId, df.schema))
-            t
+        if (tables.size > 1 && r.incremental.isEmpty) Dedup.pin(frame)
+        val sent = tables.toSeq.sortBy(_._1).map { case (t, df0) =>
+          val df =
+            if (dest.skipDltColumns)
+              df0.drop(df0.columns.filter(_.startsWith("_dlt_"))
+                .toIndexedSeq: _*)
+            else df0
+          // the registry tracks the SENT schema (post-strip), but
+          // keys it under ITS OWN snake_case normalization — distinct
+          // direct names that normalize identically share one entry
+          // (a registry-view limitation; destination tables are
+          // unaffected, the sink received the verbatim name)
+          registry.evolve(t, df.schema)
+          dest.sinkFrame(df, SinkTable(t, loadId, df.schema))
+          t
+        }
+        // cursor advances only after EVERY table sank — a failing
+        // sink leaves the window un-advanced for the retry
+        advance(windowed)
+        observation.foreach { obs =>
+          // the sink action's end event fulfils the observation from
+          // the listener bus, after the action returns: drain the bus,
+          // then read once without blocking (obs.get would hang
+          // forever when the sink never ran a full action)
+          GraftAccess.drain(spark.sparkContext)
+          ColumnBridge.observedRow(obs).foreach { rr =>
+            val m = rr.schema.fieldNames.zip(rr.toSeq).toMap
+            synchronized { metricsByResource += stateKey -> m }
           }
-          // cursor advances only after EVERY table sank — a failing
-          // sink leaves the window un-advanced for the retry
-          incPin.foreach { case (w, cfg, st) =>
-            Incremental.advanceValue(w, cfg).foreach { newLast =>
-              val bfps = Incremental.boundaryFingerprints(w, cfg, newLast)
-              val bt = boundaryTable(stateKey, cfg)
-              if (st.lastValue.contains(newLast)) store.append(bt, bfps)
-              else store.overwrite(bt, bfps)
-              states.save(name, s"$stateKey/${cfg.cursorColumn}",
-                Incremental.State(Some(newLast), Nil))
-            }
-          }
-          observation.foreach { obs =>
-            // getRowOrEmpty via reflection: the non-blocking reads are
-            // private[sql] in the Scala signature (bytecode-public), and
-            // obs.get would HANG FOREVER when the sink never ran a full
-            // action. Each call awaits ≤100 ms, and the completing
-            // SQLExecutionEnd event posts ASYNC on the listener bus
-            // after the sink's action returns — so retry for a bounded
-            // ~2 s before concluding no action ran (a single 100 ms
-            // probe silently lost metrics under listener-bus lag)
-            def rowOpt() = obs.getClass.getMethod("getRowOrEmpty")
-              .invoke(obs).asInstanceOf[Option[org.apache.spark.sql.Row]]
-            val row = Iterator.range(0, 20).map(_ => rowOpt())
-              .collectFirst { case Some(rr) => rr }
-            row.foreach { rr =>
-              val m = rr.schema.fieldNames.zip(rr.toSeq).toMap
-              synchronized { metricsByResource += stateKey -> m }
-            }
-          }
-          dispositions.recordLoad(loadId, name)
-          r.name -> sent
-        } finally fanoutPin.foreach(_.unpersist(blocking = false))
-      } finally
-        // EVERY exit releases the incremental window — a flaky sink
-        // retried in a loop must not accumulate one pinned frame per
-        // attempt (the store path releases on its failure exits too)
-        incPin.foreach(_._1.unpersist(blocking = false))
+        }
+        dispositions.recordLoad(loadId, name)
+        r.name -> sent
+      }
     }.toMap
     syncSystemTables(loadId)
     out
@@ -425,98 +380,97 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
     settled.collect { case scala.util.Success(a) => a }
   }
 
-  private def runOne(r0: Resource, loadId: String): Seq[String] = {
-    // time budget (addLimit maxTime): extraction starting past the
-    // deadline admits nothing — the empty load still records the table
-    // (schema evolution, loads ledger), like an exhausted reference pipe
-    val r =
-      if (r0.deadlineNanos.exists(System.nanoTime() >= _))
-        r0.copy(frame = r0.frame.limit(0))
-      else r0
-    r.dispatchColumn match {
-      case None => runOneTable(r, loadId)
-      case Some(c) =>
-        // table dispatch: one sub-resource per distinct routing value.
-        // The distinct set is collected (driver-small by contract — it
-        // IS the table list); each slice reuses the full load path.
-        // The source is persisted first so the whole dispatch costs ONE
-        // source scan (+ cache reads), not one full scan per value.
-        val cached = r.frame.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val values = cached.select(c).distinct().collect()
-            .map(_.get(0)).filter(_ != null).map(_.toString).sorted
-          // slices target DISTINCT tables by construction (the routing
-          // value is in the table name), so they load concurrently like
-          // runParallel resources — sequential slices serialized one
-          // two-commit load cycle per value (round-3 bench finding)
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.max(1, math.min(8, values.length)))
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          try {
-            val futures = values.toSeq.map { v =>
-              scala.concurrent.Future {
-                val slice = r.copy(
-                  name = s"${r.name}_$v",
-                  frame = cached.filter(org.apache.spark.sql.functions.col(c) === v),
-                  dispatchColumn = None)
-                runOneTable(slice, loadId)
-              }
-            }
-            // settle ALL slices before propagating a failure — see awaitAll
-            awaitAll(futures).flatten
-          } finally pool.shutdown()
-        } finally cached.unpersist(blocking = false)
-    }
-  }
+  /** Time budget (addLimit maxTime): extraction starting past the
+    * deadline admits nothing — the empty load still flows and records
+    * the table (schema evolution, loads ledger), like an exhausted
+    * reference pipe. */
+  private def admitted(r: Resource): Resource =
+    if (r.deadlineNanos.exists(System.nanoTime() >= _))
+      r.copy(frame = r.frame.limit(0))
+    else r
 
-  private def runOneTable(r: Resource, loadId: String): Seq[String] = {
-    val tableName = Naming.normalizeTableName(r.name)
-
-    // incremental window + boundary dedup. The windowed frame is
-    // persisted so the post-load `advance` aggregates over the SAME rows
-    // the load wrote — re-running the lazy plan against a live source
-    // (JDBC/REST) could see later rows and advance the cursor past data
-    // that was never loaded, permanently skipping it.
-    val (windowed, newState) = r.incremental match {
-      case None => (r.frame, None)
+  /** The incremental window + boundary dedup of `r`, pinned into the
+    * caller's scope, and the cursor advance over a frame of the loaded
+    * window. The pin makes the advance aggregate the SAME rows the load
+    * wrote — re-running the lazy plan against a live source (JDBC/REST)
+    * could see later rows and advance the cursor past data that was
+    * never loaded, permanently skipping it. State and boundary tables
+    * key under `table`. Without an incremental config the window is the
+    * frame itself and the advance does nothing. */
+  private def window(r: Resource, table: String): (DataFrame, DataFrame => Unit) =
+    r.incremental match {
+      case None => (r.frame, _ => ())
       case Some(cfg) =>
-        val st = states.load(name, s"$tableName/${cfg.cursorColumn}")
+        val key = s"$table/${cfg.cursorColumn}"
+        val st = states.load(name, key)
+        val bt = boundaryTable(table, cfg)
         // boundary fingerprints live in a destination-side table and are
         // ANTI-JOINED, never collected: a coarse cursor (a date column)
         // can put millions of rows on one boundary value, which would
         // blow up both the driver collect and an isin literal list
-        val fps = store.readOption(boundaryTable(tableName, cfg))
-        val filtered = Incremental(r.frame, cfg, st, fps).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (filtered, Some(cfg -> st))
+        val w = Dedup.pin(Incremental(r.frame, cfg, st, store.readOption(bt)))
+        (w, loaded => Incremental.advanceValue(loaded, cfg).foreach { newLast =>
+          val fps = Incremental.boundaryFingerprints(loaded, cfg, newLast)
+          if (st.lastValue.contains(newLast)) store.append(bt, fps)
+          else store.overwrite(bt, fps)
+          states.save(name, key, Incremental.State(Some(newLast), Nil))
+        })
     }
 
-    // MetricsItem: observe rides the load action, no extra scan
-    val observation = Option.when(r.metrics.nonEmpty)(
-      new org.apache.spark.sql.Observation(s"$tableName-$loadId"))
-    val frame = observation match {
-      case Some(obs) =>
-        windowed.observe(obs, r.metrics.head._2.as(r.metrics.head._1),
-          r.metrics.tail.map { case (n, c) => c.as(n) }: _*)
-      case None => windowed
+  /** MetricsItem: `frame` observing the resource's metrics as `obsName`
+    * — the observation rides the load's own action, no extra scan. */
+  private def observed(r: Resource, frame: DataFrame, obsName: String)
+      : (DataFrame, Option[org.apache.spark.sql.Observation]) =
+    r.metrics match {
+      case Seq() => (frame, None)
+      case (n0, c0) +: rest =>
+        val obs = new org.apache.spark.sql.Observation(obsName)
+        (frame.observe(obs, c0.as(n0), rest.map { case (n, c) => c.as(n) }: _*),
+          Some(obs))
     }
 
-    // shared tail of the success AND quarantine exits: advance the
-    // incremental cursor over the SAME pinned window the exit handled,
-    // release the pin, record observed metrics
-    def advanceState(): Unit = newState.foreach { case (cfg, st) =>
-      Incremental.advanceValue(frame, cfg).foreach { newLast =>
-        val fps = Incremental.boundaryFingerprints(frame, cfg, newLast)
-        val bt = boundaryTable(tableName, cfg)
-        if (st.lastValue.contains(newLast)) store.append(bt, fps)
-        else store.overwrite(bt, fps)
-        states.save(name, s"$tableName/${cfg.cursorColumn}",
-          Incremental.State(Some(newLast), Nil))
+  private def runOne(r0: Resource, loadId: String): Seq[String] = {
+    val r = admitted(r0)
+    r.dispatchColumn match {
+      case None => runOneTable(r, loadId)
+      case Some(c) => Dedup.withPins {
+        // table dispatch: one sub-resource per distinct routing value.
+        // The distinct set is collected (driver-small by contract — it
+        // IS the table list); each slice reuses the full load path.
+        // The source is pinned first so the whole dispatch costs ONE
+        // source scan (+ cache reads), not one full scan per value.
+        val cached = Dedup.pin(r.frame)
+        val values = cached.select(c).distinct().collect()
+          .map(_.get(0)).filter(_ != null).map(_.toString).sorted
+        // slices target DISTINCT tables by construction (the routing
+        // value is in the table name), so they load concurrently like
+        // runParallel resources — sequential slices serialized one
+        // two-commit load cycle per value (round-3 bench finding)
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.max(1, math.min(8, values.length)))
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutorService(pool)
+        try {
+          val futures = values.toSeq.map { v =>
+            scala.concurrent.Future {
+              val slice = r.copy(
+                name = s"${r.name}_$v",
+                frame = cached.filter(org.apache.spark.sql.functions.col(c) === v),
+                dispatchColumn = None)
+              runOneTable(slice, loadId)
+            }
+          }
+          // settle ALL slices before propagating a failure — see awaitAll
+          awaitAll(futures).flatten
+        } finally pool.shutdown()
       }
-      windowed.unpersist(blocking = false)
     }
+  }
+
+  private def runOneTable(r: Resource, loadId: String): Seq[String] = Dedup.withPins {
+    val tableName = Naming.normalizeTableName(r.name)
+    val (windowed, advance) = window(r, tableName)
+    val (frame, observation) = observed(r, windowed, s"$tableName-$loadId")
     def recordMetrics(): Unit = observation.foreach { obs =>
       val m = obs.get
       synchronized { metricsByResource += tableName -> m }
@@ -529,10 +483,7 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
     // zero rows, whose all-zero histogram scores a huge PSI against
     // ANY non-uniform baseline and would spuriously breach on every
     // poll. Emptiness is read off the same per-bin result the PSI scan
-    // already produces (Σ n_cur = 0), costing zero extra actions. A
-    // failing RAISE gate must release the incremental window's
-    // persist — the success/discard unpersist paths never run on that
-    // exit.
+    // already produces (Σ n_cur = 0), costing zero extra actions.
     val driftBreach: Option[Double] = r.driftCheck.flatMap { dc =>
       // baseline: the live table snapshot (plain mode — one baseline
       // scan per load) or the persisted rolling profile (profiled mode
@@ -567,7 +518,6 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
     }
     driftBreach match {
       case Some(psi) if !r.driftCheck.exists(_.quarantine) =>
-        if (newState.isDefined) windowed.unpersist(blocking = false)
         val dc = r.driftCheck.get
         throw new IllegalStateException(
           s"drift check failed for $tableName.${dc.column}: " +
@@ -592,7 +542,7 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
         // loads straight off `_dlt_loads`
         dispositions.recordLoad(loadId, name)
         dispositions.recordLoad(loadId, s"$name#quarantine", status = 2)
-        advanceState()
+        advance(frame)
         recordMetrics()
         return Seq(qt)
       case None => ()
@@ -615,8 +565,7 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
     // input so root + N children cost one source execution, not N+1.
     // Cache lookup is by plan fragment, so persisting after building the
     // lazy outputs still routes them through the cache.
-    val fanoutPin = Option.when(tables.size > 1)(frame.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    if (tables.size > 1) Dedup.pin(frame)
 
     // contract enforcement against what's already stored
     val enforced = tables.map { case (t, df) =>
@@ -633,11 +582,8 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
     // root table entirely — then the whole load silently skips, as the
     // reference does for contract-filtered resources.
     val rootDfOpt = enforced.get(tableName)
-    if (rootDfOpt.isEmpty) {
-      if (r.incremental.isDefined) windowed.unpersist(blocking = false)
-      fanoutPin.foreach(_.unpersist(blocking = false))
+    if (rootDfOpt.isEmpty)
       return Nil // discarded: nothing written, cursor state does not advance
-    }
     val rootDf = rootDfOpt.get
     r.hints.writeDisposition match {
       case "append" =>
@@ -690,13 +636,12 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
     // load's gate values into the rolling baseline, in two halves.
     // The SPARK half (full histogram for a seed, [[Drift.binCounts]]
     // under the existing profile's pinned range for a fold) runs HERE,
-    // while the incremental window's persist is still pinned — after
-    // advanceState() releases it, re-running the lazy `frame` plan
-    // against a live source (JDBC/REST) could see rows that were never
-    // part of this load and fold them into the baseline
-    // (double-counted when the next load lands them). The DRIVER half
-    // (the profile table write) happens after the cursor advance,
-    // under the profile table's store lock: counts are COMMUTATIVE, so
+    // over the pinned incremental window — an unpinned re-run of the
+    // lazy `frame` plan against a live source (JDBC/REST) could see
+    // rows that were never part of this load and fold them into the
+    // baseline (double-counted when the next load lands them). The
+    // DRIVER half (the profile table write) happens after the cursor
+    // advance, under the profile table's store lock: counts are COMMUTATIVE, so
     // the lock-covered reload-add-write loses nothing even if another
     // writer folded in between (the read-fold-write would otherwise be
     // a lost-update race under concurrent loads). BOTH halves are
@@ -737,8 +682,7 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
           None
         }
       }
-    advanceState()
-    fanoutPin.foreach(_.unpersist(blocking = false))
+    advance(frame)
     recordMetrics()
     pendingProfile.foreach { case (pt, half) =>
       try store.exclusively(pt) {

@@ -3,6 +3,7 @@ package graft.write
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max, min}
 
+import graft.ext.Dedup
 import graft.normalize.Ids
 
 /** Replace strategies (reference typing.py:252, sql_jobs.py:84-146). All
@@ -94,20 +95,13 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     * rewrite; every merge commit records fresh stats so subsequent
     * merges prune. */
   def merge(table: String, staging: DataFrame, cfg: MergeConfig, loadId: String,
-            strategy: MergeStrategy = MergeStrategy.DeleteInsert): Unit = {
+            strategy: MergeStrategy = MergeStrategy.DeleteInsert): Unit = Dedup.withPins {
     // staging is materialized once and re-read (the reference persists
     // load packages to disk for the same reason): the plan is consumed
     // by the pruning stats agg, by each key-group anti-join subtree,
     // and twice more under the range-layout sampling pass — without the
-    // persist a computed staging frame re-executes 3-5x per load
-    val staged = stamp(staging, loadId)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try mergePersisted(table, staged, cfg, loadId, strategy)
-    finally staged.unpersist(blocking = false)
-  }
-
-  private def mergePersisted(table: String, staged: DataFrame, cfg: MergeConfig,
-      loadId: String, strategy: MergeStrategy): Unit = {
+    // pin a computed staging frame re-executes 3-5x per load
+    val staged = Dedup.pin(stamp(staging, loadId))
     Dispositions.mergePruned(store, table, staged, cfg, strategy)
     recordLoad(loadId)
   }
@@ -120,17 +114,11 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     * full-table rewrite is the scale-killer this avoids. Closed
     * segments are folded together past a threshold to bound the
     * manifest (small-files control, not a history rewrite per load). */
-  def scd2(table: String, staging: DataFrame, cfg: Scd2Config, loadId: String): Unit = {
-    // same persist rationale as merge: the staged snapshot feeds both
+  def scd2(table: String, staging: DataFrame, cfg: Scd2Config,
+      loadId: String): Unit = Dedup.withPins {
+    // same pin rationale as merge: the staged snapshot feeds both
     // sides of the retire/insert split and the range-layout sampling
-    val staged = stamp(staging, loadId)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try scd2Persisted(table, staged, cfg, loadId)
-    finally staged.unpersist(blocking = false)
-  }
-
-  private def scd2Persisted(table: String, staged: DataFrame, cfg: Scd2Config,
-      loadId: String): Unit = {
+    val staged = Dedup.pin(stamp(staging, loadId))
     def actives(df: DataFrame) = SegmentWrite(df, tags = scd2Tag("active"))
     def closeds(df: DataFrame) = SegmentWrite(df, tags = scd2Tag("closed"))
 

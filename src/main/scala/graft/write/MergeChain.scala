@@ -3,6 +3,7 @@ package graft.write
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ext.Dedup
 import graft.normalize.Ids
 
 /** A root table plus its nested child tables from one normalization pass
@@ -26,19 +27,13 @@ final case class TableChain(
 object MergeChain {
 
   def deleteInsert(store: TableStore, chain: TableChain, cfg: MergeConfig,
-                   loadId: String): Unit = {
+                   loadId: String): Unit = Dedup.withPins {
     val destRoot = store.readOption(chain.root)
-    // persisted: the staged root feeds the replaced-id semi-joins, the
+    // pinned: the staged root feeds the replaced-id semi-joins, the
     // insert set, the root merge's key-group subtrees AND the pruning
-    // stats agg — unpersisted it would re-execute 4-6x per load
-    val stagedRoot = chain.rootStaging.withColumn(Ids.DltLoadId, lit(loadId))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try deleteInsertPersisted(store, chain, cfg, destRoot, stagedRoot)
-    finally stagedRoot.unpersist(blocking = false)
-  }
-
-  private def deleteInsertPersisted(store: TableStore, chain: TableChain,
-      cfg: MergeConfig, destRoot: Option[DataFrame], stagedRoot: DataFrame): Unit = {
+    // stats agg — unpinned it would re-execute 4-6x per load
+    val stagedRoot = Dedup.pin(
+      chain.rootStaging.withColumn(Ids.DltLoadId, lit(loadId)))
 
     // ONE pinned frame carries BOTH root-id sets, tagged: replaced ids
     // (destination rows matching EITHER key group — OR of AND-groups,
@@ -47,8 +42,6 @@ object MergeChain {
     // multi-child chain would otherwise re-run the dest⋈staged
     // semi-joins once per child — and two separate persists cost two
     // materialization jobs per load where the union costs one.
-    // Unpersist sits in a finally: a failed chain load must not leak
-    // cache entries into a long-lived session.
     val replaced = destRoot match {
       case None => None
       case Some(d) =>
@@ -59,15 +52,14 @@ object MergeChain {
     }
     val inserted = Merge.insertSet(stagedRoot, cfg)
       .select(col(Ids.DltId).as(Ids.DltRootId)).distinct()
-    val tagged = replaced.fold(inserted.withColumn("__set", lit("i")))(r =>
-      r.withColumn("__set", lit("r"))
-        .unionByName(inserted.withColumn("__set", lit("i"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tagged = Dedup.pin(
+      replaced.fold(inserted.withColumn("__set", lit("i")))(r =>
+        r.withColumn("__set", lit("r"))
+          .unionByName(inserted.withColumn("__set", lit("i")))))
     val replacedRootIds = replaced.map(_ =>
       tagged.filter(col("__set") === "r").drop("__set"))
     val insertedRootIds = tagged.filter(col("__set") === "i").drop("__set")
-    try runChainLoad(store, chain, cfg, stagedRoot, replacedRootIds, insertedRootIds)
-    finally tagged.unpersist(blocking = false)
+    runChainLoad(store, chain, cfg, stagedRoot, replacedRootIds, insertedRootIds)
   }
 
   private def runChainLoad(store: TableStore, chain: TableChain,

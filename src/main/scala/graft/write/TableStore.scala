@@ -11,6 +11,8 @@ import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, max, min}
 import org.apache.spark.sql.types._
 
+import graft.ext.Dedup
+
 /** Column min/max carried in the manifest per segment — the pruning
   * statistics that let merges skip untouched data files (the same
   * file-skipping idea Delta/Iceberg persist in their logs). */
@@ -870,7 +872,7 @@ final class TableStore(val root: String, val spark: SparkSession) {
   }
 
   private def writeSegment(table: String, df: DataFrame,
-      statsFor: Seq[String], rangeBy: Seq[String] = Nil): Segment = {
+      statsFor: Seq[String], rangeBy: Seq[String] = Nil): Segment = Dedup.withPins {
     val seg = s"data/${UUID.randomUUID().toString.take(12)}"
     val cols = statsFor.distinct.filter(df.columns.contains)
     // range layout: globally range-partition + sort on the key so each
@@ -891,15 +893,11 @@ final class TableStore(val root: String, val spark: SparkSession) {
     val sizeEst = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val layoutWorthIt = sizeEst > spark.sessionState.conf.filesMaxPartitionBytes
     val rangeKeys = if (layoutWorthIt) rangeBy.filter(df.columns.contains) else Nil
-    val pinned = Option.when(rangeKeys.nonEmpty)(
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val layout = pinned match {
-      case None => df
-      case Some(p) => p.repartitionByRange(rangeKeys.map(col): _*)
+    val layout =
+      if (rangeKeys.isEmpty) df
+      else Dedup.pin(df).repartitionByRange(rangeKeys.map(col): _*)
         .sortWithinPartitions(rangeKeys.map(col): _*)
-    }
-    try writeLayout(table, df, layout, seg, cols)
-    finally pinned.foreach(_.unpersist(blocking = false))
+    writeLayout(table, df, layout, seg, cols)
   }
 
   private def writeLayout(table: String, df: DataFrame, layout: DataFrame,

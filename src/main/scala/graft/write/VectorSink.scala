@@ -3,7 +3,7 @@ package graft.write
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ext.Similarity
+import graft.ext.{Dedup, Similarity}
 
 /** Embedding-collection destination — the role of the reference's
   * vector-store adapters (dlt/destinations/impl/{qdrant,weaviate,
@@ -1122,7 +1122,7 @@ object VectorSink {
       census: Array[Long]): DataFrame = {
     val spark = batch.sparkSession
     val parts = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val pinnedProbes = graft.ext.Dedup.pin(probes)
+    val pinnedProbes = Dedup.pin(probes)
     val probeCounts = pinnedProbes.groupBy("__list")
       .agg(count(lit(1)).as("__pn"))
       .collect().map(r => r.getInt(0) -> r.getLong(1))
@@ -1180,22 +1180,17 @@ object VectorSink {
   private def screenedAppend(store: TableStore, table: String,
       batch: DataFrame, id: String, vec: String)
       (dupIds: DataFrame => DataFrame): (Long, Long) =
-    store.exclusively(table) { graft.ext.Dedup.withPins {
-      val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val d = pinned.agg(count(lit(1L)), count_distinct(col(id))).head()
-        require(d.getLong(0) == d.getLong(1),
-          s"dedup append to '$table': batch ids must be unique — the " +
-            "screen is id-keyed, so a duplicated id would drop its " +
-            "non-duplicate sibling (dedup the batch first)")
-        val kept = pinned.join(dupIds(pinned), Seq(id), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val nKept = kept.count()
-          if (nKept > 0L) ingest(store, table, kept, id, vec, replaceById = false)
-          (nKept, d.getLong(0) - nKept)
-        } finally kept.unpersist(blocking = false)
-      } finally pinned.unpersist(blocking = false)
+    store.exclusively(table) { Dedup.withPins {
+      val pinned = Dedup.pin(batch)
+      val d = pinned.agg(count(lit(1L)), count_distinct(col(id))).head()
+      require(d.getLong(0) == d.getLong(1),
+        s"dedup append to '$table': batch ids must be unique — the " +
+          "screen is id-keyed, so a duplicated id would drop its " +
+          "non-duplicate sibling (dedup the batch first)")
+      val kept = Dedup.pin(pinned.join(dupIds(pinned), Seq(id), "left_anti"))
+      val nKept = kept.count()
+      if (nKept > 0L) ingest(store, table, kept, id, vec, replaceById = false)
+      (nKept, d.getLong(0) - nKept)
     } }
 
   /** [[appendDeduped]] for BINARY collections: the screen is the
@@ -1317,7 +1312,7 @@ object VectorSink {
 
   private def ingest(store: TableStore, table: String, rows: DataFrame,
       id: String, vec: String, replaceById: Boolean): Unit =
-      store.exclusively(table) {
+      store.exclusively(table) { Dedup.withPins {
     // the whole read-model-then-commit holds the corpus table's lock:
     // a concurrent rebalance would otherwise swap the model between
     // this append's resolution and its commit
@@ -1390,64 +1385,58 @@ object VectorSink {
     }
     // one batch pass feeds BOTH the segment write and the occupancy
     // census — pin it so the argmin/encode lineage doesn't run twice
-    val pinned = coded.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val newTombs =
-        if (!replaceById) { store.append(table, pinned, statsFor = Seq("__list")); 0L }
-        else {
-          // ONE atomic commit: the batch's ids die in every EXISTING
-          // segment, the batch's own segment is not covered — replaced
-          // rows stay visible to older pinned generations, and a later
-          // re-append of an id resurrects it (segment-scoped coverage)
-          val ids = pinned.select(col(id)).distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val n = ids.count()
-            // a duplicate id WITHIN the batch would survive twice: the
-            // tombstone covers only pre-existing segments, never the
-            // batch's own — so last-write-wins holds across COMMITS, not
-            // within one. Reject rather than silently inflate the census
-            // (the reference's upsert is a SQL MERGE, which errors on
-            // duplicate staging keys — dlt/destinations/sql_jobs.py:778;
-            // its docs require a unique primary_key for upsert). The
-            // check is free: `total` rides the width aggregate, `n` is
-            // the tombstone count this path already takes.
-            require(n == d.getLong(3),
-              s"upsert to '$table': batch carries duplicate ids " +
-                s"(${d.getLong(3)} rows, $n distinct) — pre-dedupe the " +
-                "batch (keep-last is undefined on an unordered DataFrame); " +
-                "upsert is last-write-wins across commits, not within one")
-            store.appendWithTombstone(table, pinned, id, ids,
-              statsFor = Seq("__list"))
-            n
-          } finally ids.unpersist(blocking = false)
-        }
-      val prev = manifestRow.listSizes
-      val batchCounts = countsByList(pinned)
-      val base =
-        if (prev.nonEmpty) (l: Int) => prev.lift(l).getOrElse(0L)
-        else {
-          // pre-census manifest row (legacy collection): one count of
-          // the PRE-BATCH pinned corpus heals the census; every later
-          // writer sums incrementally. Counting the post-write head
-          // instead would apply an upsert's own tombstone and bake LIVE
-          // counts into a census whose contract is PHYSICAL (the pinned
-          // pre-batch corpus is physical by the heal invariant: an
-          // empty-census row carries no tombstones)
-          val healed = countsByList(g.corpus)
-          (l: Int) => healed.getOrElse(l, 0L)
-        }
-      val sizes = Array.tabulate(meta.nlist)(l =>
-        base(l) + batchCounts.getOrElse(l, 0L))
-      // the appended corpus snapshot becomes visible to probes only
-      // through the manifest — commit it as the last step, pinning the
-      // GENERATION's model snaps (not the possibly-orphaned heads)
-      commitCollection(store, table,
-        manifestRow.snaps.updated("corpus_snap", store.snapshots(table).max),
-        sizes, manifestRow.tombstoneIds + newTombs)
-    } finally pinned.unpersist(blocking = false)
-  }
+    val pinned = Dedup.pin(coded)
+    val newTombs =
+      if (!replaceById) { store.append(table, pinned, statsFor = Seq("__list")); 0L }
+      else {
+        // ONE atomic commit: the batch's ids die in every EXISTING
+        // segment, the batch's own segment is not covered — replaced
+        // rows stay visible to older pinned generations, and a later
+        // re-append of an id resurrects it (segment-scoped coverage)
+        val ids = Dedup.pin(pinned.select(col(id)).distinct())
+        val n = ids.count()
+        // a duplicate id WITHIN the batch would survive twice: the
+        // tombstone covers only pre-existing segments, never the
+        // batch's own — so last-write-wins holds across COMMITS, not
+        // within one. Reject rather than silently inflate the census
+        // (the reference's upsert is a SQL MERGE, which errors on
+        // duplicate staging keys — dlt/destinations/sql_jobs.py:778;
+        // its docs require a unique primary_key for upsert). The
+        // check is free: `total` rides the width aggregate, `n` is
+        // the tombstone count this path already takes.
+        require(n == d.getLong(3),
+          s"upsert to '$table': batch carries duplicate ids " +
+            s"(${d.getLong(3)} rows, $n distinct) — pre-dedupe the " +
+            "batch (keep-last is undefined on an unordered DataFrame); " +
+            "upsert is last-write-wins across commits, not within one")
+        store.appendWithTombstone(table, pinned, id, ids,
+          statsFor = Seq("__list"))
+        n
+      }
+    val prev = manifestRow.listSizes
+    val batchCounts = countsByList(pinned)
+    val base =
+      if (prev.nonEmpty) (l: Int) => prev.lift(l).getOrElse(0L)
+      else {
+        // pre-census manifest row (legacy collection): one count of
+        // the PRE-BATCH pinned corpus heals the census; every later
+        // writer sums incrementally. Counting the post-write head
+        // instead would apply an upsert's own tombstone and bake LIVE
+        // counts into a census whose contract is PHYSICAL (the pinned
+        // pre-batch corpus is physical by the heal invariant: an
+        // empty-census row carries no tombstones)
+        val healed = countsByList(g.corpus)
+        (l: Int) => healed.getOrElse(l, 0L)
+      }
+    val sizes = Array.tabulate(meta.nlist)(l =>
+      base(l) + batchCounts.getOrElse(l, 0L))
+    // the appended corpus snapshot becomes visible to probes only
+    // through the manifest — commit it as the last step, pinning the
+    // GENERATION's model snaps (not the possibly-orphaned heads)
+    commitCollection(store, table,
+      manifestRow.snaps.updated("corpus_snap", store.snapshots(table).max),
+      sizes, manifestRow.tombstoneIds + newTombs)
+  } }
 
   /** One-row OPERATIONAL SUMMARY of a collection — the `DESCRIBE`
     * every vector store ships (qdrant's collection info endpoint):
@@ -1497,35 +1486,32 @@ object VectorSink {
     * count; repeated deletes of the same id inflate it, and a
     * rebalance resets it). */
   def delete(store: TableStore, table: String, ids: DataFrame,
-      id: String): Long = store.exclusively(table) {
+      id: String): Long = store.exclusively(table) { Dedup.withPins {
     val manifestRow = newestRow(store, table)
     val corpusHead = store.snapshots(table).max
     require(corpusHead == manifestRow.snaps("corpus_snap"),
       s"collection '$table' has an interrupted model swap: corpus head " +
         s"$corpusHead is not the pinned ${manifestRow.snaps("corpus_snap")} " +
         "— run rebalance to finish the interrupted swap before deleting")
-    val del = ids.select(col(id)).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = del.count()
-      if (n > 0L) {
-        // heal a legacy (pre-census) row BEFORE tombstoning — the heal
-        // invariant every census reader relies on: an empty-census row
-        // carries no tombstones, so the pinned corpus counted here is
-        // physical. Carrying the empty census forward would leave the
-        // next reader's fallback counting LIVE rows under this
-        // tombstone and misreading the physical contract
-        val sizes =
-          if (manifestRow.listSizes.nonEmpty) manifestRow.listSizes
-          else sizesOf(store, table, manifestRow)
-        store.deleteByIds(table, id, del)
-        commitCollection(store, table,
-          manifestRow.snaps.updated("corpus_snap", store.snapshots(table).max),
-          sizes, manifestRow.tombstoneIds + n)
-      }
-      n
-    } finally del.unpersist(blocking = false)
-  }
+    val del = Dedup.pin(ids.select(col(id)).distinct())
+    val n = del.count()
+    if (n > 0L) {
+      // heal a legacy (pre-census) row BEFORE tombstoning — the heal
+      // invariant every census reader relies on: an empty-census row
+      // carries no tombstones, so the pinned corpus counted here is
+      // physical. Carrying the empty census forward would leave the
+      // next reader's fallback counting LIVE rows under this
+      // tombstone and misreading the physical contract
+      val sizes =
+        if (manifestRow.listSizes.nonEmpty) manifestRow.listSizes
+        else sizesOf(store, table, manifestRow)
+      store.deleteByIds(table, id, del)
+      commitCollection(store, table,
+        manifestRow.snaps.updated("corpus_snap", store.snapshots(table).max),
+        sizes, manifestRow.tombstoneIds + n)
+    }
+    n
+  } }
 
   /** Fraction of the collection's PHYSICAL rows that tombstones may
     * have killed: tombstoned-id count / census total — a driver-file

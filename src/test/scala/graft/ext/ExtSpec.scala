@@ -85,6 +85,22 @@ class ExtSpec extends SparkSpec {
     assert(cm.isEmpty, "an unscoped pin must not persist its frame")
   }
 
+  test("Dedup.pin is the only cache call in the main sources") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = scala.util.Using.resource(java.nio.file.Files.walk(root))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector)
+    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    val cacheCall = """\.persist\(|\.cache\(\)""".r
+    val hits = for {
+      f <- files if root.relativize(f).toString != "graft/ext/Dedup.scala"
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if cacheCall.findFirstIn(line).isDefined
+    } yield s"${root.relativize(f)}:${i + 1}"
+    assert(hits.isEmpty,
+      "cache call(s) outside Dedup.pin: pin into a Dedup.withPins scope instead")
+  }
+
   test("resolveNearDups keeps one canonical doc per cluster") {
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
     val survivors = Dedup.resolveNearDups(docs, "doc_id", pairs)

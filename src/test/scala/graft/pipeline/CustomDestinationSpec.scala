@@ -164,5 +164,14 @@ class CustomDestinationSpec extends SparkSpec {
     assert(p.metrics("obs").get("v_sum").contains(40.0))
   }
 
+  test("metrics stay empty when the sink runs no action") {
+    val p = newPipeline()
+    val df = Seq((1, 10.0), (2, 30.0)).toDF("k", "v")
+    val dest = CustomDestination { (_, _) => () }
+    p.runTo(Seq(Resource("idle", df,
+      metrics = Seq("v_sum" -> sum(col("v"))))), dest, "1")
+    assert(p.metrics("idle").isEmpty)
+  }
+
   private def newLongEncoder = org.apache.spark.sql.Encoders.scalaLong
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.incremental.Incremental
-import graft.schema.{TableHints, TableReference}
+import graft.schema.{Contracts, TableHints, TableReference}
 import graft.write.MergeConfig
 import org.apache.spark.sql.functions._
 
@@ -150,6 +150,33 @@ class PipelineSpec extends SparkSpec {
     // cursor restored from _dlt_pipeline_state → only the new row loads
     val out = p2.store.read("ev")
     assert(out.select("v").as[String].collect().sorted.toSeq === Seq("a", "b", "e"))
+  }
+
+  // a columns=freeze violation on the second load of a nested resource
+  // throws after the load pinned its window and fan-out input: the
+  // load's scope must still release both
+  private def frozenNestedReload(incremental: Boolean): Unit = {
+    val p = newPipeline()
+    val cfg = Incremental.Config(cursorColumn = "cur", primaryKey = Seq("k"))
+    def res(df: org.apache.spark.sql.DataFrame) =
+      if (incremental) Resource("docs", df).withIncremental(cfg)
+      else Resource("docs", df)
+    p.run(Seq(res(Seq((1L, "a", Seq(1, 2))).toDF("cur", "k", "items"))), "1")
+    val wider = Seq((2L, "b", Seq(3), "new")).toDF("cur", "k", "items", "x")
+    intercept[Contracts.ContractViolation] {
+      p.run(Seq(res(wider).copy(
+        contract = Contracts.Contract(columns = Contracts.Freeze))), "2")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the failed load must release every frame it pinned")
+  }
+
+  test("frozen-column violation on a nested reload releases its pins") {
+    frozenNestedReload(incremental = false)
+  }
+
+  test("frozen-column violation on an incremental nested reload releases its pins") {
+    frozenNestedReload(incremental = true)
   }
 
   test("wide boundary: 10k rows on one cursor value, no driver blowup") {
