@@ -122,12 +122,10 @@ final class GraftDataset(val store: TableStore, val registry: SchemaRegistry,
     new VectorCollection(store, Naming.normalizeTableName(name))
 }
 
-/** Read-side handle on one persisted vector collection. Probes here
-  * cover the plain-IVF metric (the collection stores its own vectors);
-  * quantized collections need the caller's full-precision corpus for
-  * the exact re-rank, so those keep the explicit
-  * [[graft.write.VectorSink]] entry points (`topKQuantized` /
-  * `topKPq` / `topKOpq` / `topKBinary`). */
+/** Read-side handle on one persisted vector collection. Probes serve
+  * every codec through the one [[graft.write.VectorSink.topK]]: the
+  * collection's stored codec picks the plan, and code-only collections
+  * take the caller's full-precision corpus as `fullVectors`. */
 final class VectorCollection(store: TableStore, val name: String) {
   import graft.write.VectorSink
 
@@ -140,21 +138,18 @@ final class VectorCollection(store: TableStore, val name: String) {
   def generations: Seq[Long] = VectorSink.generations(store, name)
 
   /** Top-k cosine neighbors per query row (see
-    * [[graft.write.VectorSink.topK]]). */
+    * [[graft.write.VectorSink.topK]]): `at` probes a pinned historical
+    * generation (time travel), `among`/`where` pre-filter the corpus,
+    * `fullVectors` + `shortlist` drive the exact re-rank of code-only
+    * collections. */
   def topK(queries: DataFrame, id: String, vec: String, k: Int,
-      nprobe: Int): DataFrame =
-    VectorSink.topK(store, name, queries, id, vec, k, nprobe)
-
-  /** [[topK]] with a corpus pre-filter (filtered search). */
-  def topKWhere(queries: DataFrame, id: String, vec: String, k: Int,
-      nprobe: Int, predicate: Column): DataFrame =
-    VectorSink.topKWhere(store, name, queries, id, vec, k, nprobe, predicate)
-
-  /** [[topK]] against a pinned historical generation (time travel). */
-  def topKAt(gen: Long, queries: DataFrame, id: String, vec: String,
-      k: Int, nprobe: Int): DataFrame =
-    VectorSink.topKGen(store, name, VectorSink.generationAt(store, name, gen),
-      queries, id, vec, k, nprobe)
+      nprobe: Int, at: Option[Long] = None,
+      among: Option[DataFrame] = None, where: Option[Column] = None,
+      fullVectors: Option[DataFrame] = None,
+      shortlist: Int = 0): DataFrame =
+    VectorSink.topK(store, name, queries, id, vec, k, nprobe,
+      at.map(VectorSink.generationAt(store, name, _)), among, where,
+      fullVectors, shortlist)
 
   /** Pin a generation against retention (see
     * [[graft.write.VectorSink.pinGeneration]]). */

@@ -72,8 +72,8 @@ object Quantize {
     * re-rank against `fullVectors` (point-read join, shortlist-sized).
     * ONE implementation of the tie-break-sensitive rankings
     * ((adc DESC, match_id), then (cosine DESC, match_id)) shared by
-    * the in-memory path and the persisted IVF-SQ8 probe
-    * ([[graft.write.VectorSink.topKQuantized]]) — the oracle
+    * the in-memory paths and the persisted SQ8/PQ/OPQ probes
+    * ([[graft.write.VectorSink.topK]]) — the oracle
     * equivalence of both gates depends on these staying identical. */
   private[graft] def shortlistRerank(cands: DataFrame, fullVectors: DataFrame,
       id: String, vec: String, k: Int, shortlist: Int): DataFrame = {

@@ -305,7 +305,7 @@ object Similarity {
     * ([[hammingShortlistRerank]]), so the corpus pays one code scan
     * plus one column-pruned vector rejoin. Queries must be
     * driver-small here (their codes ride a broadcast; use the
-    * persisted [[graft.write.VectorSink.topKBinary]] for batch-scale
+    * persisted [[graft.write.VectorSink.topK]] for batch-scale
     * query sets). Corpus and queries must share a fixed dimension —
     * the kernels clamp to min(length).
     *
@@ -334,7 +334,7 @@ object Similarity {
 
   /** The ONE implementation of the binary probe paths'
     * tie-break-sensitive tail — [[binaryTopK]] and
-    * [[graft.write.VectorSink.topKBinaryGen]] both ride it, so the
+    * [[graft.write.VectorSink.topK]]'s binary plan both ride it, so the
     * `sim_ivf_bq` gate's "persisted ≡ in-memory at nprobe = nlist"
     * equivalence can never drift apart (the same discipline as
     * [[Quantize.shortlistRerank]] for the ADC paths, whose shortlist

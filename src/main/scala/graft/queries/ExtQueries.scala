@@ -920,11 +920,11 @@ object ExtQueries {
     // unless they sign-agree with an even within the budget — all
     // replayed by the oracle's EXISTS over the all-pairs product.
     "sim_bq_append_dedup" -> q { c =>
-      import graft.write.{TableStore, VectorSink}
+      import graft.write.{Codec, TableStore, VectorSink}
       val store = new TableStore(Scratch.dir("graft-bad"), c.spark)
       val (evens, batch) = appendDedupFrames(c)
-      VectorSink.writeIvfBinary(store, "emb", evens, "vec_id", "embedding",
-        nlist = 8)
+      VectorSink.writeIvf(store, "emb", evens, "vec_id", "embedding",
+        nlist = 8, codec = Codec.Binary)
       val (kept, dropped) = VectorSink.appendDedupedBinary(store, "emb",
         batch, "vec_id", "embedding", maxHamming = 8, nprobe = 8)
       store.read("emb").select(col("vec_id"))
@@ -945,12 +945,12 @@ object ExtQueries {
     // screen that quietly compared raw vectors (which the collection
     // does not store) or mixed generations would hash-fail.
     "sim_pq_append_dedup" -> q { c =>
-      import graft.write.{TableStore, VectorSink}
+      import graft.write.{Codec, TableStore, VectorSink}
       val store = new TableStore(Scratch.dir("graft-qad"), c.spark)
       val (evens, batch) = appendDedupFrames(c)
-      VectorSink.writeIvfPq(store, "emb", evens, "vec_id", "embedding",
-        nlist = 8, m = 8, ksub = 16, iters = 2)
-      val (kept, dropped) = VectorSink.appendDedupedAdc(store, "emb",
+      VectorSink.writeIvf(store, "emb", evens, "vec_id", "embedding",
+        nlist = 8, codec = Codec.Pq(m = 8, ksub = 16, iters = 2))
+      val (kept, dropped) = VectorSink.appendDeduped(store, "emb",
         batch, "vec_id", "embedding", threshold = 0.52, nprobe = 8)
       store.read("emb").select(col("vec_id"))
         .withColumn("kept", lit(kept)).withColumn("dropped", lit(dropped))
@@ -996,9 +996,9 @@ object ExtQueries {
       // still probe cold — collect (driver-small: 5 queries × k 5)
       // because the final sweep below reclaims gen 1's files too
       val g1 = VectorSink.generationAt(store, "emb", 1L)
-      val probed = VectorSink.topKGen(store, "emb", g1,
-        evens.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, nprobe = 8)
+      val probed = VectorSink.topK(store, "emb",
+        evens.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
+        nprobe = 8, at = Some(g1))
         .orderBy("query_id", "rank").collect()
         .map(r => (r.getLong(0), r.getInt(1).toLong, r.getLong(2),
           r.getDouble(3)))
@@ -1257,17 +1257,17 @@ object ExtQueries {
     // so the exact sim_binary_rerank oracle gates write → append →
     // manifest commit → cold read → Hamming shortlist → re-rank.
     "sim_ivf_bq" -> q { c =>
-      import graft.write.{TableStore, VectorSink}
+      import graft.write.{Codec, TableStore, VectorSink}
       val store = new TableStore(
         Scratch.dir("graft-vbq"), c.spark)
       val vecs = c.t("embeddings").select("vec_id", "embedding")
-      VectorSink.writeIvfBinary(store, "emb",
-        vecs.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", nlist = 8)
+      VectorSink.writeIvf(store, "emb", vecs.filter(col("vec_id") % 2 === 0),
+        "vec_id", "embedding", nlist = 8, codec = Codec.Binary)
       VectorSink.append(store, "emb",
         vecs.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
-      VectorSink.topKBinary(store, "emb", vecs,
-        vecs.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, nprobe = 8, shortlist = 20)
+      VectorSink.topK(store, "emb", vecs.filter(col("vec_id") < 10), "vec_id",
+        "embedding", k = 5, nprobe = 8, fullVectors = Some(vecs),
+        shortlist = 20)
         .orderBy("query_id", "rank")
     },
 
@@ -1360,7 +1360,7 @@ object ExtQueries {
     // PRE-filter, so k survivors come back whenever the probed lists
     // hold them (a post-filter of the unfiltered top-k loses rows). At
     // nprobe = nlist the result is exactly the brute-force top-k over
-    // the filtered corpus; the id-allowlist variant (topKAmong, a
+    // the filtered corpus; the id-allowlist variant (`among`, a
     // left-semi restriction) must agree row-for-row and rides the hash
     // as a boolean.
     "sim_filtered_search" -> q { c =>
@@ -1371,11 +1371,11 @@ object ExtQueries {
       VectorSink.writeIvf(store, "emb", vecs, "vec_id", "embedding", nlist = 16)
       val pred = col("vec_id") % 3 === 0
       val queries = vecs.filter(col("vec_id") < 10)
-      val byPred = VectorSink.topKWhere(store, "emb", queries,
-        "vec_id", "embedding", k = 5, nprobe = 16, predicate = pred)
-      val byList = VectorSink.topKAmong(store, "emb", queries,
-        vecs.filter(pred).select("vec_id"), "vec_id", "embedding",
-        k = 5, nprobe = 16)
+      val byPred = VectorSink.topK(store, "emb", queries, "vec_id",
+        "embedding", k = 5, nprobe = 16, where = Some(pred))
+      val byList = VectorSink.topK(store, "emb", queries, "vec_id",
+        "embedding", k = 5, nprobe = 16,
+        among = Some(vecs.filter(pred).select("vec_id")))
       val agree = byPred.exceptAll(byList).isEmpty &&
         byList.exceptAll(byPred).isEmpty
       byPred
@@ -1432,7 +1432,7 @@ object ExtQueries {
     // that chain over the same subset; the surviving generation list
     // rides the hash as a literal.
     "sim_ivf_generation" -> q { c =>
-      import graft.write.{TableStore, VectorSink}
+      import graft.write.{Codec, TableStore, VectorSink}
       val store = new TableStore(
         Scratch.dir("graft-vgen"), c.spark)
       val vecs = c.t("embeddings").select("vec_id", "embedding")
@@ -1441,15 +1441,15 @@ object ExtQueries {
         .select(col("vec_id"),
           transform(col("embedding"), x => x * lit(0.5) + lit(4.0))
             .cast("array<float>").as("embedding"))
-      VectorSink.writeIvfQuantized(store, "emb", even,
-        "vec_id", "embedding", nlist = 8)                          // gen 1
+      VectorSink.writeIvf(store, "emb", even, "vec_id", "embedding",
+        nlist = 8, codec = Codec.Sq8)                              // gen 1
       VectorSink.append(store, "emb", blob, "vec_id", "embedding") // gen 2
       VectorSink.rebalance(store, "emb", "vec_id", "embedding",    // gen 3
         fullVectors = Some(even.unionByName(blob)), maxSkew = 1.0)
       val g1 = VectorSink.generationAt(store, "emb", 1L)
-      VectorSink.topKQuantizedGen(store, "emb", g1, even,
-        even.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, nprobe = 8, shortlist = 20)
+      VectorSink.topK(store, "emb", even.filter(col("vec_id") < 10), "vec_id",
+        "embedding", k = 5, nprobe = 8, at = Some(g1),
+        fullVectors = Some(even), shortlist = 20)
         .withColumn("gens",
           lit(VectorSink.generations(store, "emb").mkString(",")))
         .orderBy("query_id", "rank")
@@ -1462,7 +1462,7 @@ object ExtQueries {
     // the PQ ADC chain over the even half alone, so the oracle replays
     // adcOracleSql restricted to that subset.
     "sim_pq_generation" -> q { c =>
-      import graft.write.{TableStore, VectorSink}
+      import graft.write.{Codec, TableStore, VectorSink}
       val store = new TableStore(
         Scratch.dir("graft-pgen"), c.spark)
       val vecs = c.t("embeddings").select("vec_id", "embedding")
@@ -1471,15 +1471,15 @@ object ExtQueries {
         .select(col("vec_id"),
           transform(col("embedding"), x => x * lit(0.5) + lit(4.0))
             .cast("array<float>").as("embedding"))
-      VectorSink.writeIvfPq(store, "emb", even,
-        "vec_id", "embedding", nlist = 8, m = 4, ksub = 4, iters = 2) // gen 1
+      VectorSink.writeIvf(store, "emb", even, "vec_id", "embedding",
+        nlist = 8, codec = Codec.Pq(m = 4, ksub = 4, iters = 2))      // gen 1
       VectorSink.append(store, "emb", blob, "vec_id", "embedding")    // gen 2
       VectorSink.rebalance(store, "emb", "vec_id", "embedding",       // gen 3
         fullVectors = Some(even.unionByName(blob)), maxSkew = 1.0)
       val g1 = VectorSink.generationAt(store, "emb", 1L)
-      VectorSink.topKPqGen(store, "emb", g1, even,
-        even.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, nprobe = 8, shortlist = 20)
+      VectorSink.topK(store, "emb", even.filter(col("vec_id") < 10), "vec_id",
+        "embedding", k = 5, nprobe = 8, at = Some(g1),
+        fullVectors = Some(even), shortlist = 20)
         .withColumn("gens",
           lit(VectorSink.generations(store, "emb").mkString(",")))
         .orderBy("query_id", "rank")
@@ -1494,7 +1494,7 @@ object ExtQueries {
     // read back off the pinned manifest row, so a probe that resolved
     // any model piece from the head generation hash-fails.
     "sim_opq_generation" -> q { c =>
-      import graft.write.{TableStore, VectorSink}
+      import graft.write.{Codec, TableStore, VectorSink}
       val store = new TableStore(
         Scratch.dir("graft-ogen"), c.spark)
       val vecs = c.t("embeddings").select("vec_id", "embedding")
@@ -1503,21 +1503,20 @@ object ExtQueries {
         .select(col("vec_id"),
           transform(col("embedding"), x => x * lit(0.5) + lit(4.0))
             .cast("array<float>").as("embedding"))
-      VectorSink.writeIvfOpq(store, "emb", even,
-        "vec_id", "embedding", nlist = 8, m = 4, ksub = 4, iters = 2) // gen 1
+      VectorSink.writeIvf(store, "emb", even, "vec_id", "embedding",
+        nlist = 8, codec = Codec.Opq(m = 4, ksub = 4, iters = 2))     // gen 1
       VectorSink.append(store, "emb", blob, "vec_id", "embedding")    // gen 2
       VectorSink.rebalance(store, "emb", "vec_id", "embedding",       // gen 3
         fullVectors = Some(even.unionByName(blob)), maxSkew = 1.0)
       val g1 = VectorSink.generationAt(store, "emb", 1L)
-      val (rotation, spectrum) = g1.opq.get
-      OracleStash.put("sim_opq_generation", Opq.adcOracleSqlOver(
-        Opq.OpqModel(rotation, spectrum, g1.pqModel.get),
+      val Codec.Model.Opq(_, model1) = g1.model
+      OracleStash.put("sim_opq_generation", Opq.adcOracleSqlOver(model1,
         ksub = 4, iters = 2, k = 5, shortlist = 20, maxQueryId = 10,
         corpusWhere = "vec_id % 2 = 0",
         tailCols = Seq("'1,2,3' AS gens")))
-      VectorSink.topKOpqGen(store, "emb", g1, even,
-        even.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, nprobe = 8, shortlist = 20)
+      VectorSink.topK(store, "emb", even.filter(col("vec_id") < 10), "vec_id",
+        "embedding", k = 5, nprobe = 8, at = Some(g1),
+        fullVectors = Some(even), shortlist = 20)
         .withColumn("gens",
           lit(VectorSink.generations(store, "emb").mkString(",")))
         .orderBy("query_id", "rank")
@@ -1530,7 +1529,7 @@ object ExtQueries {
     // that leaked the head corpus would surface drifted odd ids and
     // hash-fail against the evens-only Hamming oracle).
     "sim_bq_generation" -> q { c =>
-      import graft.write.{TableStore, VectorSink}
+      import graft.write.{Codec, TableStore, VectorSink}
       val store = new TableStore(
         Scratch.dir("graft-bgen"), c.spark)
       val vecs = c.t("embeddings").select("vec_id", "embedding")
@@ -1539,15 +1538,15 @@ object ExtQueries {
         .select(col("vec_id"),
           transform(col("embedding"), x => x * lit(0.5) + lit(4.0))
             .cast("array<float>").as("embedding"))
-      VectorSink.writeIvfBinary(store, "emb", even,
-        "vec_id", "embedding", nlist = 8)                             // gen 1
+      VectorSink.writeIvf(store, "emb", even, "vec_id", "embedding",
+        nlist = 8, codec = Codec.Binary)                              // gen 1
       VectorSink.append(store, "emb", blob, "vec_id", "embedding")    // gen 2
       VectorSink.rebalance(store, "emb", "vec_id", "embedding",       // gen 3
         fullVectors = Some(even.unionByName(blob)), maxSkew = 1.0)
       val g1 = VectorSink.generationAt(store, "emb", 1L)
-      VectorSink.topKBinaryGen(store, "emb", g1, even,
-        even.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, nprobe = 8, shortlist = 20)
+      VectorSink.topK(store, "emb", even.filter(col("vec_id") < 10), "vec_id",
+        "embedding", k = 5, nprobe = 8, at = Some(g1),
+        fullVectors = Some(even), shortlist = 20)
         .withColumn("gens",
           lit(VectorSink.generations(store, "emb").mkString(",")))
         .orderBy("query_id", "rank")
@@ -1575,8 +1574,8 @@ object ExtQueries {
         "physical_rows", "generations").head()
       require(coll.generations == Seq(1L, 2L),
         s"expected generations 1,2 — got ${coll.generations}")
-      coll.topKAt(1L, even.filter(col("vec_id") < 10),
-          "vec_id", "embedding", k = 5, nprobe = 8)
+      coll.topK(even.filter(col("vec_id") < 10),
+          "vec_id", "embedding", k = 5, nprobe = 8, at = Some(1L))
         .withColumn("rank", col("rank").cast("long"))
         .withColumn("gen", lit(d.getLong(0)))
         .withColumn("metric", lit(d.getString(1)))
@@ -1597,11 +1596,11 @@ object ExtQueries {
       val store = new graft.write.TableStore(
         Scratch.dir("graft-vsq"), c.spark)
       val vecs = c.t("embeddings")
-      graft.write.VectorSink.writeIvfQuantized(store, "emb", vecs,
-        "vec_id", "embedding", nlist = 16)
-      graft.write.VectorSink.topKQuantized(store, "emb", vecs,
-        vecs.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, nprobe = 16, shortlist = 20)
+      graft.write.VectorSink.writeIvf(store, "emb", vecs, "vec_id",
+        "embedding", nlist = 16, codec = graft.write.Codec.Sq8)
+      graft.write.VectorSink.topK(store, "emb",
+        vecs.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
+        nprobe = 16, fullVectors = Some(vecs), shortlist = 20)
         .orderBy("query_id", "rank")
     },
 
@@ -1617,18 +1616,18 @@ object ExtQueries {
       val store = new graft.write.TableStore(
         Scratch.dir("graft-vopq"), c.spark)
       val vecs = c.t("embeddings")
-      graft.write.VectorSink.writeIvfOpq(store, "emb", vecs,
-        "vec_id", "embedding", nlist = 8, m = 4, ksub = 4, iters = 2)
+      graft.write.VectorSink.writeIvf(store, "emb", vecs, "vec_id",
+        "embedding", nlist = 8,
+        codec = graft.write.Codec.Opq(m = 4, ksub = 4, iters = 2))
       val g = graft.write.VectorSink.generation(store, "emb")
-      val (rotation, spectrum) = g.opq.get
-      OracleStash.put("sim_ivf_opq", Opq.adcOracleSql(
-        Opq.OpqModel(rotation, spectrum, g.pqModel.get),
+      val graft.write.Codec.Model.Opq(_, model) = g.model
+      OracleStash.put("sim_ivf_opq", Opq.adcOracleSql(model,
         ksub = 4, iters = 2, k = 5, shortlist = 20, maxQueryId = 10))
       val (orthOk, balanced, bucketsSorted) =
-        Opq.selfGates(rotation, spectrum, m = 4)
-      graft.write.VectorSink.topKOpq(store, "emb", vecs,
-        vecs.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, nprobe = 8, shortlist = 20)
+        Opq.selfGates(model.rotation, model.spectrum, m = 4)
+      graft.write.VectorSink.topK(store, "emb",
+        vecs.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
+        nprobe = 8, fullVectors = Some(vecs), shortlist = 20)
         .withColumn("orthonormal_ok", lit(orthOk))
         .withColumn("allocation_beats_contiguous", lit(balanced))
         .withColumn("buckets_nonincreasing", lit(bucketsSorted))
@@ -1643,11 +1642,12 @@ object ExtQueries {
       val store = new graft.write.TableStore(
         Scratch.dir("graft-vpq"), c.spark)
       val vecs = c.t("embeddings")
-      graft.write.VectorSink.writeIvfPq(store, "emb", vecs,
-        "vec_id", "embedding", nlist = 8, m = 4, ksub = 4, iters = 2)
-      graft.write.VectorSink.topKPq(store, "emb", vecs,
-        vecs.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, nprobe = 8, shortlist = 20)
+      graft.write.VectorSink.writeIvf(store, "emb", vecs, "vec_id",
+        "embedding", nlist = 8,
+        codec = graft.write.Codec.Pq(m = 4, ksub = 4, iters = 2))
+      graft.write.VectorSink.topK(store, "emb",
+        vecs.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
+        nprobe = 8, fullVectors = Some(vecs), shortlist = 20)
         .orderBy("query_id", "rank")
     },
 

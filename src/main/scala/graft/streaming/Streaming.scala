@@ -152,7 +152,8 @@ object Streaming {
       checkpoint: Option[String] = None,
       retainLast: Option[Int] = None,
       retainTtlMs: Option[Long] = None): Unit = {
-    require(graft.write.VectorSink.readMeta(store, table).metric == "cosine",
+    require(graft.write.VectorSink.generation(store, table)
+      .model.codec.storesVectors,
       s"collection '$table' is quantized: streaming self-maintenance " +
         "needs the stored vectors — drain into VectorSink.append and " +
         "rebalance with fullVectors out of band")
@@ -189,13 +190,14 @@ object Streaming {
   def probeCollection(store: TableStore, queries: DataFrame, table: String,
       id: String, vec: String, k: Int, nprobe: Int, out: String,
       checkpoint: Option[String] = None): Unit = {
-    // guard BEFORE the stream starts: a quantized collection stores
-    // codes, not vectors — topK would die mid-stream on an unrelated
-    // missing-column error; fail here with the routing message instead
-    require(graft.write.VectorSink.readMeta(store, table).metric == "cosine",
+    // guard BEFORE the stream starts: a code-only collection needs the
+    // caller's full-precision corpus for the re-rank — topK would die
+    // on the first batch; fail here with the routing message instead
+    require(graft.write.VectorSink.generation(store, table)
+      .model.codec.storesVectors,
       s"collection '$table' is quantized: streaming probes need the " +
-        "stored vectors — drain batches into VectorSink.topKQuantized/" +
-        "topKPq/topKOpq (they need the full-vector frame) out of band")
+        "stored vectors — drain batches into VectorSink.topK(fullVectors " +
+        "= <the full-precision corpus>) out of band")
     // IDEMPOTENT per batchId — foreachBatch's replay contract: with a
     // durable checkpoint, a crash between an append and the stream
     // commit re-runs that batch on restart; the hits it already wrote
@@ -479,10 +481,7 @@ object Streaming {
     * manifest read, no Spark job, like [[maxBatchIdStat]]. */
   private[streaming] def landedBatchCount(store: TableStore,
       table: String): Long =
-    if (!store.exists(table)) 0L
-    else store.segments(table).flatMap(_.stats.get(Pipeline.BatchIdColumn))
-      .flatMap(s => scala.util.Try(BigDecimal(s.max).toLong).toOption)
-      .distinct.size.toLong
+    batchIdStats(store, table).distinct.size.toLong
 
   /** Max `_batch_id` declared by any committed segment of `table` (−1
     * when the table is absent or carries no such stat): ONE manifest
@@ -490,11 +489,15 @@ object Streaming {
   private[streaming] def maxBatchIdStat(store: TableStore,
       table: String): Long = {
     guardManifestReads.incrementAndGet()
-    if (!store.exists(table)) -1L
+    batchIdStats(store, table).foldLeft(-1L)(math.max)
+  }
+
+  /** The `_batch_id` max stat of every committed segment of `table`
+    * (empty when the table is absent) — one manifest walk. */
+  private def batchIdStats(store: TableStore, table: String): Seq[Long] =
+    if (!store.exists(table)) Nil
     else store.segments(table).flatMap(_.stats.get(Pipeline.BatchIdColumn))
       .flatMap(s => scala.util.Try(BigDecimal(s.max).toLong).toOption)
-      .foldLeft(-1L)(math.max)
-  }
 
   /** Test hook: manifest walks performed by the serving idempotence
     * guard — the spec pins ONE per stream run regardless of how many

@@ -39,11 +39,6 @@ final case class Scd2Config(
   */
 object Scd2 {
 
-  private def activeCond(cfg: Scd2Config): Column = cfg.activeRecordTs match {
-    case None => col(cfg.validToColumn).isNull
-    case Some(ts) => col(cfg.validToColumn) === to_timestamp(lit(ts))
-  }
-
   private def withHash(df: DataFrame, cfg: Scd2Config): DataFrame =
     df.withColumn(cfg.rowHashColumn, Ids.rowHash(
       cfg.trackedColumns.filterNot(Seq(cfg.validFromColumn, cfg.validToColumn,
@@ -51,7 +46,10 @@ object Scd2 {
 
   /** The active-record predicate, exposed so [[Dispositions.scd2]] can
     * split a legacy (un-tagged) table once into active/closed segments. */
-  def isActive(cfg: Scd2Config): Column = activeCond(cfg)
+  def isActive(cfg: Scd2Config): Column = cfg.activeRecordTs match {
+    case None => col(cfg.validToColumn).isNull
+    case Some(ts) => col(cfg.validToColumn) === to_timestamp(lit(ts))
+  }
 
   /** One SCD2 load against the ACTIVE slice only — the scale path.
     * `activeDest` must contain only currently-active rows; returns
@@ -114,17 +112,4 @@ object Scd2 {
         (newActive, retired)
     }
   }
-
-  /** Apply one SCD2 load; returns the new full table content (the
-    * un-pruned whole-table form, kept for direct algebra use). */
-  def apply(dest: Option[DataFrame], staging: DataFrame, cfg: Scd2Config): DataFrame =
-    dest match {
-      case None => applySplit(None, staging, cfg)._1
-      case Some(d0) =>
-        val d = withHash(d0.drop(cfg.rowHashColumn), cfg)
-        val (newActive, newlyClosed) = applySplit(Some(d.filter(activeCond(cfg))), staging, cfg)
-        d.filter(!activeCond(cfg))
-          .unionByName(newlyClosed, allowMissingColumns = true)
-          .unionByName(newActive, allowMissingColumns = true)
-    }
 }

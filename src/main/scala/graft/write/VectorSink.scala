@@ -12,12 +12,19 @@ import graft.ext.{Dedup, Similarity}
   * of manifest-committed tables in a [[TableStore]], IVF-list-bucketed
   * so a probe reads nprobe/nlist of the corpus from a cold start.
   *
+  * A collection stores its rows under one [[Codec]] (vectors, or SQ8 /
+  * sign / PQ / OPQ codes), chosen at [[writeIvf]] and persisted with
+  * it; every reader ([[topK]], [[appendDeduped]], [[append]],
+  * [[rebalance]]) works the plan out from the stored codec, the way
+  * one FAISS `search` serves every index `index_factory` built.
+  *
   * Layout for collection `t` — two planes:
   *
   * DATA plane (Spark-written parquet, executor-scale):
-  *  - `t`              — the corpus rows + `__list` (nearest coarse
-  *    centroid), segment RANGE-PARTITIONED by `__list` with min/max
-  *    stats, so list-targeted reads prune to the probed segments;
+  *  - `t`              — the corpus rows (vectors or codes) + `__list`
+  *    (nearest coarse centroid), segment RANGE-PARTITIONED by `__list`
+  *    with min/max stats, so list-targeted reads prune to the probed
+  *    segments;
   *  - `t__centroids`   — (`__list`, `__centroid`): the coarse quantizer,
   *    nlist rows (driver-small by contract — FAISS holds the coarse
   *    quantizer in memory on every searcher for the same reason);
@@ -62,14 +69,10 @@ object VectorSink {
       metric: String, dim: Int)
 
   /** One CONSISTENT generation of a collection: every sub-table
-    * time-travelled to the snapshot the collection manifest pinned. */
+    * time-travelled to the snapshot the collection manifest pinned,
+    * and the [[Codec.Model]] those snapshots hold. */
   final case class Generation(meta: IvfMeta, corpus: DataFrame,
-      centroids: DataFrame, stats: Option[DataFrame],
-      pqModel: Option[graft.ext.Pq.PqModel],
-      /** OPQ rotation + its eigenvalue spectrum (cosine-opq only) —
-        * driver-held like the coarse quantizer: rotating a probe batch
-        * is a map-only matvec against this literal. */
-      opq: Option[(Array[Array[Double]], Array[Double])] = None) {
+      centroids: DataFrame, model: Codec.Model) {
     /** The coarse quantizer as a driver-held matrix — collected ONCE
       * per resolved generation and reused by every probe through it
       * (the FAISS searcher-resident coarse quantizer): a probe session
@@ -139,7 +142,7 @@ object VectorSink {
     * sub-table. [[TableStore.vacuum]] folds these in on EVERY vacuum,
     * so a raw sub-table vacuum (not routed through [[vacuumCollection]])
     * can never delete a manifest a listed generation still pins —
-    * historical probes ([[generationAt]]/[[topKGen]]) stay readable
+    * historical probes ([[generationAt]] + [[topK]]) stay readable
     * under any vacuum entry point. Lock-free: manifest reads resolve a
     * complete snapshot via the atomic `_CURRENT` swap, and the caller
     * already holds the vacuumed table's own lock. */
@@ -185,7 +188,7 @@ object VectorSink {
   }
 
   /** The current head snapshot of every existing sub-table — what a
-    * FULL-REWRITE path (writeIvf*) pins: it has just rewritten every
+    * FULL-REWRITE path ([[writeIvf]]) pins: it has just rewritten every
     * table it uses, so the heads ARE its generation. [[append]] must
     * NOT use this (it would promote orphaned partial commits); it pins
     * the prior generation's model snaps instead. */
@@ -338,58 +341,12 @@ object VectorSink {
 
   private def resolve(store: TableStore, table: String,
       c: CollectionRow): Generation = {
-    def at(suffix: String): DataFrame = {
-      val snapCol = SubTables.toMap.apply(suffix)
-      store.readAt(s"$table$suffix", c.snaps(snapCol))
-    }
+    def snap(suffix: String): Long = c.snaps(SubTables.toMap.apply(suffix))
     val meta = metaFrom(store.readDriverRowsAt(s"${table}__ivf_meta",
-      c.snaps("meta_snap")).head)
-    val corpus = at("")
-    val centroids = at("__centroids")
-    meta.metric match {
-      case "cosine" | "hamming-bq" =>
-        Generation(meta, corpus, centroids, None, None)
-      case "cosine-sq8" =>
-        Generation(meta, corpus, centroids, Some(at("__sq_stats")), None)
-      case "cosine-pq" =>
-        val pm = store.readDriverRowsAt(s"${table}__pq_meta",
-          c.snaps("pqmeta_snap")).head
-        val (m, ksub) =
-          (pm("m").asInstanceOf[Int], pm("ksub").asInstanceOf[Int])
-        // codebooks are driver-written string-cell rows since r11;
-        // LEGACY collections stored centroid as array<double> (a
-        // parquet group the driver reader cannot decode) — fall back
-        // to a Spark read of the same pinned snapshot for those
-        val model = try {
-          pqModelFrom(store.readDriverRowsAt(s"${table}__pq_codebooks",
-            c.snaps("codebooks_snap")), m, ksub, meta.dim, table)
-        } catch {
-          case _: ClassCastException | _: UnsupportedOperationException =>
-            pqModelFromFrame(store.readAt(s"${table}__pq_codebooks",
-              c.snaps("codebooks_snap")), m, ksub, meta.dim, table)
-        }
-        Generation(meta, corpus, centroids, None, Some(model))
-      case "cosine-opq" =>
-        val pm = store.readDriverRowsAt(s"${table}__pq_meta",
-          c.snaps("pqmeta_snap")).head
-        val (m, ksub) =
-          (pm("m").asInstanceOf[Int], pm("ksub").asInstanceOf[Int])
-        val model = pqModelFrom(store.readDriverRowsAt(
-          s"${table}__pq_codebooks", c.snaps("codebooks_snap")),
-          m, ksub, meta.dim, table)
-        val rotRows = store.readDriverRowsAt(s"${table}__opq_rotation",
-          c.snaps("rotation_snap")).sortBy(_("i").asInstanceOf[Int])
-        require(rotRows.length == meta.dim,
-          s"collection '$table': rotation has ${rotRows.length} rows, " +
-            s"dim is ${meta.dim}")
-        val rotation = rotRows.map(r =>
-          r("row").asInstanceOf[String].split(",").map(_.toDouble)).toArray
-        val spectrum = rotRows.map(_("lam").asInstanceOf[Double]).toArray
-        Generation(meta, corpus, centroids, None, Some(model),
-          Some((rotation, spectrum)))
-      case other => throw new IllegalArgumentException(
-        s"collection '$table' has unknown metric '$other'")
-    }
+      snap("__ivf_meta")).head)
+    Generation(meta, store.readAt(table, snap("")),
+      store.readAt(s"${table}__centroids", snap("__centroids")),
+      Codec.resolve(store, table, meta, snap))
   }
 
   /** Write the one-row index-config table — a driver parquet file, no
@@ -419,36 +376,10 @@ object VectorSink {
     Array.tabulate(nlist)(l => counts.getOrElse(l, 0L))
   }
 
-  /** Dim of the corpus vector column, validated over the WHOLE corpus
-    * in one EAGER aggregate (min = max, no NULLs) — the write-side twin
-    * of [[widthChecked]] and the full-write counterpart of [[ingest]]'s
-    * batch validation: a mixed-width or NULL row would persist codes
-    * of differing word counts silently, and every later probe kernel
-    * clamps to min(length). OPQ-only: [[graft.ext.Opq.train]] takes
-    * `dim` as a parameter, so the width must resolve BEFORE any other
-    * corpus pass; every other write path defers the same checks onto
-    * the write action itself ([[observeDim]]/[[validatedDim]] — zero
-    * extra scan). */
-  private def uniformDim(corpus: DataFrame, vec: String,
-      table: String): Int = {
-    val d = corpus.agg(min(size(col(vec))).as("mn"),
-      max(size(col(vec))).as("mx"),
-      sum(when(col(vec).isNull, lit(1L)).otherwise(lit(0L))).as("nulls"))
-      .head()
-    require(!d.isNullAt(2),
-      s"write to '$table': empty corpus")
-    require(d.getLong(2) == 0L,
-      s"write to '$table': corpus carries ${d.getLong(2)} NULL vectors " +
-        "— drop or impute them first")
-    require(d.getInt(0) == d.getInt(1),
-      s"write to '$table': corpus vector widths span " +
-        s"[${d.getInt(0)}, ${d.getInt(1)}] — collections are fixed-dim")
-    d.getInt(0)
-  }
-
-  /** [[uniformDim]]'s checks WITHOUT their own corpus scan: the
-    * (min, max, null-count) of the vector width ride the write action
-    * as an `observe` aggregate on a frame the write already evaluates,
+  /** The corpus width checks (min = max, no NULLs) WITHOUT their own
+    * corpus scan: the (min, max, null-count) of the vector width ride
+    * the write action as an `observe` aggregate on a frame the write
+    * already evaluates,
     * and [[validatedDim]] raises AFTER the write but BEFORE the
     * collection manifest commits — an invalid corpus leaves only an
     * unreferenced sub-table swap (crash-equivalent: readers stay on
@@ -466,7 +397,7 @@ object VectorSink {
   }
 
   /** Read [[observeDim]]'s metrics (the write action has completed by
-    * the time this is called) and apply [[uniformDim]]'s contract.
+    * the time this is called): one fixed width, no NULL vectors.
     * The null count only gates on zero — a pre-write range-partition
     * sampling pass may run rows through the metrics operator twice,
     * which cannot turn a nonzero count into zero (min/max are
@@ -485,20 +416,27 @@ object VectorSink {
     mn
   }
 
-  /** Index `corpus` and commit the collection through `store`. The
-    * sub-table swaps are each atomic; the collection manifest commit
-    * (last) is what flips readers to the new generation. */
+  /** Index `corpus` and commit the collection through `store`, storing
+    * its rows under `codec` (see [[Codec]]). Every writer of a full
+    * generation comes through here — [[rebalance]] too, with the codec
+    * it read back. The codec's model tables are written first, then the
+    * corpus (codes, or vectors for [[Codec.Flat]]) bucketed by coarse
+    * list, the centroids and the index config; each sub-table swap is
+    * atomic, and the collection manifest commit (last) is what flips
+    * readers to the new generation. */
   def writeIvf(store: TableStore, table: String, corpus: DataFrame,
       id: String, vec: String, nlist: Int = 16, seed: Long = 42L,
-      trainFraction: Double = 0.25): Unit = store.exclusively(table) {
-    val (assigned0, centroids) =
-      Similarity.ivfIndex(corpus, id, vec, nlist, seed, trainFraction)
+      trainFraction: Double = 0.25,
+      codec: Codec = Codec.Flat): Unit = store.exclusively(table) {
+    val model = codec.fit(store, table, corpus, id, vec)
+    val (assigned0, centroids) = Similarity.ivfIndex(
+      model.rotate(corpus, id, vec), id, vec, nlist, seed, trainFraction)
     val (assigned, dimObs) = observeDim(assigned0, vec)
-    store.overwrite(table, assigned,
+    store.overwrite(table, model.encode(assigned, id, vec),
       statsFor = Seq("__list"), rangeBy = Seq("__list"))
     val dim = validatedDim(dimObs, table)
     store.overwrite(s"${table}__centroids", centroids)
-    writeMeta(store, table, nlist, seed, trainFraction, "cosine", dim)
+    writeMeta(store, table, nlist, seed, trainFraction, codec.metric, dim)
     commitCollection(store, table, headSnaps(store, table),
       countListSizes(store, table, nlist))
   }
@@ -506,79 +444,102 @@ object VectorSink {
   def readMeta(store: TableStore, table: String): IvfMeta =
     metaFrom(store.readDriverRows(s"${table}__ivf_meta").head)
 
-  /** Top-k over the PERSISTED collection: cold-read the centroids and
-    * the bucketed corpus, probe with [[Similarity.ivfProbe]] — the same
-    * math as the in-memory path, so `nprobe = nlist` is exact. The
-    * sub-tables resolve through the collection manifest
-    * ([[generation]]), so a concurrent [[rebalance]] — or a crash that
-    * left partial sub-table commits — can never hand a probe centroids
-    * from one generation and corpus rows from another. */
+  /** Top-k cosine neighbours per query over the PERSISTED collection,
+    * `(query_id, rank, match_id, cosine)` with cosine rounded to 6
+    * places. The sub-tables resolve through the collection manifest
+    * ([[generation]], or `at` — a historical [[generationAt]]), so a
+    * concurrent [[rebalance]], or a crash that left partial sub-table
+    * commits, can never hand a probe centroids from one generation and
+    * corpus rows from another. The collection's codec picks the plan:
+    *
+    *  - [[Codec.Flat]]: [[Similarity.ivfProbe]] over the stored vectors
+    *    — the same math as the in-memory [[Similarity.ivfTopK]], so
+    *    `nprobe = nlist` is exact. `fullVectors`/`shortlist` are not
+    *    used: the stored vectors already are the full precision.
+    *  - [[Codec.Binary]]: Hamming shortlist over the stored sign codes
+    *    within the probed lists (pure integer ordering), then an exact
+    *    cosine re-rank of the shortlist against `fullVectors`; at
+    *    `nprobe = nlist` this is exactly [[Similarity.binaryTopK]].
+    *  - SQ8 / PQ / OPQ: ADC shortlist over the code reconstructions,
+    *    then the exact re-rank against `fullVectors` (a point-read join,
+    *    shortlist-sized); at `nprobe = nlist` this is exactly
+    *    [[graft.ext.Quantize.rerankTopK]] / [[graft.ext.Pq.adcTopK]] /
+    *    [[graft.ext.Opq.adcTopK]]. OPQ rotates the queries and
+    *    `fullVectors` under the generation's pinned rotation; its
+    *    cosine is the rotated-space value ≡ the raw cosine up to fp.
+    *
+    * Code-only collections (every codec but Flat) need `fullVectors`
+    * (the full-precision corpus) and `shortlist ≥ k`.
+    *
+    * Filtered search — the metadata-filtered queries qdrant/weaviate
+    * expose: `among` restricts matches to the ids of an allowlist frame
+    * (left-semi join; any codec), `where` to corpus rows satisfying a
+    * predicate over the stored columns (Flat only: the others store
+    * codes, not filterable payloads). Both apply BEFORE the rank or
+    * shortlist, so k survivors come back whenever the probed lists
+    * hold them, where a post-filter of an unfiltered top-k would return
+    * fewer. At `nprobe = nlist` the result is exactly the brute-force
+    * top-k over the filtered live corpus; at lower nprobe survivors
+    * living only in unprobed lists are missed, so highly selective
+    * filters warrant a higher nprobe. */
   def topK(store: TableStore, table: String, queries: DataFrame,
-      id: String, vec: String, k: Int, nprobe: Int): DataFrame =
-    topKGen(store, table, generation(store, table), queries,
-      id, vec, k, nprobe)
-
-  /** [[topK]] against an EXPLICIT generation (see [[generationAt]]):
-    * centroids and corpus both resolve from the SAME pinned manifest
-    * row — the plain-IVF member of the topK*Gen family. */
-  def topKGen(store: TableStore, table: String, g: Generation,
-      queries: DataFrame, id: String, vec: String, k: Int,
-      nprobe: Int): DataFrame = {
-    require(g.meta.metric == "cosine",
-      s"collection '$table' is '${g.meta.metric}': it stores codes, not " +
-        "vectors — probe with the matching variant (topKQuantized / " +
-        "topKPq / topKOpq / topKBinary)")
-    require(nprobe >= 1 && nprobe <= g.meta.nlist,
-      s"nprobe $nprobe outside [1, ${g.meta.nlist}]")
-    Similarity.ivfProbe(g.corpus, g.centroidMatrix,
-      widthChecked(queries, vec, g.meta.dim), id, vec, k, nprobe)
-  }
-
-  /** FILTERED top-k: [[topK]] restricted to corpus rows satisfying
-    * `predicate` — the vector-store "filtered search" surface (the
-    * metadata-filtered queries qdrant/weaviate expose; the reference's
-    * adapters write payload alongside vectors for exactly this). The
-    * filter applies BEFORE the rank/shortlist (PRE-filter): k survivors
-    * come back whenever the probed lists hold them, where a post-filter
-    * of an unfiltered top-k would return fewer than k. At
-    * `nprobe = nlist` the result is exactly the brute-force top-k over
-    * the filtered live corpus; at lower nprobe the usual filtered-ANN
-    * caveat applies — survivors living only in unprobed lists are
-    * missed, so highly selective filters warrant a higher nprobe. */
-  def topKWhere(store: TableStore, table: String, queries: DataFrame,
       id: String, vec: String, k: Int, nprobe: Int,
-      predicate: org.apache.spark.sql.Column): DataFrame = {
-    val g = generation(store, table)
-    require(g.meta.metric == "cosine",
-      s"collection '$table' is '${g.meta.metric}': quantized collections " +
-        "store codes, not filterable payloads — use topKQuantized/topKPq/" +
-        "topKBinary " +
-        "with `among` (an id allowlist) instead")
+      at: Option[Generation] = None,
+      among: Option[DataFrame] = None,
+      where: Option[org.apache.spark.sql.Column] = None,
+      fullVectors: Option[DataFrame] = None,
+      shortlist: Int = 0): DataFrame = {
+    val g = at.getOrElse(generation(store, table))
     require(nprobe >= 1 && nprobe <= g.meta.nlist,
       s"nprobe $nprobe outside [1, ${g.meta.nlist}]")
-    Similarity.ivfProbe(g.corpus.filter(predicate), g.centroidMatrix,
-      widthChecked(queries, vec, g.meta.dim), id, vec, k, nprobe)
-  }
-
-  /** [[topKWhere]] with an ID ALLOWLIST instead of a predicate: matches
-    * restricted to ids present in `allowed` (left-semi join — the
-    * allowlist frame only needs the id column; small lists broadcast
-    * under AQE, big ones shuffle like any equi-join). */
-  def topKAmong(store: TableStore, table: String, queries: DataFrame,
-      allowed: DataFrame, id: String, vec: String, k: Int,
-      nprobe: Int): DataFrame = {
-    val g = generation(store, table)
-    require(nprobe >= 1 && nprobe <= g.meta.nlist,
-      s"nprobe $nprobe outside [1, ${g.meta.nlist}]")
-    require(g.meta.metric == "cosine",
-      s"collection '$table' is '${g.meta.metric}': probe quantized " +
-        "collections with topKQuantized/topKPq/topKBinary(among = ...)")
-    Similarity.ivfProbe(restrict(g.corpus, Some(allowed), id), g.centroidMatrix,
-      widthChecked(queries, vec, g.meta.dim), id, vec, k, nprobe)
+    val corpus = restrict(g.corpus, among, id)
+    if (g.model.codec.storesVectors)
+      Similarity.ivfProbe(where.fold(corpus)(corpus.filter),
+        g.centroidMatrix, widthChecked(queries, vec, g.meta.dim),
+        id, vec, k, nprobe)
+    else {
+      require(where.isEmpty,
+        s"collection '$table' is '${g.meta.metric}': it stores codes, not " +
+          "filterable payloads — pass `among` (an id allowlist) instead")
+      val full = fullVectors.getOrElse(throw new IllegalArgumentException(
+        s"collection '$table' is '${g.meta.metric}': it stores codes, not " +
+          "vectors — pass fullVectors (the full-precision corpus) for the " +
+          "exact re-rank"))
+      val probes = probeLists(g, queries, id, vec, nprobe)
+      g.model match {
+        case Codec.Model.Binary =>
+          // candidates carry (query_id, match_id, hamming) scalars only;
+          // the shared tail (ONE implementation with the in-memory
+          // binaryTopK — the sim_ivf_bq gate's persisted ≡ in-memory
+          // equivalence depends on the tie-breaks never drifting apart)
+          // rejoins the float vectors at shortlist size for the re-rank
+          val cands = probes
+            .withColumn("__qcode",
+              graft.functions.VectorFunctions.packSignBits(col("__qv")))
+            .join(corpus.select(col(id).as("match_id"), col("__list"),
+              col("__code")), Seq("__list"))
+            .filter(col("query_id") =!= col("match_id"))
+            .select(col("query_id"), col("match_id"),
+              graft.functions.VectorFunctions.hammingDist(
+                col("__qcode"), col("__code")).as("hamming"))
+          Similarity.hammingShortlistRerank(cands, queries, full,
+            id, vec, k, shortlist)
+            .withColumn("rank", col("rank").cast("long"))
+        case model =>
+          val deq = model.reconstruct(corpus, id, vec, "__deq")
+            .select(col(id).as("match_id"), col("__list"), col("__deq"))
+          // ADC shortlist + exact re-rank: the ONE shared implementation
+          // of the tie-break-sensitive tail
+          graft.ext.Quantize.shortlistRerank(
+            probes.join(deq, Seq("__list"))
+              .filter(col("query_id") =!= col("match_id")),
+            model.rotate(full, id, vec), id, vec, k, shortlist)
+      }
+    }
   }
 
   /** Left-semi restriction of corpus rows to an id allowlist — the
-    * shared pre-filter of every `among` probe variant. */
+    * `among` pre-filter of [[topK]]. */
   private def restrict(corpus: DataFrame, among: Option[DataFrame],
       id: String): DataFrame = among match {
     case None => corpus
@@ -587,115 +548,22 @@ object VectorSink {
     case Some(a) => corpus.join(a.select(col(id)), Seq(id), "left_semi")
   }
 
-  /** IVF + SQ8: the collection stores INT8 CODES instead of vectors
-    * (4× less data under every probe scan — the FAISS IVF-SQ8 layout).
-    * Extra table: `t__sq_stats` — one row of per-dimension (mins,
-    * maxs), the dequantization parameters. The corpus rows themselves
-    * hold only (id, `__list`, `__q`). */
-  def writeIvfQuantized(store: TableStore, table: String, corpus: DataFrame,
-      id: String, vec: String, nlist: Int = 16, seed: Long = 42L,
-      trainFraction: Double = 0.25): Unit = store.exclusively(table) {
-    val (assigned0, centroids) =
-      Similarity.ivfIndex(corpus, id, vec, nlist, seed, trainFraction)
-    val (assigned, dimObs) = observeDim(assigned0, vec)
-    val stats = graft.ext.Quantize.dimStats(corpus, vec)
-    store.overwrite(s"${table}__sq_stats", stats)
-    val coded = assigned.crossJoin(broadcast(store.read(s"${table}__sq_stats")))
-      .select(col(id), col("__list"),
-        graft.functions.VectorFunctions.quantizeInt8(
-          col(vec), col("mins"), col("maxs"))("q").as("__q"))
-    store.overwrite(table, coded,
-      statsFor = Seq("__list"), rangeBy = Seq("__list"))
-    val dim = validatedDim(dimObs, table)
-    store.overwrite(s"${table}__centroids", centroids)
-    writeMeta(store, table, nlist, seed, trainFraction, "cosine-sq8", dim)
-    commitCollection(store, table, headSnaps(store, table),
-      countListSizes(store, table, nlist))
-  }
-
-  /** IVF + BINARY quantization: the collection stores 1-bit SIGN CODES
-    * (⌈dim/64⌉ packed words per row — 32× less data than float32 under
-    * every probe scan; the FAISS `BIVF` layout). No model tables beyond
-    * the coarse centroids: sign codes are data-independent, so appends
-    * never drift against a trained code model. Probe = Hamming
-    * (XOR+popcount) shortlist within the probed lists + exact re-rank
-    * from `fullVectors` ([[topKBinary]]). */
-  def writeIvfBinary(store: TableStore, table: String, corpus: DataFrame,
-      id: String, vec: String, nlist: Int = 16, seed: Long = 42L,
-      trainFraction: Double = 0.25): Unit = store.exclusively(table) {
-    val (assigned0, centroids) =
-      Similarity.ivfIndex(corpus, id, vec, nlist, seed, trainFraction)
-    val (assigned, dimObs) = observeDim(assigned0, vec)
-    val coded = assigned.select(col(id), col("__list"),
-      graft.functions.VectorFunctions.packSignBits(col(vec)).as("__code"))
-    store.overwrite(table, coded,
-      statsFor = Seq("__list"), rangeBy = Seq("__list"))
-    val dim = validatedDim(dimObs, table)
-    store.overwrite(s"${table}__centroids", centroids)
-    writeMeta(store, table, nlist, seed, trainFraction, "hamming-bq", dim)
-    commitCollection(store, table, headSnaps(store, table),
-      countListSizes(store, table, nlist))
-  }
-
-  /** Top-k over the BINARY collection: centroid-ranked probe lists,
-    * Hamming shortlist over the stored sign codes (pure integer
-    * ordering — engine-replayable, unlike the lossy-float ADC
-    * shortlists), exact cosine re-rank of ONLY the shortlist against
-    * `fullVectors`. With `nprobe = nlist` this is exactly
-    * [[graft.ext.Similarity.binaryTopK]], which is what the gate
-    * exploits. */
-  def topKBinary(store: TableStore, table: String,
-      fullVectors: DataFrame, queries: DataFrame,
-      id: String, vec: String, k: Int, nprobe: Int,
-      shortlist: Int, among: Option[DataFrame] = None): DataFrame =
-    topKBinaryGen(store, table, generation(store, table), fullVectors,
-      queries, id, vec, k, nprobe, shortlist, among)
-
-  /** [[topKBinary]] against an EXPLICIT generation (see
-    * [[generationAt]]); `among` pre-filters the stored codes to an id
-    * allowlist like [[topKQuantizedGen]]. */
-  def topKBinaryGen(store: TableStore, table: String, g: Generation,
-      fullVectors: DataFrame, queries: DataFrame,
-      id: String, vec: String, k: Int, nprobe: Int,
-      shortlist: Int, among: Option[DataFrame] = None): DataFrame = {
-    require(g.meta.metric == "hamming-bq",
-      s"collection '$table' is '${g.meta.metric}', not a binary collection")
-    require(nprobe >= 1 && nprobe <= g.meta.nlist,
-      s"nprobe $nprobe outside [1, ${g.meta.nlist}]")
-    // candidates carry (query_id, match_id, hamming) scalars only; the
-    // shared tail (ONE implementation with the in-memory binaryTopK —
-    // the sim_ivf_bq gate's persisted ≡ in-memory equivalence depends
-    // on the tie-breaks never drifting apart) rejoins the float
-    // vectors at shortlist size for the exact re-rank
-    val cands = probeLists(g.centroidMatrix, queries, id, vec, nprobe)
-      .withColumn("__qcode",
-        graft.functions.VectorFunctions.packSignBits(col("__qv")))
-      .join(restrict(g.corpus, among, id)
-        .select(col(id).as("match_id"), col("__list"), col("__code")),
-        Seq("__list"))
-      .filter(col("query_id") =!= col("match_id"))
-      .select(col("query_id"), col("match_id"),
-        graft.functions.VectorFunctions.hammingDist(
-          col("__qcode"), col("__code")).as("hamming"))
-    Similarity.hammingShortlistRerank(cands, queries, fullVectors,
-      id, vec, k, shortlist)
-      .withColumn("rank", col("rank").cast("long"))
-  }
-
   /** Centroid-ranked probe lists per query: (query_id, __qv, __list)
-    * for the `nprobe` nearest coarse centroids — the shared head of
-    * every quantized probe path, delegating to the ONE probe-frame
-    * implementation ([[Similarity.probeFrame]]: map-only codegen top-n
-    * + the small keyed AQE-materialization exchange). Ranking is
-    * BIT-identical to the old window formulation AND to the append
-    * argmin (the exact SqDist subtract-square-accumulate loop, ties to
-    * the lowest `__list`), so the plan swap cannot move a single probe
-    * list. */
-  private def probeLists(centroids: Array[Array[Double]], queries: DataFrame,
+    * for the `nprobe` nearest coarse centroids of `g`, with `__qv` the
+    * query in code space (OPQ: rotated under the generation's pinned
+    * rotation) — the shared head of every code-probe path and every
+    * dedup screen, delegating to the ONE probe-frame implementation
+    * ([[Similarity.probeFrame]]: map-only codegen top-n + the small
+    * keyed AQE-materialization exchange). Ranking is BIT-identical to
+    * the append argmin (the exact SqDist subtract-square-accumulate
+    * loop, ties to the lowest `__list`). The width guard runs on the
+    * RAW queries, before the rotation: the matvec always emits a
+    * trained-width output, which would mask a mismatch. */
+  private def probeLists(g: Generation, queries: DataFrame,
       id: String, vec: String, nprobe: Int): DataFrame =
     Similarity.probeFrame(
-      widthChecked(queries, vec, centroids.headOption.map(_.length).getOrElse(0)),
-      id, vec, "__qv", centroids, nprobe)
+      g.model.rotate(widthChecked(queries, vec, g.meta.dim), id, vec),
+      id, vec, "__qv", g.centroidMatrix, nprobe)
 
   /** Width guard on the PROBE side (the write side checks the whole
     * batch in ingest): every distance kernel — centroid ranking,
@@ -705,222 +573,13 @@ object VectorSink {
     * is a LAZY per-row `assert_true` riding the probe plan itself:
     * EVERY row is checked (a mixed-width frame cannot slip past a
     * sampled check), no extra eager job runs, empty frames pass
-    * vacuously. OPQ probes apply it to the RAW queries BEFORE the
-    * rotation — the rotation matvec always emits a trained-width
-    * output, which would mask the mismatch. */
+    * vacuously. */
   private[write] def widthChecked(queries: DataFrame, vec: String,
       dim: Int): DataFrame =
     queries.filter(assert_true(size(col(vec)) === dim,
       lit(s"query vector width != collection dim $dim — the distance " +
         "kernels clamp to min(length), so a mismatched probe would " +
         "silently rank on a prefix of the dimensions")).isNull)
-
-  /** Top-k over the QUANTIZED collection: centroid-ranked probe lists,
-    * ADC (dequantized-cosine) shortlist over the stored codes, exact
-    * re-rank of ONLY the shortlist against `fullVectors` (the
-    * full-precision corpus — a point-read join, shortlist-sized). With
-    * `nprobe = nlist` this is exactly the ADC re-rank pipeline
-    * ([[graft.ext.Quantize.rerankTopK]]), which is what the gate
-    * exploits. */
-  def topKQuantized(store: TableStore, table: String,
-      fullVectors: DataFrame, queries: DataFrame,
-      id: String, vec: String, k: Int, nprobe: Int,
-      shortlist: Int, among: Option[DataFrame] = None): DataFrame =
-    topKQuantizedGen(store, table, generation(store, table), fullVectors,
-      queries, id, vec, k, nprobe, shortlist, among)
-
-  /** [[topKQuantized]] against an EXPLICIT generation (see
-    * [[generationAt]]) — probe the collection as it stood at a past
-    * commit: same plan, only the pinned snapshots differ. `among`
-    * pre-filters the stored codes to an id allowlist (filtered search —
-    * see [[topKAmong]]), BEFORE the ADC shortlist so k survivors come
-    * back whenever the probed lists hold them. */
-  def topKQuantizedGen(store: TableStore, table: String, g: Generation,
-      fullVectors: DataFrame, queries: DataFrame,
-      id: String, vec: String, k: Int, nprobe: Int,
-      shortlist: Int, among: Option[DataFrame] = None): DataFrame = {
-    // resolve ALL model tables through the collection manifest:
-    // dequantizing old codes with new stats (or ranking old lists with
-    // new centroids) mid-rebalance would silently corrupt every score
-    require(g.meta.metric == "cosine-sq8",
-      s"collection '$table' is '${g.meta.metric}', not an SQ8 collection")
-    require(nprobe >= 1 && nprobe <= g.meta.nlist,
-      s"nprobe $nprobe outside [1, ${g.meta.nlist}]")
-    val stats = broadcast(g.stats.get)
-    val probes = probeLists(g.centroidMatrix, queries, id, vec, nprobe)
-    val deq = restrict(g.corpus, among, id).crossJoin(stats)
-      .select(col(id).as("match_id"), col("__list"),
-        graft.functions.VectorFunctions.dequantizeInt8(
-          col("__q"), col("mins"), col("maxs")).as("__deq"))
-    // ADC shortlist + exact re-rank: the ONE shared implementation of
-    // the tie-break-sensitive tail ([[graft.ext.Quantize.shortlistRerank]])
-    graft.ext.Quantize.shortlistRerank(
-      probes.join(deq, Seq("__list"))
-        .filter(col("query_id") =!= col("match_id")),
-      fullVectors, id, vec, k, shortlist)
-  }
-
-  /** IVF + PQ (Jégou'11 IVFADC; FAISS `IVFx,PQy`): the collection
-    * stores m-byte PRODUCT-QUANTIZED codes — m·log₂(ksub) bits per
-    * vector against SQ8's 8·d, the layout billion-vector indexes
-    * actually ship. Extra tables: `t__pq_codebooks` ((sub, cl,
-    * centroid) — m·ksub rows, sketch-sized) and `t__pq_meta` (m, ksub,
-    * iters, dim). Training follows the deterministic [[graft.ext.Pq]]
-    * contract, so a probe with `nprobe = nlist` is oracle-exact. */
-  def writeIvfPq(store: TableStore, table: String, corpus: DataFrame,
-      id: String, vec: String, nlist: Int = 16, seed: Long = 42L,
-      trainFraction: Double = 0.25, m: Int = 4, ksub: Int = 16,
-      iters: Int = 2): Unit = store.exclusively(table) {
-    val (assigned0, centroids) =
-      Similarity.ivfIndex(corpus, id, vec, nlist, seed, trainFraction)
-    val (assigned, dimObs) = observeDim(assigned0, vec)
-    val model = graft.ext.Pq.train(corpus, id, vec, m, ksub, iters)
-    val coded = assigned.select(col(id), col("__list"),
-      graft.ext.Pq.codes(col(vec), model).as("__codes"))
-    store.overwrite(table, coded,
-      statsFor = Seq("__list"), rangeBy = Seq("__list"))
-    val dim = validatedDim(dimObs, table)
-    store.overwrite(s"${table}__centroids", centroids)
-    // the codebooks/params are ALREADY driver-resident after train —
-    // driver files, not a Spark write job per sketch-sized table.
-    // Double.toString round-trips exactly, so the string cells lose
-    // nothing vs a binary array column.
-    val cbRows = for {
-      j <- model.codebooks.indices
-      c <- model.codebooks(j).indices
-    } yield Seq("sub" -> (ICell(j): Cell), "cl" -> (ICell(c): Cell),
-      "centroid" -> (SCell(model.codebooks(j)(c).mkString(",")): Cell))
-    store.overwriteDriverFile(s"${table}__pq_codebooks")(p =>
-      TinyParquet.write(p, cbRows))
-    store.overwriteDriverFile(s"${table}__pq_meta")(p =>
-      TinyParquet.write(p, Seq(Seq(
-        "m" -> ICell(m), "ksub" -> ICell(ksub),
-        "iters" -> ICell(iters), "dim" -> ICell(dim)))))
-    writeMeta(store, table, nlist, seed, trainFraction, "cosine-pq", dim)
-    commitCollection(store, table, headSnaps(store, table),
-      countListSizes(store, table, nlist))
-  }
-
-  /** IVF + OPQ + PQ (FAISS `OPQm,IVFx,PQy` — the pretransform
-    * composition; Ge et al. 2013 parametric OPQ): learn the
-    * eigen-allocation rotation ([[graft.ext.Opq]]), then build the
-    * ENTIRE cosine-pq layout in rotated space — rotated coarse
-    * centroids, rotated-subspace codebooks, m-byte codes of rotated
-    * vectors. Rotation is orthogonal so cosine ranking is preserved;
-    * probes rotate their queries (map-only matvec against the
-    * generation's driver-held rotation) and otherwise run the PQ probe
-    * verbatim. Extra table: `t__opq_rotation` (d driver-file rows of
-    * (i, lam, row) — the rotation matrix + its eigenvalue spectrum),
-    * pinned per generation like every model table, so a probe can
-    * never rank new codes under an old rotation. */
-  def writeIvfOpq(store: TableStore, table: String, corpus: DataFrame,
-      id: String, vec: String, nlist: Int = 16, seed: Long = 42L,
-      trainFraction: Double = 0.25, m: Int = 4, ksub: Int = 16,
-      iters: Int = 2): Unit = store.exclusively(table) {
-    val dim = uniformDim(corpus, vec, table)
-    val model = graft.ext.Opq.train(corpus, id, vec, dim, m, ksub, iters)
-    val rot = corpus.select(col(id),
-      graft.ext.Opq.rotated(col(vec), model.rotation).as(vec))
-    val (assigned, centroids) =
-      Similarity.ivfIndex(rot, id, vec, nlist, seed, trainFraction)
-    val coded = assigned.select(col(id), col("__list"),
-      graft.ext.Pq.codes(col(vec), model.pq).as("__codes"))
-    store.overwrite(table, coded,
-      statsFor = Seq("__list"), rangeBy = Seq("__list"))
-    store.overwrite(s"${table}__centroids", centroids)
-    val cbRows = for {
-      j <- model.pq.codebooks.indices
-      c <- model.pq.codebooks(j).indices
-    } yield Seq("sub" -> (ICell(j): Cell), "cl" -> (ICell(c): Cell),
-      "centroid" -> (SCell(model.pq.codebooks(j)(c).mkString(",")): Cell))
-    store.overwriteDriverFile(s"${table}__pq_codebooks")(p =>
-      TinyParquet.write(p, cbRows))
-    store.overwriteDriverFile(s"${table}__pq_meta")(p =>
-      TinyParquet.write(p, Seq(Seq(
-        "m" -> ICell(m), "ksub" -> ICell(ksub),
-        "iters" -> ICell(iters), "dim" -> ICell(dim)))))
-    // Double.toString → correctly-rounded parse restores identical bits
-    val rotRows = model.rotation.indices.map(i => Seq(
-      "i" -> (ICell(i): Cell),
-      "lam" -> (DCell(model.spectrum(i)): Cell),
-      "row" -> (SCell(model.rotation(i).mkString(",")): Cell)))
-    store.overwriteDriverFile(s"${table}__opq_rotation")(p =>
-      TinyParquet.write(p, rotRows))
-    writeMeta(store, table, nlist, seed, trainFraction, "cosine-opq", dim)
-    commitCollection(store, table, headSnaps(store, table),
-      countListSizes(store, table, nlist))
-  }
-
-  /** Top-k over the PERSISTED OPQ collection: rotate queries and the
-    * re-rank corpus under the generation's pinned rotation (map-only),
-    * then the [[topKPq]] plan verbatim — centroid-ranked probe lists,
-    * ADC shortlist over code reconstructions, exact re-rank. Output
-    * cosine is the rotated-space value ≡ the raw cosine up to fp
-    * (orthogonal rotation), inside the 6-decimal rounding. */
-  def topKOpq(store: TableStore, table: String,
-      fullVectors: DataFrame, queries: DataFrame,
-      id: String, vec: String, k: Int, nprobe: Int,
-      shortlist: Int, among: Option[DataFrame] = None): DataFrame =
-    topKOpqGen(store, table, generation(store, table), fullVectors, queries,
-      id, vec, k, nprobe, shortlist, among)
-
-  /** [[topKOpq]] against an EXPLICIT generation (see [[generationAt]]):
-    * the rotation, codebooks, centroids and codes all resolve from the
-    * SAME pinned manifest row — a probe can never mix generations. */
-  def topKOpqGen(store: TableStore, table: String, g: Generation,
-      fullVectors: DataFrame, queries: DataFrame,
-      id: String, vec: String, k: Int, nprobe: Int,
-      shortlist: Int, among: Option[DataFrame] = None): DataFrame = {
-    require(g.meta.metric == "cosine-opq",
-      s"collection '$table' is '${g.meta.metric}', not an OPQ collection")
-    require(nprobe >= 1 && nprobe <= g.meta.nlist,
-      s"nprobe $nprobe outside [1, ${g.meta.nlist}]")
-    val rotation = g.opq.get._1
-    def rotate(df: DataFrame) = df.select(col(id),
-      graft.ext.Opq.rotated(col(vec), rotation).as(vec))
-    // width guard BEFORE the rotation: the matvec always emits a
-    // trained-width output, so a post-rotation check would pass a
-    // wrong-width query that was silently rotated from a prefix
-    val probes = probeLists(g.centroidMatrix,
-      rotate(widthChecked(queries, vec, g.meta.dim)), id, vec, nprobe)
-    val deq = restrict(g.corpus, among, id)
-      .select(col(id).as("match_id"), col("__list"),
-        graft.ext.Pq.reconstruction(col("__codes"), g.pqModel.get).as("__deq"))
-    graft.ext.Quantize.shortlistRerank(
-      probes.join(deq, Seq("__list"))
-        .filter(col("query_id") =!= col("match_id")),
-      rotate(fullVectors), id, vec, k, shortlist)
-  }
-
-  /** Rebuild the [[graft.ext.Pq.PqModel]] from driver-read codebook
-    * rows (m·ksub rows — sketch-sized by contract). */
-  private def pqModelFrom(rows: Seq[Map[String, Any]], m: Int, ksub: Int,
-      dim: Int, table: String): graft.ext.Pq.PqModel = {
-    val books = Array.ofDim[Array[Double]](m, ksub)
-    rows.foreach { r =>
-      books(r("sub").asInstanceOf[Int])(r("cl").asInstanceOf[Int]) =
-        r("centroid").asInstanceOf[String].split(",").map(_.toDouble)
-    }
-    finishPqModel(books, m, dim, table)
-  }
-
-  /** LEGACY codebook shape (pre-r11 Spark-written array column). */
-  private def pqModelFromFrame(codebooks: DataFrame, m: Int, ksub: Int,
-      dim: Int, table: String): graft.ext.Pq.PqModel = {
-    val books = Array.ofDim[Array[Double]](m, ksub)
-    codebooks.collect().foreach { r =>
-      books(r.getAs[Int]("sub"))(r.getAs[Int]("cl")) =
-        r.getSeq[Double](r.fieldIndex("centroid")).toArray
-    }
-    finishPqModel(books, m, dim, table)
-  }
-
-  private def finishPqModel(books: Array[Array[Array[Double]]], m: Int,
-      dim: Int, table: String): graft.ext.Pq.PqModel = {
-    require(books.forall(_.forall(_ != null)),
-      s"collection '$table' codebook table is incomplete")
-    graft.ext.Pq.PqModel(m, dim / m, books)
-  }
 
   /** Per-list occupancy of collection `table`: one (list, size) entry
     * for EVERY coarse list in [0, nlist) — empty lists included, they
@@ -975,12 +634,6 @@ object VectorSink {
   def listSkew(store: TableStore, table: String): Double =
     skewOf(manifestSizes(store, table))
 
-  /** The stored coarse centroids as a dense matrix, indexed by
-    * `__list` — shared with the probe paths
-    * ([[Similarity.centroidMatrix]]). */
-  private def centroidMatrix(centroids: DataFrame): Array[Array[Double]] =
-    Similarity.centroidMatrix(centroids)
-
   /** Assign `rows` to the nearest STORED coarse centroid — a MAP-ONLY
     * codegen argmin over the centroid matrix (one expression, no join,
     * no window, no Exchange: the previous crossJoin + row_number shape
@@ -994,7 +647,7 @@ object VectorSink {
     * exact ties to the lowest `__list` — BIT-identical, so a near-tied
     * centroid pair can never round to different winners between append
     * assignment and probe ranking. Appended rows land exactly where a
-    * probe will look. (The initial writeIvf* assignment is spark.ml's
+    * probe will look. (The initial writeIvf assignment is spark.ml's
     * k-means transform, which may use a norms-shortcut distance — a
     * write-time near-tie can place a row in the other near-tied list;
     * probes remain exact at nprobe = nlist regardless.)
@@ -1049,25 +702,40 @@ object VectorSink {
     * here (the screen is batch × collection) and batch ids must be
     * UNIQUE ([[screenedAppend]] raises otherwise): run
     * [[graft.ext.Dedup.embeddingHammingPairs]] or an exact dedup over
-    * the batch first. Float (cosine) collections only. Returns
-    * (kept, dropped) row counts; an all-duplicate batch appends
-    * nothing and leaves the generation untouched. */
+    * the batch first. Returns (kept, dropped) row counts; an
+    * all-duplicate batch appends nothing and leaves the generation
+    * untouched.
+    *
+    * The screen compares each batch vector against the codec's
+    * reconstruction of the stored rows ([[Codec.Model.reconstruct]]) —
+    * the stored vector itself for [[Codec.Flat]]. SQ8/PQ/OPQ
+    * collections store codes, so there the distance is ADC, the exact
+    * quantity the serving shortlist ranks on (oracle-proven by the
+    * `sim_pq_adc` / `sim_opq_adc` gates), and `threshold` lives in ADC
+    * space: ADC cosine = true cosine ± the reconstruction error, so
+    * calibrate it against the codebook quality (tight codebooks → ADC
+    * hugs the true cosine; coarse ones → widen the margin). The
+    * approximation degrades ingest-safe in BOTH directions: a duplicate
+    * whose ADC cosine falls under the threshold is APPENDED, and every
+    * drop is replayable from the generation's model. OPQ batches screen
+    * in ROTATED space under the generation's pinned rotation — the space
+    * their codes would land in. Binary collections carry no magnitudes
+    * to compare: screen them with [[appendDedupedBinary]]. */
   def appendDeduped(store: TableStore, table: String, batch: DataFrame,
       id: String, vec: String, threshold: Double,
       nprobe: Int): (Long, Long) =
     screenedAppend(store, table, batch, id, vec) { pinned =>
       val g = generation(store, table)
-      require(g.meta.metric == "cosine",
-        s"collection '$table' is '${g.meta.metric}': it stores codes, " +
-          "not vectors — use appendDedupedBinary (Hamming screen) for " +
-          "binary collections or appendDedupedAdc (dequantized-cosine " +
-          "screen) for SQ8/PQ/OPQ collections")
+      require(g.model != Codec.Model.Binary,
+        s"collection '$table' is '${g.meta.metric}': sign codes carry no " +
+          "magnitudes to cosine-screen — use appendDedupedBinary (a " +
+          "Hamming budget)")
       require(nprobe >= 1 && nprobe <= g.meta.nlist,
         s"nprobe $nprobe outside [1, ${g.meta.nlist}]")
       tiledScreenJoin(pinned, g.meta.nlist,
-        probeLists(g.centroidMatrix, pinned, id, vec, nprobe),
-        g.corpus.select(col(vec).as("__cv"), col("__list"),
-          col(id).as("__sid")),
+        probeLists(g, pinned, id, vec, nprobe),
+        g.model.reconstruct(g.corpus, id, vec, "__cv")
+          .select(col("__cv"), col("__list"), col(id).as("__sid")),
         manifestSizes(store, table))
         .filter(round(graft.ext.Dedup.cosine(col("__qv"), col("__cv")), 6)
           >= threshold)
@@ -1075,7 +743,7 @@ object VectorSink {
     }
 
   /** The screens' BIPARTITE-TILED equi-join on the probed list
-    * (shared by the cosine / Hamming / ADC dedup-on-ingest screens),
+    * (shared by the cosine and Hamming dedup-on-ingest screens),
     * OCCUPANCY-AWARE per list (r16): each list `l` splits its pair
     * space into an s_l×s_l grid of tiles — probes carry a FIXED
     * `__psalt` (hash of query id mod s_l) and replicate across the
@@ -1210,7 +878,7 @@ object VectorSink {
       nprobe: Int): (Long, Long) =
     screenedAppend(store, table, batch, id, vec) { pinned =>
       val g = generation(store, table)
-      require(g.meta.metric == "hamming-bq",
+      require(g.model == Codec.Model.Binary,
         s"collection '$table' is '${g.meta.metric}', not a binary " +
           "collection — use appendDeduped (cosine screen) instead")
       require(nprobe >= 1 && nprobe <= g.meta.nlist,
@@ -1218,7 +886,7 @@ object VectorSink {
       require(maxHamming >= 0 && maxHamming < g.meta.dim,
         s"maxHamming $maxHamming outside [0, ${g.meta.dim})")
       tiledScreenJoin(pinned, g.meta.nlist,
-        probeLists(g.centroidMatrix, pinned, id, vec, nprobe)
+        probeLists(g, pinned, id, vec, nprobe)
           .withColumn("__qcode",
             graft.functions.VectorFunctions.packSignBits(col("__qv"))),
         g.corpus.select(col("__list"), col("__code"),
@@ -1226,67 +894,6 @@ object VectorSink {
         manifestSizes(store, table))
         .filter(graft.functions.VectorFunctions.hammingDist(
           col("__qcode"), col("__code")) <= maxHamming)
-        .select(col("query_id").as(id)).distinct()
-    }
-
-  /** [[appendDeduped]] for QUANTIZED collections (SQ8 / PQ / OPQ):
-    * these store codes, not vectors, so the screen distance is ADC —
-    * the batch vector against the DEQUANTIZED stored codes, the exact
-    * quantity the serving shortlist ranks on (oracle-proven by the
-    * `sim_pq_adc` / `sim_opq_adc` gates). The `threshold` is therefore
-    * in ADC SPACE: ADC cosine = true cosine ± the collection's
-    * reconstruction error, so calibrate it against the codebook
-    * quality (tight codebooks → ADC hugs the true cosine; coarse ones
-    * → widen the margin), the same way [[appendDedupedBinary]]'s
-    * budget is calibrated in sign-flip space via dim·θ/π. The
-    * approximation degrades ingest-safe in BOTH directions: a
-    * duplicate whose ADC cosine falls under the threshold is APPENDED
-    * (never a lost row), and every drop is externally replayable
-    * (round-6 ADC cosine over the pinned codes — deterministic given
-    * the generation's model). OPQ batches screen in ROTATED space
-    * under the generation's pinned rotation — the space their codes
-    * would land in — with the width guard applied to the RAW vectors
-    * before rotating (the matvec always emits trained-width output).
-    * Probe pruning, salting and the SHUFFLE_HASH pin are the
-    * [[appendDeduped]] scaffold verbatim: `nprobe = nlist` screens
-    * against every stored code, smaller nprobe trades screen recall
-    * for probe cost exactly like serving. Returns (kept, dropped). */
-  def appendDedupedAdc(store: TableStore, table: String, batch: DataFrame,
-      id: String, vec: String, threshold: Double,
-      nprobe: Int): (Long, Long) =
-    screenedAppend(store, table, batch, id, vec) { pinned =>
-      val g = generation(store, table)
-      val metric = g.meta.metric
-      require(Set("cosine-sq8", "cosine-pq", "cosine-opq")(metric),
-        s"collection '$table' is '$metric' — the ADC screen needs a " +
-          "quantized collection; use appendDeduped (cosine) for float " +
-          "or appendDedupedBinary (Hamming) for binary collections")
-      require(nprobe >= 1 && nprobe <= g.meta.nlist,
-        s"nprobe $nprobe outside [1, ${g.meta.nlist}]")
-      val queries = metric match {
-        case "cosine-opq" =>
-          widthChecked(pinned.select(col(id), col(vec)), vec, g.meta.dim)
-            .select(col(id),
-              graft.ext.Opq.rotated(col(vec), g.opq.get._1).as(vec))
-        case _ => pinned.select(col(id), col(vec))
-      }
-      val deq = metric match {
-        case "cosine-sq8" =>
-          g.corpus.crossJoin(broadcast(g.stats.get))
-            .select(col(id), col("__list"),
-              graft.functions.VectorFunctions.dequantizeInt8(
-                col("__q"), col("mins"), col("maxs")).as("__cv"))
-        case _ =>
-          g.corpus.select(col(id), col("__list"),
-            graft.ext.Pq.reconstruction(col("__codes"), g.pqModel.get)
-              .as("__cv"))
-      }
-      tiledScreenJoin(pinned, g.meta.nlist,
-        probeLists(g.centroidMatrix, queries, id, vec, nprobe),
-        deq.select(col("__cv"), col("__list"), col(id).as("__sid")),
-        manifestSizes(store, table))
-        .filter(round(graft.ext.Dedup.cosine(col("__qv"), col("__cv")), 6)
-          >= threshold)
         .select(col("query_id").as(id)).distinct()
     }
 
@@ -1345,44 +952,16 @@ object VectorSink {
       s"$op to '$table': batch vector widths span " +
         s"[${d.getInt(0)}, ${d.getInt(1)}], collection is trained " +
         s"at ${meta.dim}")
-    // OPQ batches rotate FIRST (under the PINNED generation's rotation
-    // — never a head that might belong to an unfinished swap): coarse
-    // assignment, codes and the census all live in rotated space
-    val encRows = meta.metric match {
-      case "cosine-opq" => rows.select(col(id),
-        graft.ext.Opq.rotated(col(vec), g.opq.get._1).as(vec))
-      case _ => rows
-    }
-    val assigned = assignToStored(encRows, centroidMatrix(g.centroids), vec)
-    val coded = meta.metric match {
-      case "cosine" =>
-        // match the stored segment schema (corpus columns + __list) —
-        // from the PINNED corpus frame (lazy, no extra manifest read;
-        // schema ≡ head by the corpus-head equality check above)
-        val cols = g.corpus.columns
-        assigned.select(cols.map(col): _*)
-      case "cosine-sq8" =>
-        val stats = broadcast(g.stats.get)
-        assigned.crossJoin(stats)
-          .select(col(id), col("__list"),
-            graft.functions.VectorFunctions.quantizeInt8(
-              col(vec), col("mins"), col("maxs"))("q").as("__q"))
-      case "cosine-pq" | "cosine-opq" =>
-        // OPQ: `assigned` already carries the ROTATED vector in `vec`
-        // (encRows above), and the codebooks were trained rotated —
-        // the encode is the plain PQ argmin either way
-        assigned.select(col(id), col("__list"),
-          graft.ext.Pq.codes(col(vec), g.pqModel.get).as("__codes"))
-      case "hamming-bq" =>
-        // sign-bit codes are MODEL-FREE (no stats/codebooks): an
-        // appended batch can never drift against a trained code model,
-        // only against the coarse centroids — which rebalance retrains
-        assigned.select(col(id), col("__list"),
-          graft.functions.VectorFunctions.packSignBits(col(vec)).as("__code"))
-      case other =>
-        throw new IllegalArgumentException(
-          s"collection '$table' has unknown metric '$other'")
-    }
+    // encode under the PINNED generation's model — never a head that
+    // might belong to an unfinished swap. OPQ rotates first: coarse
+    // assignment, codes and the census all live in rotated space. The
+    // projection matches the stored segment schema, read off the PINNED
+    // corpus frame (lazy, no extra manifest read; schema ≡ head by the
+    // corpus-head equality check above)
+    val assigned = assignToStored(g.model.rotate(rows, id, vec),
+      g.centroidMatrix, vec)
+    val coded = g.model.encode(assigned, id, vec)
+      .select(g.corpus.columns.map(col): _*)
     // one batch pass feeds BOTH the segment write and the occupancy
     // census — pin it so the argmin/encode lineage doesn't run twice
     val pinned = Dedup.pin(coded)
@@ -1569,9 +1148,7 @@ object VectorSink {
     // recipe instead of append's bare refusal.
     val row = newestRow(store, table)
     if (store.snapshots(table).max != row.snaps("corpus_snap")) {
-      val meta = metaFrom(store.readDriverRowsAt(s"${table}__ivf_meta",
-        row.snaps("meta_snap")).head)
-      if (meta.metric == "cosine")
+      if (resolve(store, table, row).model.codec.storesVectors)
         rebalance(store, table, id, vec, None, maxSkew)
       else throw new IllegalStateException(
         s"collection '$table' has an interrupted model swap; run " +
@@ -1622,7 +1199,7 @@ object VectorSink {
     * SQ8 stats / PQ codebooks — on today's corpus (same seed/params:
     * the hash-sample is deterministic per id set, so the new fit
     * reflects the new data, not RNG drift) and rewrites through the
-    * same writeIvf* path.
+    * same [[writeIvf]] path, under the codec the generation stores.
     *
     * Consistency: the COLLECTION MANIFEST (`t__collection`, committed
     * last by every writer) is the linearization point of the
@@ -1635,7 +1212,7 @@ object VectorSink {
     * Plain IVF collections store their vectors, so the corpus is read
     * back from the collection itself. Quantized collections store only
     * lossy codes: pass `fullVectors` (the full-precision corpus, the
-    * same frame [[topKQuantized]]/[[topKPq]] already require) — it must
+    * same frame [[topK]] already requires for them) — it must
     * cover exactly the collection's current rows. Holds the corpus
     * table's store lock for the whole read-train-rewrite, like
     * [[Zorder.compact]]. Returns whether a rewrite ran. */
@@ -1668,105 +1245,47 @@ object VectorSink {
       if (!interrupted && skewOf(sizes) <= maxSkew &&
           deadOf(manifestRow, sizes) <= maxDeadFraction) false
       else {
-        // params resolve through the PINNED generation, like append:
-        // an orphaned __ivf_meta/__pq_meta head from the very swap this
-        // run is finishing must not redefine the index parameters
-        val meta = metaFrom(store.readDriverRowsAt(s"${table}__ivf_meta",
-          manifestRow.snaps("meta_snap")).head)
-        def full = {
-          val f = fullVectors.getOrElse(throw new IllegalArgumentException(
-            s"rebalancing quantized collection '$table' needs fullVectors: " +
-              "the stored codes are lossy and cannot retrain the model"))
-          // the rewrite REPLACES the collection with whatever `f` holds:
-          // a stale corpus (e.g. missing an appended batch, or holding
-          // a same-size but different id set) would silently drop or
-          // swap vectors during maintenance — fail fast on a row-count
-          // mismatch AND on collection ids absent from fullVectors.
-          // (Stale VALUES under identical ids are uncheckable here: the
-          // quantized collection stores only lossy codes — that part of
-          // the contract stays with the caller.)
-          val (have, want) = (f.count(), store.read(table).count())
-          require(have == want,
-            s"fullVectors covers $have rows but collection '$table' " +
-              s"holds $want — pass the corpus INCLUDING every appended " +
-              "batch, or appended vectors would vanish in the rewrite")
-          val missing = store.read(table).select(col(id))
-            .join(f.select(col(id)), Seq(id), "left_anti").count()
-          require(missing == 0L,
-            s"fullVectors is missing $missing of collection '$table's " +
-              "ids — a different corpus would silently replace the " +
-              "collection's content in the rewrite")
-          f
-        }
-        meta.metric match {
-          case "cosine" =>
-            writeIvf(store, table, store.read(table).drop("__list"),
-              id, vec, meta.nlist, meta.seed, meta.trainFraction)
-          case "cosine-sq8" =>
-            writeIvfQuantized(store, table, full, id, vec,
-              meta.nlist, meta.seed, meta.trainFraction)
-          case "cosine-pq" =>
-            val pm = store.readDriverRowsAt(s"${table}__pq_meta",
-              manifestRow.snaps("pqmeta_snap")).head
-            writeIvfPq(store, table, full, id, vec,
-              meta.nlist, meta.seed, meta.trainFraction,
-              pm("m").asInstanceOf[Int], pm("ksub").asInstanceOf[Int],
-              pm("iters").asInstanceOf[Int])
-          case "cosine-opq" =>
-            // the REWRITE retrains the whole model — rotation included:
-            // the new generation's eigenbasis reflects the grown corpus,
-            // and probes of PINNED older generations keep their own
-            // rotation (resolve() reads it off the pinned manifest row)
-            val pm = store.readDriverRowsAt(s"${table}__pq_meta",
-              manifestRow.snaps("pqmeta_snap")).head
-            writeIvfOpq(store, table, full, id, vec,
-              meta.nlist, meta.seed, meta.trainFraction,
-              pm("m").asInstanceOf[Int], pm("ksub").asInstanceOf[Int],
-              pm("iters").asInstanceOf[Int])
-          case "hamming-bq" =>
-            // sign codes are lossy too (1 bit/dim): retraining the
-            // coarse quantizer needs the full-precision corpus
-            writeIvfBinary(store, table, full, id, vec,
-              meta.nlist, meta.seed, meta.trainFraction)
-          case other =>
-            throw new IllegalArgumentException(
-              s"collection '$table' has unknown metric '$other'")
-        }
+        // the codec and its params resolve through the PINNED
+        // generation, like append: an orphaned __ivf_meta/__pq_meta head
+        // from the very swap this run is finishing must not redefine
+        // the index parameters. The REWRITE retrains the whole model
+        // (OPQ: rotation included); probes of PINNED older generations
+        // keep their own.
+        val g = resolve(store, table, manifestRow)
+        val codec = g.model.codec
+        val corpus =
+          if (codec.storesVectors) store.read(table).drop("__list")
+          else {
+            val f = fullVectors.getOrElse(throw new IllegalArgumentException(
+              s"rebalancing quantized collection '$table' needs " +
+                "fullVectors: the stored codes are lossy and cannot " +
+                "retrain the model"))
+            // the rewrite REPLACES the collection with whatever `f`
+            // holds: a stale corpus (e.g. missing an appended batch, or
+            // holding a same-size but different id set) would silently
+            // drop or swap vectors during maintenance — fail fast on a
+            // row-count mismatch AND on collection ids absent from
+            // fullVectors. (Stale VALUES under identical ids are
+            // uncheckable here: the quantized collection stores only
+            // lossy codes — that part of the contract stays with the
+            // caller.)
+            val (have, want) = (f.count(), store.read(table).count())
+            require(have == want,
+              s"fullVectors covers $have rows but collection '$table' " +
+                s"holds $want — pass the corpus INCLUDING every appended " +
+                "batch, or appended vectors would vanish in the rewrite")
+            val missing = store.read(table).select(col(id))
+              .join(f.select(col(id)), Seq(id), "left_anti").count()
+            require(missing == 0L,
+              s"fullVectors is missing $missing of collection '$table's " +
+                "ids — a different corpus would silently replace the " +
+                "collection's content in the rewrite")
+            f
+          }
+        writeIvf(store, table, corpus, id, vec, g.meta.nlist, g.meta.seed,
+          g.meta.trainFraction, codec)
         true
       }
     }
-  }
-
-  /** Top-k over the PQ collection: probe lists, ADC shortlist over
-    * CODE RECONSTRUCTIONS (the scan reads m bytes per vector), exact
-    * re-rank of only the shortlist — the shared tail again, so
-    * `nprobe = nlist` reproduces [[graft.ext.Pq.adcTopK]] exactly. */
-  def topKPq(store: TableStore, table: String,
-      fullVectors: DataFrame, queries: DataFrame,
-      id: String, vec: String, k: Int, nprobe: Int,
-      shortlist: Int, among: Option[DataFrame] = None): DataFrame =
-    topKPqGen(store, table, generation(store, table), fullVectors, queries,
-      id, vec, k, nprobe, shortlist, among)
-
-  /** [[topKPq]] against an EXPLICIT generation (see [[generationAt]]);
-    * `among` pre-filters the stored codes to an id allowlist like
-    * [[topKQuantizedGen]]. */
-  def topKPqGen(store: TableStore, table: String, g: Generation,
-      fullVectors: DataFrame, queries: DataFrame,
-      id: String, vec: String, k: Int, nprobe: Int,
-      shortlist: Int, among: Option[DataFrame] = None): DataFrame = {
-    // same consistent-snapshot discipline as [[topKQuantized]]
-    require(g.meta.metric == "cosine-pq",
-      s"collection '$table' is '${g.meta.metric}', not a PQ collection")
-    require(nprobe >= 1 && nprobe <= g.meta.nlist,
-      s"nprobe $nprobe outside [1, ${g.meta.nlist}]")
-    val probes = probeLists(g.centroidMatrix, queries, id, vec, nprobe)
-    val deq = restrict(g.corpus, among, id)
-      .select(col(id).as("match_id"), col("__list"),
-        graft.ext.Pq.reconstruction(col("__codes"), g.pqModel.get).as("__deq"))
-    graft.ext.Quantize.shortlistRerank(
-      probes.join(deq, Seq("__list"))
-        .filter(col("query_id") =!= col("match_id")),
-      fullVectors, id, vec, k, shortlist)
   }
 }

@@ -241,13 +241,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("probeCollection refuses quantized collections before the stream starts") {
-    import graft.write.VectorSink
+    import graft.write.{Codec, VectorSink}
     val store = new TableStore(tmp("st-annq2"), spark)
     val corpus = (0L until 32L).map { i =>
       (i, Array.tabulate(8)(k => math.sin(i * 0.9 + k).toFloat))
     }.toDF("vec_id", "embedding")
-    VectorSink.writeIvfQuantized(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
     val e = intercept[IllegalArgumentException] {
       Streaming.probeCollection(store,
         spark.readStream.format("rate").load(), "emb",

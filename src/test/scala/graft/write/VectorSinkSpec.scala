@@ -58,14 +58,14 @@ class VectorSinkSpec extends SparkSpec {
   test("quantized collection stores codes only and probes exactly at full width") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec4").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfQuantized(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
     // the corpus table holds codes, never vectors
     assert(store.read("emb").columns.toSet === Set("vec_id", "__list", "__q"))
     assert(VectorSink.readMeta(store, "emb").metric === "cosine-sq8")
     val queries = corpus.limit(2)
-    val got = VectorSink.topKQuantized(store, "emb", corpus, queries,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 100)
+    val got = VectorSink.topK(store, "emb", queries, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(corpus), shortlist = 100)
       .orderBy("query_id", "rank")
       .select("query_id", "match_id").as[(Long, Long)].collect().toSeq
     val exact = graft.ext.Similarity.bruteForceTopK(corpus, queries,
@@ -135,8 +135,8 @@ class VectorSinkSpec extends SparkSpec {
   test("rebalance retrains quantized collections from fullVectors only") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec8").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfQuantized(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
     VectorSink.append(store, "emb", blob, "vec_id", "embedding")
     val all = corpus.unionByName(blob)
     // the stored codes are lossy: retraining refuses to run without the
@@ -172,8 +172,8 @@ class VectorSinkSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rank")
         .select("query_id", "match_id").as[(Long, Long)].collect().toSeq
-    assert(pairs(VectorSink.topKQuantized(store, "emb", all, q,
-        "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 200)) ===
+    assert(pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(all), shortlist = 200)) ===
       pairs(Similarity.bruteForceTopK(all, q, "vec_id", "embedding", k = 3)))
   }
 
@@ -247,8 +247,8 @@ class VectorSinkSpec extends SparkSpec {
       "vec_id", "embedding", maxSkew = 1.5)
     assert(store.read("emb").count() === 124)
     // quantized collections cannot self-heal (lossy codes): clear recipe
-    VectorSink.writeIvfQuantized(store, "q", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "q", corpus, "vec_id", "embedding", nlist = 4,
+      codec = Codec.Sq8)
     val garbage = store.read("q")
     store.overwrite("q", garbage, statsFor = Seq("__list"))
     val e = intercept[IllegalStateException] {
@@ -261,11 +261,12 @@ class VectorSinkSpec extends SparkSpec {
   test("the collection manifest hides a crash-interrupted partial rewrite") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec10").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfQuantized(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
     val queries = corpus.limit(2)
-    def probe() = VectorSink.topKQuantized(store, "emb", corpus, queries,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 100)
+    def probe() = VectorSink.topK(store, "emb", queries, "vec_id",
+      "embedding", k = 3, nprobe = 4, fullVectors = Some(corpus),
+      shortlist = 100)
       .orderBy("query_id", "rank")
       .select("query_id", "match_id").as[(Long, Long)].collect().toSeq
     val before = probe()
@@ -283,19 +284,20 @@ class VectorSinkSpec extends SparkSpec {
       "a partial rewrite leaked into a probe — the manifest must pin " +
         "the previous complete generation")
     // re-running the writer finishes the swap and flips the generation
-    VectorSink.writeIvfQuantized(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
     assert(probe() === before) // same data, same model -> same answer
   }
 
   test("vacuumCollection keeps the pinned generation readable under churn") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec12").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfQuantized(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
     val queries = corpus.limit(2)
-    def probe() = VectorSink.topKQuantized(store, "emb", corpus, queries,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 100)
+    def probe() = VectorSink.topK(store, "emb", queries, "vec_id",
+      "embedding", k = 3, nprobe = 4, fullVectors = Some(corpus),
+      shortlist = 100)
       .orderBy("query_id", "rank")
       .select("query_id", "match_id").as[(Long, Long)].collect().toSeq
     val before = probe()
@@ -316,8 +318,8 @@ class VectorSinkSpec extends SparkSpec {
   test("rebalance covers PQ collections and keeps the PQ params") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec9").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfPq(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4, m = 2, ksub = 8, iters = 2)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Pq(m = 2, ksub = 8, iters = 2))
     VectorSink.append(store, "emb", blob, "vec_id", "embedding")
     val all = corpus.unionByName(blob)
     assert(VectorSink.rebalance(store, "emb", "vec_id", "embedding",
@@ -330,8 +332,8 @@ class VectorSinkSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rank")
         .select("query_id", "match_id").as[(Long, Long)].collect().toSeq
-    assert(pairs(VectorSink.topKPq(store, "emb", all, q,
-        "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 200)) ===
+    assert(pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(all), shortlist = 200)) ===
       pairs(Similarity.bruteForceTopK(all, q, "vec_id", "embedding", k = 3)))
   }
 
@@ -343,14 +345,21 @@ class VectorSinkSpec extends SparkSpec {
     (i, Seq.tabulate(8)(d => (50f + 0.01f * i + d * 0.002f)))
   }.toDF("vec_id", "embedding")
 
+  private def rotationOf(g: VectorSink.Generation): Array[Array[Double]] =
+    g.model match {
+      case Codec.Model.Opq(_, opq) => opq.rotation
+      case other => fail(s"not an OPQ model: $other")
+    }
+
   test("OPQ collection: rotated codes, exact full-shortlist probe, pinned rotation on append") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vopqspec").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfOpq(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4, m = 2, ksub = 8, iters = 2)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Opq(m = 2, ksub = 8, iters = 2))
     val g1 = VectorSink.generation(store, "emb")
     assert(g1.meta.metric === "cosine-opq")
-    val (rot1, spec1) = g1.opq.get
+    val Codec.Model.Opq(_, opq1) = g1.model
+    val (rot1, spec1) = (opq1.rotation, opq1.spectrum)
     assert(rot1.length === 8 && rot1.forall(_.length === 8))
     assert(spec1.length === 8)
     // rotation round-trips the store orthonormal
@@ -366,8 +375,8 @@ class VectorSinkSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rank")
         .select("query_id", "match_id").as[(Long, Long)].collect().toSeq
-    assert(pairs(VectorSink.topKOpq(store, "emb", corpus, q,
-        "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 200)) ===
+    assert(pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(corpus), shortlist = 200)) ===
       pairs(Similarity.bruteForceTopK(corpus, q, "vec_id", "embedding", k = 3)))
     // append rotates the batch under the PINNED generation's rotation.
     // The exactness claim compares IN ROTATED SPACE (the probe's own
@@ -381,21 +390,21 @@ class VectorSinkSpec extends SparkSpec {
         r: Array[Array[Double]]) =
       df.select(col("vec_id"),
         graft.ext.Opq.rotated(col("embedding"), r).as("embedding"))
-    assert(pairs(VectorSink.topKOpq(store, "emb", all, q2,
-        "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 200)) ===
+    assert(pairs(VectorSink.topK(store, "emb", q2, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(all), shortlist = 200)) ===
       pairs(Similarity.bruteForceTopK(rotFrame(all, rot1), rotFrame(q2, rot1),
         "vec_id", "embedding", k = 3)))
     // gen 2 (the append) kept gen 1's rotation bit-for-bit
     val g2 = VectorSink.generation(store, "emb")
-    assert(g2.opq.get._1.flatten.toSeq === rot1.flatten.toSeq)
+    assert(rotationOf(g2).flatten.toSeq === rot1.flatten.toSeq)
   }
 
   test("OPQ rebalance retrains rotation + codebooks, history keeps its own rotation") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vopqreb").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfOpq(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4, m = 2, ksub = 8, iters = 2)
-    val rot1 = VectorSink.generation(store, "emb").opq.get._1
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Opq(m = 2, ksub = 8, iters = 2))
+    val rot1 = rotationOf(VectorSink.generation(store, "emb"))
     VectorSink.append(store, "emb", opqBlob, "vec_id", "embedding")
     val all = corpus.unionByName(opqBlob)
     assert(VectorSink.rebalance(store, "emb", "vec_id", "embedding",
@@ -405,7 +414,7 @@ class VectorSinkSpec extends SparkSpec {
     // far-away blob shifts the spectrum, so the eigenbasis must move)
     val pm = store.read("emb__pq_meta").head()
     assert((pm.getAs[Int]("m"), pm.getAs[Int]("ksub")) === ((2, 8)))
-    assert(g3.opq.get._1.flatten.toSeq !== rot1.flatten.toSeq)
+    assert(rotationOf(g3).flatten.toSeq !== rot1.flatten.toSeq)
     val q = all.filter(col("vec_id").isin(0L, 101L))
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rank")
@@ -416,18 +425,19 @@ class VectorSinkSpec extends SparkSpec {
         graft.ext.Opq.rotated(col("embedding"), r).as("embedding"))
     // exactness compared in the probe's own (rotated) space — see the
     // sibling test for why near-parallel blob vectors demand this
-    val rot3 = g3.opq.get._1
-    assert(pairs(VectorSink.topKOpq(store, "emb", all, q,
-        "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 200)) ===
+    val rot3 = rotationOf(g3)
+    assert(pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(all), shortlist = 200)) ===
       pairs(Similarity.bruteForceTopK(rotFrame(all, rot3), rotFrame(q, rot3),
         "vec_id", "embedding", k = 3)))
     // the PRE-rebalance generation still probes under ITS rotation
     val gens = VectorSink.generations(store, "emb")
     val hist = VectorSink.generationAt(store, "emb", gens.head)
-    assert(hist.opq.get._1.flatten.toSeq === rot1.flatten.toSeq)
+    assert(rotationOf(hist).flatten.toSeq === rot1.flatten.toSeq)
     val qh = corpus.filter(col("vec_id") === 0L)
-    assert(pairs(VectorSink.topKOpqGen(store, "emb", hist, corpus, qh,
-        "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 200)) ===
+    assert(pairs(VectorSink.topK(store, "emb", qh, "vec_id", "embedding",
+      k = 3, nprobe = 4, at = Some(hist), fullVectors = Some(corpus),
+      shortlist = 200)) ===
       pairs(Similarity.bruteForceTopK(corpus, qh, "vec_id", "embedding", k = 3)))
   }
 
@@ -550,8 +560,8 @@ class VectorSinkSpec extends SparkSpec {
   test("append encodes under the PINNED model, not orphaned sub-table heads") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec16").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfQuantized(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
     // orphaned partial swap of the STATS table only (no manifest commit)
     val garbage = store.read("emb__sq_stats")
       .select(transform(col("mins"), x => x * 1000).as("mins"),
@@ -560,7 +570,10 @@ class VectorSinkSpec extends SparkSpec {
     VectorSink.append(store, "emb", blob, "vec_id", "embedding")
     // the appended rows' codes must be the PINNED generation's encoding —
     // codes under the garbage stats would differ wildly
-    val pinnedStats = VectorSink.generation(store, "emb").stats.get
+    val pinnedStats = VectorSink.generation(store, "emb").model match {
+      case Codec.Model.Sq8(stats) => stats
+      case other => fail(s"not an SQ8 model: $other")
+    }
     val expected = blob.crossJoin(broadcast(pinnedStats))
       .select(col("vec_id"),
         graft.functions.VectorFunctions.quantizeInt8(
@@ -628,8 +641,8 @@ class VectorSinkSpec extends SparkSpec {
       (1L, Some(Seq.tabulate(8)(_.toFloat))),
       (2L, Option.empty[Seq[Float]])).toDF("vec_id", "embedding")
     intercept[Exception] {
-      VectorSink.writeIvfBinary(store, "emb2", withNull,
-        "vec_id", "embedding", nlist = 2)
+      VectorSink.writeIvf(store, "emb2", withNull, "vec_id", "embedding",
+        nlist = 2, codec = Codec.Binary)
     }
     assert(!store.exists("emb2__collection"),
       "a failed NULL validation must not leave a visible generation")
@@ -700,8 +713,8 @@ class VectorSinkSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("unique"), e.getMessage)
     // and the binary twin shares the scaffold's guard
-    VectorSink.writeIvfBinary(store, "embb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "embb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Binary)
     val e2 = intercept[IllegalArgumentException] {
       VectorSink.appendDedupedBinary(store, "embb", dupBatch,
         "vec_id", "embedding", maxHamming = 2, nprobe = 4)
@@ -746,9 +759,8 @@ class VectorSinkSpec extends SparkSpec {
     assert(ePin.getMessage.contains("PINNED"), ePin.getMessage)
     // the pinned generation still time-travels after the sweep's vacuum
     val g1 = VectorSink.generationAt(store, "emb", 1L)
-    val probe = VectorSink.topKGen(store, "emb", g1,
-      half.filter(col("vec_id") < 2L), "vec_id", "embedding",
-      k = 3, nprobe = 4)
+    val probe = VectorSink.topK(store, "emb", half.filter(col("vec_id") < 2L),
+      "vec_id", "embedding", k = 3, nprobe = 4, at = Some(g1))
     assert(probe.count() === 6L)
     assert(probe.agg(max("match_id")).as[Long].head() < 32L,
       "a gen-1 probe must only see gen-1 corpus rows")
@@ -802,9 +814,9 @@ class VectorSinkSpec extends SparkSpec {
     }
     // SQ8: int8 dequantization error is tiny, so twin ADC ≈ 1 (drops
     // at 0.9) while fresh's true cosine vs the whole corpus is < 0.05
-    VectorSink.writeIvfQuantized(store, "sq8", corpus, "vec_id", "embedding",
-      nlist = 4)
-    val (k1, d1) = VectorSink.appendDedupedAdc(store, "sq8", twinAndFresh,
+    VectorSink.writeIvf(store, "sq8", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
+    val (k1, d1) = VectorSink.appendDeduped(store, "sq8", twinAndFresh,
       "vec_id", "embedding", threshold = 0.9, nprobe = 4)
     assert((k1, d1) === (1L, 1L))
     val sq8Ids = store.read("sq8").select("vec_id").as[Long].collect().toSet
@@ -812,44 +824,39 @@ class VectorSinkSpec extends SparkSpec {
       s"twin must drop, fresh must land: $sq8Ids")
     // PQ at ksub = |corpus| per subspace: first-k init memorizes every
     // point, reconstruction is EXACT, so ADC ≡ true cosine here
-    VectorSink.writeIvfPq(store, "pq", corpus, "vec_id", "embedding",
-      nlist = 4, m = 4, ksub = 64, iters = 1)
-    val (k2, d2) = VectorSink.appendDedupedAdc(store, "pq", twinAndFresh,
+    VectorSink.writeIvf(store, "pq", corpus, "vec_id", "embedding", nlist = 4,
+      codec = Codec.Pq(m = 4, ksub = 64, iters = 1))
+    val (k2, d2) = VectorSink.appendDeduped(store, "pq", twinAndFresh,
       "vec_id", "embedding", threshold = 0.98, nprobe = 4)
     assert((k2, d2) === (1L, 1L))
     // OPQ: the screen must rotate the batch under the PINNED rotation
     // before comparing (codes live in rotated space; an unrotated
     // probe of a rotated corpus would see garbage cosines and keep
     // the twin)
-    VectorSink.writeIvfOpq(store, "opq", corpus, "vec_id", "embedding",
-      nlist = 4, m = 4, ksub = 64, iters = 1)
-    val (k3, d3) = VectorSink.appendDedupedAdc(store, "opq", twinAndFresh,
+    VectorSink.writeIvf(store, "opq", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Opq(m = 4, ksub = 64, iters = 1))
+    val (k3, d3) = VectorSink.appendDeduped(store, "opq", twinAndFresh,
       "vec_id", "embedding", threshold = 0.98, nprobe = 4)
     assert((k3, d3) === (1L, 1L))
     val opqIds = store.read("opq").select("vec_id").as[Long].collect().toSet
     assert(opqIds.contains(200L) && !opqIds.contains(105L),
       s"twin must drop, fresh must land: $opqIds")
-    // metric routing: float and binary collections refuse the ADC
-    // screen and point at their own variants; quantized collections
-    // refuse the float screen pointing here
-    VectorSink.writeIvf(store, "flt", corpus, "vec_id", "embedding", nlist = 4)
-    val e1 = intercept[IllegalArgumentException] {
-      VectorSink.appendDedupedAdc(store, "flt", twinAndFresh,
+    // sign codes reconstruct no vector to cosine-screen against: a
+    // binary collection routes to the Hamming screen
+    VectorSink.writeIvf(store, "bq", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Binary)
+    val e = intercept[IllegalArgumentException] {
+      VectorSink.appendDeduped(store, "bq", twinAndFresh,
         "vec_id", "embedding", threshold = 0.9, nprobe = 4)
     }
-    assert(e1.getMessage.contains("appendDeduped"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      VectorSink.appendDeduped(store, "pq", twinAndFresh,
-        "vec_id", "embedding", threshold = 0.9, nprobe = 4)
-    }
-    assert(e2.getMessage.contains("appendDedupedAdc"), e2.getMessage)
+    assert(e.getMessage.contains("appendDedupedBinary"), e.getMessage)
   }
 
   test("appendDedupedBinary screens on stored codes, Hamming-only contract") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec23").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfBinary(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Binary)
     // sign-identical twin of vec 9 (hamming 0 — must drop) + a vector
     // with every sign flipped vs everything sin-based it could meet
     // (hamming far above budget — must land)
@@ -910,8 +917,8 @@ class VectorSinkSpec extends SparkSpec {
   test("vacuumCollection retains EVERY listed generation's pins") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec18").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfQuantized(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
     VectorSink.append(store, "emb", blob, "vec_id", "embedding") // gen 2
     assert(VectorSink.generations(store, "emb") === Seq(1L, 2L))
     // out-of-band churn ages the pinned manifests beyond retainManifests
@@ -930,16 +937,16 @@ class VectorSinkSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rank")
         .select("query_id", "match_id").as[(Long, Long)].collect().toSeq
-    assert(pairs(VectorSink.topKQuantized(store, "emb", all, q,
-        "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 200)) ===
+    assert(pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(all), shortlist = 200)) ===
       pairs(Similarity.bruteForceTopK(all, q, "vec_id", "embedding", k = 3)))
   }
 
   test("RAW sub-table vacuum also retains collection-pinned manifests") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vrawvac").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfQuantized(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
     VectorSink.append(store, "emb", blob, "vec_id", "embedding") // gen 2
     // age the pinned manifests with out-of-band churn, then vacuum the
     // sub-tables DIRECTLY (not via vacuumCollection): the store-level
@@ -965,14 +972,14 @@ class VectorSinkSpec extends SparkSpec {
   test("historical generations probe with their own model (topK*Gen)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec19").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfQuantized(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
     val q = corpus.limit(2)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rank")
         .select("query_id", "match_id").as[(Long, Long)].collect().toSeq
-    val atGen1 = pairs(VectorSink.topKQuantized(store, "emb", corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 100))
+    val atGen1 = pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(corpus), shortlist = 100))
     // grow + retrain: the live generation moves on
     VectorSink.append(store, "emb", blob, "vec_id", "embedding")
     val all = corpus.unionByName(blob)
@@ -980,25 +987,26 @@ class VectorSinkSpec extends SparkSpec {
       fullVectors = Some(all), maxSkew = 1.0)
     // a historical probe pins gen 1: pre-append corpus, pre-retrain model
     val g1 = VectorSink.generationAt(store, "emb", 1L)
-    assert(pairs(VectorSink.topKQuantizedGen(store, "emb", g1, corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 100)) === atGen1)
+    assert(pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, at = Some(g1), fullVectors = Some(corpus),
+      shortlist = 100)) === atGen1)
     // and the live probe reflects the grown corpus exactly
-    assert(pairs(VectorSink.topKQuantized(store, "emb", all, q,
-        "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 300)) ===
+    assert(pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(all), shortlist = 300)) ===
       pairs(Similarity.bruteForceTopK(all, q, "vec_id", "embedding", k = 3)))
   }
 
   test("binary historical generations probe the pre-append corpus (topKBinaryGen)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsbqgen").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfBinary(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Binary)
     val q = corpus.limit(2)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rank")
         .select("query_id", "match_id").as[(Long, Long)].collect().toSeq
-    val atGen1 = pairs(VectorSink.topKBinary(store, "emb", corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 64))
+    val atGen1 = pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(corpus), shortlist = 64))
     VectorSink.append(store, "emb", blob, "vec_id", "embedding")
     val all = corpus.unionByName(blob)
     VectorSink.rebalance(store, "emb", "vec_id", "embedding",
@@ -1007,50 +1015,52 @@ class VectorSinkSpec extends SparkSpec {
     // sign codes themselves are model-free, so ONLY the corpus and
     // coarse lists differ between generations
     val g1 = VectorSink.generationAt(store, "emb", 1L)
-    assert(pairs(VectorSink.topKBinaryGen(store, "emb", g1, corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 64)) === atGen1)
+    assert(pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, at = Some(g1), fullVectors = Some(corpus),
+      shortlist = 64)) === atGen1)
     // live probe reflects the grown corpus exactly at full width
-    assert(pairs(VectorSink.topKBinary(store, "emb", all, q,
-        "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 200)) ===
+    assert(pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(all), shortlist = 200)) ===
       pairs(Similarity.bruteForceTopK(all, q, "vec_id", "embedding", k = 3)))
   }
 
   test("PQ historical generations probe with their own codebooks (topKPqGen)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec22").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfPq(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4, m = 2, ksub = 8, iters = 2)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Pq(m = 2, ksub = 8, iters = 2))
     val q = corpus.limit(2)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rank")
         .select("query_id", "match_id").as[(Long, Long)].collect().toSeq
-    val atGen1 = pairs(VectorSink.topKPq(store, "emb", corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 100))
+    val atGen1 = pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(corpus), shortlist = 100))
     VectorSink.append(store, "emb", blob, "vec_id", "embedding")
     val all = corpus.unionByName(blob)
     VectorSink.rebalance(store, "emb", "vec_id", "embedding",
       fullVectors = Some(all), maxSkew = 1.0)
     // gen 1 pins the pre-append corpus AND the pre-retrain codebooks
     val g1 = VectorSink.generationAt(store, "emb", 1L)
-    assert(pairs(VectorSink.topKPqGen(store, "emb", g1, corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 100)) === atGen1)
-    assert(pairs(VectorSink.topKPq(store, "emb", all, q,
-        "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 300)) ===
+    assert(pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, at = Some(g1), fullVectors = Some(corpus),
+      shortlist = 100)) === atGen1)
+    assert(pairs(VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(all), shortlist = 300)) ===
       pairs(Similarity.bruteForceTopK(all, q, "vec_id", "embedding", k = 3)))
   }
 
   test("PQ collection stores m-byte codes and probes exactly at full width") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec5").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfPq(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4, m = 2, ksub = 8, iters = 2)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Pq(m = 2, ksub = 8, iters = 2))
     // the corpus table holds PQ codes, never vectors
     assert(store.read("emb").columns.toSet === Set("vec_id", "__list", "__codes"))
     assert(VectorSink.readMeta(store, "emb").metric === "cosine-pq")
     assert(store.read("emb__pq_codebooks").count() === 16) // m * ksub
     val queries = corpus.limit(2)
-    val got = VectorSink.topKPq(store, "emb", corpus, queries,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 100)
+    val got = VectorSink.topK(store, "emb", queries, "vec_id", "embedding",
+      k = 3, nprobe = 4, fullVectors = Some(corpus), shortlist = 100)
       .orderBy("query_id", "rank")
       .select("query_id", "match_id").as[(Long, Long)].collect().toSeq
     // nprobe = nlist + corpus-wide shortlist: the exact re-rank sees
@@ -1059,15 +1069,15 @@ class VectorSinkSpec extends SparkSpec {
       "vec_id", "embedding", k = 3).orderBy("query_id", "rank")
       .select("query_id", "match_id").as[(Long, Long)].collect().toSeq
     assert(got === exact)
-    // a pruned probe still fills k and a non-PQ collection is rejected
-    assert(VectorSink.topKPq(store, "emb", corpus, queries,
-      "vec_id", "embedding", k = 3, nprobe = 1, shortlist = 10).count() === 6)
-    VectorSink.writeIvf(store, "plain", corpus, "vec_id", "embedding", nlist = 4)
+    // a pruned probe still fills k; without the full-precision corpus
+    // the code-only collection has nothing to re-rank against
+    assert(VectorSink.topK(store, "emb", queries, "vec_id", "embedding",
+      k = 3, nprobe = 1, fullVectors = Some(corpus), shortlist = 10).count() === 6)
     val e = intercept[IllegalArgumentException] {
-      VectorSink.topKPq(store, "plain", corpus, queries,
-        "vec_id", "embedding", k = 3, nprobe = 1, shortlist = 10)
+      VectorSink.topK(store, "emb", queries, "vec_id", "embedding", k = 3,
+        nprobe = 1, shortlist = 10)
     }
-    assert(e.getMessage.contains("not a PQ collection"))
+    assert(e.getMessage.contains("fullVectors"), e.getMessage)
   }
 
   private def probeRows(df: org.apache.spark.sql.DataFrame) =
@@ -1256,39 +1266,39 @@ class VectorSinkSpec extends SparkSpec {
     val q = corpus.filter(col("vec_id") < 4)
     // nprobe = nlist → exactly the brute-force top-k over the FILTERED
     // corpus (a post-filter of the unfiltered top-k would lose rows)
-    val byPred = VectorSink.topKWhere(store, "emb", q,
-      "vec_id", "embedding", k = 3, nprobe = 4, predicate = pred)
+    val byPred = VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, where = Some(pred))
     assert(probeRows(byPred) === probeRows(Similarity.bruteForceTopK(
       corpus.filter(pred), q, "vec_id", "embedding", k = 3)))
     // the id-allowlist variant agrees with the predicate variant
-    val byList = VectorSink.topKAmong(store, "emb", q, allowed,
-      "vec_id", "embedding", k = 3, nprobe = 4)
+    val byList = VectorSink.topK(store, "emb", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, among = Some(allowed))
     assert(probeRows(byList) === probeRows(byPred))
     // quantized + PQ: `among` restricts the stored codes BEFORE the ADC
     // shortlist; corpus-wide shortlist + nprobe=nlist → exact over the
     // allowed subset
-    VectorSink.writeIvfQuantized(store, "sq8", corpus,
-      "vec_id", "embedding", nlist = 4)
-    assert(probeRows(VectorSink.topKQuantized(store, "sq8", corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 64,
-      among = Some(allowed))) === probeRows(byPred))
-    VectorSink.writeIvfPq(store, "pq", corpus, "vec_id", "embedding",
-      nlist = 4, m = 2, ksub = 8, iters = 2)
-    assert(probeRows(VectorSink.topKPq(store, "pq", corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 64,
-      among = Some(allowed))) === probeRows(byPred))
+    VectorSink.writeIvf(store, "sq8", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
+    assert(probeRows(VectorSink.topK(store, "sq8", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, among = Some(allowed), fullVectors = Some(corpus),
+      shortlist = 64)) === probeRows(byPred))
+    VectorSink.writeIvf(store, "pq", corpus, "vec_id", "embedding", nlist = 4,
+      codec = Codec.Pq(m = 2, ksub = 8, iters = 2))
+    assert(probeRows(VectorSink.topK(store, "pq", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, among = Some(allowed), fullVectors = Some(corpus),
+      shortlist = 64)) === probeRows(byPred))
     // binary: `among` restricts the stored codes BEFORE the Hamming
     // shortlist, same contract
-    VectorSink.writeIvfBinary(store, "bq", corpus, "vec_id", "embedding",
-      nlist = 4)
-    assert(probeRows(VectorSink.topKBinary(store, "bq", corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 64,
-      among = Some(allowed)).select("query_id", "rank", "match_id", "cosine"))
+    VectorSink.writeIvf(store, "bq", corpus, "vec_id", "embedding", nlist = 4,
+      codec = Codec.Binary)
+    assert(probeRows(VectorSink.topK(store, "bq", q, "vec_id", "embedding",
+      k = 3, nprobe = 4, among = Some(allowed), fullVectors = Some(corpus),
+      shortlist = 64).select("query_id", "rank", "match_id", "cosine"))
       === probeRows(byPred))
     // predicate filtering needs stored vectors — quantized refuses
     val e = intercept[IllegalArgumentException] {
-      VectorSink.topKWhere(store, "sq8", q, "vec_id", "embedding",
-        k = 3, nprobe = 4, predicate = pred)
+      VectorSink.topK(store, "sq8", q, "vec_id", "embedding", k = 3,
+        nprobe = 4, where = Some(pred))
     }
     assert(e.getMessage.contains("among"))
   }
@@ -1296,16 +1306,16 @@ class VectorSinkSpec extends SparkSpec {
   test("quantized collections delete, upsert and resurrect through the same path") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vqdel").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfQuantized(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
     VectorSink.delete(store, "emb",
       corpus.filter(col("vec_id") % 5 === 0).select("vec_id"), "vec_id")
     val live = corpus.filter(col("vec_id") % 5 =!= 0)
     val q = corpus.filter(col("vec_id") < 4)
     // nprobe = nlist + corpus-wide shortlist → exact re-rank over the
     // LIVE candidates: the brute-force answer over the live corpus
-    val got = VectorSink.topKQuantized(store, "emb", corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 64)
+    val got = VectorSink.topK(store, "emb", q, "vec_id", "embedding", k = 3,
+      nprobe = 4, fullVectors = Some(corpus), shortlist = 64)
     assert(probeRows(got) === probeRows(Similarity.bruteForceTopK(
       live, q, "vec_id", "embedding", k = 3)))
     // append the deleted ids back (original vectors): the new segment
@@ -1313,8 +1323,8 @@ class VectorSinkSpec extends SparkSpec {
     VectorSink.append(store, "emb",
       corpus.filter(col("vec_id") % 5 === 0), "vec_id", "embedding")
     assert(store.read("emb").count() === 64L)
-    val got2 = VectorSink.topKQuantized(store, "emb", corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 64)
+    val got2 = VectorSink.topK(store, "emb", q, "vec_id", "embedding", k = 3,
+      nprobe = 4, fullVectors = Some(corpus), shortlist = 64)
     assert(probeRows(got2) === probeRows(Similarity.bruteForceTopK(
       corpus, q, "vec_id", "embedding", k = 3)))
   }
@@ -1323,8 +1333,8 @@ class VectorSinkSpec extends SparkSpec {
     "at full width") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsbq").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfBinary(store, "emb", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Binary)
     assert(store.read("emb").columns.toSet === Set("vec_id", "__list", "__code"))
     assert(VectorSink.readMeta(store, "emb").metric === "hamming-bq")
     // dim 8 -> one packed word per row
@@ -1332,8 +1342,8 @@ class VectorSinkSpec extends SparkSpec {
       .as[Int].collect().toSeq === Seq(1))
     val q = corpus.filter(col("vec_id") < 4)
     // nprobe = nlist + corpus-wide shortlist ≡ brute force
-    val got = VectorSink.topKBinary(store, "emb", corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 64)
+    val got = VectorSink.topK(store, "emb", q, "vec_id", "embedding", k = 3,
+      nprobe = 4, fullVectors = Some(corpus), shortlist = 64)
       .select("query_id", "rank", "match_id", "cosine")
     assert(probeRows(got) === probeRows(Similarity.bruteForceTopK(
       corpus, q, "vec_id", "embedding", k = 3)))
@@ -1343,8 +1353,8 @@ class VectorSinkSpec extends SparkSpec {
     "binaryTopK at the same shortlist") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsbq2").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfBinary(store, "emb",
-      corpus.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus.filter(col("vec_id") % 2 === 0),
+      "vec_id", "embedding", nlist = 4, codec = Codec.Binary)
     VectorSink.append(store, "emb",
       corpus.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
     assert(store.read("emb").count() === 64L)
@@ -1353,8 +1363,8 @@ class VectorSinkSpec extends SparkSpec {
     // the in-memory binaryTopK with the same rerank budget is the
     // exact reference EVEN when the shortlist < corpus (truncation
     // semantics included)
-    val got = VectorSink.topKBinary(store, "emb", corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 10)
+    val got = VectorSink.topK(store, "emb", q, "vec_id", "embedding", k = 3,
+      nprobe = 4, fullVectors = Some(corpus), shortlist = 10)
       .select("query_id", "rank", "match_id", "hamming", "cosine")
     val want = Similarity.binaryTopK(corpus, q, "vec_id", "embedding",
       k = 3, rerank = 10)
@@ -1369,8 +1379,8 @@ class VectorSinkSpec extends SparkSpec {
   test("binary rebalance retrains from fullVectors and keeps the metric") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsbq3").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfBinary(store, "emb",
-      corpus.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", nlist = 4)
+    VectorSink.writeIvf(store, "emb", corpus.filter(col("vec_id") % 2 === 0),
+      "vec_id", "embedding", nlist = 4, codec = Codec.Binary)
     VectorSink.append(store, "emb",
       corpus.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
     val ran = VectorSink.rebalance(store, "emb", "vec_id", "embedding",
@@ -1379,8 +1389,8 @@ class VectorSinkSpec extends SparkSpec {
     assert(VectorSink.readMeta(store, "emb").metric === "hamming-bq")
     assert(store.read("emb").count() === 64L)
     val q = corpus.filter(col("vec_id") < 4)
-    val got = VectorSink.topKBinary(store, "emb", corpus, q,
-      "vec_id", "embedding", k = 3, nprobe = 4, shortlist = 64)
+    val got = VectorSink.topK(store, "emb", q, "vec_id", "embedding", k = 3,
+      nprobe = 4, fullVectors = Some(corpus), shortlist = 64)
       .select("query_id", "rank", "match_id", "cosine")
     assert(probeRows(got) === probeRows(Similarity.bruteForceTopK(
       corpus, q, "vec_id", "embedding", k = 3)))
@@ -1389,12 +1399,12 @@ class VectorSinkSpec extends SparkSpec {
   test("quantized-family probes reject wrong-width query vectors") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsdim").toString
     val store = new TableStore(dir, spark)
-    VectorSink.writeIvfBinary(store, "bq", corpus, "vec_id", "embedding",
-      nlist = 4)
-    VectorSink.writeIvfQuantized(store, "sq8", corpus, "vec_id", "embedding",
-      nlist = 4)
-    VectorSink.writeIvfOpq(store, "opq", corpus, "vec_id", "embedding",
-      nlist = 4, m = 2, ksub = 8, iters = 2)
+    VectorSink.writeIvf(store, "bq", corpus, "vec_id", "embedding", nlist = 4,
+      codec = Codec.Binary)
+    VectorSink.writeIvf(store, "sq8", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Sq8)
+    VectorSink.writeIvf(store, "opq", corpus, "vec_id", "embedding",
+      nlist = 4, codec = Codec.Opq(m = 2, ksub = 8, iters = 2))
     def messageChain(t: Throwable): String = {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
@@ -1409,40 +1419,49 @@ class VectorSinkSpec extends SparkSpec {
     val mixed = narrow.unionByName(
       Seq((1L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding"))
     for ((table, probe) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
-        ("bq", q => VectorSink.topKBinary(store, "bq", corpus, q,
-          "vec_id", "embedding", k = 1, nprobe = 4, shortlist = 4)),
-        ("sq8", q => VectorSink.topKQuantized(store, "sq8", corpus, q,
-          "vec_id", "embedding", k = 1, nprobe = 4, shortlist = 4)),
+        ("bq", q => VectorSink.topK(store, "bq", q, "vec_id", "embedding",
+          k = 1, nprobe = 4, fullVectors = Some(corpus), shortlist = 4)),
+        ("sq8", q => VectorSink.topK(store, "sq8", q, "vec_id", "embedding",
+          k = 1, nprobe = 4, fullVectors = Some(corpus), shortlist = 4)),
         // OPQ: the guard must run BEFORE the rotation, which would
         // otherwise emit a trained-width vector and mask the mismatch
-        ("opq", q => VectorSink.topKOpq(store, "opq", corpus, q,
-          "vec_id", "embedding", k = 1, nprobe = 4, shortlist = 4)));
+        ("opq", q => VectorSink.topK(store, "opq", q, "vec_id", "embedding",
+          k = 1, nprobe = 4, fullVectors = Some(corpus), shortlist = 4)));
         frame <- Seq(narrow, mixed)) {
       val e = intercept[Throwable] { probe(frame).count() }
       assert(messageChain(e).contains("collection dim 8"),
         s"$table: expected the width guard, got: ${messageChain(e)}")
     }
     // an EMPTY query frame passes (result is empty, nothing to clamp)
-    assert(VectorSink.topKBinary(store, "bq", corpus,
-      corpus.filter(col("vec_id") < 0), "vec_id", "embedding",
-      k = 1, nprobe = 4, shortlist = 4).count() === 0L)
+    assert(VectorSink.topK(store, "bq", corpus.filter(col("vec_id") < 0),
+      "vec_id", "embedding", k = 1, nprobe = 4, fullVectors = Some(corpus),
+      shortlist = 4).count() === 0L)
   }
 
   test("binary probe rejects non-binary collections and vice versa") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsbq4").toString
     val store = new TableStore(dir, spark)
     VectorSink.writeIvf(store, "plain", corpus, "vec_id", "embedding", nlist = 4)
-    VectorSink.writeIvfBinary(store, "bq", corpus, "vec_id", "embedding",
-      nlist = 4)
+    VectorSink.writeIvf(store, "bq", corpus, "vec_id", "embedding", nlist = 4,
+      codec = Codec.Binary)
     val q = corpus.limit(1)
+    // a collection that stores its vectors needs no full-precision
+    // corpus: passing one changes nothing
+    assert(probeRows(VectorSink.topK(store, "plain", q, "vec_id",
+      "embedding", k = 1, nprobe = 4, fullVectors = Some(corpus),
+      shortlist = 4)) === probeRows(VectorSink.topK(store, "plain", q,
+      "vec_id", "embedding", k = 1, nprobe = 4)))
+    // sign codes are not filterable payloads
     val e1 = intercept[IllegalArgumentException] {
-      VectorSink.topKBinary(store, "plain", corpus, q, "vec_id", "embedding",
-        k = 1, nprobe = 4, shortlist = 4)
+      VectorSink.topK(store, "bq", q, "vec_id", "embedding", k = 1,
+        nprobe = 4, where = Some(col("vec_id") > 0L),
+        fullVectors = Some(corpus), shortlist = 4)
     }
-    assert(e1.getMessage.contains("not a binary collection"))
+    assert(e1.getMessage.contains("among"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
       VectorSink.topK(store, "bq", q, "vec_id", "embedding", k = 1, nprobe = 4)
     }
     assert(e2.getMessage.contains("hamming-bq"))
+    assert(e2.getMessage.contains("fullVectors"), e2.getMessage)
   }
 }
