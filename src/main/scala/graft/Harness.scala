@@ -4,9 +4,12 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.{GraftAccess, SparkContext}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 
 /** The driver harness every main runs on: one session configuration,
   * one timed query runner and one task census. */
@@ -67,11 +70,17 @@ object Harness {
   }
 
   /** Job and task census: jobs, tasks and the longest task, plus per
-    * stage the max/sum/count of task time and the stage's call site, so
-    * a single-task hotspot is attributable to a line of code. Attach it
-    * with `addSparkListener`; [[reset]] and every read first drain the
-    * listener bus, so no event posted before the call is missed or
-    * attributed to the next query. */
+    * stage the max/sum/count of task time and per call site the number
+    * of jobs, so a single-task hotspot or a repeated job is attributable
+    * to a line of code. Attach it with `addSparkListener`; [[reset]] and
+    * every read first drain the listener bus, so no event posted before
+    * the call is missed or attributed to the next query.
+    *
+    * A call site is the first graft frame outside the harness. AQE runs
+    * its query stages from a helper thread whose stack holds no graft
+    * frame, so a job of a SQL execution takes the site of the thread
+    * that started the execution (`spark.sql.execution.id` → the
+    * execution-start event's call stack); its stages take the job's. */
   final class Census(sc: SparkContext) extends SparkListener {
     private val nJobs = new AtomicLong(0L)
     private val nTasks = new AtomicLong(0L)
@@ -80,8 +89,33 @@ object Harness {
     private val stageSum = new ConcurrentHashMap[Int, Long]()
     private val stageN = new ConcurrentHashMap[Int, Long]()
     private val stageSite = new ConcurrentHashMap[Int, String]()
+    private val execSite = new ConcurrentHashMap[Long, String]()
+    private val siteJobs = new ConcurrentHashMap[String, Long]()
 
-    override def onJobStart(j: SparkListenerJobStart): Unit = nJobs.incrementAndGet()
+    private def graftFrame(stack: String): Option[String] =
+      stack.linesIterator.find(l => l.contains("graft.") &&
+        !l.contains("graft.Harness") && !l.contains("graft.Soak")).map(_.trim.take(160))
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        // a nested execution started off a helper thread takes its root's
+        graftFrame(s.details)
+          .orElse(s.rootExecutionId.flatMap(r => Option(execSite.get(r))))
+          .foreach(execSite.put(s.executionId, _))
+      case s: SparkListenerSQLExecutionEnd => execSite.remove(s.executionId)
+      case _ => ()
+    }
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      nJobs.incrementAndGet()
+      val site = Option(j.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .flatMap(id => Option(execSite.get(id.toLong)))
+        .orElse(j.stageInfos.iterator.flatMap(s => graftFrame(s.details)).nextOption())
+        .getOrElse(j.stageInfos.headOption.map(_.name.takeWhile(_ != '\n')).getOrElse("?"))
+      siteJobs.merge(site, 1L, (a, b) => a + b)
+      j.stageIds.foreach(stageSite.put(_, site))
+    }
 
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
       nTasks.incrementAndGet()
@@ -92,21 +126,11 @@ object Harness {
       stageN.merge(t.stageId, 1L, (a, b) => a + b)
     }
 
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      // under AQE every query-stage future shares one lambda callsite —
-      // the details' first graft frame outside the harness is the
-      // attributable one
-      val site = s.stageInfo.details.linesIterator
-        .find(l => l.contains("graft.") && !l.contains("graft.Harness") &&
-          !l.contains("graft.Soak"))
-        .getOrElse(s.stageInfo.name.takeWhile(_ != '\n'))
-      stageSite.put(s.stageInfo.stageId, site.trim.take(160))
-    }
-
     def reset(): Unit = {
       GraftAccess.drain(sc)
       nJobs.set(0L); nTasks.set(0L); maxMs.set(0L)
       stageMax.clear(); stageSum.clear(); stageN.clear(); stageSite.clear()
+      siteJobs.clear()
     }
 
     def jobs: Long = { GraftAccess.drain(sc); nJobs.get() }
@@ -122,6 +146,13 @@ object Harness {
         (sid, ms, stageN.getOrDefault(sid, 0L), stageSum.getOrDefault(sid, 0L),
           stageSite.getOrDefault(sid, "?"))
       }
+    }
+
+    /** Jobs per call site, most first. */
+    def jobSites: Seq[(String, Long)] = {
+      GraftAccess.drain(sc)
+      import scala.jdk.CollectionConverters._
+      siteJobs.asScala.toSeq.sortBy { case (site, n) => (-n, site) }
     }
   }
 }

@@ -10,7 +10,8 @@ package graft
   *
   * Usage: `runMain graft.Soak <fixtureDir> <q1,q2,...>` — one JSON
   * line per query: {"query":..,"wall_s":..,"max_task_s":..,
-  * "tasks":..,"jobs":..,"rows":..}.
+  * "tasks":..,"jobs":..,"rows":..}. Stderr gets the five slowest stages
+  * and the query's jobs per call site.
   */
 object Soak {
   def main(args: Array[String]): Unit = {
@@ -32,6 +33,9 @@ object Soak {
       census.topStages(5).foreach { case (sid, ms, n, sum, site) =>
         System.err.println(f"[soak] $name stage $sid max_task=${ms / 1e3}%.1fs " +
           f"tasks=$n sum=${sum / 1e3}%.1fs site=$site")
+      }
+      census.jobSites.foreach { case (site, n) =>
+        System.err.println(s"[soak] $name jobs=$n site=$site")
       }
     }
     queries.Scratch.sweep()

@@ -113,14 +113,18 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     * at 100 TB the history is ~the whole table, so the naive
     * full-table rewrite is the scale-killer this avoids. Closed
     * segments are folded together past a threshold to bound the
-    * manifest (small-files control, not a history rewrite per load). */
+    * manifest (small-files control, not a history rewrite per load).
+    * Both segments read the split's one pinned frame; a load that
+    * retires nothing commits no closed segment, and finding that out
+    * costs no job of its own (the closed write counts its rows). */
   def scd2(table: String, staging: DataFrame, cfg: Scd2Config,
       loadId: String): Unit = Dedup.withPins {
     // same pin rationale as merge: the staged snapshot feeds both
-    // sides of the retire/insert split and the range-layout sampling
+    // sides of the split and the range-layout sampling
     val staged = Dedup.pin(stamp(staging, loadId))
     def actives(df: DataFrame) = SegmentWrite(df, tags = scd2Tag("active"))
-    def closeds(df: DataFrame) = SegmentWrite(df, tags = scd2Tag("closed"))
+    def closeds(df: DataFrame) =
+      SegmentWrite(df, tags = scd2Tag("closed"), dropEmpty = true)
 
     val segs = if (store.exists(table)) store.segments(table) else Nil
     if (segs.isEmpty) {
@@ -137,10 +141,7 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
           (Nil, store.readSegments(table, closedSegs)
             .unionByName(closed, allowMissingColumns = true))
         else (closedSegs, closed)
-      val writes =
-        if (foldClosed || !closedOut.isEmpty) Seq(actives(active), closeds(closedOut))
-        else Seq(actives(active))
-      store.commitSegments(table, keep, writes)
+      store.commitSegments(table, keep, Seq(actives(active), closeds(closedOut)))
     } else {
       // legacy un-tagged table: one full rewrite that splits it so every
       // later load prunes
@@ -235,9 +236,13 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
 
   def recordVersion(schemaName: String, versionHash: String,
                     schemaJson: String): Unit = {
-    val already = seenVersionHashes(versionHash) ||
-      store.readOption(VersionTable).exists(df =>
-        df.filter(df("version_hash") === versionHash).limit(1).count() > 0)
+    // read on the driver, no Spark job; a tombstoned ledger takes Spark
+    val already = seenVersionHashes(versionHash) || hasRows(VersionTable) && {
+      if (store.tombstones(VersionTable).isEmpty)
+        store.readDriverRows(VersionTable).exists(_.get("version_hash").contains(versionHash))
+      else store.read(VersionTable).filter(col("version_hash") === versionHash)
+        .limit(1).count() > 0
+    }
     seenVersionHashes += versionHash
     if (!already) {
       val version = nextVersion(VersionTable)
@@ -251,17 +256,30 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     }
   }
 
+  /** Next monotone version: max(version)+1, not count() — counts break
+    * after deletes and under merged histories. Every row of the two
+    * versioned ledgers is appended here at max+1 (and a compaction folds
+    * them into one segment), so the newest segment holds the max: it is
+    * read on the driver, with no Spark job. A ledger carrying tombstones,
+    * which the driver reader refuses, takes the Spark aggregate. */
+  private def nextVersion(table: String): Long = {
+    val top =
+      if (!hasRows(table)) None
+      else if (store.tombstones(table).isEmpty)
+        store.readDriverRowsLast(table).flatMap(_.get("version"))
+          .map(_.asInstanceOf[Number].longValue()).maxOption
+      else Option(store.read(table).agg(max(col("version"))).head().get(0))
+        .map(_.asInstanceOf[Number].longValue())
+    top.getOrElse(0L) + 1
+  }
+
+  private def hasRows(table: String): Boolean =
+    store.exists(table) && store.segments(table).nonEmpty
+
   /** `_dlt_pipeline_state` system table (reference state sync,
     * dlt/pipeline/state_sync.py:95-139): the pipeline state snapshot
     * committed alongside the load so a fresh environment can restore
     * incremental cursors from the destination alone. */
-  /** Next monotone version: max(version)+1, not count() — counts break
-    * after deletes and under merged histories. */
-  private def nextVersion(table: String): Long =
-    store.readOption(table).flatMap(df =>
-      Option(df.agg(max(col("version"))).head().get(0))
-        .map(_.asInstanceOf[Number].longValue())).getOrElse(0L) + 1
-
   def recordState(pipelineName: String, loadId: String, stateJson: String): Unit = {
     val version = nextVersion(StateTable)
     import TinyParquet._

@@ -345,7 +345,8 @@ object JdbcSink {
     // entities can share a row hash — an unscoped retire would let
     // entity A's identical hash keep entity B's stale row active,
     // and an unscoped insert would suppress B's new row. Same
-    // scoping as the lakehouse path (Scd2.applySplit).
+    // scoping as the lakehouse path, whose Scd2.applySplit window is
+    // partitioned by the same (row hash, merge key) tuple.
     val entityScope = cfg.mergeKey.map(n).map(k =>
       s" AND $dest.${q(k, c)} = s.${q(k, c)}").mkString
     val colList = cols.map(q(_, c)).mkString(", ")

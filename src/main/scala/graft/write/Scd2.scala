@@ -1,8 +1,10 @@
 package graft.write
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ext.Dedup
 import graft.normalize.Ids
 
 /** SCD2 configuration (reference TScd2StrategyDict,
@@ -34,8 +36,13 @@ final case class Scd2Config(
   *     hashes enter with `valid_from = boundaryTs`, `valid_to = NULL`
   *     (or `activeRecordTs`).
   *
-  * Hash compare is a broadcast-able semi/anti join on a 20-char digest —
-  * at 100 TB the active-hash set is tiny relative to the table.
+  * Both steps are one pass over active ∪ staged rows: a window
+  * partitioned by the hash key (row hash + merge key) tells each row
+  * whether the other side holds its hash, and a left join against the
+  * staged merge keys (small, broadcast-able) tells an active row whether
+  * it is in scope. Partitioning by the full hash key, not the merge key
+  * alone, keeps a low-cardinality merge key (partitioned SCD2) from
+  * putting a whole partition's active rows on one task.
   */
 object Scd2 {
 
@@ -51,11 +58,18 @@ object Scd2 {
     case Some(ts) => col(cfg.validToColumn) === to_timestamp(lit(ts))
   }
 
+  private val FromActive = "__scd2_from_active"
+  private val InScope = "__scd2_in_scope"
+  private val Retire = "__scd2_retire"
+  private val Drop = "__scd2_drop"
+
   /** One SCD2 load against the ACTIVE slice only — the scale path.
     * `activeDest` must contain only currently-active rows; returns
     * `(newActive, newlyClosed)`. Closed history is immutable, so the
     * caller keeps its segments untouched and appends `newlyClosed` —
-    * a load costs O(active + staged), never O(history). */
+    * a load costs O(active + staged), never O(history). Both frames
+    * read one tagged frame, pinned into the caller's [[Dedup.withPins]]
+    * scope, so writing both runs the split once. */
   def applySplit(activeDest: Option[DataFrame], staging: DataFrame,
       cfg: Scd2Config): (DataFrame, DataFrame) = {
     val openTo: Column = cfg.activeRecordTs
@@ -63,14 +77,12 @@ object Scd2 {
       .getOrElse(lit(null).cast("timestamp"))
     val boundary = to_timestamp(lit(cfg.boundaryTs))
 
-    val staged = withHash(staging, cfg)
+    val inserts = withHash(staging, cfg)
+      .withColumn(cfg.validFromColumn, boundary)
+      .withColumn(cfg.validToColumn, openTo)
 
     activeDest match {
-      case None =>
-        val active = staged
-          .withColumn(cfg.validFromColumn, boundary)
-          .withColumn(cfg.validToColumn, openTo)
-        (active, active.limit(0))
+      case None => (inserts, inserts.limit(0))
       case Some(a0) =>
         val activeRows = withHash(a0.drop(cfg.rowHashColumn), cfg)
         // hash compares are PER-ENTITY scoped: mergeKey need not be a
@@ -79,36 +91,42 @@ object Scd2 {
         // keep entity B's stale row active, and an unscoped insert
         // would suppress B's new row. Same scoping as the JDBC path
         // (JdbcSink.scd2 entityScope). With mergeKey empty this is the
-        // plain hash join.
+        // plain hash compare. A null in the key matches nothing, as in
+        // an equi-join.
         val hashKey = cfg.rowHashColumn +: cfg.mergeKey
-        val stagedHashes = staged.select(hashKey.map(col): _*).distinct()
+        val keyed = hashKey.map(col(_).isNotNull).reduce(_ && _)
+        val sameKey = Window.partitionBy(hashKey.map(col): _*)
+        def partnerOn(active: Boolean): Column =
+          keyed && max(col(FromActive) === active).over(sameKey)
 
-        val scopedActive =
-          if (cfg.mergeKey.isEmpty) activeRows
-          else activeRows.join(staging.select(cfg.mergeKey.map(col): _*).distinct(),
-            cfg.mergeKey, "left_semi")
-        val outOfScopeActive =
-          if (cfg.mergeKey.isEmpty) activeRows.limit(0)
-          else activeRows.join(staging.select(cfg.mergeKey.map(col): _*).distinct(),
-            cfg.mergeKey, "left_anti")
+        val rows = activeRows.withColumn(FromActive, lit(true))
+          .unionByName(inserts.withColumn(FromActive, lit(false)),
+            allowMissingColumns = true)
+        // retire: active, in scope, no staged partner; keep every other
+        // active row; insert staged rows with no active partner. The
+        // window runs before the scope join, so a shuffle join's
+        // merge-key partitioning cannot stand in for the hash key's
+        val paired = rows
+          .withColumn(Retire, col(FromActive) && !partnerOn(active = false))
+          .withColumn(Drop, !col(FromActive) && partnerOn(active = true))
+          .filter(!col(Drop))
+        val tagged = Dedup.pin(
+          if (cfg.mergeKey.isEmpty) paired
+          else paired.join(staging.select(cfg.mergeKey.map(col): _*).distinct()
+              .withColumn(InScope, lit(true)), cfg.mergeKey, "left_outer")
+            .withColumn(Retire, col(Retire) && coalesce(col(InScope), lit(false))))
 
-        // 1. retire active in-scope rows whose (entity, hash) disappeared
-        val retired = scopedActive
-          .join(stagedHashes, hashKey, "left_anti")
+        // column order is the join split's: a using-join put its keys
+        // first (the merge key in active rows, the hash key in closed
+        // rows), and closed rows keep the active types
+        val activeType = activeRows.schema.fields.map(f => f.name -> f.dataType).toMap
+        val newActive = tagged.filter(!col(Retire)).select((cfg.mergeKey ++
+          rows.columns.filterNot(c => c == FromActive || cfg.mergeKey.contains(c)))
+          .map(col): _*)
+        val retired = tagged.filter(col(Retire))
+          .select((hashKey ++ activeRows.columns.filterNot(hashKey.contains))
+            .map(c => col(c).cast(activeType(c)).as(c)): _*)
           .withColumn(cfg.validToColumn, boundary)
-        val survivors = scopedActive
-          .join(stagedHashes, hashKey, "left_semi")
-
-        // 2. insert staged rows whose (entity, hash) is not currently active
-        val activeHashes = scopedActive.select(hashKey.map(col): _*).distinct()
-        val inserted = staged
-          .join(activeHashes, hashKey, "left_anti")
-          .withColumn(cfg.validFromColumn, boundary)
-          .withColumn(cfg.validToColumn, openTo)
-
-        val newActive = outOfScopeActive
-          .unionByName(survivors)
-          .unionByName(inserted, allowMissingColumns = true)
         (newActive, retired)
     }
   }

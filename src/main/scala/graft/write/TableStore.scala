@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, max, min}
+import org.apache.spark.sql.functions.{col, count, lit, max, min}
 import org.apache.spark.sql.types._
 
 import graft.ext.Dedup
@@ -30,9 +30,12 @@ final case class ColStats(min: String, max: String, numeric: Boolean) {
   * per-column stats (absent for imported/legacy segments → never pruned). */
 final case class Segment(name: String, stats: Map[String, ColStats])
 
-/** A pending segment for [[TableStore.commitSegments]]. */
+/** A pending segment for [[TableStore.commitSegments]]. `dropEmpty`:
+  * a write of zero rows is deleted instead of committed (the write
+  * counts its own rows, so this costs no extra job). */
 final case class SegmentWrite(df: DataFrame, statsFor: Seq[String] = Nil,
-    rangeBy: Seq[String] = Nil, tags: Map[String, ColStats] = Map.empty)
+    rangeBy: Seq[String] = Nil, tags: Map[String, ColStats] = Map.empty,
+    dropEmpty: Boolean = false)
 
 /** A merge-on-read deletion marker: rows of the `covered` data segments
   * whose `column` value appears in the tombstone's id file are dead.
@@ -241,14 +244,21 @@ final class TableStore(val root: String, val spark: SparkSession) {
           .foldLeft(base) { case (acc, (c, ts)) =>
             if (!acc.columns.contains(c)) acc
             else {
-              val ids = ts.map(t =>
-                  spark.read.parquet(resolve(table, t.name).toString))
+              val ids = ts.map(readTombstone(table, _))
                 .reduce(_ unionByName _).select(c).distinct()
               acc.join(ids, Seq(c), "left_anti")
             }
           }
       }.reduce(_.unionByName(_, allowMissingColumns = true))
     }
+  }
+
+  /** A tombstone's id file, read through [[segmentSchemas]] when its
+    * schema is memoized (no schema-inference job). */
+  private def readTombstone(table: String, t: Tombstone): DataFrame = {
+    val p = resolve(table, t.name)
+    Option(segmentSchemas.get(p)).fold(spark.read)(spark.read.schema(_))
+      .parquet(p.toString)
   }
 
   /** The live tombstones of `table` (empty for plain tables). */
@@ -281,9 +291,11 @@ final class TableStore(val root: String, val spark: SparkSession) {
     require(ids.columns.toSeq == Seq(tombColumn),
       s"tombstone ids must be a single '$tombColumn' column")
     val idSeg = s"data/${UUID.randomUUID().toString.take(12)}-tomb"
+    val path = tableDir(table).resolve(idSeg)
     ids.distinct().repartition(1).write.mode(SaveMode.Overwrite)
       .option(s"parquet.bloom.filter.enabled#$tombColumn", "true")
-      .parquet(tableDir(table).resolve(idSeg).toString)
+      .parquet(path.toString)
+    segmentSchemas.put(path, deepNullable(ids.schema).asInstanceOf[StructType])
     idSeg
   }
 
@@ -372,14 +384,17 @@ final class TableStore(val root: String, val spark: SparkSession) {
       liveTombstones(table, keep))
   }
 
-  /** Commit `keep` plus one new segment per write. `tags` are synthetic
+  /** Commit `keep` plus one new segment per write (an empty
+    * `dropEmpty` write is deleted, not committed). `tags` are synthetic
     * stats entries stamped into the manifest (e.g. SCD2's active/closed
     * segment marker) — they ride the existing stats encoding. */
   def commitSegments(table: String, keep: Seq[Segment],
       writes: Seq[SegmentWrite]): Unit = locked(table) {
-    val segs = writes.map { w =>
-      val s = writeSegment(table, w.df, w.statsFor, w.rangeBy)
-      s.copy(stats = s.stats ++ w.tags)
+    val segs = writes.flatMap { w =>
+      val (s, rows) = writeSegmentCounted(table, w.df, w.statsFor, w.rangeBy,
+        countRows = w.dropEmpty)
+      if (rows.contains(0L)) { deleteTree(resolve(table, s.name)); None }
+      else Some(s.copy(stats = s.stats ++ w.tags))
     }
     commit(table, keep ++ segs, liveTombstones(table, keep))
   }
@@ -630,7 +645,7 @@ final class TableStore(val root: String, val spark: SparkSession) {
   private def tombstoneContains(table: String, t: Tombstone,
       value: String): Boolean =
     Try {
-      val df = spark.read.parquet(resolve(table, t.name).toString)
+      val df = readTombstone(table, t)
       val dt = df.schema(t.column).dataType
       !df.filter(col(t.column) === org.apache.spark.sql.functions.lit(value)
         .cast(dt)).isEmpty
@@ -734,11 +749,7 @@ final class TableStore(val root: String, val spark: SparkSession) {
     if (Files.exists(dataDir)) {
       listDir(dataDir).foreach { seg =>
         if (!live.contains(s"data/${seg.getFileName}")) {
-          val w = Files.walk(seg)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(Files.delete)
-          finally w.close()
-          segmentSchemas.remove(seg) // the files are gone; drop the memo
+          deleteTree(seg)
           deleted += 1
         }
       }
@@ -839,13 +850,7 @@ final class TableStore(val root: String, val spark: SparkSession) {
 
   def drop(table: String): Unit = locked(table) {
     val dir = tableDir(table)
-    if (Files.exists(dir)) {
-      Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-      // drop the dead schema memo entries with the files — a long-lived
-      // process creating and dropping tables must not accumulate them
-      segmentSchemas.keySet.removeIf(_.startsWith(dir))
-    }
+    if (Files.exists(dir)) deleteTree(dir)
   }
 
   /** Empty the table but KEEP its schema (reference drop_data refresh
@@ -871,8 +876,26 @@ final class TableStore(val root: String, val spark: SparkSession) {
     case _ => false
   }
 
+  /** Delete a file tree and its schema memo entries — the files are
+    * gone, and a long-lived process creating and dropping segments or
+    * tables must not accumulate memo entries. */
+  private def deleteTree(p: Path): Unit = {
+    val w = Files.walk(p)
+    try w.sorted(java.util.Comparator.reverseOrder())
+      .iterator().asScala.foreach(Files.delete)
+    finally w.close()
+    segmentSchemas.keySet.removeIf(_.startsWith(p))
+  }
+
   private def writeSegment(table: String, df: DataFrame,
-      statsFor: Seq[String], rangeBy: Seq[String] = Nil): Segment = Dedup.withPins {
+      statsFor: Seq[String], rangeBy: Seq[String] = Nil): Segment =
+    writeSegmentCounted(table, df, statsFor, rangeBy, countRows = false)._1
+
+  /** [[writeSegment]], plus the written row count when `countRows`
+    * (observed on the write itself, no extra job). */
+  private def writeSegmentCounted(table: String, df: DataFrame,
+      statsFor: Seq[String], rangeBy: Seq[String],
+      countRows: Boolean): (Segment, Option[Long]) = Dedup.withPins {
     val seg = s"data/${UUID.randomUUID().toString.take(12)}"
     val cols = statsFor.distinct.filter(df.columns.contains)
     // range layout: globally range-partition + sort on the key so each
@@ -897,18 +920,21 @@ final class TableStore(val root: String, val spark: SparkSession) {
       if (rangeKeys.isEmpty) df
       else Dedup.pin(df).repartitionByRange(rangeKeys.map(col): _*)
         .sortWithinPartitions(rangeKeys.map(col): _*)
-    writeLayout(table, df, layout, seg, cols)
+    writeLayout(table, df, layout, seg, cols, countRows)
   }
 
+  private val RowsMetric = "__rows"
+
   private def writeLayout(table: String, df: DataFrame, layout: DataFrame,
-      seg: String, cols: Seq[String]): Segment = {
+      seg: String, cols: Seq[String], countRows: Boolean): (Segment, Option[Long]) = {
+    val exprs = cols.flatMap(c => Seq(
+      min(col(c)).cast("string").as(s"min_$c"),
+      max(col(c)).cast("string").as(s"max_$c"))) ++
+      (if (countRows) Seq(count(lit(1)).as(RowsMetric)) else Nil)
     val (toWrite, obs) =
-      if (cols.isEmpty) (layout, None)
+      if (exprs.isEmpty) (layout, None)
       else {
         val o = new Observation(s"seg-${UUID.randomUUID().toString.take(8)}")
-        val exprs = cols.flatMap(c => Seq(
-          min(col(c)).cast("string").as(s"min_$c"),
-          max(col(c)).cast("string").as(s"max_$c")))
         (layout.observe(o, exprs.head, exprs.tail: _*), Some(o))
       }
     // parquet bloom filters on the key columns: equality probes on
@@ -919,18 +945,17 @@ final class TableStore(val root: String, val spark: SparkSession) {
     writer.parquet(tableDir(table).resolve(seg).toString)
     segmentSchemas.put(tableDir(table).resolve(seg),
       deepNullable(layout.schema).asInstanceOf[StructType])
-    val stats = obs.map { o =>
-      val m = o.get
-      cols.flatMap { c =>
-        (Option(m(s"min_$c")), Option(m(s"max_$c"))) match {
-          case (Some(mn), Some(mx)) =>
-            Some(c -> ColStats(mn.toString, mx.toString,
-              isNumeric(df.schema(c).dataType)))
-          case _ => None // all-null or empty segment: no stats
-        }
-      }.toMap
-    }.getOrElse(Map.empty)
-    Segment(seg, stats)
+    val metrics = obs.map(_.get).getOrElse(Map.empty[String, Any])
+    val stats = cols.flatMap { c =>
+      (Option(metrics(s"min_$c")), Option(metrics(s"max_$c"))) match {
+        case (Some(mn), Some(mx)) =>
+          Some(c -> ColStats(mn.toString, mx.toString,
+            isNumeric(df.schema(c).dataType)))
+        case _ => None // all-null or empty segment: no stats
+      }
+    }.toMap
+    (Segment(seg, stats),
+      metrics.get(RowsMetric).map(_.asInstanceOf[Number].longValue()))
   }
 
   private def resolve(table: String, name: String): Path = {

@@ -24,6 +24,26 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** `body`'s result and the number of Spark jobs it started. The
+    * listener bus is drained before the count is read, so every job
+    * `body` started is in it. */
+  def countJobs[A](body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.GraftAccess.drain(spark.sparkContext)
+      (a, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   /** Leak guard: a test must leave the session's cache empty. Every
     * pin belongs to a scope that releases it, and every other persist
     * is released on all paths, so a cached plan left behind is a leak

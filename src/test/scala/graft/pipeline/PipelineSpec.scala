@@ -59,6 +59,22 @@ class PipelineSpec extends SparkSpec {
     assert(out.select("v").as[String].collect().sorted.toSeq == Seq("a", "b", "c", "d"))
   }
 
+  test("system-table sync runs no Spark job, and ledger versions stay max+1") {
+    val p = newPipeline()
+    val cfg = Incremental.Config(cursorColumn = "cur", primaryKey = Seq("v"))
+    p.run(Seq(Resource("ev", Seq((1L, "a")).toDF("cur", "v")).withIncremental(cfg)), "1")
+    // warm: this instance has seen the schema hash
+    val (_, warm) = countJobs(p.run(Nil, "2"))
+    assert(warm === 0, s"a warm system-table sync ran $warm Spark jobs")
+    // cold: a new instance looks the hash up in `_dlt_version`
+    val cold = new Pipeline(p.name, p.root, spark)
+    val (_, coldJobs) = countJobs(cold.run(Nil, "3"))
+    assert(coldJobs === 0, s"a cold system-table sync ran $coldJobs Spark jobs")
+    assert(p.store.read("_dlt_pipeline_state").select("version").as[Long]
+      .collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    assert(p.store.read("_dlt_version").count() === 1)
+  }
+
   test("dataset facade: reference join, parent-child join, fromLoads") {
     val p = newPipeline()
     p.run(Seq(Resource("dim", Seq((1L, "x"), (2L, "y")).toDF("id", "label"))), "1")

@@ -476,38 +476,6 @@ class VectorSinkSpec extends SparkSpec {
     assert(got === expected)
   }
 
-  private def countJobs[A](body: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      drainListenerBus() // deterministic drain: events deliver async
-      (a, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
-  /** `LiveListenerBus.waitUntilEmpty` is private[spark] — reach it via
-    * reflection (a fixed sleep would make the zero-jobs assertion
-    * timing-dependent); falls back to a sleep if the internals move. */
-  private def drainListenerBus(): Unit = try {
-    val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-      .invoke(spark.sparkContext)
-    val ms = bus.getClass.getMethods
-    ms.find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      .map(_.invoke(bus))
-      .orElse(ms.find(m => m.getName == "waitUntilEmpty" &&
-          m.getParameterCount == 1)
-        .map(_.invoke(bus, java.lang.Long.valueOf(10000L))))
-      .getOrElse(Thread.sleep(500))
-    ()
-  } catch { case _: ReflectiveOperationException => Thread.sleep(500) }
-
   test("the skew check reads the manifest census — zero Spark jobs, no corpus scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec14").toString
     val store = new TableStore(dir, spark)
