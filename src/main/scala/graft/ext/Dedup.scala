@@ -69,7 +69,10 @@ object Dedup {
   /** doc → exploded distinct word-n-gram shingles.
     * Output: (id, shingle). The inverted-index base relation.
     * The token array is projected before the shingle lambda so the
-    * tokenizer runs once per document, not once per shingle. */
+    * tokenizer runs once per document, not once per shingle. The pair
+    * generators pin it: they feed it into size/df aggregates, the
+    * candidate join and the verify, and unpinned the tokenizer +
+    * explode re-runs once per branch (6x in containment). */
   def shingleIndex(docs: DataFrame, id: String, text: String, n: Int): DataFrame =
     docs.select(col(id).as("_id"),
         TextOps.tokens(TextOps.canonicalText(col(text))).as("_ts"))
@@ -111,7 +114,10 @@ object Dedup {
     * outside any scope `df` comes back unpersisted. Library-visible so
     * sibling operators with the same fan-out shape (e.g.
     * [[TextIR.lmPerplexityBands]], [[graft.operators.Sketches]]) share
-    * the one lifecycle. */
+    * the one lifecycle. The pin is lazy: a plan that reads a pin not yet
+    * materialized N times pays N jobs (AQE gives each reference its own
+    * table-cache query stage and does not reuse them), so read each pin
+    * once per plan where the plan allows it. */
   private[graft] def pin(df: DataFrame): DataFrame = pinScope.get() match {
     case null => df
     case scope =>
@@ -119,16 +125,6 @@ object Dedup {
       scope += p
       p
   }
-
-  /** [[shingleIndex]] pinned for plans that fan out over it: the pair
-    * generators feed the SAME index into size/df aggregates, the
-    * candidate join and the exact verify — unpinned, the tokenizer +
-    * explode (the CPU hog) re-executes once per branch (6x in
-    * containment; measured as the most expensive non-merge bench
-    * query). Lifecycle: see [[pin]]. */
-  private def pinnedShingleIndex(docs: DataFrame, id: String, text: String,
-      n: Int): DataFrame =
-    pin(shingleIndex(docs, id, text, n))
 
   /** Exact n-gram Jaccard: pairs of documents with
     * jaccard(shingles_a, shingles_b) >= threshold.
@@ -146,7 +142,7 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, id: String, text: String,
       n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    val sh = pinnedShingleIndex(docs, id, text, n)
+    val sh = pin(shingleIndex(docs, id, text, n))
     val sizes = pin(sh.groupBy("_id").agg(count(lit(1)).as("n_sh")))
     val docFreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     val ranked = sh.join(docFreq, "shingle")
@@ -184,7 +180,7 @@ object Dedup {
     * with no quadratic term anywhere. */
   def substringDupSpans(docs: DataFrame, id: String, text: String,
       n: Int = 3): DataFrame = {
-    val sh = pinnedShingleIndex(docs, id, text, n)
+    val sh = pin(shingleIndex(docs, id, text, n))
     val dup = sh.groupBy("shingle").agg(count(lit(1)).as("__docs"))
       .filter(col("__docs") > 1).select("shingle")
     val tot = sh.groupBy("_id").agg(count(lit(1)).as("n_windows"))
@@ -209,7 +205,7 @@ object Dedup {
     * (id_a, id_b, containment) where id_a is the CONTAINED side. */
   def containmentPairs(docs: DataFrame, id: String, text: String,
       n: Int = 3, threshold: Double = 0.9): DataFrame = {
-    val sh = pinnedShingleIndex(docs, id, text, n)
+    val sh = pin(shingleIndex(docs, id, text, n))
     val sizes = pin(sh.groupBy("_id").agg(count(lit(1)).as("n_sh")))
     val docFreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     val ranked = sh.join(docFreq, "shingle")
@@ -226,10 +222,7 @@ object Dedup {
           col("b.n_sh") >= col("a.n_sh") * threshold)
       .select(col("a._id").as("id_a"), col("b._id").as("id_b"))
       .distinct()
-    val pc = pinnedCand(cand)
-    val arrs = docShingleArrays(sh, pc)
-    pc.join(arrs.select(col("_id").as("id_a"), col("_arr").as("_arr_a")), "id_a")
-      .join(arrs.select(col("_id").as("id_b"), col("_arr").as("_arr_b")), "id_b")
+    withShingleArrays(cand, sh)
       .withColumn("containment",
         size(array_intersect(col("_arr_a"), col("_arr_b"))).cast("double") /
           size(col("_arr_a")))
@@ -253,16 +246,22 @@ object Dedup {
     * shingles of the SAME pair to collide (~n_sh²/2⁶⁴ ≈ 1e-15 per
     * pair). */
   private def docShingleArrays(sh: DataFrame, cand: DataFrame): DataFrame = {
-    val ids = cand.select(col("id_a").as("_id"))
-      .union(cand.select(col("id_b").as("_id"))).distinct()
+    val ids = cand.select(explode(array(col("id_a"), col("id_b"))).as("_id"))
+      .distinct()
     sh.join(ids, Seq("_id"), "left_semi")
       .groupBy("_id").agg(collect_list(xxhash64(col("shingle"))).as("_arr"))
   }
 
-  /** Pin a candidate set: verify references it three times (two id
-    * projections + the pair join), and the candidate join it came from
-    * is itself expensive. */
-  private def pinnedCand(cand: DataFrame): DataFrame = pin(cand)
+  /** Candidate pairs (id_a, id_b) with each side's [[docShingleArrays]]
+    * as `_arr_a` / `_arr_b`: the one head of every exact verify. The
+    * candidates (read by the array build and the pair side) and the
+    * arrays (read by both pair-side joins) are each pinned, built once. */
+  private def withShingleArrays(cand: DataFrame, sh: DataFrame): DataFrame = {
+    val pc = pin(cand)
+    val arrs = pin(docShingleArrays(sh, pc))
+    pc.join(arrs.select(col("_id").as("id_a"), col("_arr").as("_arr_a")), "id_a")
+      .join(arrs.select(col("_id").as("id_b"), col("_arr").as("_arr_b")), "id_b")
+  }
 
   /** MinHash + LSH banding dedup.
     *
@@ -282,7 +281,7 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, id: String, text: String,
       n: Int = 3, threshold: Double = 0.9,
       perms: Int = 64, bands: Int = 16): DataFrame = {
-    val sh = pinnedShingleIndex(docs, id, text, n)
+    val sh = pin(shingleIndex(docs, id, text, n))
     // pinned: the signature aggregate feeds the hot-key count and both
     // join sides — without the pin the perms-wide min-hash agg re-runs
     // per consumer
@@ -319,11 +318,8 @@ object Dedup {
     * `array_intersect` over [[docShingleArrays]] (see there for why
     * this beats the explode-join + groupBy form). */
   private[ext] def verifyJaccard(cand: DataFrame, sh: DataFrame,
-      threshold: Double): DataFrame = {
-    val pc = pinnedCand(cand)
-    val arrs = docShingleArrays(sh, pc)
-    pc.join(arrs.select(col("_id").as("id_a"), col("_arr").as("_arr_a")), "id_a")
-      .join(arrs.select(col("_id").as("id_b"), col("_arr").as("_arr_b")), "id_b")
+      threshold: Double): DataFrame =
+    withShingleArrays(cand, sh)
       .withColumn("n_inter",
         size(array_intersect(col("_arr_a"), col("_arr_b"))).cast("long"))
       .withColumn("jaccard",
@@ -331,7 +327,6 @@ object Dedup {
           (size(col("_arr_a")) + size(col("_arr_b")) - col("n_inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
 
   /** Engine-portable 64-bit token hash: the two 32-bit halves of
     * md5(token) packed into one long (wrapping negative for high bits —

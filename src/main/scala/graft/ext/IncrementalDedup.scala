@@ -43,10 +43,9 @@ object IncrementalDedup {
     * index) passes through for compatibility. */
   private def requireMeta(store: TableStore, table: String,
       n: Int, perms: Int, bands: Int): Boolean = {
-    val meta = store.readOption(s"${table}__minhash_meta")
+    val meta = metaRow(store, s"${table}__minhash_meta")
     meta.foreach { m =>
-      val r = m.select("n", "perms", "bands").head()
-      val (sn, sp, sb) = (r.getInt(0), r.getInt(1), r.getInt(2))
+      val (sn, sp, sb) = (m("n"), m("perms"), m("bands"))
       require(sn == n && sp == perms && sb == bands,
         s"minhash index '$table' was built with (n=$sn, perms=$sp, " +
           s"bands=$sb) but (n=$n, perms=$perms, bands=$bands) was " +
@@ -55,6 +54,12 @@ object IncrementalDedup {
     }
     meta.isDefined
   }
+
+  /** The one row of an index-meta table, read on the driver (no job). */
+  private def metaRow(store: TableStore, meta: String): Option[Map[String, Any]] =
+    if (store.exists(meta) && store.segments(meta).nonEmpty)
+      store.readDriverRows(meta).headOption
+    else None
 
   /** Index a corpus: write the docs and their banded signatures. Both
     * loads complete inside the call, so the shared pin is scoped here
@@ -92,11 +97,11 @@ object IncrementalDedup {
     // re-spread the batch before the compute-dense shingling/banding —
     // the [[checkVectorBatch]] discipline on the text plane: a
     // micro-batch arrives as ONE file (one row group — one task), and
-    // in a streaming foreachBatch AQE is disabled, so without this the
-    // shingle + 64-perm signature map side serializes on a handful of
-    // cores (100× soak: 14 s 5-task stages inside every curate batch
-    // where 32-way runs ~2 s). The shuffle moves O(batch) text bytes
-    // once.
+    // AQE only coalesces shuffle partitions, never splits a scan stage,
+    // so without this the shingle + 64-perm signature map side
+    // serializes on a handful of cores (100× soak: 14 s 5-task stages
+    // inside every curate batch where 32-way runs ~2 s). The shuffle
+    // moves O(batch) text bytes once.
     val spread = batch.repartition(
       batch.sparkSession.sparkContext.defaultParallelism)
     val newSh = Dedup.pin(Dedup.shingleIndex(spread, id, text, n))
@@ -126,11 +131,6 @@ object IncrementalDedup {
 
   // ---- embedding (sign-code Hamming) variant -----------------------------
 
-  /** Require the caller's (dim, maxHamming) to match the values the
-    * VECTOR index was built with (persisted in
-    * `<table>__hamming_meta`) — the banding is a pure function of the
-    * pair, so a batch banded in a different space silently joins to
-    * nothing. */
   /** The band-layout generation this code derives
     * ([[Dedup.wordBands]]): "wb1" = proportional real-bit allocation
     * (r14). Pinned in the meta so an index persisted under a DIFFERENT
@@ -138,26 +138,36 @@ object IncrementalDedup {
     * the same silent-recall-loss the (dim, maxHamming) pin guards. */
   private val BandLayout = "wb1"
 
+  /** The (dim, maxHamming) the VECTOR index was built with. */
+  private def indexedSpace(store: TableStore, table: String): (Int, Int) = {
+    val m = metaRow(store, s"${table}__hamming_meta").getOrElse(
+      throw new IllegalArgumentException(
+        s"no hamming index meta for '$table' — call indexVectors first"))
+    (m("dim").asInstanceOf[Int], m("max_hamming").asInstanceOf[Int])
+  }
+
+  /** Require the caller's (dim, maxHamming) to match the values the
+    * VECTOR index was built with (persisted in
+    * `<table>__hamming_meta`) — the banding is a pure function of the
+    * pair, so a batch banded in a different space silently joins to
+    * nothing. */
   private def requireVecMeta(store: TableStore, table: String,
       dim: Int, maxHamming: Int): Boolean = {
-    val meta = store.readOption(s"${table}__hamming_meta")
+    val meta = metaRow(store, s"${table}__hamming_meta")
     meta.foreach { m =>
-      val r = m.select("dim", "max_hamming").head()
-      val (sd, sh) = (r.getInt(0), r.getInt(1))
+      val (sd, sh) = (m("dim").asInstanceOf[Int], m("max_hamming").asInstanceOf[Int])
       require(sd == dim,
         s"hamming index '$table' was built at dim=$sd but dim=$dim was " +
           "passed — codes would band inconsistently")
       require(sh == maxHamming,
         s"hamming index '$table' was built with maxHamming=$sh but " +
           s"$maxHamming was passed — appends must keep the one band space")
-      val layout =
-        if (m.columns.contains("layout"))
-          m.select("layout").head().getString(0)
+      val layout = m.get("layout").map(_.toString).getOrElse {
         // pre-layout meta: the old fixed per-word split ≡ wb1 exactly
         // when dim is a whole number of words; otherwise the stored
         // band keys live in a layout this code no longer derives
-        else if (sd % 64 == 0) BandLayout
-        else "pre-wb1"
+        if (sd % 64 == 0) BandLayout else "pre-wb1"
+      }
       require(layout == BandLayout,
         s"hamming index '$table' was persisted under band layout " +
           s"'$layout' but this engine derives '$BandLayout' — band keys " +
@@ -234,20 +244,12 @@ object IncrementalDedup {
   def checkVectorBatch(store: TableStore, table: String, batch: DataFrame,
       id: String, vec: String, threshold: Double,
       maxHamming: Int): DataFrame = store.exclusively(table) {
-    // the whole meta-read + validation + plan construction runs under
-    // the table monitor: the old shape read the meta TWICE (readOption
-    // here, requireVecMeta re-reading) without the lock, so a
-    // concurrent index rebuild between the reads could validate the
-    // batch against stale (dim, maxHamming, layout) — the TOCTOU
-    // indexVectors already closes. The band/corpus scans below resolve
-    // their snapshots inside the same critical section, so banding and
-    // validation see one consistent index state. (Reentrant — callers
-    // composing under the same lock, e.g. screenedAppend, still work.)
-    val meta = store.readOption(s"${table}__hamming_meta")
-    require(meta.isDefined,
-      s"no hamming index meta for '$table' — call indexVectors first")
-    val m = meta.get.select("dim", "max_hamming").head()
-    val (dim, indexedH) = (m.getInt(0), m.getInt(1))
+    // meta reads, validation and plan construction all run under the
+    // table monitor, so a concurrent index rebuild cannot validate the
+    // batch against a stale (dim, maxHamming, layout), and the band and
+    // corpus scans below resolve their snapshots in the same critical
+    // section (reentrant: screenedAppend composes under the same lock)
+    val (dim, indexedH) = indexedSpace(store, table)
     // layout validation rides the shared guard (band keys computed
     // under a different derivation would silently match nothing)
     requireVecMeta(store, table, dim, indexedH)
@@ -257,8 +259,8 @@ object IncrementalDedup {
         s"budget $indexedH; rebuild the index for a wider one")
     // re-spread the batch before the compute-dense coding/banding: a
     // micro-batch arrives as ONE file (one row group — one task), and
-    // in a streaming foreachBatch AQE is disabled, so without this the
-    // whole code+band+join map side serializes on a single core
+    // AQE never splits a scan stage, so without this the whole
+    // code+band+join map side serializes on a single core
     // (soak-measured: 98 s single-task stages at the 30× fixture). The
     // shuffle moves O(batch) vector bytes once.
     val spread = batch.repartition(
@@ -325,10 +327,7 @@ object IncrementalDedup {
     * space is pinned by the meta, so the budget is read, not passed. */
   def appendVectorBatch(store: TableStore, table: String, batch: DataFrame,
       id: String, vec: String): Unit = {
-    val meta = store.readOption(s"${table}__hamming_meta")
-    require(meta.isDefined,
-      s"no hamming index meta for '$table' — call indexVectors first")
-    val m = meta.get.select("dim", "max_hamming").head()
-    indexVectors(store, table, batch, id, vec, m.getInt(0), m.getInt(1))
+    val (dim, maxHamming) = indexedSpace(store, table)
+    indexVectors(store, table, batch, id, vec, dim, maxHamming)
   }
 }

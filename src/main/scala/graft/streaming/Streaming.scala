@@ -68,7 +68,11 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", cp)
       .outputMode(outputMode)
-      .foreachBatch((df: DataFrame, id: Long) => sink(df, id))
+      .foreachBatch { (df: DataFrame, id: Long) =>
+        // else every batch job reads the stream's `.start()` call site
+        df.sparkSession.sparkContext.clearCallSite()
+        sink(df, id)
+      }
       .start()
     q.awaitTermination()
   }
@@ -333,7 +337,7 @@ object Streaming {
         import org.apache.spark.sql.functions.lit
         // re-spread BEFORE the classifier featurization: a micro-batch
         // arrives at file-split parallelism (one file under
-        // maxFilesPerTrigger=1) and foreachBatch runs with AQE off, so
+        // maxFilesPerTrigger=1) and AQE never splits a scan stage, so
         // the regex-kernel scoring pass — the per-batch compute hog —
         // would serialize on the file's few splits (100× soak: 14.9 s
         // 5-task stages per batch where session width runs ~2 s). The

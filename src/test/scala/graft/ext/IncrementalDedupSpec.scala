@@ -83,6 +83,24 @@ class IncrementalDedupSpec extends SparkSpec {
     }
   }
 
+  test("a checkBatch against a small index costs at most 19 Spark jobs") {
+    val store = freshStore()
+    IncrementalDedup.indexCorpus(store, "c", corpus, "doc_id", "text")
+    val batch = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog tonight"), // dup of 1
+      (11L, "some fresh unseen content about entirely new things")
+    ).toDF("doc_id", "text")
+    // the index meta is read on the driver: building the plan runs no job
+    val (_, planJobs) = countJobs(Dedup.withPins(
+      IncrementalDedup.checkBatch(store, "c", batch, "doc_id", "text")))
+    assert(planJobs === 0)
+    val (pairs, jobs) = countJobs(Dedup.withPins(
+      IncrementalDedup.checkBatch(store, "c", batch, "doc_id", "text")
+        .select("new_id", "old_id").as[(Long, Long)].collect().toSeq))
+    assert(pairs === Seq((10L, 1L)))
+    assert(jobs <= 19, s"a checkBatch ran $jobs Spark jobs")
+  }
+
   // ---- embedding (sign-code Hamming) variant -----------------------------
 
   private def vecCorpus(n: Int, dim: Int, seed: Long) = {
@@ -102,6 +120,11 @@ class IncrementalDedupSpec extends SparkSpec {
         (i + 100L, v.map(x => x * 1.01f + 0.004f)) }
       val fresh = vecCorpus(5, 100, seed = 99L).map { case (i, v) => (i + 500L, v) }
       val batch = twins ++ fresh
+      // the meta is read on the driver: building the plan runs no job
+      val (_, planJobs) = countJobs(IncrementalDedup.checkVectorBatch(store, "emb",
+        batch.toDF("vec_id", "embedding"), "vec_id", "embedding",
+        threshold = 0.9, maxHamming = 9))
+      assert(planJobs === 0)
       val got = IncrementalDedup.checkVectorBatch(store, "emb",
           batch.toDF("vec_id", "embedding"), "vec_id", "embedding",
           threshold = 0.9, maxHamming = 9)

@@ -399,6 +399,34 @@ class StreamingSpec extends SparkSpec {
       "replayed batch ids must not double the curated rows")
   }
 
+  test("a curateInto batch job takes its own call site, not drainAvailableNow") {
+    import graft.ext.{IncrementalDedup, QualityClassifier}
+    val seeds = Seq((0L, "alpha beta gamma delta epsilon zeta eta theta"))
+      .toDF("doc_id", "text")
+    val store = new TableStore(tmp("st-site"), spark)
+    IncrementalDedup.indexCorpus(store, "seed", seeds, "doc_id", "text")
+    QualityClassifier.save(store, "m", QualityClassifier.fit(
+      seeds.unionByName(Seq((1L, "one two three four")).toDF("doc_id", "text")),
+      "text", col("doc_id") % 2 === 1))
+    val srcDir = tmp("st-site-src")
+    Seq((5L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (6L, "fresh words about something else entirely new"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(srcDir)
+    val sc = spark.sparkContext
+    val census = new graft.Harness.Census(sc)
+    sc.addSparkListener(census)
+    val sites = try {
+      census.reset()
+      Streaming.curateInto(store, Streaming.fileStream(spark, srcDir),
+        "curated", "seed", "m", "doc_id", "text", minScore = -1e9)
+      census.jobSites.map(_._1)
+    } finally sc.removeSparkListener(census)
+    assert(store.read("curated").select("doc_id").as[Long].collect().toSeq
+      === Seq(6L))
+    assert(sites.exists(_.contains("curateInto")), sites.mkString("\n"))
+    assert(!sites.exists(_.contains("drainAvailableNow")), sites.mkString("\n"))
+  }
+
   test("curateInto refuses a scoreColumn already present on the source") {
     import graft.ext.{IncrementalDedup, QualityClassifier}
     val seeds = Seq((0L, "alpha beta gamma delta epsilon zeta eta"))
