@@ -19,9 +19,10 @@ import Multimodal.MediaItem
   * preserves every comparison, so the hash is volume-invariant by
   * construction.
   *
-  * Scale shape: one `mapPartitions` sample walk per clip; pairs via
-  * [[Dedup.hammingPairs]] (pigeonhole block equi-join + exact
-  * bit_count verify, never all-pairs).
+  * Scale shape: one `mapPartitions` sample walk per clip; pairs are the
+  * [[Blocks]] signature over [[fingerprintTable]] ([[Dedup.pairs]]:
+  * pigeonhole block equi-join + exact bit_count verify, never
+  * all-pairs).
   */
 object AudioFp {
 
@@ -62,8 +63,7 @@ object AudioFp {
     Some(sh)
   }
 
-  /** Distributed fingerprint table (_id, sh) — the
-    * [[Dedup.hammingPairs]] input contract. */
+  /** Distributed fingerprint table (_id, sh) — the [[Blocks]] input. */
   def fingerprintTable(media: Dataset[MediaItem]): DataFrame = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
@@ -71,8 +71,4 @@ object AudioFp {
       it.flatMap(item => fingerprint(item).map((item.media_id, _)))
     }.toDF("_id", "sh")
   }
-
-  /** Near-duplicate clip pairs: (id_a, id_b, hamming <= maxHamming). */
-  def pairs(media: Dataset[MediaItem], maxHamming: Int = 7): DataFrame =
-    Dedup.hammingPairs(fingerprintTable(media), maxHamming)
 }

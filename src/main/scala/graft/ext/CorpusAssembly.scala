@@ -175,8 +175,8 @@ object CorpusAssembly {
       //    (component minimum by default; best-quality member when
       //    canonicalQuality is set — the "keep the copy you actually
       //    want" variant, same candidate generation either way)
-      val pairs = Dedup.minhashLshPairs(cleaned, id, "__text",
-        n = cfg.shingleN, threshold = cfg.nearDupThreshold)
+      val pairs = Dedup.pairs(cleaned, id, "__text", MinHash(cfg.shingleN),
+        threshold = cfg.nearDupThreshold)
       val deduped = boundary(cfg.canonicalQuality match {
         case None => Dedup.resolveNearDups(cleaned, id, pairs)
         case Some(qual) =>

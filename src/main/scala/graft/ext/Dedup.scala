@@ -263,55 +263,27 @@ object Dedup {
       .join(arrs.select(col("_id").as("id_b"), col("_arr").as("_arr_b")), "id_b")
   }
 
-  /** MinHash + LSH banding dedup.
+  /** Near-duplicate pairs of one frame under `sig`: `(id_a, id_b,
+    * <measures>)` with `id_a < id_b` — `jaccard` over `value`'s word
+    * shingles ([[MinHash]]), `hamming` of the 64-bit hash column `value`
+    * ([[Blocks]]: SimHash via [[simhashTable]], image dHash via
+    * [[Phash.dhashTable]], audio via [[AudioFp.fingerprintTable]]), or
+    * `hamming, cosine` of the float vectors in `value` ([[SignBits]]).
+    * `threshold` is the verify's floor (Jaccard or cosine; a Blocks
+    * verify is its Hamming budget). Candidates come from
+    * [[bandSelfJoin]] over the signature's band rows, filtered in the
+    * join, then exact-verified.
     *
-    * `perms` hashes split into `bands` bands of `perms/bands` rows; docs
-    * agreeing on ALL rows of any band become candidates; candidates are
-    * verified with EXACT jaccard (the minhash estimate is only a recall
-    * device, never the reported number).
-    *
-    * Recall math (why the defaults are 64 perms / 16 bands × 4 rows):
-    * P(pair at jaccard j becomes candidate) = 1 - (1 - j⁴)¹⁶, which at
-    * j = 0.9 is 1 - 4·10⁻⁸, i.e. lossless in practice for the
-    * threshold we verify at, while r=4 keeps band collisions of
-    * unrelated docs (j ≈ 0.1) near 1-(1-10⁻⁴)¹⁶ ≈ 0.16%, so the
-    * candidate set — and therefore the exact-verify join — stays tiny
-    * relative to |corpus|² even on template-heavy corpora.
-    */
-  def minhashLshPairs(docs: DataFrame, id: String, text: String,
-      n: Int = 3, threshold: Double = 0.9,
-      perms: Int = 64, bands: Int = 16): DataFrame = {
-    val sh = pin(shingleIndex(docs, id, text, n))
-    // pinned: the signature aggregate feeds the hot-key count and both
-    // join sides — without the pin the perms-wide min-hash agg re-runs
-    // per consumer
-    val banded = pin(bandedSig(sh, perms, bands))
-    val cand = bandSelfJoin(banded, Seq("band", "bucket"))
-      .select(col("a._id").as("id_a"), col("b._id").as("id_b"))
-      .distinct()
-    // verify candidates with exact jaccard over the shingle index
-    verifyJaccard(cand, sh, threshold)
-  }
-
-  /** Banded LSH keys of a shingle index: (_id, band, bucket). The
-    * signature is ONE codegen'd hash-aggregate over the exploded index:
-    * perms min(xxhash64(shingle, seed)) aggs, one shuffle on _id — no
-    * per-row lambda interpretation, and the shingle expression is
-    * evaluated once (not once per permutation). Band key = hash of the
-    * band's r signature slots. Shared by the one-shot pair generator
-    * and the persisted-index incremental path ([[IncrementalDedup]]),
-    * which is what makes old and new signatures comparable. */
-  private[ext] def bandedSig(sh: DataFrame, perms: Int, bands: Int): DataFrame = {
-    val r = perms / bands
-    require(bands * r == perms, "perms must be divisible by bands")
-    val sig = sh.groupBy("_id").agg(
-      min(xxhash64(col("shingle"), lit(0))).as("h0"),
-      (1 until perms).map(p =>
-        min(xxhash64(col("shingle"), lit(p))).as(s"h$p")): _*)
-    sig.select(col("_id"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64((lit(b) +: (0 until r).map(i => col(s"h${b * r + i}"))): _*)): _*))
-        .as(Seq("band", "bucket")))
+    * PIN LIFECYCLE: a lazy generator ([[pin]]). The band rows (and
+    * MinHash's shingles) are pinned into the caller's [[withPins]]
+    * scope; consume the returned frame inside it. */
+  def pairs(frame: DataFrame, id: String, value: String, sig: Signature,
+      threshold: Double = 0.9): DataFrame = {
+    val h = sig.hashed(frame, id, value)
+    // pinned: the hot-key count and both join sides read the band rows
+    val banded = pin(sig.banded(h))
+    val cand = sig.candidates(bandSelfJoin(banded, sig.keys)).distinct()
+    sig.verify(cand, h, h, threshold)
   }
 
   /** Exact-jaccard verification of a candidate pair set: per-pair
@@ -375,72 +347,6 @@ object Dedup {
       when(col(s"s$b") * 2 > col("n"), lit(1L << b)).otherwise(lit(0L)))
       .reduce((a, c) => a.bitwiseOR(c))
     agg.select(col("_id"), packed.as("sh"))
-  }
-
-  /** SimHash near-dup pairs with hamming distance <= maxHamming.
-    *
-    * Candidate generation: split the 64-bit hash into `maxHamming + 1`
-    * 16-bit blocks — by pigeonhole, any pair within the hamming budget
-    * agrees on at least one whole block, so an equi-join on
-    * (block_idx, block_value) has perfect recall; hamming is then
-    * verified exactly via bit_count(xor).
-    *
-    * PIN LIFECYCLE: a lazy generator ([[pin]]). The band table feeds
-    * the hot-key count and both join sides, so it is pinned into the
-    * caller's [[withPins]] scope; consume the returned frame inside that
-    * scope. Same note applies to every generator riding
-    * [[hammingPairs]] / [[hammingPairsWide]] ([[Phash.pairs]],
-    * [[AudioFp.pairs]], [[embeddingHammingPairs]]).
-    */
-  def simhashPairs(docs: DataFrame, id: String, text: String,
-      maxHamming: Int = 3): DataFrame =
-    hammingPairs(simhashTable(docs, id, text), maxHamming)
-
-  /** Pigeonhole-blocked Hamming pairs over ANY (_id, sh) table of
-    * 64-bit fingerprints — the shared candidate machinery of
-    * [[simhashPairs]] (text) and [[Phash.pairs]] (image dHash): split
-    * the hash into `maxHamming + 1` equal blocks; any pair within the
-    * Hamming budget agrees on at least one whole block, so the
-    * (block_idx, block_value) equi-join has perfect recall and the
-    * exact bit_count(xor) filter never sees a cross-bucket pair.
-    * Never all-pairs at any scale. */
-  /** The pigeonhole block values of a 64-bit hash as ONE array column
-    * — the banding shared by [[hammingPairs]] and the frame-aligned
-    * video variant ([[Phash.videoPairs]]): one place owns the
-    * width/mask subtleties. maxHamming = 0 degenerates to a single
-    * full-width block (exact-equality join — `1L << 64` would wrap to
-    * a zero mask and silently band EVERYTHING into one bucket);
-    * maxHamming > 63 would need blocks narrower than one bit. */
-  private[graft] def pigeonholeBlocks(sh: Column, maxHamming: Int): Column = {
-    require(maxHamming >= 0 && maxHamming <= 63,
-      s"maxHamming $maxHamming outside [0, 63]")
-    val blocks = maxHamming + 1
-    val width = 64 / blocks
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    array((0 until blocks).map(b =>
-      shiftright(sh, b * width).bitwiseAND(lit(mask))): _*)
-  }
-
-  /** Band a fingerprint table: every input column + (blk, blk_val)
-    * rows — the ONE banding projection behind [[hammingPairs]], the
-    * frame-aligned video variant and the incremental media screen. */
-  private[graft] def bandedBlocks(h: DataFrame, shCol: String,
-      maxHamming: Int): DataFrame =
-    h.select(h.columns.map(col).toIndexedSeq :+
-      posexplode(pigeonholeBlocks(col(shCol), maxHamming))
-        .as(Seq("blk", "blk_val")): _*)
-
-  private[graft] def hammingPairs(h: DataFrame, maxHamming: Int): DataFrame = {
-    // pinned: the hot-key count and both join sides consume the band
-    // rows — unpinned, the upstream hash/pack lineage runs three times
-    val banded = pin(bandedBlocks(h.select("_id", "sh"), "sh", maxHamming))
-    bandSelfJoin(banded, Seq("blk", "blk_val"))
-      .select(col("a._id").as("id_a"), col("b._id").as("id_b"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
-      // cheap exact filter BEFORE the distinct: over-budget candidates
-      // (cross-bucket band collisions) drop without riding the shuffle
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
   }
 
   /** SELF-join banded rows on their band key — `a`/`b` aliased sides,
@@ -530,139 +436,6 @@ object Dedup {
       .withColumn("cosine", cosine(col("v_a"), col("v_b")))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
-
-  /** BINARY-ACCELERATED embedding near-dup — the sign-bit Hamming
-    * pre-filter in front of the exact cosine verify: pack each vector
-    * to 1-bit sign codes ([[graft.functions.PackSignBits]] — the
-    * binary-quantization plane reused as a BLOCKING function), band
-    * candidates with the pigeonhole Hamming machinery (perfect recall
-    * within `maxHamming` — any pair within the budget agrees on a
-    * whole block), then verify the exact cosine on candidates only.
-    * The all-pairs product never materializes, and both filters are
-    * part of the operator's CONTRACT: a returned pair satisfies
-    * cosine ≥ threshold AND sign-Hamming ≤ maxHamming (exactly
-    * oracle-replayable — no recall hand-waving).
-    *
-    * Budgeting: for unit vectors the expected sign disagreement of a
-    * pair at angle θ is dim·θ/π, so this is a HIGH-threshold (true
-    * near-dup) tool — cosine ≥ 0.98 concentrates Hamming near dim/16;
-    * at low thresholds (0.45) the Hamming spread defeats any blocking,
-    * which is what [[embeddingCosinePairsTiled]] (exact, tiled) is
-    * for.
-    *
-    * Works at ANY dim: the packed code spans ⌈dim/64⌉ words and the
-    * pigeonhole banding generalizes by cutting the REAL bits of each
-    * word ([[wordBands]] — the last word holds only `dim mod 64` live
-    * bits) into enough blocks that the band space has ≥ maxHamming+1
-    * disjoint bands, so a pair within the budget still agrees on at
-    * least one whole band (same argument, more bands). Banding cost
-    * stays ~maxHamming+1 rows per document regardless of dim; only
-    * the band width shrinks. `dim` is part of the call contract (it
-    * sizes the banding before any data is read); a row of any other
-    * width RAISES (codegen'd, zero extra pass) — silently banding a
-    * mixed-width corpus would lose recall. */
-  def embeddingHammingPairs(vecs: DataFrame, id: String, vec: String,
-      threshold: Double, maxHamming: Int, dim: Int = 64): DataFrame = {
-    require(dim >= 1, s"dim must be positive, got $dim")
-    require(maxHamming >= 0 && maxHamming < dim,
-      s"maxHamming $maxHamming outside [0, $dim) — at maxHamming ≥ dim " +
-        "every pair is a candidate and blocking is meaningless; use " +
-        "embeddingCosinePairsTiled")
-    val guarded = vecs.filter(assert_true(size(col(vec)) === dim,
-      lit(s"embeddingHammingPairs: vector width != declared dim $dim — " +
-        "the banding is sized by dim; a mixed-width corpus would band " +
-        "inconsistently and silently lose recall")).isNull)
-    val coded = guarded.select(col(id).as("_id"),
-      graft.functions.VectorFunctions.packSignBits(col(vec)).as("code"))
-    val va = guarded.select(col(id).as("id_a"), col(vec).as("__va"))
-    val vb = guarded.select(col(id).as("id_b"), col(vec).as("__vb"))
-    hammingPairsWide(coded, maxHamming, dim)
-      .join(va, "id_a").join(vb, "id_b")
-      .withColumn("__cos", cosine(col("__va"), col("__vb")))
-      .filter(col("__cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("hamming"),
-        round(col("__cos"), 6).as("cosine"))
-  }
-
-  /** Banding projection behind [[hammingPairsWide]] and the
-    * incremental vector screen ([[IncrementalDedup.checkVectorBatch]]):
-    * every input column + (widx, blk, blk_val) band-key rows — the
-    * [[wordBands]] pigeonhole bands of the packed `code` column,
-    * extracted as a plan-time struct array (band layout is a pure
-    * function of (dim, maxHamming), so no per-row branching). */
-  private[graft] def bandedWords(coded: DataFrame, dim: Int,
-      maxHamming: Int): DataFrame = {
-    val bands = wordBands(dim, maxHamming).map { b =>
-      struct(lit(b.widx).as("widx"), lit(b.blk).as("blk"),
-        shiftright(element_at(col("code"), b.widx + 1), b.shift)
-          .bitwiseAND(lit(b.mask)).as("blk_val"))
-    }
-    coded
-      .select(coded.columns.map(col).toIndexedSeq :+
-        explode(array(bands: _*)).as("__band"): _*)
-      .select(coded.columns.map(col).toIndexedSeq ++ Seq(
-        col("__band.widx").as("widx"), col("__band.blk").as("blk"),
-        col("__band.blk_val").as("blk_val")): _*)
-  }
-
-  /** One pigeonhole band of a multi-word packed code: `blk_val =
-    * (code(widx) >> shift) & mask`. */
-  private[graft] final case class WordBand(widx: Int, blk: Int,
-      shift: Int, mask: Long)
-
-  /** The band layout of a `dim`-bit packed code under a `maxHamming`
-    * budget — the ONE place the (dim, maxHamming) → banding derivation
-    * lives (an index and a later batch check must agree bit-for-bit or
-    * band keys silently match nothing).
-    *
-    * Each word w holds `min(64, dim − 64w)` REAL bits (the last word's
-    * high bits do not exist — a band cut past them would be
-    * identically zero for every row, one shared degenerate band key
-    * collapsing the candidate equi-join to all-pairs). Bands are
-    * allocated per word PROPORTIONALLY to its real width:
-    * k_w = ⌈(maxHamming+1)·width_w/dim⌉, so Σk_w ≥
-    * ⌈Σ(maxHamming+1)·width_w/dim⌉ = maxHamming+1 (superadditivity of
-    * ceil) and k_w ≤ width_w (every band ≥ 1 real bit, since
-    * maxHamming+1 ≤ dim). All bands are disjoint and live entirely in
-    * real bits; a pair within the Hamming budget agrees on ≥ 1 whole
-    * band (pigeonhole over ≥ maxHamming+1 disjoint bands). For
-    * dim ≡ 0 (mod 64) this reduces to the classic equal per-word
-    * split. */
-  private[graft] def wordBands(dim: Int,
-      maxHamming: Int): IndexedSeq[WordBand] = {
-    require(dim >= 1, s"dim must be positive, got $dim")
-    require(maxHamming >= 0 && maxHamming < dim,
-      s"maxHamming $maxHamming outside [0, $dim)")
-    val numWords = (dim + 63) / 64
-    (0 until numWords).flatMap { w =>
-      val width = math.min(64, dim - 64 * w)
-      val k = ((maxHamming + 1) * width + dim - 1) / dim
-      val bw = width / k
-      val mask = if (bw == 64) -1L else (1L << bw) - 1
-      (0 until k).map(b => WordBand(w, b, b * bw, mask))
-    }
-  }
-
-  /** [[hammingPairs]] over MULTI-WORD packed codes (`_id`,
-    * `code array<long>`): band = (word index, block index, block
-    * value) with the [[wordBands]] layout — ≥ maxHamming+1 disjoint
-    * bands over the code's REAL bits, so the equi-join on the band key
-    * has perfect recall for any pair within `maxHamming` (at least one
-    * band is untouched). Exact [[graft.functions.HammingDist]] over
-    * the full codes verifies. Never all-pairs at any scale, any dim. */
-  private[graft] def hammingPairsWide(coded: DataFrame, maxHamming: Int,
-      dim: Int): DataFrame = {
-    // pinned for the same three-consumer reason as [[hammingPairs]]
-    val banded = pin(bandedWords(coded, dim, maxHamming))
-    bandSelfJoin(banded, Seq("widx", "blk", "blk_val"))
-      .select(col("a._id").as("id_a"), col("b._id").as("id_b"),
-        // int like the single-word bit_count path (hamming ≤ dim « 2³¹)
-        graft.functions.VectorFunctions
-          .hammingDist(col("a.code"), col("b.code")).cast("int").as("hamming"))
-      // filter-then-distinct, same reason as [[hammingPairs]]
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication"): k-means-cluster the

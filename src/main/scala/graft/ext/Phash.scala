@@ -21,9 +21,12 @@ import Multimodal.MediaItem
   *
   * Scale shape: the hash is one `mapPartitions` raster walk per image
   * (decoder state per partition — the [[Multimodal]] batch
-  * discipline); pair generation reuses the SimHash pigeonhole
-  * machinery ([[Dedup.hammingPairs]]): equi-join on 16-bit hash
-  * blocks, exact `bit_count(xor)` verify, never all-pairs.
+  * discipline); pairs and the persisted index are the [[Blocks]]
+  * signature over [[dhashTable]] ([[Dedup.pairs]],
+  * [[IncrementalDedup.checkBatch]]): equi-join on 16-bit hash blocks,
+  * exact `bit_count(xor)` verify, never all-pairs. The index stores only
+  * the hashes, so indexed images are never read again and each check
+  * picks its own Hamming budget.
   */
 object Phash {
 
@@ -85,52 +88,14 @@ object Phash {
     }
   }
 
-  /** Distributed dHash table (_id, sh) — the [[Dedup.hammingPairs]]
-    * input contract, one raster walk per image. */
+  /** Distributed dHash table (_id, sh) — the [[Blocks]] input, one
+    * raster walk per image. */
   def dhashTable(media: Dataset[MediaItem]): DataFrame = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
       // per-partition decoder init would go here (once, not per row)
       it.flatMap(dhash)
     }.toDF("_id", "sh")
-  }
-
-  /** Near-duplicate image pairs: (id_a, id_b, hamming <= maxHamming),
-    * pigeonhole-bucketed — identical machinery (and recall guarantee)
-    * as the text SimHash plane. */
-  def pairs(media: Dataset[MediaItem], maxHamming: Int = 3): DataFrame =
-    Dedup.hammingPairs(dhashTable(media), maxHamming)
-
-  // ---- incremental (persisted index) -------------------------------------
-
-  /** Persist a batch's image hashes into `<table>__phash` — the
-    * [[IncrementalDedup]] never-rescan contract applied to the
-    * perceptual plane, with a stronger property: the 64-bit hash IS
-    * the exact-verify input (no analog of MinHash's re-shingle), so
-    * the images themselves are never read again after indexing, and
-    * the banding is derived from the stored hashes at probe time —
-    * any Hamming budget works per call, nothing to pin. */
-  def indexMedia(store: graft.write.TableStore, table: String,
-      media: Dataset[MediaItem]): Unit =
-    store.append(s"${table}__phash", dhashTable(media))
-
-  /** Near-dup pairs of a NEW batch against the indexed corpus:
-    * (new_id, old_id, hamming ≤ maxHamming). Batch ids must be
-    * disjoint from indexed ids (the corpus id contract). Work per
-    * batch: hash the batch, pigeonhole-join against the stored hash
-    * table, exact bit_count on collisions — the old corpus rides the
-    * equi-join only. */
-  def checkBatch(store: graft.write.TableStore, table: String,
-      batch: Dataset[MediaItem], maxHamming: Int = 3): DataFrame = {
-    import org.apache.spark.sql.functions._
-    def banded(h: DataFrame) = Dedup.bandedBlocks(h, "sh", maxHamming)
-    banded(dhashTable(batch)).as("a")
-      .join(banded(store.read(s"${table}__phash")).as("b"),
-        col("a.blk") === col("b.blk") && col("a.blk_val") === col("b.blk_val"))
-      .select(col("a._id").as("new_id"), col("b._id").as("old_id"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
   }
 
   // ---- video -------------------------------------------------------------
@@ -177,8 +142,8 @@ object Phash {
     * Output: (id_a, id_b, n_matching, n_compared, match_frac).
     *
     * Scale shape: candidates come from a (frame_idx, block, value)
-    * pigeonhole equi-join — the [[Dedup.hammingPairs]] banding with
-    * frame alignment added — so every within-budget aligned frame pair
+    * pigeonhole equi-join — the [[Blocks]] banding with frame
+    * alignment added — so every within-budget aligned frame pair
     * collides in ≥ 1 block (perfect recall of the match COUNT) and the
     * join never goes all-pairs; per-video sampled-frame counts ride a
     * separate ≤-videos-sized aggregate. */
@@ -186,14 +151,14 @@ object Phash {
       maxHamming: Int = 7, minMatchFrac: Double = 0.5): DataFrame = {
     import org.apache.spark.sql.functions._
     val fh = Dedup.pin(videoFrameHashes(media, stride).toDF())
-    val banded = Dedup.bandedBlocks(
-      fh.select("media_id", "frame_idx", "sh"), "sh", maxHamming)
+    val banded = Blocks(maxHamming).banded(
+      fh.select(col("media_id").as("_id"), col("frame_idx"), col("sh")))
     val cand = banded.as("a").join(banded.as("b"),
         col("a.frame_idx") === col("b.frame_idx") &&
           col("a.blk") === col("b.blk") &&
           col("a.blk_val") === col("b.blk_val") &&
-          col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("id_a"), col("b.media_id").as("id_b"),
+          col("a._id") < col("b._id"))
+      .select(col("a._id").as("id_a"), col("b._id").as("id_b"),
         col("a.frame_idx").as("fi"), col("a.sh").as("sa"), col("b.sh").as("sb"))
       .distinct()
     val matches = cand

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.ext.{AudioFp, BpeTrainer, Clustering, Dedup, IncrementalDedup, Multimodal, Opq, Pca, Phash, Pq, Quantize, QualityClassifier, Similarity, TextOps, UnigramTrainer}
+import graft.ext.{AudioFp, Blocks, BpeTrainer, Clustering, Dedup, IncrementalDedup, MinHash, Multimodal, Opq, Pca, Phash, Pq, Quantize, QualityClassifier, Similarity, SignBits, TextOps, UnigramTrainer}
 
 /** Training-data extensions (SURVEY.md §7.8): text analysis, dedup
   * (exact / n-gram Jaccard / MinHash-LSH / SimHash / embedding-cosine),
@@ -761,8 +761,8 @@ object ExtQueries {
     },
 
     "dedup_minhash_lsh" -> q { c =>
-      Dedup.minhashLshPairs(c.t("documents"), "doc_id", "text",
-        n = 3, threshold = 0.9).orderBy("id_a", "id_b")
+      Dedup.pairs(c.t("documents"), "doc_id", "text", MinHash(n = 3),
+        threshold = 0.9).orderBy("id_a", "id_b")
     },
 
     // INCREMENTAL dedup against a persisted index: docs 0-249 are
@@ -802,8 +802,8 @@ object ExtQueries {
     // min-label propagation over the LSH pair graph; DuckDB verifies
     // with a recursive-CTE reachability closure over the exact pairs
     "dedup_components" -> q { c =>
-      val pairs = Dedup.minhashLshPairs(c.t("documents"), "doc_id", "text",
-        n = 3, threshold = 0.9)
+      val pairs = Dedup.pairs(c.t("documents"), "doc_id", "text",
+        MinHash(n = 3), threshold = 0.9)
       graft.operators.ConnectedComponents.components(pairs, "id_a", "id_b",
         idCol = "doc_id")
         .orderBy("doc_id")
@@ -816,8 +816,8 @@ object ExtQueries {
     // re-derives cluster closure + the quality ranking end to end.
     "dedup_canonical_select" -> q { c =>
       val docs = c.tw("documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.9)
+      val pairs = Dedup.pairs(docs, "doc_id", "text", MinHash(n = 3),
+        threshold = 0.9)
       Dedup.canonicalByScore(docs, "doc_id", pairs,
         TextOps.qualityScore(col("text")))
         .select(col("doc_id"),
@@ -828,8 +828,8 @@ object ExtQueries {
     // md5-derived token hash → the DuckDB oracle re-derives the full
     // simhash + pigeonhole-band pipeline in SQL bit arithmetic
     "dedup_simhash" -> q { c =>
-      Dedup.simhashPairs(c.t("documents"), "doc_id", "text", maxHamming = 6)
-        .orderBy("id_a", "id_b")
+      Dedup.pairs(Dedup.simhashTable(c.t("documents"), "doc_id", "text"),
+        "_id", "sh", Blocks(6)).orderBy("id_a", "id_b")
     },
 
     "dedup_embedding_cosine" -> q { c =>
@@ -863,16 +863,15 @@ object ExtQueries {
       val twin = base.select((col("vec_id") + 1000000L).as("vec_id"),
         transform(col("embedding"), x => x * lit(1.01) + lit(0.005))
           .cast("array<float>").as("embedding"))
-      Dedup.embeddingHammingPairs(base.unionByName(twin),
-        "vec_id", "embedding", threshold = 0.98, maxHamming = 8)
-        .orderBy("id_a", "id_b")
+      Dedup.pairs(base.unionByName(twin), "vec_id", "embedding",
+        SignBits(64, 8), threshold = 0.98).orderBy("id_a", "id_b")
     },
 
     // the WIDE (multi-word) variant of the same operator: 128-dim
     // vectors built as concat(e, −e) — cosine-PRESERVING (the negated
     // half doubles both the dot product and the squared norms), so the
     // same near-dup geometry now spans TWO packed words and the
-    // per-word pigeonhole banding (the wordBands layout, ≥ maxHamming+1
+    // per-word pigeonhole banding (the SignBits layout, ≥ maxHamming+1
     // disjoint bands over real bits) is what's under test. The affine twin flips sign bits in
     // BOTH halves (x ∈ (0, ε) flips in the negated half), and the
     // oracle replays both contract filters over the exact all-pairs
@@ -886,9 +885,8 @@ object ExtQueries {
       val twin = base.select((col("vec_id") + 1000000L).as("vec_id"),
         transform(col("embedding"), x => x * lit(1.01) + lit(0.005))
           .cast("array<float>").as("embedding"))
-      Dedup.embeddingHammingPairs(base.unionByName(twin),
-        "vec_id", "embedding", threshold = 0.98, maxHamming = 8, dim = 128)
-        .orderBy("id_a", "id_b")
+      Dedup.pairs(base.unionByName(twin), "vec_id", "embedding",
+        SignBits(128, 8), threshold = 0.98).orderBy("id_a", "id_b")
     },
 
     // DEDUP-ON-INGEST for the vector destination: appendDeduped screens
@@ -1030,15 +1028,15 @@ object ExtQueries {
         Scratch.dir("graft-hinc"), c.spark)
       val vecs = c.t("embeddings").select("vec_id", "embedding")
       val evens = vecs.filter(col("vec_id") % 2 === 0)
-      IncrementalDedup.indexVectors(store, "corpus", evens,
-        "vec_id", "embedding", dim = 64, maxHamming = 8)
+      IncrementalDedup.indexCorpus(store, "corpus", evens,
+        "vec_id", "embedding", SignBits(64, 8))
       val twins = evens.select((col("vec_id") + 1000000L).as("vec_id"),
         transform(col("embedding"), x => x * lit(1.01) + lit(0.005))
           .cast("array<float>").as("embedding"))
       val odds = vecs.filter(col("vec_id") % 2 === 1)
-      IncrementalDedup.checkVectorBatch(store, "corpus",
+      IncrementalDedup.checkBatch(store, "corpus",
         twins.unionByName(odds), "vec_id", "embedding",
-        threshold = 0.98, maxHamming = 8)
+        threshold = 0.98, sig = SignBits(64, 8))
         .orderBy("new_id", "old_id")
     },
 
@@ -1968,8 +1966,9 @@ object ExtQueries {
     // and hamming from the pixel formulas, so the whole decode→hash→
     // bucket→verify pipeline is hash-checked end to end
     "mm_phash_pairs" -> q { c =>
-      Phash.pairs(phashMedia(c.t("documents").filter(col("doc_id") < 48)),
-        maxHamming = 3).orderBy("id_a", "id_b")
+      Dedup.pairs(Phash.dhashTable(phashMedia(
+        c.t("documents").filter(col("doc_id") < 48))), "_id", "sh",
+        Blocks(3)).orderBy("id_a", "id_b")
     },
 
     // INCREMENTAL image near-dup against a PERSISTED dHash index (the
@@ -1981,12 +1980,14 @@ object ExtQueries {
     "mm_phash_incremental" -> q { c =>
       val store = new graft.write.TableStore(
         Scratch.dir("graft-phinc"), c.spark)
-      def items(lo: Long, hi: Long) = phashMedia(c.t("documents")
-        .filter(col("doc_id") >= lo && col("doc_id") < hi))
-      Phash.indexMedia(store, "img", items(0, 24))
-      Phash.indexMedia(store, "img", items(24, 36))
-      Phash.checkBatch(store, "img", items(36, 48), maxHamming = 3)
-        .orderBy("new_id", "old_id")
+      def items(lo: Long, hi: Long) = Phash.dhashTable(phashMedia(
+        c.t("documents").filter(col("doc_id") >= lo && col("doc_id") < hi)))
+      IncrementalDedup.indexCorpus(store, "img", items(0, 24), "_id", "sh",
+        Blocks(3))
+      IncrementalDedup.indexCorpus(store, "img", items(24, 36), "_id", "sh",
+        Blocks(3))
+      IncrementalDedup.checkBatch(store, "img", items(36, 48), "_id", "sh",
+        sig = Blocks(3)).orderBy("new_id", "old_id")
     },
 
     // CROSS-MODAL dedup composition — the full multimodal-corpus
@@ -1998,12 +1999,11 @@ object ExtQueries {
     // machinery; the oracle replays both pair faces and the recursive
     // closure in one statement
     "mm_crossmodal_dedup" -> q { c =>
-      val textPairs = Dedup.minhashLshPairs(c.t("documents"),
-        "doc_id", "text", n = 3, threshold = 0.9)
-        .select("id_a", "id_b")
-      val imgPairs = Phash.pairs(
-        phashMedia(c.t("documents").filter(col("doc_id") < 48)),
-        maxHamming = 3).select("id_a", "id_b")
+      val textPairs = Dedup.pairs(c.t("documents"), "doc_id", "text",
+        MinHash(n = 3), threshold = 0.9).select("id_a", "id_b")
+      val imgPairs = Dedup.pairs(Phash.dhashTable(
+        phashMedia(c.t("documents").filter(col("doc_id") < 48))), "_id", "sh",
+        Blocks(3)).select("id_a", "id_b")
       graft.operators.ConnectedComponents.components(
         textPairs.unionByName(imgPairs).distinct(), "id_a", "id_b",
         idCol = "doc_id")
@@ -2062,7 +2062,8 @@ object ExtQueries {
                 (if (f / 10 == 0 || f / 10 == 5 || f / 10 == 9)
                   vv * 900 else 0L)).toInt))
         }
-      AudioFp.pairs(items, maxHamming = 7).orderBy("id_a", "id_b")
+      Dedup.pairs(AudioFp.fingerprintTable(items), "_id", "sh", Blocks(7))
+        .orderBy("id_a", "id_b")
     }
   )
 

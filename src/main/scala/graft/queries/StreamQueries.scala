@@ -314,8 +314,8 @@ object StreamQueries {
       val store = new TableStore(Scratch.dir("graft-svd"), c.spark)
       val vecs = c.t("embeddings").select("vec_id", "embedding")
       val evens = vecs.filter(col("vec_id") % 2 === 0)
-      graft.ext.IncrementalDedup.indexVectors(store, "corpus", evens,
-        "vec_id", "embedding", dim = 64, maxHamming = 8)
+      graft.ext.IncrementalDedup.indexCorpus(store, "corpus", evens,
+        "vec_id", "embedding", graft.ext.SignBits(64, 8))
       val twins = evens.select((col("vec_id") + 1000000L).as("vec_id"),
         transform(col("embedding"), x => x * lit(1.01) + lit(0.005))
           .cast("array<float>").as("embedding"))
@@ -326,11 +326,11 @@ object StreamQueries {
       val src = Streaming.fileStream(ss, srcDir,
         options = Map("maxFilesPerTrigger" -> "1"))
       Streaming.drainAvailableNow(src) { (batch, _) =>
-        // per-batch pin scope: checkVectorBatch pins the batch's codes
+        // per-batch pin scope: checkBatch pins the batch's codes
         if (!batch.isEmpty) graft.ext.Dedup.withPins {
-          store.append("pairs", graft.ext.IncrementalDedup.checkVectorBatch(
+          store.append("pairs", graft.ext.IncrementalDedup.checkBatch(
             store, "corpus", batch, "vec_id", "embedding",
-            threshold = 0.98, maxHamming = 8))
+            threshold = 0.98, sig = graft.ext.SignBits(64, 8)))
         }
       }
       store.read("pairs").orderBy("new_id", "old_id")
@@ -341,12 +341,14 @@ object StreamQueries {
     // machinery under AvailableNow) — stored hashes are the verify
     // input, so per batch the old corpus rides the band equi-join only
     "stream_phash_screen" -> q { c =>
-      import graft.ext.Phash
+      import graft.ext.{Blocks, IncrementalDedup, Phash}
       val ss = streamSession(c)
       val store = new TableStore(
         Scratch.dir("graft-sps"), c.spark)
-      Phash.indexMedia(store, "img", ExtQueries.phashMedia(
-        c.tw("documents").filter(col("doc_id") < 36)))
+      IncrementalDedup.indexCorpus(store, "img",
+        Phash.dhashTable(ExtQueries.phashMedia(
+          c.tw("documents").filter(col("doc_id") < 36))), "_id", "sh",
+        Blocks(3))
       val srcDir = Scratch.dir("graft-sps-src")
       c.tw("documents").filter(col("doc_id") >= 36 && col("doc_id") < 48)
         .select("doc_id")
@@ -354,12 +356,13 @@ object StreamQueries {
         .write.mode("overwrite").parquet(srcDir)
       val src = Streaming.fileStream(ss, srcDir,
         options = Map("maxFilesPerTrigger" -> "1"))
-      // no pin scope needed: unlike IncrementalDedup.checkBatch, the
-      // phash screen caches nothing (the stored hash IS the verify input)
+      // no pin scope needed: a Blocks check caches nothing (the stored
+      // hash IS the verify input)
       Streaming.drainAvailableNow(src) { (batch, _) =>
         if (!batch.isEmpty)
-          store.append("pairs", Phash.checkBatch(store, "img",
-            ExtQueries.phashMedia(batch), maxHamming = 3))
+          store.append("pairs", IncrementalDedup.checkBatch(store, "img",
+            Phash.dhashTable(ExtQueries.phashMedia(batch)), "_id", "sh",
+            sig = Blocks(3)))
       }
       store.read("pairs").orderBy("new_id", "old_id")
     },

@@ -245,8 +245,9 @@ object Streaming {
     * Screening is against the STATIC seed index, so the landed set is
     * batch-order independent — growing the index per batch would make
     * survival depend on arrival order; callers wanting greedy in-stream
-    * self-dedup compose [[graft.ext.IncrementalDedup.appendBatch]]
-    * after each land. Corpus-GLOBAL curation (near-dup WITHIN the
+    * self-dedup index each landed batch again
+    * ([[graft.ext.IncrementalDedup.indexCorpus]] appends to the seed
+    * index) after each land. Corpus-GLOBAL curation (near-dup WITHIN the
     * landed output, mixing, domain caps, sequence pack, epoch shuffle,
     * classifier refit) stays batch — run
     * [[graft.ext.CorpusAssembly.assemble]] over the landed table; this
@@ -391,8 +392,8 @@ object Streaming {
             // the anti-join — without it the classifier scan runs twice
             val pinned = graft.ext.Dedup.pin(scored)
             val dups = graft.ext.IncrementalDedup.checkBatch(store,
-              seedIndex, pinned, id, text, n = n,
-              threshold = nearDupThreshold)
+              seedIndex, pinned, id, text, threshold = nearDupThreshold,
+              sig = graft.ext.MinHash(n))
               .select(org.apache.spark.sql.functions.col("new_id").as(id))
               .distinct()
             // pin the SURVIVORS too (the screen's candidate join +

@@ -701,7 +701,8 @@ object VectorSink {
     * externally replayable). Within-batch duplicates are NOT resolved
     * here (the screen is batch × collection) and batch ids must be
     * UNIQUE ([[screenedAppend]] raises otherwise): run
-    * [[graft.ext.Dedup.embeddingHammingPairs]] or an exact dedup over
+    * [[graft.ext.Dedup.pairs]] with a [[graft.ext.SignBits]] signature
+    * or an exact dedup over
     * the batch first. Returns (kept, dropped) row counts; an
     * all-duplicate batch appends nothing and leaves the generation
     * untouched.

@@ -22,7 +22,8 @@ class AudioFpSpec extends SparkSpec {
     val different = MediaItem(3, "audio", Multimodal.Wav.build(8000, 1, 650,
       (f, _) => ((f * f % 89) * 55 - 2300)))
     val media = Seq(clip(1), clip(2, gain = 2), different).toDS()
-    val pairs = AudioFp.pairs(media, maxHamming = 7).collect()
+    val pairs = Dedup.pairs(AudioFp.fingerprintTable(media), "_id", "sh",
+      Blocks(7)).collect()
     assert(pairs.length === 1, s"got ${pairs.toSeq}")
     assert(pairs.head.getAs[Long]("id_a") === 1L)
     assert(pairs.head.getAs[Long]("id_b") === 2L)

@@ -105,8 +105,8 @@ class BinaryQuantSpec extends SparkSpec {
     val twins = base.map { case (i, v) =>
       (i + 1000L, v.map(x => x * 1.01f + 0.003f)) }
     val corpus = (base ++ twins).toDF("vec_id", "embedding")
-    val got = Dedup.embeddingHammingPairs(corpus, "vec_id", "embedding",
-        threshold = 0.95, maxHamming = 4, dim = 16)
+    val got = Dedup.pairs(corpus, "vec_id", "embedding", SignBits(16, 4),
+        threshold = 0.95)
       .select("id_a", "id_b", "hamming", "cosine")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // brute force: every pair, both filters applied exactly
@@ -130,8 +130,8 @@ class BinaryQuantSpec extends SparkSpec {
     val wide = Seq((0L, Array.fill(65)(1.0f)), (1L, Array.fill(64)(1.0f)))
       .toDF("vec_id", "embedding")
     val e = intercept[Exception] {
-      Dedup.embeddingHammingPairs(wide, "vec_id", "embedding",
-        threshold = 0.9, maxHamming = 4).collect() // default dim = 64
+      Dedup.pairs(wide, "vec_id", "embedding", SignBits(64, 4),
+        threshold = 0.9).collect()
     }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
@@ -148,10 +148,10 @@ class BinaryQuantSpec extends SparkSpec {
       (i + 1000L, v.map(x => x * 1.01f + 0.004f)) }
     val all = base ++ twins
     val corpus = all.toDF("vec_id", "embedding")
-    // maxHamming 9, dim 100 -> wordBands allocates 7 bands to word 0
+    // maxHamming 9, dim 100 -> SignBits allocates 7 bands to word 0
     // (64 real bits) + 4 to word 1 (36 real bits) = 11 disjoint bands
-    val got = Dedup.embeddingHammingPairs(corpus, "vec_id", "embedding",
-        threshold = 0.9, maxHamming = 9, dim = 100)
+    val got = Dedup.pairs(corpus, "vec_id", "embedding", SignBits(100, 9),
+        threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val expect = (for {
       (ia, va) <- all; (ib, vb) <- all if ia < ib
@@ -171,8 +171,7 @@ class BinaryQuantSpec extends SparkSpec {
   test("embeddingHammingPairs rejects maxHamming >= dim") {
     val df = Seq((0L, Array.fill(8)(1.0f))).toDF("vec_id", "embedding")
     intercept[IllegalArgumentException] {
-      Dedup.embeddingHammingPairs(df, "vec_id", "embedding",
-        threshold = 0.9, maxHamming = 8, dim = 8)
+      Dedup.pairs(df, "vec_id", "embedding", SignBits(8, 8), threshold = 0.9)
     }
   }
 
@@ -214,7 +213,7 @@ class BinaryQuantSpec extends SparkSpec {
       mh <- Seq(0, 1, 3, 8, 9, 31, 63, 100).filter(_ < dim)
     } yield (dim, mh)
     grid.foreach { case (dim, mh) =>
-      val bands = Dedup.wordBands(dim, mh)
+      val bands = SignBits.wordBands(dim, mh)
       assert(bands.size >= mh + 1,
         s"dim=$dim mh=$mh: ${bands.size} bands < ${mh + 1} — pigeonhole broken")
       bands.groupBy(_.widx).foreach { case (w, bs) =>
@@ -244,8 +243,8 @@ class BinaryQuantSpec extends SparkSpec {
     val twins = base.map { case (i, v) =>
       (i + 1000L, v.map(x => x * 1.01f + 0.004f)) }
     val all = base ++ twins
-    val got = Dedup.embeddingHammingPairs(all.toDF("vec_id", "embedding"),
-        "vec_id", "embedding", threshold = 0.9, maxHamming = 8, dim = 72)
+    val got = Dedup.pairs(all.toDF("vec_id", "embedding"),
+        "vec_id", "embedding", SignBits(72, 8), threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val expect = (for {
       (ia, va) <- all; (ib, vb) <- all if ia < ib
@@ -261,10 +260,10 @@ class BinaryQuantSpec extends SparkSpec {
     // under 9 bands must NOT bucket everything together (the old
     // fixed-split banding emitted an identical all-zero band key for
     // blocks past the last word's 8 real bits -> all-pairs candidates)
-    val banded = Dedup.bandedWords(
+    val banded = SignBits(72, 8).banded(
       all.toDF("vec_id", "embedding")
         .select($"vec_id".as("_id"),
-          packSignBits($"embedding").as("code")), 72, 8)
+          packSignBits($"embedding").as("code")))
       .groupBy("widx", "blk", "blk_val").count()
       .agg(max("count")).as[Long].head()
     assert(banded < all.size,

@@ -81,7 +81,7 @@ class ExtSpec extends SparkSpec {
     assert(cm.isEmpty, "a failing scope must still release its pins")
     // outside any scope a pin persists nothing
     Dedup.pin(docs).count()
-    Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 0.5).count()
+    Dedup.pairs(docs, "doc_id", "text", MinHash(3), 0.5).count()
     assert(cm.isEmpty, "an unscoped pin must not persist its frame")
   }
 
@@ -115,6 +115,15 @@ class ExtSpec extends SparkSpec {
     assert(hits.isEmpty,
       "metric string or metric test outside the codec mapping: ask the " +
         "collection's Codec (storesVectors, its Model) instead")
+  }
+
+  test("Signature.scala is the only place that names a banding projection") {
+    val hits = mainSourceHits(
+      "bandedSig|bandedBlocks|pigeonholeBlocks|bandedWords|wordBands".r,
+      "graft/ext/Signature.scala")
+    assert(hits.isEmpty,
+      s"banding projection named outside the Signature cases: $hits — " +
+        "ask the Signature (Dedup.pairs, IncrementalDedup) instead")
   }
 
   test("resolveNearDups keeps one canonical doc per cluster") {
@@ -480,7 +489,7 @@ class ExtSpec extends SparkSpec {
   test("minhashLshPairs agrees with exact jaccard at high threshold") {
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.9)
       .select("id_a", "id_b", "jaccard").collect().toSet
-    val lsh = Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 0.9)
+    val lsh = Dedup.pairs(docs, "doc_id", "text", MinHash(3), 0.9)
       .select("id_a", "id_b", "jaccard").collect().toSet
     assert(lsh === exact)
     assert(exact.nonEmpty) // 1~4 is an exact dup pair
@@ -495,7 +504,8 @@ class ExtSpec extends SparkSpec {
   }
 
   test("simhashPairs finds the canonical dup within hamming budget") {
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
+    val pairs = Dedup.pairs(Dedup.simhashTable(docs, "doc_id", "text"),
+        "_id", "sh", Blocks(3))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 4L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))

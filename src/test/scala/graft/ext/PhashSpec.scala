@@ -17,9 +17,13 @@ class PhashSpec extends SparkSpec {
     ((x * (7 + 3 * seed) + seed) % 256, (y * (11 + 2 * seed)) % 256,
       (x * y * (1 + seed)) % 256)
 
+  private def imagePairs(media: org.apache.spark.sql.Dataset[MediaItem],
+      maxHamming: Int = 3) =
+    Dedup.pairs(Phash.dhashTable(media), "_id", "sh", Blocks(maxHamming))
+
   test("identical images hash identically; exact pair at hamming 0") {
     val media = Seq(img(1, gradient(3)), img(2, gradient(3))).toDS()
-    val pairs = Phash.pairs(media).collect()
+    val pairs = imagePairs(media).collect()
     assert(pairs.length === 1)
     assert(pairs.head.getAs[Long]("id_a") === 1L)
     assert(pairs.head.getAs[Int]("hamming") === 0)
@@ -49,7 +53,7 @@ class PhashSpec extends SparkSpec {
       if (x < 4) (255, 255, 255) else gradient(7)(x, y))
     val unrelated = img(3, (x, y) => ((255 - x * 5) % 256, (y * 29) % 256,
       (x + y) % 256))
-    val pairs = Phash.pairs(Seq(base, edited, unrelated).toDS(), maxHamming = 8)
+    val pairs = imagePairs(Seq(base, edited, unrelated).toDS(), maxHamming = 8)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
         r.getAs[Int]("hamming")))
     val nearDup = pairs.filter(p => p._1 == 1L && p._2 == 2L)
@@ -110,7 +114,7 @@ class PhashSpec extends SparkSpec {
 
   test("pairs run through the pigeonhole equi-join, never a cartesian") {
     val media = (1L to 20L).map(i => img(i, gradient((i % 4).toInt))).toDS()
-    val plan = Phash.pairs(media).queryExecution.executedPlan.toString
+    val plan = imagePairs(media).queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("CartesianProduct"),
       s"pair generation must stay an equi-join:\n$plan")
@@ -119,23 +123,48 @@ class PhashSpec extends SparkSpec {
   test("incremental index: batches screen against stored hashes only") {
     val store = new graft.write.TableStore(
       java.nio.file.Files.createTempDirectory("graft-phs").toString, spark)
-    Phash.indexMedia(store, "img", Seq(img(1, gradient(3)),
-      img(2, gradient(8))).toDS())
+    def index(media: org.apache.spark.sql.Dataset[MediaItem]) =
+      IncrementalDedup.indexCorpus(store, "img", Phash.dhashTable(media),
+        "_id", "sh", Blocks(8))
+    def check(media: org.apache.spark.sql.Dataset[MediaItem], maxHamming: Int) =
+      IncrementalDedup.checkBatch(store, "img", Phash.dhashTable(media),
+        "_id", "sh", sig = Blocks(maxHamming))
+    index(Seq(img(1, gradient(3)), img(2, gradient(8))).toDS())
     // a near-dup of 1 (one-block edit) and a fresh image
     val edited = img(10, (x, y) => {
       val (r, g, b) = gradient(3)(x, y)
       if (x < 4) ((r + 2) % 256, g, b) else (r, g, b)
     })
     val batch = Seq(edited, img(11, gradient(5))).toDS()
-    val pairs = Phash.checkBatch(store, "img", batch, maxHamming = 8)
+    val pairs = check(batch, maxHamming = 8)
       .collect().map(r => (r.getAs[Long]("new_id"), r.getAs[Long]("old_id")))
     assert(pairs.toSeq === Seq((10L, 1L)))
     // growing the index makes later batches see earlier ones
-    Phash.indexMedia(store, "img", batch)
-    val later = Phash.checkBatch(store, "img",
-      Seq(img(20, gradient(5))).toDS(), maxHamming = 0)
+    index(batch)
+    val later = check(Seq(img(20, gradient(5))).toDS(), maxHamming = 0)
       .collect().map(r => (r.getAs[Long]("new_id"), r.getAs[Long]("old_id")))
     assert(later.toSeq === Seq((20L, 11L)))
+  }
+
+  test("Blocks: checking the odd ids against an index of the even ids = " +
+      "Dedup.pairs restricted to odd x even") {
+    // three gradient families; ids 9-11 carry a one-block edit of theirs
+    val media = (0L until 12L).map { i =>
+      val g = gradient((i % 3).toInt) _
+      if (i < 9) img(i, g)
+      else img(i, (x, y) => {
+        val (r, gg, b) = g(x, y)
+        if (x < 4) ((r + 2) % 256, gg, b) else (r, gg, b)
+      })
+    }.toDS()
+    val store = new graft.write.TableStore(
+      java.nio.file.Files.createTempDirectory("graft-phx").toString, spark)
+    val ((selfCols, self), (checkCols, check)) = IncrementalDedupSpec
+      .crossFace(store, Phash.dhashTable(media), "_id", "sh", Blocks(8), 0.0)
+    assert(checkCols === selfCols && checkCols === Seq("hamming"))
+    assert(check === self)
+    assert(self.exists(_(2) != 0) && self.exists(_(2) == 0),
+      s"the fixture must pair at zero and nonzero hamming: $self")
   }
 
   test("maxHamming 0 is an exact-equality band, not an everything-bucket") {
@@ -144,13 +173,13 @@ class PhashSpec extends SparkSpec {
     // into one bucket
     val media = Seq(img(1, gradient(2)), img(2, gradient(2)),
       img(3, gradient(9))).toDS()
-    val pairs = Phash.pairs(media, maxHamming = 0).collect()
+    val pairs = imagePairs(media, maxHamming = 0).collect()
     assert(pairs.length === 1)
     assert(pairs.head.getAs[Long]("id_a") === 1L &&
       pairs.head.getAs[Long]("id_b") === 2L &&
       pairs.head.getAs[Int]("hamming") === 0)
     intercept[IllegalArgumentException] {
-      Phash.pairs(media, maxHamming = 64).collect()
+      imagePairs(media, maxHamming = 64).collect()
     }
   }
 }
