@@ -1,6 +1,11 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.columnar.CachedBatch
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -111,19 +116,83 @@ object Dedup {
   }
 
   /** Pin `df` (MEMORY_AND_DISK) into the current [[withPins]] scope;
-    * outside any scope `df` comes back unpersisted. Library-visible so
-    * sibling operators with the same fan-out shape (e.g.
-    * [[TextIR.lmPerplexityBands]], [[graft.operators.Sketches]]) share
-    * the one lifecycle. The pin is lazy: a plan that reads a pin not yet
-    * materialized N times pays N jobs (AQE gives each reference its own
-    * table-cache query stage and does not reuse them), so read each pin
-    * once per plan where the plan allows it. */
+    * outside any scope `df` comes back unpersisted, and a frame whose
+    * plan is already cached (pinned earlier in this scope or an
+    * enclosing one) comes back as it is, not persisted twice.
+    * Library-visible so sibling operators with the same fan-out shape
+    * (e.g. [[TextIR.lmPerplexityBands]], [[graft.operators.Sketches]])
+    * share the one lifecycle. The pin is lazy: a plan that reads a pin
+    * not yet materialized N times pays N jobs (AQE gives each reference
+    * its own table-cache query stage and does not reuse them), so
+    * [[build]] a plan's pins at the action that reads them, or read
+    * each pin once per plan. */
   private[graft] def pin(df: DataFrame): DataFrame = pinScope.get() match {
     case null => df
+    case _ if cached(df) => df
     case scope =>
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       scope += p
       p
+  }
+
+  private def cached(df: DataFrame): Boolean = {
+    val qe = df.queryExecution
+    qe.sparkSession.sharedState.cacheManager.lookupCachedData(qe.sparkSession, qe.analyzed)
+      .isDefined
+  }
+
+  /** Build every pin `df`'s plan reads that is not built yet, innermost
+    * first (a pin inside another pin's plan, also under an adaptive
+    * plan), with one job each, and return `df`. Call it at the action
+    * that reads the pins: once built, every plan reference to a pin
+    * reads the loaded cache and starts no job, where an unbuilt pin
+    * pays one job per reference ([[pin]]). One pin's build is
+    * synchronized on that pin, so two callers never build it twice.
+    * The jobs run outside any SQL execution, charged to the caller's
+    * call site (inside a micro-batch they would otherwise take the
+    * stream's). Outside a [[withPins]] scope nothing is pinned, and
+    * `build` does nothing. */
+  private[graft] def build(df: DataFrame): DataFrame = {
+    if (pinScope.get() != null)
+      org.apache.spark.GraftAccess.outsideExecution(df.sparkSession.sparkContext,
+          Thread.currentThread.getStackTrace.toSeq.dropWhile(f =>
+            !f.getClassName.startsWith("graft.") ||
+              f.getClassName.startsWith("graft.ext.Dedup$"))) {
+        pinsOf(df.queryExecution.withCachedData).foreach(buildPin)
+      }
+    df
+  }
+
+  /** Rows of `df`: read off the row count a built pin keeps (0 exactly
+    * when it built no row), so a pin is counted with no job past its
+    * [[build]]; any other frame runs a count. */
+  private[graft] def rowCount(df: DataFrame): Long =
+    build(df).queryExecution.withCachedData match {
+      case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        r.cacheBuilder.rowCountStats.value
+      case _ => df.count()
+    }
+
+  private def pinsOf(plan: LogicalPlan): Seq[InMemoryRelation] =
+    plan.collectWithSubqueries { case r: InMemoryRelation => r }
+
+  /** The pins a pin's physical plan reads; an adaptive plan is a leaf,
+    * so its input plan is searched. */
+  private def pinsOf(plan: SparkPlan): Seq[InMemoryRelation] =
+    plan.collectWithSubqueries {
+      case s: InMemoryTableScanExec => Seq(s.relation)
+      case a: AdaptiveSparkPlanExec => pinsOf(a.inputPlan)
+    }.flatten
+
+  private def buildPin(r: InMemoryRelation): Unit = {
+    val b = r.cacheBuilder
+    if (!b.isCachedColumnBuffersLoaded) b.synchronized {
+      if (!b.isCachedColumnBuffersLoaded) {
+        pinsOf(b.cachedPlan).foreach(buildPin)
+        val rdd = b.cachedColumnBuffers
+        rdd.sparkContext.runJob(rdd, (_: Iterator[CachedBatch]) => ())
+      }
+    }
   }
 
   /** Exact n-gram Jaccard: pairs of documents with

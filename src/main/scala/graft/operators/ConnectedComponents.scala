@@ -116,7 +116,7 @@ object ConnectedComponents {
       return components(edges, srcCol, dstCol, idCol, maxIter, checkpointDir)
     Dedup.withPins {
       val pinned = Dedup.pin(edges)
-      if (pinned.count() > collectThreshold)
+      if (Dedup.rowCount(pinned) > collectThreshold)
         components(pinned, srcCol, dstCol, idCol, maxIter, checkpointDir)
       else {
         val spark = edges.sparkSession

@@ -334,7 +334,8 @@ object Streaming {
     var maxWritten = math.max(maxBatchIdStat(store, table),
       maxBatchIdStat(store, s"${table}__quarantine"))
     drainAvailableNow(source, checkpoint) { (rawBatch, bid) =>
-      if (!rawBatch.isEmpty && bid > maxWritten) graft.ext.Dedup.withPins {
+      // a replayed batch id is settled by the watermark, with no probe job
+      if (bid > maxWritten && !rawBatch.isEmpty) graft.ext.Dedup.withPins {
         import org.apache.spark.sql.functions.lit
         // re-spread BEFORE the classifier featurization: a micro-batch
         // arrives at file-split parallelism (one file under
@@ -398,15 +399,17 @@ object Streaming {
               .distinct()
             // pin the SURVIVORS too (the screen's candidate join +
             // exact verify is the dominant cost — without this the
-            // isEmpty probe and the append each execute it once,
+            // emptiness check and the append each execute it once,
             // doubling per-batch latency; the screenedAppend scaffold
             // persists kept for the same reason). Scope-released with
-            // the batch's withPins.
+            // the batch's withPins. Building it builds the screen's
+            // pins first, one job each, and its row count answers the
+            // emptiness check with no probe job.
             val kept = graft.ext.Dedup.pin(
               pinned.join(dups, Seq(id), "left_anti")
                 .withColumn(Pipeline.BatchIdColumn,
                   org.apache.spark.sql.functions.lit(bid)))
-            if (!kept.isEmpty) {
+            if (graft.ext.Dedup.rowCount(kept) > 0) {
               disp.append(table, kept, loadIdOf(bid),
                 statsFor = Seq(Pipeline.BatchIdColumn))
               maxWritten = bid

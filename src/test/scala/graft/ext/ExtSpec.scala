@@ -85,6 +85,71 @@ class ExtSpec extends SparkSpec {
     assert(cm.isEmpty, "an unscoped pin must not persist its frame")
   }
 
+  test("build materializes a plan's pins, so its action runs no table-cache job") {
+    // a pin read twice by one plan (self-join) and a pin over a pin
+    def selfJoin() = {
+      val p = Dedup.pin(docs.select(col("doc_id"), length(col("text")).as("len")))
+      p.as("a").join(p.as("b"), col("a.len") === col("b.len") &&
+        col("a.doc_id") < col("b.doc_id")).select(col("a.doc_id"), col("b.doc_id"))
+    }
+    def nested() = {
+      val inner = Dedup.pin(docs.select(col("doc_id"), split(col("text"), " ").as("w")))
+      val outer = Dedup.pin(inner.select(col("doc_id"), size(col("w")).as("n"))
+        .groupBy("n").agg(min("doc_id").as("first")))
+      inner.join(outer, inner("doc_id") === outer("first")).select("doc_id", "n")
+    }
+    for ((plan, pins) <- Seq((() => selfJoin(), 1), (() => nested(), 2))) {
+      // reference: the action on a fresh plan over pins an earlier action built
+      val (want, warm) = Dedup.withPins {
+        plan().collect()
+        countJobs(plan().collect().toSet)
+      }
+      val (_, cold) = Dedup.withPins(countJobs(plan().collect()))
+      Dedup.withPins {
+        val q = plan()
+        val (built, buildJobs) = countJobs(Dedup.build(q))
+        assert(built eq q)
+        assert(buildJobs >= pins, s"$pins pin(s) built in $buildJobs job(s)")
+        val (got, jobs) = countJobs(q.collect().toSet)
+        assert(got === want)
+        assert(jobs === warm, s"$jobs jobs after build, $warm with the pins built by an action")
+        assert(cold > warm, "an unbuilt pin should cost the action jobs")
+        // building again finds every pin loaded
+        assert(countJobs(Dedup.build(q))._2 === 0)
+      }
+    }
+    // outside a scope nothing is pinned, and build runs nothing
+    val (_, unscoped) = countJobs(Dedup.build(nested()))
+    assert(unscoped === 0)
+  }
+
+  test("rowCount reads a built pin's rows with no job past its build") {
+    Dedup.withPins {
+      val p = Dedup.pin(docs.filter(col("doc_id") > 1L))
+      val (n, jobs) = countJobs(Dedup.rowCount(p))
+      assert(n === 3L)
+      assert(jobs === 1, s"one build job, got $jobs")
+      assert(countJobs(Dedup.rowCount(p)) === (3L, 0))
+      assert(Dedup.rowCount(Dedup.pin(docs.filter(col("doc_id") > 9L))) === 0L)
+    }
+    // an unpinned frame is counted
+    assert(Dedup.rowCount(docs) === 4L)
+  }
+
+  test("pin returns a frame already pinned as it is: an inner scope keeps the outer's pin") {
+    Dedup.withPins {
+      val p = Dedup.pin(docs.filter(col("doc_id") > 1L))
+      assert(org.apache.spark.sql.CachedPlans.count(spark) === 1)
+      Dedup.withPins {
+        assert(Dedup.pin(p) eq p)
+        assert(Dedup.pin(docs.filter(col("doc_id") > 1L)).count() === 3L)
+      }
+      assert(org.apache.spark.sql.CachedPlans.count(spark) === 1,
+        "the inner scope must not release a pin it did not make")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   /** `path:line` of every main-source line matching `pattern`, outside
     * the one file (relative to `src/main/scala`) allowed to hold it. */
   private def mainSourceHits(pattern: scala.util.matching.Regex,

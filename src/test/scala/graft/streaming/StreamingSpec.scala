@@ -427,6 +427,32 @@ class StreamingSpec extends SparkSpec {
     assert(!sites.exists(_.contains("drainAvailableNow")), sites.mkString("\n"))
   }
 
+  test("a curateInto micro-batch costs at most 22 Spark jobs, a replayed one none") {
+    import graft.ext.{IncrementalDedup, QualityClassifier}
+    val seeds = Seq((0L, "alpha beta gamma delta epsilon zeta eta theta"))
+      .toDF("doc_id", "text")
+    val store = new TableStore(tmp("st-jobs"), spark)
+    IncrementalDedup.indexCorpus(store, "seed", seeds, "doc_id", "text")
+    QualityClassifier.save(store, "m", QualityClassifier.fit(
+      seeds.unionByName(Seq((1L, "one two three four")).toDF("doc_id", "text")),
+      "text", col("doc_id") % 2 === 1))
+    val srcDir = tmp("st-jobs-src")
+    Seq((5L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (6L, "fresh words about something else entirely new"))
+      .toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(srcDir)
+    val src = Streaming.fileStream(spark, srcDir)
+    // no checkpoint: each run restarts at batch id 0
+    def curate() = countJobs(Streaming.curateInto(store, src, "curated",
+      "seed", "m", "doc_id", "text", minScore = -1e9))._2
+    val jobs = curate()
+    assert(store.read("curated").select("doc_id").as[Long].collect().toSeq
+      === Seq(6L))
+    assert(jobs <= 22, s"one curateInto micro-batch ran $jobs Spark jobs")
+    val replayJobs = curate()
+    assert(store.read("curated").count() === 1L)
+    assert(replayJobs === 0, s"a replayed batch ran $replayJobs Spark jobs")
+  }
+
   test("curateInto refuses a scoreColumn already present on the source") {
     import graft.ext.{IncrementalDedup, QualityClassifier}
     val seeds = Seq((0L, "alpha beta gamma delta epsilon zeta eta"))
