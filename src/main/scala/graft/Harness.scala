@@ -76,11 +76,15 @@ object Harness {
     * every read first drain the listener bus, so no event posted before
     * the call is missed or attributed to the next query.
     *
-    * A call site is the first graft frame outside the harness. AQE runs
-    * its query stages from a helper thread whose stack holds no graft
-    * frame, so a job of a SQL execution takes the site of the thread
-    * that started the execution (`spark.sql.execution.id` → the
-    * execution-start event's call stack); its stages take the job's. */
+    * A call site is the first graft frame outside the harness, read off
+    * the job's own stages, newest (the job's result stage) first. AQE
+    * runs some query stages from a helper thread whose stack holds no
+    * graft frame, so only a job whose stages carry none takes the site
+    * of the thread that started its SQL execution
+    * (`spark.sql.execution.id` → the execution-start event's call
+    * stack). A job a `foreachBatch` sink runs thus takes the sink's
+    * frame, not the stream's start site that its micro-batch execution
+    * carries. A job's stages take the job's site. */
   final class Census(sc: SparkContext) extends SparkListener {
     private val nJobs = new AtomicLong(0L)
     private val nTasks = new AtomicLong(0L)
@@ -108,10 +112,11 @@ object Harness {
 
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       nJobs.incrementAndGet()
-      val site = Option(j.properties)
-        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
-        .flatMap(id => Option(execSite.get(id.toLong)))
-        .orElse(j.stageInfos.iterator.flatMap(s => graftFrame(s.details)).nextOption())
+      val site = j.stageInfos.sortBy(-_.stageId).iterator
+        .flatMap(s => graftFrame(s.details)).nextOption()
+        .orElse(Option(j.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(id => Option(execSite.get(id.toLong))))
         .getOrElse(j.stageInfos.headOption.map(_.name.takeWhile(_ != '\n')).getOrElse("?"))
       siteJobs.merge(site, 1L, (a, b) => a + b)
       j.stageIds.foreach(stageSite.put(_, site))

@@ -149,9 +149,8 @@ object Dedup {
     * pays one job per reference ([[pin]]). One pin's build is
     * synchronized on that pin, so two callers never build it twice.
     * The jobs run outside any SQL execution, charged to the caller's
-    * call site (inside a micro-batch they would otherwise take the
-    * stream's). Outside a [[withPins]] scope nothing is pinned, and
-    * `build` does nothing. */
+    * call site, not to this object's frames. Outside a [[withPins]]
+    * scope nothing is pinned, and `build` does nothing. */
   private[graft] def build(df: DataFrame): DataFrame = {
     if (pinScope.get() != null)
       org.apache.spark.GraftAccess.outsideExecution(df.sparkSession.sparkContext,

@@ -123,8 +123,12 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     // sides of the split and the range-layout sampling
     val staged = Dedup.pin(stamp(staging, loadId))
     def actives(df: DataFrame) = SegmentWrite(df, tags = scd2Tag("active"))
-    def closeds(df: DataFrame) =
-      SegmentWrite(df, tags = scd2Tag("closed"), dropEmpty = true)
+    // closed rows in the active rows' column order: both segments then
+    // memoize one schema, and the table reads with no footer-merge job
+    def closeds(df: DataFrame, active: DataFrame) = SegmentWrite(
+      df.select((active.columns.filter(df.columns.contains) ++
+        df.columns.filterNot(active.columns.contains)).map(col): _*),
+      tags = scd2Tag("closed"), dropEmpty = true)
 
     val segs = if (store.exists(table)) store.segments(table) else Nil
     if (segs.isEmpty) {
@@ -141,7 +145,7 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
           (Nil, store.readSegments(table, closedSegs)
             .unionByName(closed, allowMissingColumns = true))
         else (closedSegs, closed)
-      store.commitSegments(table, keep, Seq(actives(active), closeds(closedOut)))
+      store.commitSegments(table, keep, Seq(actives(active), closeds(closedOut, active)))
     } else {
       // legacy un-tagged table: one full rewrite that splits it so every
       // later load prunes
@@ -149,7 +153,7 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
       val (active, closed) = Scd2.applySplit(Some(d.filter(Scd2.isActive(cfg))), staged, cfg)
       val allClosed = d.filter(!Scd2.isActive(cfg))
         .unionByName(closed, allowMissingColumns = true)
-      store.commitSegments(table, Nil, Seq(actives(active), closeds(allClosed)))
+      store.commitSegments(table, Nil, Seq(actives(active), closeds(allClosed, active)))
     }
     recordLoad(loadId)
   }

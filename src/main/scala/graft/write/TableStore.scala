@@ -7,7 +7,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max, min}
 import org.apache.spark.sql.types._
 
@@ -283,18 +283,17 @@ final class TableStore(val root: String, val spark: SparkSession) {
   /** The tombstone id-file write both tombstoning commits share.
     * Repartition, NOT coalesce: coalesce(1) would collapse the whole
     * upstream id computation (dest-root joins) onto a single task.
-    * Bloom filter on the id column: point reads probe tombstone files
-    * for membership ("is this id dead?") — the bloom turns that probe
-    * into a footer check instead of an id-file scan. */
+    * Bloom filter on the id column, sized to the ids ([[bloomWrite]]):
+    * point reads probe tombstone files for membership ("is this id
+    * dead?"), and the filter lets that probe skip the id file's row
+    * groups that cannot hold the id. */
   private def writeTombstoneSegment(table: String, tombColumn: String,
       ids: DataFrame): String = {
     require(ids.columns.toSeq == Seq(tombColumn),
       s"tombstone ids must be a single '$tombColumn' column")
     val idSeg = s"data/${UUID.randomUUID().toString.take(12)}-tomb"
     val path = tableDir(table).resolve(idSeg)
-    ids.distinct().repartition(1).write.mode(SaveMode.Overwrite)
-      .option(s"parquet.bloom.filter.enabled#$tombColumn", "true")
-      .parquet(path.toString)
+    bloomWrite(ids.distinct().repartition(1), Seq(tombColumn)).parquet(path.toString)
     segmentSchemas.put(path, deepNullable(ids.schema).asInstanceOf[StructType])
     idSeg
   }
@@ -640,8 +639,9 @@ final class TableStore(val root: String, val spark: SparkSession) {
   }
 
   /** Is `value` among a tombstone's dead ids? An equality pushdown over
-    * the (single-file, bloom-filtered) id parquet — a footer probe, not
-    * a scan. Conservative on any failure: report absent (no pruning). */
+    * the (single-file, bloom-filtered) id parquet: the filter and the
+    * row-group stats skip the row groups that cannot hold `value`.
+    * Conservative on any failure: report absent (no pruning). */
   private def tombstoneContains(table: String, t: Tombstone,
       value: String): Boolean =
     Try {
@@ -937,12 +937,9 @@ final class TableStore(val root: String, val spark: SparkSession) {
         val o = new Observation(s"seg-${UUID.randomUUID().toString.take(8)}")
         (layout.observe(o, exprs.head, exprs.tail: _*), Some(o))
       }
-    // parquet bloom filters on the key columns: equality probes on
-    // uuid-like keys (where range stats are weak) skip row groups
-    val writer = cols.foldLeft(toWrite.write.mode(SaveMode.Overwrite)) {
-      (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
-    }
-    writer.parquet(tableDir(table).resolve(seg).toString)
+    // bloom filters on the key columns: equality probes on uuid-like
+    // keys (where range stats are weak) skip row groups
+    bloomWrite(toWrite, cols).parquet(tableDir(table).resolve(seg).toString)
     segmentSchemas.put(tableDir(table).resolve(seg),
       deepNullable(layout.schema).asInstanceOf[StructType])
     val metrics = obs.map(_.get).getOrElse(Map.empty[String, Any])
@@ -957,6 +954,28 @@ final class TableStore(val root: String, val spark: SparkSession) {
     (Segment(seg, stats),
       metrics.get(RowsMetric).map(_.asInstanceOf[Number].longValue()))
   }
+
+  /** Candidate bloom filters per column: the largest is parquet's
+    * 1 MiB cap, each next one half the last, so 10 reach 2 KiB; parquet's
+    * default 5 stop at 64 KiB, several times a small load's key data. */
+  private val BloomCandidates = 10
+
+  /** The one writer of bloom-filtered parquet: an overwrite of `df`
+    * with a bloom filter on each of `bloomCols`, sized to the distinct
+    * values of each column chunk. Unsized, parquet writes every filter
+    * at its 1 MiB cap whatever the row count, most of a small
+    * segment's bytes. The adaptive filter feeds every value to all
+    * candidates and keeps the smallest sized for the distinct values it
+    * saw at the default 1% false-positive rate, so a filter never misses
+    * a written value, and past ~870k distinct values it is the 1 MiB cap
+    * as before. Parquet 1.16 reads the adaptive switch only as a global
+    * option and the candidate count only per column. */
+  private def bloomWrite(df: DataFrame, bloomCols: Seq[String]): DataFrameWriter[Row] =
+    bloomCols.foldLeft(df.write.mode(SaveMode.Overwrite)
+        .option("parquet.bloom.filter.adaptive.enabled", "true")) {
+      (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
+        .option(s"parquet.bloom.filter.candidates.number#$c", BloomCandidates.toLong)
+    }
 
   private def resolve(table: String, name: String): Path = {
     val p = Paths.get(name)

@@ -1,7 +1,12 @@
 package graft.write
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -237,6 +242,41 @@ class PruningSpec extends SparkSpec {
     assert(range.filter(col("id").between(1L, 10L)).count() === 10)
     assert(range.filter(col("id") === 5L).select("v").as[String].collect()
       .toSeq === Seq("NEW"))
+  }
+
+  private def parquetFiles(dir: Path): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+    finally s.close()
+  }
+
+  test("bloom filters are sized to the file: a small segment and tombstone stay under 16 KiB") {
+    val dir = tmp()
+    val store = new TableStore(dir, spark)
+    store.append("t", (1L to 150L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1),
+      statsFor = Seq("id"))
+    store.deleteByIds("t", "id", (1L to 100L).toDF("id"))
+    val Seq(seg) = store.segments("t")
+    val Seq(tomb) = store.tombstones("t")
+    val conf = spark.sessionState.newHadoopConf()
+    for (name <- Seq(seg.name, tomb.name)) {
+      val files = parquetFiles(Paths.get(dir, "t", name))
+      val bytes = files.map(Files.size).sum
+      assert(bytes < 16 * 1024, s"$name: $bytes bytes of parquet")
+      files.foreach { f =>
+        val ids = spark.read.parquet(f.toString).select("id").as[Long].collect()
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f.toString), conf))
+        try r.getFooter.getBlocks.asScala.foreach { b =>
+          val c = b.getColumns.asScala.find(_.getPath.toDotString == "id").get
+          assert(c.getBloomFilterOffset >= 0, s"$name has no bloom filter on id")
+          // sized down, the filter still holds every id the file holds
+          val bf = r.readBloomFilter(c)
+          assert(ids.forall(i => bf.findHash(bf.hash(i))), s"$name: a written id is missing")
+        } finally r.close()
+      }
+    }
+    // the dead ids still read as dead, the live ones as live
+    assert(store.read("t").select("id").as[Long].collect().sorted.toSeq === (101L to 150L))
   }
 
   test("relation pruning canonicalizes the probe through the column type") {

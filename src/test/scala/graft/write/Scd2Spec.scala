@@ -177,4 +177,20 @@ class Scd2Spec extends SparkSpec {
     assert(out.filter(col("_dlt_valid_to").isNull).count() === 60)
     assert(out.filter(col("_dlt_valid_to").isNotNull).count() === 5)
   }
+
+  test("closed segments take the active column order: the table reads with no footer-merge job") {
+    val store = new TableStore(tmp(), spark)
+    val d = new Dispositions(store, spark)
+    val keyed = cfg.copy(mergeKey = Seq("id"))
+    d.scd2("t", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), keyed, "1")
+    d.scd2("t", Seq((1L, "a"), (2L, "b2")).toDF("id", "v"), keyed.copy(boundaryTs = next), "2")
+    assert(closedSegments(store, "t").size === 1)
+    val (out, jobs) = countJobs(store.read("t"))
+    assert(jobs === 0)
+    // the order the footer merge of the two segments gave before
+    assert(out.columns.toSeq === Seq("id", "v", "_dlt_load_id", "_dlt_valid_from",
+      "_dlt_valid_to", "_dlt_row_hash"))
+    assert(rows(out.select("id", "v", "_dlt_load_id", "_dlt_valid_to")) === Seq(
+      "1|a|1|null", "2|b2|2|null", "2|b|1|2024-02-01 00:00:00.0", "3|c|1|null").sorted)
+  }
 }

@@ -1,0 +1,84 @@
+#!/usr/bin/env python3
+"""Where the bytes of a graft table store go.
+
+Usage: python3 tools/store_footprint.py <store> [--json]
+
+A store is a directory of tables, each a directory holding `_CURRENT`.
+For every table this reads the footer of each parquet file under it
+(segments, tombstones, driver-written ledger files) with pyarrow and
+splits the table's parquet bytes into
+
+  data   the column chunks (sum of `total_compressed_size` over every
+         column of every row group), and
+  other  everything else in the files: bloom filters, page and column
+         indexes, footers and the magic bytes.
+
+It also counts parquet files, segment/tombstone directories under
+`data/`, and the non-parquet bytes (manifests, `_CURRENT`, CRCs). The
+last row sums the tables. `--json` prints the rows as one JSON list.
+"""
+import json
+import os
+import sys
+
+import pyarrow.parquet as pq
+
+
+def table_footprint(table_dir):
+    row = {"files": 0, "dirs": 0, "parquet_bytes": 0, "data_bytes": 0,
+           "other_bytes": 0, "non_parquet_bytes": 0}
+    data_dir = os.path.join(table_dir, "data")
+    if os.path.isdir(data_dir):
+        row["dirs"] = sum(1 for e in os.scandir(data_dir) if e.is_dir())
+    for base, _dirs, names in os.walk(table_dir):
+        for n in names:
+            path = os.path.join(base, n)
+            size = os.path.getsize(path)
+            if not n.endswith(".parquet"):
+                row["non_parquet_bytes"] += size
+                continue
+            md = pq.ParquetFile(path).metadata
+            chunks = sum(md.row_group(g).column(c).total_compressed_size
+                         for g in range(md.num_row_groups)
+                         for c in range(md.num_columns))
+            row["files"] += 1
+            row["parquet_bytes"] += size
+            row["data_bytes"] += chunks
+            row["other_bytes"] += size - chunks
+    return row
+
+
+def footprint(store):
+    tables = sorted(e.name for e in os.scandir(store)
+                    if e.is_dir() and os.path.exists(os.path.join(e.path, "_CURRENT")))
+    rows = [dict(table=t, **table_footprint(os.path.join(store, t))) for t in tables]
+    total = {"table": "(all)"}
+    for k in ("files", "dirs", "parquet_bytes", "data_bytes", "other_bytes",
+              "non_parquet_bytes"):
+        total[k] = sum(r[k] for r in rows)
+    return rows + [total]
+
+
+def main(argv):
+    args = [a for a in argv if a != "--json"]
+    if len(args) != 1 or not os.path.isdir(args[0]):
+        print(__doc__.strip(), file=sys.stderr)
+        return 2
+    rows = footprint(args[0])
+    if "--json" in argv:
+        print(json.dumps(rows))
+        return 0
+    cols = ("table", "files", "dirs", "parquet_bytes", "data_bytes", "other_bytes",
+            "non_parquet_bytes", "other_share")
+    cells = [cols] + [tuple(str(r[c]) for c in cols[:-1]) +
+                      (f"{r['other_bytes'] / r['parquet_bytes']:.3f}"
+                       if r["parquet_bytes"] else "-",) for r in rows]
+    widths = [max(len(row[i]) for row in cells) for i in range(len(cols))]
+    for row in cells:
+        print("  ".join(c.ljust(w) if i == 0 else c.rjust(w)
+                        for i, (c, w) in enumerate(zip(row, widths))))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))
