@@ -297,8 +297,9 @@ object CorpusAssembly {
   }
 
   /** [[assemble]] landed through the WRITE PLANE: the packed (and
-    * optionally shuffled) curation output commits to `table` as a
-    * normal load — append disposition, `_dlt_loads` ledger row — so
+    * optionally shuffled) curation output commits to `table` as one
+    * load package — append disposition, then the package's one
+    * `_dlt_loads` row, recorded after the append commits — so
     * the pipeline's product is a queryable lakehouse table with
     * provenance, not a frame that dies with the session (the
     * reference's pipelines always end at a destination). The heavy
@@ -316,6 +317,7 @@ object CorpusAssembly {
     assemble(docs, id, text, domain, benchmark, cfg, dsirTarget) {
       (packed, stages) =>
         disp.append(table, packed.drop("__text"), loadId)
+        disp.recordLoad(loadId)
         stages
     }
 }

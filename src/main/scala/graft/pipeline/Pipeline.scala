@@ -222,17 +222,23 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
   /** Run one load package over the given resources. Returns per-resource
     * row table names written. Schema version + pipeline state are synced
     * to the `_dlt_version` / `_dlt_pipeline_state` system tables after
-    * the package completes (reference state_sync.py:95-139). */
+    * the package completes (reference state_sync.py:95-139), then the
+    * package's one `_dlt_loads` row. */
   def run(resources: Seq[Resource], loadId: String): Map[String, Seq[String]] = {
     val out = resources.map(r => r.name -> runOne(r, loadId)).toMap
     syncSystemTables(loadId)
     out
   }
 
+  /** The package's tail: schema, state, then its one ledger row
+    * (reference load.py:605-624). A package that throws before this
+    * point leaves no status-0 row. */
   private def syncSystemTables(loadId: String): Unit = {
+    val hash = registry.versionHash
     registry.save(s"$root/_schemas")
-    dispositions.recordVersion(name, registry.versionHash, registry.toJson)
+    dispositions.recordVersion(name, hash, registry.toJson)
     syncState(loadId)
+    dispositions.recordLoad(loadId, name, hash)
   }
 
   /** Re-sync the CURRENT local state snapshot to `_dlt_pipeline_state`
@@ -279,8 +285,10 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
     * route such resources through [[run]]. Schema registry,
     * `_dlt_loads` ledger and pipeline state stay LOCAL (the reference
     * keeps them pipeline-side too: a custom destination has no system
-    * tables). Incremental resources work unchanged: the cursor window,
-    * boundary-fingerprint dedup and state advance are extract-side and
+    * tables); the package's one ledger row is written after every
+    * resource was sunk, as for [[run]]. Incremental resources work
+    * unchanged: the cursor window, boundary-fingerprint dedup and state
+    * advance are extract-side and
     * destination-agnostic — the cursor advances only after every table
     * of the resource was sunk, so a failing sink retries the same
     * window. Returns resource → tables sent. */
@@ -357,7 +365,6 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
             synchronized { metricsByResource += stateKey -> m }
           }
         }
-        dispositions.recordLoad(loadId, name)
         r.name -> sent
       }
     }.toMap
@@ -536,11 +543,9 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
           .withColumn(Ids.DltLoadId, lit(loadId))
           .withColumn(Pipeline.DriftColumnStamp, lit(dc.column))
           .withColumn(Pipeline.DriftPsiStamp, lit(psi)))
-        // package processed + a DEDICATED dead-letter ledger row
-        // (status 2, own namespace so a multi-resource package's
-        // status-0 row cannot shadow it) — monitoring sees quarantined
-        // loads straight off `_dlt_loads`
-        dispositions.recordLoad(loadId, name)
+        // a DEDICATED dead-letter ledger row (status 2, own namespace
+        // so the package's status-0 row cannot shadow it) — monitoring
+        // sees quarantined loads straight off `_dlt_loads`
         dispositions.recordLoad(loadId, s"$name#quarantine", status = 2)
         advance(frame)
         recordMetrics()
@@ -592,7 +597,6 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
           store.append(t, df,
             statsFor = if (t == tableName) r.hints.primaryKey else Nil)
         }
-        dispositions.recordLoad(loadId, name)
       case "replace" =>
         enforced.foreach { case (t, df) =>
           dispositions.replace(t, df, loadId, r.replaceStrategy)

@@ -65,7 +65,7 @@ object PlaneQueries {
       def drain(dir: String): Unit =
         graft.streaming.Streaming.intoPipeline(p,
           graft.streaming.Streaming.fileStream(c.spark, dir),
-          b => Resource("ev", b).withIncremental(cfg))
+          (b, _) => Resource("ev", b).withIncremental(cfg))
       drain(s"$tmp/b1")
       drain(s"$tmp/b2")
       p.store.read("ev").select("event_id", "user_id", "event_type")

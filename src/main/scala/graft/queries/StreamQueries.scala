@@ -37,7 +37,7 @@ object StreamQueries {
     "stream_pipeline_append" -> q { c =>
       val p = new Pipeline("st", Scratch.dir("graft-st"), c.spark)
       val src = Streaming.fileStream(c.spark, s"${c.dir}/events.parquet")
-      Streaming.intoPipeline(p, src, b =>
+      Streaming.intoPipeline(p, src, (b, _) =>
         Resource("events_stream", b.select("event_id", "user_id", "event_type")))
       p.store.read("events_stream")
         .select("event_id", "user_id", "event_type").orderBy("event_id")
@@ -151,8 +151,9 @@ object StreamQueries {
     },
 
     // streaming MERGE: revisions of the same key arrive on the stream;
-    // foreachBatch upserts each micro-batch through the segment-pruned
-    // merge path; the final table holds the highest revision per key
+    // each micro-batch is a merge load package through the pipeline
+    // (staging deduped per key on `rev`, segment-pruned delete-insert);
+    // the final table holds the highest revision per key
     "stream_merge_upsert" -> q { c =>
       val tmp = Scratch.dir("graft-stm")
       val ev = c.spark.read.parquet(s"${c.dir}/events.parquet")
@@ -162,11 +163,11 @@ object StreamQueries {
         .unionByName(ev.filter(col("event_id") % 3 === 0)
           .withColumn("value", col("value") * 2).withColumn("rev", lit(2L)))
         .write.parquet(s"$tmp/src")
-      val store = new TableStore(s"$tmp/store", c.spark)
+      val p = new Pipeline("stm", s"$tmp/store", c.spark)
       val src = Streaming.fileStream(c.spark, s"$tmp/src")
-      Streaming.intoMerge(store, src, "ev",
-        graft.write.MergeConfig(primaryKey = Seq("event_id"), dedupSort = Some("rev")))
-      store.read("ev")
+      val cfg = graft.write.MergeConfig(primaryKey = Seq("event_id"), dedupSort = Some("rev"))
+      Streaming.intoPipeline(p, src, (b, _) => Resource("ev", b).withMerge(cfg))
+      p.store.read("ev")
         .select(col("event_id"), col("user_id"),
           round(col("value").cast("decimal(18,4)") * 10000).cast("long").as("value_s"))
         .orderBy("event_id")
@@ -174,8 +175,9 @@ object StreamQueries {
 
     // streaming SCD2: two revision files admitted as SEPARATE micro-
     // batches (maxFilesPerTrigger=1, mtime order); each batch is a
-    // partitioned-SCD2 load (mergeKey scoping: only keys present in the
-    // batch may retire), validity boundaries keyed off the batch id
+    // partitioned-SCD2 load package through the pipeline (mergeKey
+    // scoping: only keys present in the batch may retire), validity
+    // boundaries keyed off the batch id
     "stream_scd2" -> q { c =>
       val tmp = Scratch.dir("graft-stscd")
       val base = c.t("orders").filter(col("o_orderkey") < 1000)
@@ -201,14 +203,16 @@ object StreamQueries {
       }
       emit(base, "r1", 1700000000000L)
       emit(changed, "r2", 1700009000000L)
-      val store = new TableStore(s"$tmp/store", c.spark)
+      val p = new Pipeline("stscd", s"$tmp/store", c.spark)
       val src = Streaming.fileStream(c.spark, s"$tmp/src",
         options = Map("maxFilesPerTrigger" -> "1"))
       val bounds = Seq("2024-01-01 00:00:00", "2024-06-01 00:00:00")
-      Streaming.intoScd2(store, src, "t", id =>
-        graft.write.Scd2Config(trackedColumns = Seq("o_orderkey", "price"),
-          boundaryTs = bounds(id.toInt), mergeKey = Seq("o_orderkey")))
-      store.read("t").select(
+      Streaming.intoPipeline(p, src, (b, id) =>
+        Resource("t", b, hints = graft.schema.TableHints(writeDisposition = "merge"),
+          scd2Config = Some(graft.write.Scd2Config(
+            trackedColumns = Seq("o_orderkey", "price"),
+            boundaryTs = bounds(id.toInt), mergeKey = Seq("o_orderkey")))))
+      p.store.read("t").select(
         col("o_orderkey"), col("price"),
         date_format(col("_dlt_valid_from"), "yyyy-MM-dd").as("valid_from"),
         date_format(col("_dlt_valid_to"), "yyyy-MM-dd").as("valid_to"))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.pipeline.{Pipeline, Resource}
-import graft.write.{Dispositions, Merge, MergeConfig, MergeStrategy, Scd2Config, TableStore}
+import graft.write.{Dispositions, TableStore}
 
 /** Structured-Streaming bridge for the load plane (SURVEY.md §2.8).
   *
@@ -17,7 +17,7 @@ import graft.write.{Dispositions, Merge, MergeConfig, MergeStrategy, Scd2Config,
   * deterministic row ids (dlt/common/storages/load_package.py). The
   * Spark-native expression of the same contract is a file-source stream
   * with `Trigger.AvailableNow` + `foreachBatch` feeding the SAME
-  * disposition operators used by batch loads — each micro-batch is a
+  * load path batch loads use ([[intoPipeline]]) — each micro-batch is a
   * load package whose id is the streaming `batchId`, the checkpoint
   * directory is the durable "what was already loaded" state, and
   * replays after failure hit the idempotent merge/append paths.
@@ -78,9 +78,17 @@ object Streaming {
   }
 
   /** Stream `source` into a pipeline: every micro-batch runs the full
-    * load path (normalize → contracts → disposition) as its own load
-    * package `s<batchId>`. The streaming-native equivalent of
-    * `Pipeline.run` for one resource.
+    * load path (normalize → contracts → disposition → ledger) as its own
+    * load package `s<batchId>`. The streaming-native equivalent of
+    * `Pipeline.run` for one resource, and the one stream route for every
+    * disposition: `template(batch, batchId)` builds the batch's
+    * resource, so a merge template attaches `withMerge(cfg)` (staged rows
+    * dedup per key on `dedupSort`, and a replayed batch re-merges
+    * idempotently on its keys), and an SCD2 template derives its
+    * `boundaryTs` from the batch id so validity boundaries are totally
+    * ordered across batches. A micro-batch is NOT a full snapshot, so a
+    * streamed SCD2 config MUST scope retirement with a `mergeKey`
+    * (partitioned SCD2): only entities present in the batch can retire.
     *
     * Incremental cursors compose: a template attaching
     * `.withIncremental(cfg)` gives each micro-batch the cursor window,
@@ -91,10 +99,15 @@ object Streaming {
     * checkpoint directory is lost (reference incremental semantics,
     * dlt/extract/incremental/__init__.py:92-970, on a stream). */
   def intoPipeline(pipeline: Pipeline, source: DataFrame,
-      template: DataFrame => Resource,
+      template: (DataFrame, Long) => Resource,
       checkpoint: Option[String] = None): Unit =
     drainAvailableNow(source, checkpoint) { (batch, id) =>
-      if (!batch.isEmpty) pipeline.run(Seq(template(batch)), loadIdOf(id))
+      if (!batch.isEmpty) {
+        val r = template(batch, id)
+        require(r.scd2Config.forall(_.mergeKey.nonEmpty),
+          "streaming scd2 requires a mergeKey: a micro-batch is not a full snapshot")
+        pipeline.run(Seq(r), loadIdOf(id))
+      }
     }
 
   /** Micro-batch load id, ZERO-PADDED so ids stay monotone under the
@@ -102,40 +115,6 @@ object Streaming {
     * for non-numeric ids — a bare "s10" would sort before "s2" and trip
     * the increasing-load-id contract at batch 10. */
   private def loadIdOf(id: Long): String = f"s$id%012d"
-
-  /** Stream micro-batches into the MERGE family: each batch is staged
-    * (deduped per key by `dedupSort`) and merged into `table` through
-    * the same segment-pruned [[Dispositions.merge]] batch loads use —
-    * an atomic manifest commit per micro-batch, so a replayed batch
-    * (failure recovery) re-merges idempotently on its keys. */
-  def intoMerge(store: TableStore, source: DataFrame, table: String,
-      cfg: MergeConfig, strategy: MergeStrategy = MergeStrategy.Upsert,
-      checkpoint: Option[String] = None): Unit = {
-    val d = new Dispositions(store, source.sparkSession)
-    drainAvailableNow(source, checkpoint) { (batch, id) =>
-      if (!batch.isEmpty)
-        d.merge(table, Merge.dedup(batch, cfg), cfg, loadIdOf(id), strategy)
-    }
-  }
-
-  /** Stream micro-batches into SCD2. A micro-batch is NOT a full
-    * snapshot, so the config MUST scope retirement with a `mergeKey`
-    * (partitioned SCD2): only entities present in the batch can retire
-    * — per-entity version history, the streaming-safe subset of SCD2
-    * semantics. `boundaryTs` comes from the batch id via `cfgFor` so
-    * validity boundaries are totally ordered across batches. */
-  def intoScd2(store: TableStore, source: DataFrame, table: String,
-      cfgFor: Long => Scd2Config, checkpoint: Option[String] = None): Unit = {
-    val d = new Dispositions(store, source.sparkSession)
-    drainAvailableNow(source, checkpoint) { (batch, id) =>
-      if (!batch.isEmpty) {
-        val cfg = cfgFor(id)
-        require(cfg.mergeKey.nonEmpty,
-          "streaming scd2 requires a mergeKey: a micro-batch is not a full snapshot")
-        d.scd2(table, batch, cfg, loadIdOf(id))
-      }
-    }
-  }
 
   /** Stream embedding batches into a persisted VECTOR COLLECTION
     * ([[graft.write.VectorSink]]): each micro-batch appends under the
@@ -218,7 +197,8 @@ object Streaming {
     // crash-between-append-and-commit replay.
     var maxWritten = maxBatchIdStat(store, out)
     drainAvailableNow(queries, checkpoint) { (batch, bid) =>
-      if (!batch.isEmpty && bid > maxWritten) {
+      // a replayed batch id is settled by the watermark, with no probe job
+      if (bid > maxWritten && !batch.isEmpty) {
         store.append(out, graft.write.VectorSink.topK(
             store, table, batch, id, vec, k, nprobe)
           .withColumn(Pipeline.BatchIdColumn, org.apache.spark.sql.functions.lit(bid)),
@@ -237,8 +217,9 @@ object Streaming {
     * the batch is shingled, the stored corpus is read candidate-sized
     * (the [[graft.ext.IncrementalDedup.checkBatch]] contract) — and
     * (c) landed into `table` through [[Dispositions.append]] as one
-    * load per micro-batch: `_dlt_load_id` stamped, one `_dlt_loads`
-    * ledger row, and O(1) replay idempotence via the max-`_batch_id`
+    * load package per micro-batch: `_dlt_load_id` stamped, one
+    * `_dlt_loads` row recorded after the append, and O(1) replay
+    * idempotence via the max-`_batch_id`
     * manifest stat (the [[probeCollection]] serve-plane discipline; the
     * same one-stream-owns-the-table contract applies).
     *
@@ -412,6 +393,7 @@ object Streaming {
             if (graft.ext.Dedup.rowCount(kept) > 0) {
               disp.append(table, kept, loadIdOf(bid),
                 statsFor = Seq(Pipeline.BatchIdColumn))
+              disp.recordLoad(loadIdOf(bid))
               maxWritten = bid
               landedBatches += 1
               refit.filter(rc => landedBatches % rc.every == 0)

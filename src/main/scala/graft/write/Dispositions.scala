@@ -30,7 +30,11 @@ object MergeStrategy {
   *
   * Each load runs through a staging table (`<table>__staging`), mirroring
   * the reference's staging dataset (sql_client.py:290), then commits the
-  * merged result atomically and records the load in `_dlt_loads`.
+  * merged result atomically. A disposition writes no `_dlt_loads` row:
+  * a load package may span many dispositions, so the package's owner
+  * ([[graft.pipeline.Pipeline]], [[graft.ext.CorpusAssembly.assembleTo]],
+  * [[graft.streaming.Streaming.curateInto]]) calls [[recordLoad]] once,
+  * after the package's last commit.
   */
 final class Dispositions(store: TableStore, spark: SparkSession) {
 
@@ -48,10 +52,8 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
   }
 
   def append(table: String, df: DataFrame, loadId: String,
-      statsFor: Seq[String] = Nil): Unit = {
+      statsFor: Seq[String] = Nil): Unit =
     store.append(table, stamp(df, loadId), statsFor)
-    recordLoad(loadId)
-  }
 
   def replace(table: String, df: DataFrame, loadId: String,
               strategy: ReplaceStrategy = ReplaceStrategy.TruncateAndInsert): Unit = {
@@ -82,7 +84,6 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
         store.overwrite(staging, stamp(df, loadId))
         store.adopt(staging, table)
     }
-    recordLoad(loadId)
   }
 
   /** Merge with SEGMENT PRUNING: only destination segments whose
@@ -103,7 +104,6 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     // pin a computed staging frame re-executes 3-5x per load
     val staged = Dedup.pin(stamp(staging, loadId))
     Dispositions.mergePruned(store, table, staged, cfg, strategy)
-    recordLoad(loadId)
   }
 
   /** SCD2 with SEGMENT PRUNING: active and closed rows live in
@@ -155,7 +155,6 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
         .unionByName(closed, allowMissingColumns = true)
       store.commitSegments(table, Nil, Seq(actives(active), closeds(allClosed, active)))
     }
-    recordLoad(loadId)
   }
 
   private val Scd2Marker = "__scd2_state"
@@ -166,10 +165,9 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     else df.withColumn(Ids.DltLoadId, lit(loadId))
 
   /** `_dlt_loads` system table (reference typing.py:40, load.py:605-624).
-    * One row per load PACKAGE, as in the reference: a package spanning
-    * many resources/dispatch slices records once — each extra append
-    * here is a Spark job plus a store commit, so per-slice recording
-    * serialized N tiny commits per load (round-3 bench finding).
+    * One status-0 row per load PACKAGE, as in the reference: the
+    * package's owner calls this once, after the package's last commit,
+    * so a package that throws before it completes leaves no row.
     *
     * The duplicate guard is PER INSTANCE (a store-keyed check would cost
     * a Spark read job on every load): two Dispositions instances over
@@ -296,12 +294,6 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
 
   val VersionTable = "_dlt_version"
   val StateTable = "_dlt_pipeline_state"
-
-  def loadIds: Seq[String] = store.readOption(LoadsTable) match {
-    case None => Nil
-    case Some(df) => df.select("load_id").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-  }
 }
 
 object Dispositions {
@@ -313,7 +305,7 @@ object Dispositions {
   /** The segment-pruned merge commit, shared by the instance `merge`
     * path and [[MergeChain]]'s root table (round-2 gap: the chain root
     * bypassed pruning and rewrote the whole table every load). Callers
-    * persist `staged` and record the load themselves. */
+    * persist `staged` themselves. */
   private[write] def mergePruned(store: TableStore, table: String,
       staged: DataFrame, cfg: MergeConfig, strategy: MergeStrategy): Unit = {
     val keys = (cfg.primaryKey ++ cfg.mergeKey).distinct

@@ -44,6 +44,22 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  /** `path:line` of every Scala line under `root` matching `pattern`,
+    * outside the `allowed` files (paths relative to `root`). */
+  def sourceHits(root: String, pattern: scala.util.matching.Regex,
+      allowed: String*): Vector[String] = {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Paths.get(root)
+    val files = scala.util.Using.resource(java.nio.file.Files.walk(dir))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector)
+    assert(files.nonEmpty, s"no sources under ${dir.toAbsolutePath}")
+    for {
+      f <- files if !allowed.contains(dir.relativize(f).toString)
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if pattern.findFirstIn(line).isDefined
+    } yield s"${dir.relativize(f)}:${i + 1}"
+  }
+
   /** Leak guard: a test must leave the session's cache empty. Every
     * pin belongs to a scope that releases it, and every other persist
     * is released on all paths, so a cached plan left behind is a leak

@@ -150,31 +150,15 @@ class ExtSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
-  /** `path:line` of every main-source line matching `pattern`, outside
-    * the one file (relative to `src/main/scala`) allowed to hold it. */
-  private def mainSourceHits(pattern: scala.util.matching.Regex,
-      allowed: String): Vector[String] = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val files = scala.util.Using.resource(java.nio.file.Files.walk(root))(
-      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector)
-    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
-    for {
-      f <- files if root.relativize(f).toString != allowed
-      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-      if pattern.findFirstIn(line).isDefined
-    } yield s"${root.relativize(f)}:${i + 1}"
-  }
-
   test("Dedup.pin is the only cache call in the main sources") {
-    val hits = mainSourceHits("""\.persist\(|\.cache\(\)""".r,
+    val hits = sourceHits("src/main/scala", """\.persist\(|\.cache\(\)""".r,
       "graft/ext/Dedup.scala")
     assert(hits.isEmpty,
       "cache call(s) outside Dedup.pin: pin into a Dedup.withPins scope instead")
   }
 
   test("graft.write.Codec is the only place that decides on a vector metric") {
-    val hits = mainSourceHits(
+    val hits = sourceHits("src/main/scala",
       """"(cosine-sq8|cosine-pq|cosine-opq|hamming-bq)"|metric ==|metric match""".r,
       "graft/write/Codec.scala")
     assert(hits.isEmpty,
@@ -183,7 +167,7 @@ class ExtSpec extends SparkSpec {
   }
 
   test("Signature.scala is the only place that names a banding projection") {
-    val hits = mainSourceHits(
+    val hits = sourceHits("src/main/scala",
       "bandedSig|bandedBlocks|pigeonholeBlocks|bandedWords|wordBands".r,
       "graft/ext/Signature.scala")
     assert(hits.isEmpty,

@@ -32,7 +32,7 @@ class StreamingSpec extends SparkSpec {
   test("intoPipeline runs the full load path per micro-batch") {
     val p = new Pipeline("sp", tmp("st-pipe"), spark)
     val src = Streaming.fileStream(spark, writeSourceDir())
-    Streaming.intoPipeline(p, src, b => Resource("rows", b))
+    Streaming.intoPipeline(p, src, (b, _) => Resource("rows", b))
     val out = p.store.read("rows")
     assert(out.count() === 3)
     // pipeline system columns present; load id carries the batch id
@@ -42,15 +42,16 @@ class StreamingSpec extends SparkSpec {
       === Set("s000000000000"))
   }
 
-  test("intoMerge upserts across genuine micro-batches (checkpoint resume)") {
+  test("intoPipeline merges across genuine micro-batches (checkpoint resume)") {
     val srcDir = tmp("st-mrg-src")
     val cp = tmp("st-mrg-cp")
-    val store = new TableStore(tmp("st-mrg-out"), spark)
+    val p = new Pipeline("smrg", tmp("st-mrg-out"), spark)
+    val store = p.store
     val cfg = graft.write.MergeConfig(primaryKey = Seq("id"), dedupSort = Some("rev"))
-    def drain(): Unit = Streaming.intoMerge(store,
+    def drain(): Unit = Streaming.intoPipeline(p,
       Streaming.fileStream(spark, srcDir,
         schema = Some(Seq((0L, "x", 0L)).toDF("id", "v", "rev").schema)),
-      "t", cfg, checkpoint = Some(cp))
+      (b, _) => Resource("t", b).withMerge(cfg), checkpoint = Some(cp))
     // batch 1: two keys
     Seq((1L, "a1", 1L), (2L, "b1", 1L)).toDF("id", "v", "rev")
       .write.mode("append").parquet(srcDir)
@@ -63,19 +64,25 @@ class StreamingSpec extends SparkSpec {
     drain()
     assert(store.read("t").orderBy("id").select("v").as[String].collect().toSeq
       === Seq("a2", "b1", "c1"))
+    // one ledger row per micro-batch
+    assert(p.dataset.loadIds === Seq("s000000000000", "s000000000001"))
   }
 
-  test("intoScd2 keeps per-entity version history across micro-batches") {
+  test("intoPipeline SCD2 keeps per-entity history across micro-batches") {
     val srcDir = tmp("st-scd-src")
     val cp = tmp("st-scd-cp")
-    val store = new TableStore(tmp("st-scd-out"), spark)
-    def cfgFor(id: Long) = graft.write.Scd2Config(
-      trackedColumns = Seq("id", "v"), mergeKey = Seq("id"),
-      boundaryTs = s"2024-01-0${id + 1} 00:00:00")
-    def drain(): Unit = Streaming.intoScd2(store,
-      Streaming.fileStream(spark, srcDir,
-        schema = Some(Seq((0L, "x")).toDF("id", "v").schema)),
-      "t", cfgFor, checkpoint = Some(cp))
+    val p = new Pipeline("sscd", tmp("st-scd-out"), spark)
+    val store = p.store
+    def scd2(b: org.apache.spark.sql.DataFrame, id: Long,
+        mergeKey: Seq[String] = Seq("id")) =
+      Resource("t", b, hints = graft.schema.TableHints(writeDisposition = "merge"),
+        scd2Config = Some(graft.write.Scd2Config(
+          trackedColumns = Seq("id", "v"), mergeKey = mergeKey,
+          boundaryTs = s"2024-01-0${id + 1} 00:00:00")))
+    def src = Streaming.fileStream(spark, srcDir,
+      schema = Some(Seq((0L, "x")).toDF("id", "v").schema))
+    def drain(): Unit =
+      Streaming.intoPipeline(p, src, (b, id) => scd2(b, id), checkpoint = Some(cp))
     Seq((1L, "a1"), (2L, "b1")).toDF("id", "v").write.mode("append").parquet(srcDir)
     drain()
     // batch 2 revises entity 1 only; entity 2 is absent from the batch
@@ -86,6 +93,14 @@ class StreamingSpec extends SparkSpec {
     assert(out.count() === 3) // a1 retired, a2 + b1 active
     assert(out.filter(col("_dlt_valid_to").isNull).orderBy("id")
       .select("v").as[String].collect().toSeq === Seq("a2", "b1"))
+    // a1 retires at batch 1's boundary
+    assert(out.filter(col("v") === "a1").select(date_format(col("_dlt_valid_to"),
+      "yyyy-MM-dd")).as[String].head() === "2024-01-02")
+    // a batch is not a snapshot: an SCD2 template without a mergeKey fails
+    val e = intercept[Exception](Streaming.intoPipeline(p, src,
+      (b, id) => scd2(b, id, mergeKey = Nil)))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => Option(x.getMessage).exists(_.contains("requires a mergeKey"))), e)
   }
 
   test("intoPipeline + incremental: cursor window applies across micro-batches") {
@@ -101,7 +116,7 @@ class StreamingSpec extends SparkSpec {
       Streaming.intoPipeline(p,
         Streaming.fileStream(spark, srcDir,
           schema = Some(Seq((0L, 0L, "x")).toDF("id", "ts", "v").schema)),
-        b => Resource("rows", b).withIncremental(cfg))
+        (b, _) => Resource("rows", b).withIncremental(cfg))
     }
     Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("id", "ts", "v")
       .write.mode("append").parquet(srcDir)
@@ -139,7 +154,7 @@ class StreamingSpec extends SparkSpec {
       Streaming.intoPipeline(p,
         Streaming.fileStream(spark, srcDir,
           schema = Some(Seq((0L, 0L, "x")).toDF("id", "ts", "v").schema)),
-        b => Resource("rows", b).withMerge(mrg).withIncremental(inc))
+        (b, _) => Resource("rows", b).withMerge(mrg).withIncremental(inc))
     }
     Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("id", "ts", "v")
       .write.mode("append").parquet(srcDir)
@@ -175,7 +190,7 @@ class StreamingSpec extends SparkSpec {
       Streaming.intoPipeline(p,
         Streaming.fileStream(spark, srcDir,
           schema = Some(Seq((0L, 0L, "x")).toDF("id", "ts", "v").schema)),
-        b => Resource("rows", b).withIncremental(inc))
+        (b, _) => Resource("rows", b).withIncremental(inc))
     }
     Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("id", "ts", "v")
       .write.mode("append").parquet(srcDir)
@@ -238,6 +253,29 @@ class StreamingSpec extends SparkSpec {
       k = 3, nprobe = 4, out = "hits")
     assert(store.read("hits").count() === 18L,
       "replayed batch ids must be skipped, not re-appended")
+  }
+
+  test("a replayed probeCollection batch runs no Spark job") {
+    import graft.write.VectorSink
+    val store = new TableStore(tmp("st-annr"), spark)
+    val corpus = (0L until 16L).map { i =>
+      (i, Array.tabulate(4)(k => math.sin(i * 0.7 + k).toFloat))
+    }.toDF("vec_id", "embedding")
+    VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding", nlist = 2)
+    val srcDir = tmp("st-annr-src")
+    corpus.filter($"vec_id" < 4).repartition(2)
+      .write.mode("overwrite").parquet(s"$srcDir/q")
+    val src = Streaming.fileStream(spark, s"$srcDir/q",
+      options = Map("maxFilesPerTrigger" -> "1"))
+    // no checkpoint: each drain restarts at batch id 0 over the same `out`
+    def probe() = countJobs(Streaming.probeCollection(store, src, "emb",
+      "vec_id", "embedding", k = 2, nprobe = 2, out = "hits"))._2
+    probe()
+    val hits = store.read("hits").count()
+    assert(hits === 8L)
+    val replayJobs = probe()
+    assert(store.read("hits").count() === hits)
+    assert(replayJobs === 0, s"replayed probe batches ran $replayJobs Spark jobs")
   }
 
   test("probeCollection refuses quantized collections before the stream starts") {
