@@ -56,10 +56,10 @@ object BpeTrainer {
   val DriverLoopRounds = 64
 
   /** Driver-side vocabulary budget (distinct word types). Above it the
-    * distributed loop runs regardless of rounds, with its lineage
-    * capped by a localCheckpoint every [[CheckpointEvery]] rounds. */
+    * distributed loop runs regardless of rounds, with its plan
+    * capped by a [[Dedup.boundary]] every [[BoundaryEvery]] rounds. */
   val DriverVocabBudget = 4000000L
-  val CheckpointEvery = 32
+  val BoundaryEvery = 32
 
   /** Learn `rounds` merges from the corpus; returns the merge table
     * (round, merge_a, merge_b, merged, score) in learning order.
@@ -214,9 +214,9 @@ object BpeTrainer {
         reps = reps.withColumn("rep",
           call_function("replace", col("rep"),
             lit(s" $a $b "), lit(s" $a$b ")))
-        // cap the lineage: round r otherwise carries r stacked replace
+        // cap the plan: round r otherwise carries r stacked replace
         // projections, and past ~100 rounds analysis time dominates
-        if (r % CheckpointEvery == 0) reps = reps.localCheckpoint()
+        if (r % BoundaryEvery == 0) reps = Dedup.boundary(reps)
         r += 1
       }
     }

@@ -96,7 +96,8 @@ object Dedup {
     *    the caller's scope, and the caller consumes the frame inside it;
     *  - a pin made outside any scope is not persisted: the frame comes
     *    back unchanged and its consumers recompute it, as frames that
-    *    escape a scope already do. */
+    *    escape a scope already do.
+    * [[boundary]] pins under the same rule. */
   private val pinScope =
     new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]()
 
@@ -125,7 +126,9 @@ object Dedup {
     * not yet materialized N times pays N jobs (AQE gives each reference
     * its own table-cache query stage and does not reuse them), so
     * [[build]] a plan's pins at the action that reads them, or read
-    * each pin once per plan. */
+    * each pin once per plan. Consumers of a pin still analyze its whole
+    * plan (cache substitution follows analysis); a stage boundary in a
+    * chain of stages is a [[boundary]]. */
   private[graft] def pin(df: DataFrame): DataFrame = pinScope.get() match {
     case null => df
     case _ if cached(df) => df
@@ -133,6 +136,31 @@ object Dedup {
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       scope += p
       p
+  }
+
+  /** The one materialization boundary: [[pin]] `df` into the current
+    * [[withPins]] scope and return a frame over its rows whose plan is
+    * one leaf (a `LogicalRDD` over the pin's RDD). Its consumers
+    * analyze, optimize and plan the leaf, not `df`'s plan, so a chain
+    * of boundaries is analyzed in O(stage) rather than re-analyzing
+    * every stage above it. The leaf reads the pin's cached blocks,
+    * filled by the first action that reads them; a lost block recomputes
+    * from `df`'s lineage, and so does a read after the scope released
+    * the pin: a frame used outside its scope recomputes instead of
+    * failing. Outside any scope nothing is pinned and every consumer
+    * recomputes `df`. Making the boundary runs the shuffle stages of
+    * `df`'s adaptive plan, charged to the caller's call site; the pin's
+    * own stage runs inside the first consuming action. */
+  private[graft] def boundary(df: DataFrame): DataFrame = asCaller(df) {
+    val p = pin(df)
+    val qe = p.queryExecution
+    val rows = qe.withCachedData match {
+      case r: InMemoryRelation =>
+        r.cacheBuilder.serializer.convertCachedBatchToInternalRow(
+          r.cacheBuilder.cachedColumnBuffers, r.output, r.output, qe.sparkSession.sessionState.conf)
+      case _ => qe.toRdd
+    }
+    org.apache.spark.sql.graft.ColumnBridge.leaf(rows.map(_.copy()), p)
   }
 
   private def cached(df: DataFrame): Boolean = {
@@ -153,14 +181,17 @@ object Dedup {
     * scope nothing is pinned, and `build` does nothing. */
   private[graft] def build(df: DataFrame): DataFrame = {
     if (pinScope.get() != null)
-      org.apache.spark.GraftAccess.outsideExecution(df.sparkSession.sparkContext,
-          Thread.currentThread.getStackTrace.toSeq.dropWhile(f =>
-            !f.getClassName.startsWith("graft.") ||
-              f.getClassName.startsWith("graft.ext.Dedup$"))) {
-        pinsOf(df.queryExecution.withCachedData).foreach(buildPin)
-      }
+      asCaller(df)(pinsOf(df.queryExecution.withCachedData).foreach(buildPin))
     df
   }
+
+  /** Runs `body` outside any SQL execution, with the jobs it starts
+    * charged to the graft frame that called into this object. */
+  private def asCaller[A](df: DataFrame)(body: => A): A =
+    org.apache.spark.GraftAccess.outsideExecution(df.sparkSession.sparkContext,
+        Thread.currentThread.getStackTrace.toSeq.dropWhile(f =>
+          !f.getClassName.startsWith("graft.") ||
+            f.getClassName.startsWith("graft.ext.Dedup$")))(body)
 
   /** Rows of `df`: read off the row count a built pin keeps (0 exactly
     * when it built no row), so a pin is counted with no job past its

@@ -1702,15 +1702,12 @@ object ExtQueries {
       import graft.ext.CorpusAssembly
       val (corpus, bench) = AssemblyFixture.corpusAndBench(c)
       val cfg = AssemblyFixture.baseCfg
-      CorpusAssembly.assemble(corpus, "doc_id", "ltext", "source", bench, cfg) {
-        (packed, _) =>
-          // materialize while the stage pins are alive (loan contract)
-          packed.select(col("doc_id"), col("source"),
-            col("n_tokens").cast("long").as("n_tokens"), col("tok_offset"),
-            col("first_chunk"), col("last_chunk"))
-            .orderBy("doc_id")
-            .localCheckpoint(true)
-      }
+      val (packed, _) =
+        CorpusAssembly.assemble(corpus, "doc_id", "ltext", "source", bench, cfg)
+      packed.select(col("doc_id"), col("source"),
+        col("n_tokens").cast("long").as("n_tokens"), col("tok_offset"),
+        col("first_chunk"), col("last_chunk"))
+        .orderBy("doc_id")
     },
 
     // the assembly landed through the WRITE PLANE: assembleTo commits
@@ -1766,19 +1763,17 @@ object ExtQueries {
         classifier = Some(ClassifierStage(
           seed = t => length(t) >= 300, threshold = 0.5)),
         shuffle = Some((42L, 1)))
-      CorpusAssembly.assemble(corpus, "doc_id", "ltext", "source", bench, cfg) {
-        (packed, stages) =>
-          OracleStash.put("ops_corpus_assembly_v2",
-            corpusAssemblyOracleSql(canonical = true,
-              classifier = Some((QualityClassifier.scoreExprSql(
-                stages.classifier.get), 0.5)),
-              shuffle = Some((42L, 1))))
-          packed.select(col("doc_id"), col("source"),
-            col("n_tokens").cast("long").as("n_tokens"), col("tok_offset"),
-            col("first_chunk"), col("last_chunk"), col("shuffle_rank"))
-            .orderBy("doc_id")
-            .localCheckpoint(true)
-      }
+      val (packed, stages) =
+        CorpusAssembly.assemble(corpus, "doc_id", "ltext", "source", bench, cfg)
+      OracleStash.put("ops_corpus_assembly_v2",
+        corpusAssemblyOracleSql(canonical = true,
+          classifier = Some((QualityClassifier.scoreExprSql(
+            stages.classifier.get), 0.5)),
+          shuffle = Some((42L, 1))))
+      packed.select(col("doc_id"), col("source"),
+        col("n_tokens").cast("long").as("n_tokens"), col("tok_offset"),
+        col("first_chunk"), col("last_chunk"), col("shuffle_rank"))
+        .orderBy("doc_id")
     },
 
     // ---- multimodal plumbing (stub codec, real plan shape) --------------

@@ -44,6 +44,9 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  /** Ids of the RDDs the session's context holds persisted. */
+  def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   /** `path:line` of every Scala line under `root` matching `pattern`,
     * outside the `allowed` files (paths relative to `root`). */
   def sourceHits(root: String, pattern: scala.util.matching.Regex,

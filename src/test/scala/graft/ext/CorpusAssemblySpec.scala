@@ -58,53 +58,53 @@ class CorpusAssemblySpec extends SparkSpec {
       maxContaminatedShare = 0.15, mixAlpha = 1.0, domainCap = 2,
       packBudget = 64L)
 
-    CorpusAssembly.assemble(docs, "doc_id", "text", "domain", bench, cfg) {
-      (packed, stages) =>
-        val rows = packed.select(col("doc_id"), col("domain"),
-          col("n_tokens").cast("long"), col("tok_offset"),
-          col("first_chunk"), col("last_chunk"), col("__text"))
-          .orderBy("doc_id").collect()
+    Dedup.withPins {
+      val (packed, stages) = CorpusAssembly.assemble(docs, "doc_id", "text", "domain", bench, cfg)
+      val rows = packed.select(col("doc_id"), col("domain"),
+        col("n_tokens").cast("long"), col("tok_offset"),
+        col("first_chunk"), col("last_chunk"), col("__text"))
+        .orderBy("doc_id").collect()
 
-        // stage-by-stage survivors
-        assert(stages("langid") === 9) // spanish 10,11 out
-        assert(stages("quality") === 8) // symbol-heavy 12 out
-        assert(stages("line_strip") === 8) // strip changes text, not rows
-        assert(stages("near_dup") === 7) // 3 collapses into keeper 1
-        assert(stages("decontaminated") === 6) // 13 out
-        // α=1 keeps everything; cap=2 trims a.com (1,2,4) to its two
-        // longest — 4 is the longest by construction
-        assert(stages("mixed_capped") === 5)
+      // stage-by-stage survivors
+      assert(stages("langid") === 9) // spanish 10,11 out
+      assert(stages("quality") === 8) // symbol-heavy 12 out
+      assert(stages("line_strip") === 8) // strip changes text, not rows
+      assert(stages("near_dup") === 7) // 3 collapses into keeper 1
+      assert(stages("decontaminated") === 6) // 13 out
+      // α=1 keeps everything; cap=2 trims a.com (1,2,4) to its two
+      // longest — 4 is the longest by construction
+      assert(stages("mixed_capped") === 5)
 
-        val ids = rows.map(_.getLong(0)).toSeq
-        assert(ids.contains(4L), "longest a.com doc must survive the cap")
-        assert(rows.map(r => r.getString(1)).groupBy(identity)
-          .forall(_._2.length <= 2), "per-domain cap violated")
+      val ids = rows.map(_.getLong(0)).toSeq
+      assert(ids.contains(4L), "longest a.com doc must survive the cap")
+      assert(rows.map(r => r.getString(1)).groupBy(identity)
+        .forall(_._2.length <= 2), "per-domain cap violated")
 
-        // boilerplate line is gone from every surviving text
-        assert(rows.forall(!_.getString(6).contains(boiler)))
+      // boilerplate line is gone from every surviving text
+      assert(rows.forall(!_.getString(6).contains(boiler)))
 
-        // the carried n_tokens IS the tokenizer's count of the cleaned
-        // text (no silent re-tokenization drift anywhere downstream)
-        val recount = packed
-          .select(col("doc_id"), col("n_tokens"),
-            TextOps.bpeTokenCount(col("__text")).as("again"))
-          .filter(col("n_tokens") =!= col("again")).count()
-        assert(recount === 0)
+      // the carried n_tokens IS the tokenizer's count of the cleaned
+      // text (no silent re-tokenization drift anywhere downstream)
+      val recount = packed
+        .select(col("doc_id"), col("n_tokens"),
+          TextOps.bpeTokenCount(col("__text")).as("again"))
+        .filter(col("n_tokens") =!= col("again")).count()
+      assert(recount === 0)
 
-        // tok_offset is the exclusive prefix sum of n_tokens in id order
-        val byId = rows.sortBy(_.getLong(0))
-        var run = 0L
-        byId.foreach { r =>
-          assert(r.getLong(3) === run,
-            s"doc ${r.getLong(0)} offset ${r.getLong(3)} != $run")
-          run += r.getLong(2)
-        }
-        // chunk interval honors the budget
-        byId.foreach { r =>
-          assert(r.getLong(4) === r.getLong(3) / 64L)
-          assert(r.getLong(5) ===
-            (r.getLong(3) + math.max(r.getLong(2), 1L) - 1L) / 64L)
-        }
+      // tok_offset is the exclusive prefix sum of n_tokens in id order
+      val byId = rows.sortBy(_.getLong(0))
+      var run = 0L
+      byId.foreach { r =>
+        assert(r.getLong(3) === run,
+          s"doc ${r.getLong(0)} offset ${r.getLong(3)} != $run")
+        run += r.getLong(2)
+      }
+      // chunk interval honors the budget
+      byId.foreach { r =>
+        assert(r.getLong(4) === r.getLong(3) / 64L)
+        assert(r.getLong(5) ===
+          (r.getLong(3) + math.max(r.getLong(2), 1L) - 1L) / 64L)
+      }
     }
   }
 
@@ -124,13 +124,13 @@ class CorpusAssemblySpec extends SparkSpec {
     // keeping ALL bands makes the stage a no-op: identical survivors,
     // but the perplexity count now appears between decon and cap
     val all = base.copy(perplexityKeep = Some(Set("head", "middle", "tail")))
-    CorpusAssembly.assemble(docs, "doc_id", "text", "domain", bench, all) {
-      (packed, stages) =>
-        assert(stages("perplexity") === stages("decontaminated"))
-        assert(stages.counts.map(_._1).containsSlice(
-          Seq("decontaminated", "perplexity", "mixed_capped")))
-        assert(packed.select("doc_id").as[Long].collect().length
-          === stages("mixed_capped").toInt)
+    Dedup.withPins {
+      val (packed, stages) = CorpusAssembly.assemble(docs, "doc_id", "text", "domain", bench, all)
+      assert(stages("perplexity") === stages("decontaminated"))
+      assert(stages.counts.map(_._1).containsSlice(
+        Seq("decontaminated", "perplexity", "mixed_capped")))
+      assert(packed.select("doc_id").as[Long].collect().length
+        === stages("mixed_capped").toInt)
     }
 
     // keeping only the head band must keep exactly the docs the
@@ -153,12 +153,13 @@ class CorpusAssemblySpec extends SparkSpec {
     assert(headIds.forall(Set(1L, 2L)),
       s"phrase-repeating docs should be the most fluent, got $headIds")
     val headOnly = base.copy(perplexityKeep = Some(Set("head")))
-    CorpusAssembly.assemble(varied, "doc_id", "text", "domain", bench, headOnly) {
-      (packed, stages) =>
-        assert(stages("perplexity") === headIds.size.toLong)
-        val survivors = packed.select("doc_id").as[Long].collect().toSet
-        assert(survivors.subsetOf(headIds),
-          s"survivors $survivors must come from the head band $headIds")
+    Dedup.withPins {
+      val (packed, stages) = CorpusAssembly.assemble(varied, "doc_id", "text", "domain",
+        bench, headOnly)
+      assert(stages("perplexity") === headIds.size.toLong)
+      val survivors = packed.select("doc_id").as[Long].collect().toSet
+      assert(survivors.subsetOf(headIds),
+        s"survivors $survivors must come from the head band $headIds")
     }
   }
 
@@ -194,34 +195,34 @@ class CorpusAssemblySpec extends SparkSpec {
       classifier = Some(ClassifierStage(
         seed = t => length(t) < seedCut, threshold = 0.5)),
       shuffle = Some((42L, 1)))
-    CorpusAssembly.assemble(docs, "doc_id", "text", "domain", bench, cfg) {
-      (packed, stages) =>
-        val rows = packed.select(col("doc_id"), col("shuffle_rank"))
-          .as[(Long, Long)].collect()
-        val ids = rows.map(_._1).toSet
-        // canonical near-dup resolution kept the better copy, and the
-        // quality comparison really ran (min-id would keep 20)
-        assert(stages("near_dup") === 5)
-        // classifier stage ran, returned its model, and every packed
-        // doc scores at/above the threshold under THAT model (later
-        // stages only drop rows, never re-admit)
-        assert(stages.classifier.isDefined)
-        val model = stages.classifier.get
-        val below = packed.filter(
-          QualityClassifier.score(model, col("__text")) < 0.5).count()
-        assert(below === 0L,
-          "a packed doc scored under the classifier threshold")
-        // the terminal shuffle emits an exact 0..n-1 permutation
-        assert(rows.map(_._2).sorted.toSeq ===
-          (0L until rows.length.toLong))
-        // the canonical keeper itself survived to the packed output
-        // (min-id resolution would have kept 20), and the classifier
-        // kept the seed-like shorts while dropping the off-seed longs
-        assert(ids.contains(21L) && !ids.contains(20L),
-          s"canonical selection must keep 21 over 20, got $ids")
-        assert(stages("classifier_kept") === 3,
-          "the classifier keep must retain exactly the short cluster")
-        assert(ids === Set(5L, 7L, 21L), s"unexpected survivors: $ids")
+    Dedup.withPins {
+      val (packed, stages) = CorpusAssembly.assemble(docs, "doc_id", "text", "domain", bench, cfg)
+      val rows = packed.select(col("doc_id"), col("shuffle_rank"))
+        .as[(Long, Long)].collect()
+      val ids = rows.map(_._1).toSet
+      // canonical near-dup resolution kept the better copy, and the
+      // quality comparison really ran (min-id would keep 20)
+      assert(stages("near_dup") === 5)
+      // classifier stage ran, returned its model, and every packed
+      // doc scores at/above the threshold under THAT model (later
+      // stages only drop rows, never re-admit)
+      assert(stages.classifier.isDefined)
+      val model = stages.classifier.get
+      val below = packed.filter(
+        QualityClassifier.score(model, col("__text")) < 0.5).count()
+      assert(below === 0L,
+        "a packed doc scored under the classifier threshold")
+      // the terminal shuffle emits an exact 0..n-1 permutation
+      assert(rows.map(_._2).sorted.toSeq ===
+        (0L until rows.length.toLong))
+      // the canonical keeper itself survived to the packed output
+      // (min-id resolution would have kept 20), and the classifier
+      // kept the seed-like shorts while dropping the off-seed longs
+      assert(ids.contains(21L) && !ids.contains(20L),
+        s"canonical selection must keep 21 over 20, got $ids")
+      assert(stages("classifier_kept") === 3,
+        "the classifier keep must retain exactly the short cluster")
+      assert(ids === Set(5L, 7L, 21L), s"unexpected survivors: $ids")
     }
   }
 
@@ -249,6 +250,28 @@ class CorpusAssemblySpec extends SparkSpec {
     assert(ledger === 1L, "exactly one ledger row for the load")
   }
 
+  test("withPins releases every RDD that assemble and components persist") {
+    val bench = Seq((900L, "benchmark question unseen here")).toDF("doc_id", "text")
+    val docs = Seq(
+      (5L, "b.com", en("delta")), (7L, "c.com", en("zeta")),
+      (8L, "c.com", en("zeta")), (9L, "a.com", en("omega")))
+      .toDF("doc_id", "domain", "text")
+    val before = persistedRdds
+    Dedup.withPins {
+      val (packed, stages) = CorpusAssembly.assemble(docs, "doc_id", "text", "domain", bench,
+        AssemblyConfig(lineMinDocs = 2, mixAlpha = 1.0, domainCap = 2, packBudget = 64L))
+      assert(packed.count() === stages("mixed_capped"))
+      assert((persistedRdds -- before).nonEmpty)
+    }
+    assert(persistedRdds -- before === Set.empty[Int])
+    Dedup.withPins {
+      val edges = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
+      assert(graft.operators.ConnectedComponents.components(edges, "a", "b")
+        .select("component").as[Long].collect().toSet === Set(1L))
+    }
+    assert(persistedRdds -- before === Set.empty[Int])
+  }
+
   test("optional DSIR stage keeps the target-matching survivors") {
     val bench = Seq((900L, "benchmark question unseen here")).toDF("doc_id", "text")
     val docs = Seq(
@@ -265,21 +288,23 @@ class CorpusAssemblySpec extends SparkSpec {
       .toDF("doc_id", "text")
 
     // k >= survivors: the stage is a no-op but its count is surfaced
-    CorpusAssembly.assemble(docs, "doc_id", "text", "domain", bench,
-      base.copy(dsirKeep = 100), Some(target)) { (_, stages) =>
-        assert(stages("dsir_selected") === stages("decontaminated"))
-        assert(stages.counts.map(_._1).containsSlice(
-          Seq("decontaminated", "dsir_selected", "mixed_capped")))
+    Dedup.withPins {
+      val (_, stages) = CorpusAssembly.assemble(docs, "doc_id", "text", "domain", bench,
+        base.copy(dsirKeep = 100), Some(target))
+      assert(stages("dsir_selected") === stages("decontaminated"))
+      assert(stages.counts.map(_._1).containsSlice(
+        Seq("decontaminated", "dsir_selected", "mixed_capped")))
     }
 
     // selective k: the kept ids must be exactly the standalone
     // operator's top-k over the same survivor set (the preamble-sharing
     // docs all resemble the target; ranking is deterministic)
-    CorpusAssembly.assemble(docs, "doc_id", "text", "domain", bench,
-      base.copy(dsirKeep = 3, domainCap = 10), Some(target)) { (packed, stages) =>
-        assert(stages("dsir_selected") === 3L)
-        val survivors = packed.select("doc_id").as[Long].collect().toSet
-        assert(survivors.size === 3)
+    Dedup.withPins {
+      val (packed, stages) = CorpusAssembly.assemble(docs, "doc_id", "text", "domain", bench,
+        base.copy(dsirKeep = 3, domainCap = 10), Some(target))
+      assert(stages("dsir_selected") === 3L)
+      val survivors = packed.select("doc_id").as[Long].collect().toSet
+      assert(survivors.size === 3)
     }
   }
 

@@ -157,6 +157,46 @@ class ExtSpec extends SparkSpec {
       "cache call(s) outside Dedup.pin: pin into a Dedup.withPins scope instead")
   }
 
+  test("boundary recomputes a lost block of a chain from lineage") {
+    Dedup.withPins {
+      val before = persistedRdds
+      val first = Dedup.boundary(docs.select(col("doc_id"),
+        (length(col("text")) % 3).as("r")))
+      val firstRdds = persistedRdds -- before
+      val second = Dedup.boundary(first.groupBy("r").agg(count(lit(1)).as("n")))
+      // a fresh consumer of both boundaries per read, so no read reuses
+      // an earlier read's shuffle output
+      def chain = first.join(second, "r").orderBy("doc_id").collect().toSeq
+      val rows = chain
+      assert(firstRdds.nonEmpty, "the first boundary persisted nothing")
+      firstRdds.foreach(org.apache.spark.LostBlocks.remove)
+      assert(chain === rows)
+      (persistedRdds -- before).foreach(org.apache.spark.LostBlocks.remove)
+      assert(chain === rows)
+    }
+  }
+
+  test("a frame eight boundaries deep analyzes as one leaf") {
+    Dedup.withPins {
+      val chain = Iterator.iterate(docs.select(col("doc_id"), lit(1L).as("n"))) { f =>
+        // a self-join per stage: without the leaf the analyzed plan doubles
+        Dedup.boundary(f.join(f.select(col("doc_id"), col("n").as("m")), "doc_id")
+          .select(col("doc_id"), (col("n") + col("m")).as("n")))
+      }.slice(1, 9).toSeq
+      val sizes = chain.map(_.filter(col("n") > 0L).queryExecution.analyzed
+        .collect { case p => p }.size)
+      assert(sizes.distinct.size === 1, s"analyzed plan sizes grow with depth: $sizes")
+      assert(chain.last.select("n").as[Long].collect().toSet === Set(256L))
+    }
+  }
+
+  test("checkpoints appear only in Dedup.scala") {
+    val hits = sourceHits("src/main/scala", """localCheckpoint\(|\.checkpoint\(""".r,
+      "graft/ext/Dedup.scala")
+    assert(hits.isEmpty,
+      s"checkpoint call(s) outside Dedup: $hits — use Dedup.boundary instead")
+  }
+
   test("graft.write.Codec is the only place that decides on a vector metric") {
     val hits = sourceHits("src/main/scala",
       """"(cosine-sq8|cosine-pq|cosine-opq|hamming-bq)"|metric ==|metric match""".r,

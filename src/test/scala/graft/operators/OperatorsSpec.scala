@@ -145,17 +145,19 @@ class OperatorsSpec extends SparkSpec {
       === Seq(("a", "a"), ("b", "a"), ("c", "a")))
   }
 
-  test("connected components use reliable checkpointing when a dir is supplied") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
+  test("connected components recompute a lost block") {
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
-    val out = ConnectedComponents.components(edges, "a", "b",
-      checkpointDir = Some(dir))
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    assert(out === Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L)))
-    // checkpoint data actually landed on the reliable path
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-    assert(wrote > 0, s"no checkpoint files under $dir")
+    val expected = Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L))
+    graft.ext.Dedup.withPins {
+      val before = persistedRdds
+      val out = ConnectedComponents.components(edges, "a", "b").orderBy("id")
+      assert(out.as[(Long, Long)].collect().toSeq === expected)
+      val made = persistedRdds -- before
+      assert(made.nonEmpty, "the rounds' boundaries persisted nothing")
+      // every round's blocks are lost: the labels recompute from lineage
+      made.foreach(org.apache.spark.LostBlocks.remove)
+      assert(out.as[(Long, Long)].collect().toSeq === expected)
+    }
   }
 
   test("interval overlap join matches brute force and emits each pair once") {
