@@ -103,7 +103,26 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     // and twice more under the range-layout sampling pass — without the
     // pin a computed staging frame re-executes 3-5x per load
     val staged = Dedup.pin(stamp(staging, loadId))
-    Dispositions.mergePruned(store, table, staged, cfg, strategy)
+    val keys = (cfg.primaryKey ++ cfg.mergeKey).distinct
+    def result(dest: Option[DataFrame]): DataFrame = strategy match {
+      case MergeStrategy.DeleteInsert => Merge.deleteInsert(dest, staged, cfg)
+      case MergeStrategy.Upsert => Merge.upsert(dest, staged, cfg)
+      case MergeStrategy.InsertOnly => Merge.insertOnly(dest, staged, cfg)
+    }
+    val segs = if (store.exists(table)) store.segments(table) else Nil
+    if (segs.isEmpty)
+      store.overwrite(table, result(None), statsFor = keys, rangeBy = keys)
+    else Dispositions.partitionByOverlap(segs, staged, Merge.keyGroups(cfg)) match {
+      case Some((touched, untouched)) if untouched.nonEmpty =>
+        val dest =
+          if (touched.isEmpty) None
+          else Some(store.readSegmentsApplied(table, touched))
+        store.replaceSegments(table, untouched, result(dest),
+          statsFor = keys, rangeBy = keys)
+      case _ =>
+        store.overwrite(table, result(Some(store.read(table))),
+          statsFor = keys, rangeBy = keys)
+    }
   }
 
   /** SCD2 with SEGMENT PRUNING: active and closed rows live in
@@ -301,37 +320,6 @@ object Dispositions {
   /** Last issued load-id timestamp in microseconds (JVM-wide so two
     * Dispositions instances over one store can't collide either). */
   private val lastLoadMicros = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** The segment-pruned merge commit, shared by the instance `merge`
-    * path and [[MergeChain]]'s root table (round-2 gap: the chain root
-    * bypassed pruning and rewrote the whole table every load). Callers
-    * persist `staged` themselves. */
-  private[write] def mergePruned(store: TableStore, table: String,
-      staged: DataFrame, cfg: MergeConfig, strategy: MergeStrategy): Unit = {
-    val keys = (cfg.primaryKey ++ cfg.mergeKey).distinct
-    def result(dest: Option[DataFrame]): DataFrame = strategy match {
-      case MergeStrategy.DeleteInsert => Merge.deleteInsert(dest, staged, cfg)
-      case MergeStrategy.Upsert => Merge.upsert(dest, staged, cfg)
-      case MergeStrategy.InsertOnly => Merge.insertOnly(dest, staged, cfg)
-    }
-    store.readOption(table) match {
-      case None =>
-        store.overwrite(table, result(None), statsFor = keys, rangeBy = keys)
-      case Some(_) =>
-        val segs = store.segments(table)
-        partitionByOverlap(segs, staged, Merge.keyGroups(cfg)) match {
-          case Some((touched, untouched)) if untouched.nonEmpty =>
-            val dest =
-              if (touched.isEmpty) None
-              else Some(store.readSegmentsApplied(table, touched))
-            store.replaceSegments(table, untouched, result(dest),
-              statsFor = keys, rangeBy = keys)
-          case _ =>
-            store.overwrite(table, result(Some(store.read(table))),
-              statsFor = keys, rangeBy = keys)
-        }
-    }
-  }
 
   /** Split segments into (touched, untouched) by overlap between each
     * segment's key-range stats and the staged key ranges.

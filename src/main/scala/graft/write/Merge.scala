@@ -34,7 +34,8 @@ final case class MergeConfig(
   */
 object Merge {
 
-  private def keyCols(cfg: MergeConfig): Seq[String] = {
+  /** The merge's key columns; fails when neither key group is set. */
+  private[write] def keyCols(cfg: MergeConfig): Seq[String] = {
     val ks = (cfg.primaryKey ++ cfg.mergeKey).distinct
     require(ks.nonEmpty, "merge requires a primary_key and/or merge_key")
     ks

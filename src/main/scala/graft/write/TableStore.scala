@@ -244,8 +244,10 @@ final class TableStore(val root: String, val spark: SparkSession) {
           .foldLeft(base) { case (acc, (c, ts)) =>
             if (!acc.columns.contains(c)) acc
             else {
+              // no distinct: duplicate ids on an anti-join's right
+              // side cannot change its result, only add a shuffle
               val ids = ts.map(readTombstone(table, _))
-                .reduce(_ unionByName _).select(c).distinct()
+                .reduce(_ unionByName _).select(c)
               acc.join(ids, Seq(c), "left_anti")
             }
           }
@@ -268,8 +270,8 @@ final class TableStore(val root: String, val spark: SparkSession) {
     * CURRENT segments whose `tombColumn` appears in `ids` become dead
     * (a tombstone — O(ids) written, no data rewritten), and `df` lands
     * as a fresh segment the tombstone does not cover. The nested-chain
-    * child-table path: deleting the children of replaced roots from a
-    * 100 TB child table must not rewrite it. */
+    * load path ([[MergeChain]]), root and children alike: replacing a
+    * sliver of a 100 TB table must not rewrite it. */
   def appendWithTombstone(table: String, df: DataFrame, tombColumn: String,
       ids: DataFrame, statsFor: Seq[String] = Nil): Unit = locked(table) {
     val existing = currentSegments(table)

@@ -47,6 +47,25 @@ class PipelineSpec extends SparkSpec {
     assert(items.select("value").as[Long].collect().sorted.toSeq == Seq(3L, 9L))
   }
 
+  test("a second run of a small incremental nested merge costs at most 17 Spark jobs") {
+    val p = newPipeline()
+    val cfg = Incremental.Config(cursorColumn = "cur", primaryKey = Seq("k"))
+    def res(rows: Seq[(Long, String, String, Seq[Int])]) =
+      Resource("docs", rows.toDF("cur", "k", "v", "items").coalesce(1))
+        .withMerge(MergeConfig(primaryKey = Seq("k"))).withIncremental(cfg)
+    p.run(Seq(res((1 to 20).map(i => (1L, s"k$i", "v1", Seq(i, i + 1))))), "1")
+    // the delta replaces two keys and adds one
+    val (_, jobs) = countJobs(p.run(Seq(res(Seq(
+      (2L, "k3", "v2", Seq(30)), (2L, "k7", "v2", Seq(70, 71)),
+      (2L, "k21", "v2", Seq(21))))), "2"))
+    val root = p.store.read("docs")
+    assert(root.count() === 21)
+    assert(root.filter($"v" === "v2").select("k").as[String].collect().sorted.toSeq ===
+      Seq("k21", "k3", "k7"))
+    assert(p.store.read("docs__items").count() === 18 * 2 + 4)
+    assert(jobs <= 17, s"the second run ran $jobs Spark jobs")
+  }
+
   test("incremental resource processes each row exactly once across runs") {
     val p = newPipeline()
     val cfg = Incremental.Config(cursorColumn = "cur", primaryKey = Seq("v"))

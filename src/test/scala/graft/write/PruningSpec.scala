@@ -190,6 +190,101 @@ class PruningSpec extends SparkSpec {
       .select("item").as[Long].collect().toSeq === Seq(7L, 9L))
   }
 
+  test("chain merge tombstones the root rows it replaces instead of rewriting the root") {
+    import graft.normalize.Ids
+    val store = new TableStore(tmp(), spark)
+    val cfg = MergeConfig(primaryKey = Seq("k"))
+    def chain(rows: Seq[(String, String)]) = {
+      val root = rows.toDF("k", "v").withColumn(Ids.DltId, col("k"))
+      TableChain("r", root,
+        Map("r__items" -> root.select(col(Ids.DltId).as(Ids.DltRootId), col("v"))))
+    }
+    MergeChain.deleteInsert(store, chain(Seq(("a", "v1"), ("b", "v1"))), cfg, "1")
+    val seg1 = store.segments("r").map(_.name)
+    val snap1 = store.snapshots("r").last
+    MergeChain.deleteInsert(store, chain(Seq(("a", "v2"), ("c", "v2"))), cfg, "2")
+    // the load-1 segment survives by name: the replaced root row dies
+    // under a `_dlt_id` tombstone, no root segment is rewritten
+    assert(seg1.forall(store.segments("r").map(_.name).contains),
+      "root segments must not rewrite")
+    assert(store.tombstones("r").map(_.column) === Seq(Ids.DltId))
+    assert(store.read("r").orderBy("k").select("k", "v").as[(String, String)]
+      .collect().toSeq === Seq(("a", "v2"), ("b", "v1"), ("c", "v2")))
+    // time travel: the pre-merge snapshot still reads the old rows
+    assert(store.readAt("r", snap1).orderBy("k").select("k", "v")
+      .as[(String, String)].collect().toSeq === Seq(("a", "v1"), ("b", "v1")))
+  }
+
+  /** Rows of `df` as sorted strings over `cols`, a multiset to compare. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Seq[String] =
+    df.select(cols.map(col): _*).collect().map(_.mkString("|")).toSeq.sorted
+
+  test("a chain root read equals delete-insert over plain frames, load after load") {
+    import graft.normalize.Ids
+    // each case: a config and three staged root loads; `_dlt_id` is the
+    // key hash a pk merge gets (here `k` itself) or a per-row id without
+    // a pk, as the pipeline assigns them
+    val cases: Seq[(String, MergeConfig, Seq[org.apache.spark.sql.DataFrame])] = Seq(
+      ("pk", MergeConfig(primaryKey = Seq("k")), Seq(
+        Seq(("a", "1"), ("b", "1"), ("c", "1")).toDF("k", "v"),
+        Seq(("a", "2"), ("d", "2")).toDF("k", "v"),
+        Seq(("b", "3"), ("a", "3")).toDF("k", "v"))),
+      // load 2 kills (1, A) and re-inserts key 1 under the same id; load
+      // 3 matches only the dead (1, A) on `m`, so the live (1, B) stays
+      ("pk + mergeKey", MergeConfig(primaryKey = Seq("k"), mergeKey = Seq("m")), Seq(
+        Seq(("1", "A"), ("3", "C")).toDF("k", "m"),
+        Seq(("1", "B")).toDF("k", "m"),
+        Seq(("2", "A"), ("4", "C")).toDF("k", "m"))),
+      ("mergeKey", MergeConfig(mergeKey = Seq("m")), Seq(
+        Seq(("x1", "A"), ("x2", "A"), ("x3", "B")).toDF(Ids.DltId, "m"),
+        Seq(("y1", "A")).toDF(Ids.DltId, "m"),
+        Seq(("z1", "B"), ("z2", "C")).toDF(Ids.DltId, "m"))),
+      ("hard delete", MergeConfig(primaryKey = Seq("k"), hardDeleteColumn = Some("del")), Seq(
+        Seq(("a", "1", false), ("b", "1", false)).toDF("k", "v", "del"),
+        Seq(("a", "2", true), ("c", "2", false)).toDF("k", "v", "del"),
+        Seq(("a", "3", false), ("c", "3", true)).toDF("k", "v", "del"))),
+      ("dedupSort", MergeConfig(primaryKey = Seq("k"), dedupSort = Some("s")), Seq(
+        Seq(("a", "1", 1L), ("a", "1b", 2L), ("b", "1", 1L)).toDF("k", "v", "s"),
+        Seq(("b", "2", 5L), ("b", "2b", 4L)).toDF("k", "v", "s"),
+        Seq(("a", "3", 1L), ("c", "3", 1L)).toDF("k", "v", "s"))),
+      ("new staged column", MergeConfig(primaryKey = Seq("k")), Seq(
+        Seq(("a", "1"), ("b", "1")).toDF("k", "v"),
+        Seq(("a", "2", "x")).toDF("k", "v", "extra"),
+        Seq(("b", "3", "y"), ("c", "3", "z")).toDF("k", "v", "extra"))))
+    cases.foreach { case (name, cfg, loads) =>
+      val store = new TableStore(tmp(), spark)
+      val expected = loads.zipWithIndex.foldLeft(Option.empty[org.apache.spark.sql.DataFrame]) {
+        case (dest, (raw, i)) =>
+          val loadId = s"${i + 1}"
+          val staged =
+            if (raw.columns.contains(Ids.DltId)) raw
+            else raw.withColumn(Ids.DltId, concat(lit("h"), col("k")))
+          MergeChain.deleteInsert(store, TableChain("r", staged,
+            Map("r__items" -> staged.select(col(Ids.DltId).as(Ids.DltRootId)))), cfg, loadId)
+          val want = Merge.deleteInsert(dest,
+            staged.withColumn(Ids.DltLoadId, lit(loadId)), cfg)
+          val cols = want.columns.toSeq.sorted
+          assert(store.read("r").columns.toSeq.sorted === cols, s"$name, load $loadId")
+          assert(rowsOf(store.read("r"), cols) === rowsOf(want, cols), s"$name, load $loadId")
+          Some(spark.createDataFrame(want.collect().toSeq.asJava, want.schema))
+      }.get
+      assert(store.compact("r", maxSegments = 0))
+      assert(store.tombstones("r").isEmpty)
+      val cols = expected.columns.toSeq.sorted
+      assert(rowsOf(store.read("r"), cols) === rowsOf(expected, cols), s"$name, compacted")
+    }
+  }
+
+  test("the same id in two tombstones on one segment deletes its row once") {
+    val store = new TableStore(tmp(), spark)
+    store.append("t", Seq((1L, "a"), (1L, "b"), (2L, "c"), (3L, "d")).toDF("id", "v"))
+    store.deleteByIds("t", "id", Seq(2L).toDF("id"))
+    store.deleteByIds("t", "id", Seq(2L, 3L).toDF("id"))
+    assert(store.tombstones("t").size === 2)
+    assert(store.read("t").orderBy("v").select("id", "v").as[(Long, String)]
+      .collect().toSeq === Seq((1L, "a"), (1L, "b")))
+  }
+
   test("scd2 loads leave closed-history segments untouched") {
     val store = new TableStore(tmp(), spark)
     val d = new Dispositions(store, spark)

@@ -13,20 +13,60 @@ splits the table's parquet bytes into
   other  everything else in the files: bloom filters, page and column
          indexes, footers and the magic bytes.
 
-It also counts parquet files, segment/tombstone directories under
-`data/`, and the non-parquet bytes (manifests, `_CURRENT`, CRCs). The
-last row sums the tables. `--json` prints the rows as one JSON list.
+It splits the same parquet bytes a second way, by which manifests name
+the file's segment or tombstone:
+
+  live      the current manifest (`_CURRENT`) names it: the table as
+            read today;
+  retained  only older manifests name it: kept for time travel until
+            a vacuum drops those manifests.
+
+A file no manifest names counts in neither. It also counts parquet
+files, segment/tombstone directories under `data/`, and the non-parquet
+bytes (manifests, `_CURRENT`, CRCs). The last row sums the tables.
+`--json` prints the rows as one JSON list.
 """
 import json
 import os
 import sys
+from urllib.parse import unquote_plus
 
 import pyarrow.parquet as pq
 
 
+COUNTS = ("files", "dirs", "parquet_bytes", "data_bytes", "other_bytes",
+          "live_bytes", "retained_bytes", "non_parquet_bytes")
+
+
+def manifest_names(path):
+    """Segment and tombstone names one manifest references: a segment
+    line starts with its name, a tombstone line is `!<TAB>name<TAB>...`
+    with the name URL-encoded."""
+    names = set()
+    with open(path, encoding="utf-8") as f:
+        for line in f:
+            line = line.strip()
+            if line.startswith("!"):
+                names.add(unquote_plus(line.split("\t")[1]))
+            elif line:
+                names.add(line.split("\t")[0])
+    return names
+
+
+def referenced(table_dir):
+    """(names the current manifest references, names only older ones do)."""
+    with open(os.path.join(table_dir, "_CURRENT"), encoding="utf-8") as f:
+        current = f.read().strip()
+    live, older = set(), set()
+    for e in os.scandir(table_dir):
+        if e.name.startswith("manifest-") and e.name.endswith(".txt"):
+            (live if e.name == current else older).update(manifest_names(e.path))
+    return live, older - live
+
+
 def table_footprint(table_dir):
-    row = {"files": 0, "dirs": 0, "parquet_bytes": 0, "data_bytes": 0,
-           "other_bytes": 0, "non_parquet_bytes": 0}
+    row = dict.fromkeys(COUNTS, 0)
+    live, retained = referenced(table_dir)
     data_dir = os.path.join(table_dir, "data")
     if os.path.isdir(data_dir):
         row["dirs"] = sum(1 for e in os.scandir(data_dir) if e.is_dir())
@@ -45,6 +85,14 @@ def table_footprint(table_dir):
             row["parquet_bytes"] += size
             row["data_bytes"] += chunks
             row["other_bytes"] += size - chunks
+            # the segment or tombstone a file belongs to: `data/<dir>` for
+            # a Spark-written one, the file itself for a driver-written one
+            rel = os.path.relpath(path, table_dir).split(os.sep)
+            owner = "/".join(rel[:2])
+            if owner in live:
+                row["live_bytes"] += size
+            elif owner in retained:
+                row["retained_bytes"] += size
     return row
 
 
@@ -53,8 +101,7 @@ def footprint(store):
                     if e.is_dir() and os.path.exists(os.path.join(e.path, "_CURRENT")))
     rows = [dict(table=t, **table_footprint(os.path.join(store, t))) for t in tables]
     total = {"table": "(all)"}
-    for k in ("files", "dirs", "parquet_bytes", "data_bytes", "other_bytes",
-              "non_parquet_bytes"):
+    for k in COUNTS:
         total[k] = sum(r[k] for r in rows)
     return rows + [total]
 
@@ -68,8 +115,7 @@ def main(argv):
     if "--json" in argv:
         print(json.dumps(rows))
         return 0
-    cols = ("table", "files", "dirs", "parquet_bytes", "data_bytes", "other_bytes",
-            "non_parquet_bytes", "other_share")
+    cols = ("table",) + COUNTS + ("other_share",)
     cells = [cols] + [tuple(str(r[c]) for c in cols[:-1]) +
                       (f"{r['other_bytes'] / r['parquet_bytes']:.3f}"
                        if r["parquet_bytes"] else "-",) for r in rows]
