@@ -18,7 +18,7 @@ import graft.write.{Dispositions, TableStore}
   * Spark-native expression of the same contract is a file-source stream
   * with `Trigger.AvailableNow` + `foreachBatch` feeding the SAME
   * load path batch loads use ([[intoPipeline]]) — each micro-batch is a
-  * load package whose id is the streaming `batchId`, the checkpoint
+  * load package whose id carries the streaming `batchId`, the checkpoint
   * directory is the durable "what was already loaded" state, and
   * replays after failure hit the idempotent merge/append paths.
   *
@@ -55,18 +55,9 @@ object Streaming {
   def drainAvailableNow(stream: DataFrame,
       checkpoint: Option[String] = None,
       outputMode: String = "append")(sink: (DataFrame, Long) => Unit): Unit = {
-    // ephemeral checkpoints (no caller-provided location = no durability
-    // contract) prefer tmpfs when present: streaming state does many
-    // small fsync'd writes that disk-backed temp dirs serialize
-    val cp = checkpoint.getOrElse {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      if (Files.isDirectory(shm) && Files.isWritable(shm))
-        Files.createTempDirectory(shm, "graft-stream-cp").toString
-      else Files.createTempDirectory("graft-stream-cp").toString
-    }
     val q = stream.writeStream
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cp)
+      .option("checkpointLocation", checkpoint.getOrElse(freshCheckpoint()))
       .outputMode(outputMode)
       .foreachBatch { (df: DataFrame, id: Long) =>
         // else every batch job reads the stream's `.start()` call site
@@ -77,14 +68,25 @@ object Streaming {
     q.awaitTermination()
   }
 
+  /** An ephemeral checkpoint directory (no caller-provided location = no
+    * durability contract), on tmpfs when present: streaming state does
+    * many small fsync'd writes that disk-backed temp dirs serialize. */
+  private def freshCheckpoint(): String = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    if (Files.isDirectory(shm) && Files.isWritable(shm))
+      Files.createTempDirectory(shm, "graft-stream-cp").toString
+    else Files.createTempDirectory("graft-stream-cp").toString
+  }
+
   /** Stream `source` into a pipeline: every micro-batch runs the full
     * load path (normalize → contracts → disposition → ledger) as its own
-    * load package `s<batchId>`. The streaming-native equivalent of
-    * `Pipeline.run` for one resource, and the one stream route for every
-    * disposition: `template(batch, batchId)` builds the batch's
-    * resource, so a merge template attaches `withMerge(cfg)` (staged rows
-    * dedup per key on `dedupSort`, and a replayed batch re-merges
-    * idempotently on its keys), and an SCD2 template derives its
+    * load package `s<drain>-<batchId>` ([[drainStamp]]). The
+    * streaming-native equivalent of `Pipeline.run` for one resource,
+    * and the one stream route for every disposition:
+    * `template(batch, batchId)` builds the batch's resource, so a merge
+    * template attaches `withMerge(cfg)` (staged rows dedup per key on
+    * `dedupSort`, and a replayed batch re-merges idempotently on its
+    * keys), and an SCD2 template derives its
     * `boundaryTs` from the batch id so validity boundaries are totally
     * ordered across batches. A micro-batch is NOT a full snapshot, so a
     * streamed SCD2 config MUST scope retirement with a `mergeKey`
@@ -100,20 +102,41 @@ object Streaming {
     * dlt/extract/incremental/__init__.py:92-970, on a stream). */
   def intoPipeline(pipeline: Pipeline, source: DataFrame,
       template: (DataFrame, Long) => Resource,
-      checkpoint: Option[String] = None): Unit =
-    drainAvailableNow(source, checkpoint) { (batch, id) =>
+      checkpoint: Option[String] = None): Unit = {
+    val cp = checkpoint.getOrElse(freshCheckpoint())
+    val drain = drainStamp(source.sparkSession, cp)
+    drainAvailableNow(source, Some(cp)) { (batch, id) =>
       if (!batch.isEmpty) {
         val r = template(batch, id)
         require(r.scd2Config.forall(_.mergeKey.nonEmpty),
           "streaming scd2 requires a mergeKey: a micro-batch is not a full snapshot")
-        pipeline.run(Seq(r), loadIdOf(id))
+        pipeline.run(Seq(r), f"s$drain%016d-$id%012d")
       }
     }
+  }
 
-  /** Micro-batch load id, ZERO-PADDED so ids stay monotone under the
-    * string ordering the load-recording duplicate guard falls back to
-    * for non-numeric ids — a bare "s10" would sort before "s2" and trip
-    * the increasing-load-id contract at batch 10. */
+  /** The drain stamp of checkpoint `cp`: epoch micros, minted when a
+    * drain first uses `cp` and read back by every restart from it. Batch
+    * ids restart at 0 under every fresh checkpoint, so the stamp is what
+    * keeps two drains into one pipeline from sharing a load id, while a
+    * batch replayed from `cp` keeps its id. Both parts are zero-padded,
+    * so ids stay monotone under the string ordering the load-recording
+    * duplicate guard falls back to for non-numeric ids: a later drain
+    * sorts after an earlier one, and batch 10 after batch 9. */
+  private def drainStamp(spark: SparkSession, cp: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(cp, "_graft_drain")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) {
+      val out = fs.create(p, false)
+      try out.write(Dispositions.nextMicros().toString.getBytes("UTF-8"))
+      finally out.close()
+    }
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
+  }
+
+  /** A curated micro-batch's load id, zero-padded so ids stay monotone
+    * under the string ordering of the duplicate guard. */
   private def loadIdOf(id: Long): String = f"s$id%012d"
 
   /** Stream embedding batches into a persisted VECTOR COLLECTION

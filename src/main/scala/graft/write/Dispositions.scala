@@ -44,12 +44,8 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     * load_package.py). Epoch seconds alone collide for two loads in the
     * same second — likely under `runParallel` — so ids are forced
     * strictly increasing at microsecond granularity. */
-  def newLoadId(): String = {
-    val micros = Dispositions.lastLoadMicros.updateAndGet(prev =>
-      math.max(prev + 1, System.currentTimeMillis() * 1000))
-    val s = java.math.BigDecimal.valueOf(micros, 6).toPlainString
-    s
-  }
+  def newLoadId(): String =
+    java.math.BigDecimal.valueOf(Dispositions.nextMicros(), 6).toPlainString
 
   def append(table: String, df: DataFrame, loadId: String,
       statsFor: Seq[String] = Nil): Unit =
@@ -320,6 +316,11 @@ object Dispositions {
   /** Last issued load-id timestamp in microseconds (JVM-wide so two
     * Dispositions instances over one store can't collide either). */
   private val lastLoadMicros = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Strictly increasing epoch microseconds, JVM-wide: the clock behind
+    * every engine-minted load id. */
+  private[graft] def nextMicros(): Long = lastLoadMicros.updateAndGet(prev =>
+    math.max(prev + 1, System.currentTimeMillis() * 1000))
 
   /** Split segments into (touched, untouched) by overlap between each
     * segment's key-range stats and the staged key ranges.

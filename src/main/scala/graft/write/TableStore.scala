@@ -7,7 +7,8 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SaveMode, SparkSession}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max, min}
 import org.apache.spark.sql.types._
 
@@ -259,8 +260,8 @@ final class TableStore(val root: String, val spark: SparkSession) {
     * schema is memoized (no schema-inference job). */
   private def readTombstone(table: String, t: Tombstone): DataFrame = {
     val p = resolve(table, t.name)
-    Option(segmentSchemas.get(p)).fold(spark.read)(spark.read.schema(_))
-      .parquet(p.toString)
+    val read = Option(segmentSchemas.get(p)).fold(spark.read)(spark.read.schema(_))
+    read.parquet(p.toString)
   }
 
   /** The live tombstones of `table` (empty for plain tables). */
@@ -295,7 +296,7 @@ final class TableStore(val root: String, val spark: SparkSession) {
       s"tombstone ids must be a single '$tombColumn' column")
     val idSeg = s"data/${UUID.randomUUID().toString.take(12)}-tomb"
     val path = tableDir(table).resolve(idSeg)
-    bloomWrite(ids.distinct().repartition(1), Seq(tombColumn)).parquet(path.toString)
+    bloomWrite(ids.distinct().repartition(1), Seq(tombColumn), path)
     segmentSchemas.put(path, deepNullable(ids.schema).asInstanceOf[StructType])
     idSeg
   }
@@ -344,11 +345,11 @@ final class TableStore(val root: String, val spark: SparkSession) {
     val paths = segs.map(s => resolve(table, s.name))
     val known = paths.map(p => Option(segmentSchemas.get(p)))
     val distinctKnown = known.flatten.distinct
-    if (known.forall(_.isDefined) && distinctKnown.size == 1)
-      spark.read.schema(distinctKnown.head)
-        .parquet(paths.map(_.toString): _*)
-    else spark.read.option("mergeSchema", "true")
-      .parquet(paths.map(_.toString): _*)
+    val read =
+      if (known.forall(_.isDefined) && distinctKnown.size == 1)
+        spark.read.schema(distinctKnown.head)
+      else spark.read.option("mergeSchema", "true")
+    read.parquet(paths.map(_.toString): _*)
   }
 
   /** Append: write a new segment, commit old segments + new one.
@@ -941,7 +942,7 @@ final class TableStore(val root: String, val spark: SparkSession) {
       }
     // bloom filters on the key columns: equality probes on uuid-like
     // keys (where range stats are weak) skip row groups
-    bloomWrite(toWrite, cols).parquet(tableDir(table).resolve(seg).toString)
+    bloomWrite(toWrite, cols, tableDir(table).resolve(seg))
     segmentSchemas.put(tableDir(table).resolve(seg),
       deepNullable(layout.schema).asInstanceOf[StructType])
     val metrics = obs.map(_.get).getOrElse(Map.empty[String, Any])
@@ -962,8 +963,9 @@ final class TableStore(val root: String, val spark: SparkSession) {
     * default 5 stop at 64 KiB, several times a small load's key data. */
   private val BloomCandidates = 10
 
-  /** The one writer of bloom-filtered parquet: an overwrite of `df`
-    * with a bloom filter on each of `bloomCols`, sized to the distinct
+  /** The one Spark writer of the store's parquet files: an overwrite
+    * of `df` at `path`, [[TableStore.StoreCompression]]-compressed, with
+    * a bloom filter on each of `bloomCols`, sized to the distinct
     * values of each column chunk. Unsized, parquet writes every filter
     * at its 1 MiB cap whatever the row count, most of a small
     * segment's bytes. The adaptive filter feeds every value to all
@@ -971,13 +973,16 @@ final class TableStore(val root: String, val spark: SparkSession) {
     * saw at the default 1% false-positive rate, so a filter never misses
     * a written value, and past ~870k distinct values it is the 1 MiB cap
     * as before. Parquet 1.16 reads the adaptive switch only as a global
-    * option and the candidate count only per column. */
-  private def bloomWrite(df: DataFrame, bloomCols: Seq[String]): DataFrameWriter[Row] =
+    * option and the candidate count only per column. The codec is a
+    * writer option, so the session's own parquet codec stays whatever
+    * its owner set, for every other writer. */
+  private def bloomWrite(df: DataFrame, bloomCols: Seq[String], path: Path): Unit =
     bloomCols.foldLeft(df.write.mode(SaveMode.Overwrite)
+        .option("compression", TableStore.StoreCompression.name)
         .option("parquet.bloom.filter.adaptive.enabled", "true")) {
       (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
         .option(s"parquet.bloom.filter.candidates.number#$c", BloomCandidates.toLong)
-    }
+    }.parquet(path.toString)
 
   private def resolve(table: String, name: String): Path = {
     val p = Paths.get(name)
@@ -1054,4 +1059,17 @@ final class TableStore(val root: String, val spark: SparkSession) {
     Files.move(tmp, dir.resolve("_CURRENT"), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
+}
+
+object TableStore {
+
+  /** The codec of every parquet file the store writes: segments,
+    * tombstones, folds and the ledger files written off Spark alike
+    * ([[TinyParquet.write]]). zstd, at parquet-mr's default level: the
+    * store's bulk is random-id columns, base64 text carrying 6 bits a
+    * character, which an entropy coder stores at ~6 bits and snappy at
+    * ~8. Reads take each file's own codec, so a file written under
+    * another codec still reads, and the next fold rewrites it with
+    * this one. */
+  private[write] val StoreCompression: CompressionCodecName = CompressionCodecName.ZSTD
 }

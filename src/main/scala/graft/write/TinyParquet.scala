@@ -5,7 +5,6 @@ import java.nio.file.Path
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -33,7 +32,9 @@ object TinyParquet {
   final case class LCell(v: Long) extends Cell
   final case class DCell(v: Double) extends Cell
 
-  /** Write `rows` (uniform `(name, cell)` sequences) to `path`. */
+  /** Write `rows` (uniform `(name, cell)` sequences) to `path`, in the
+    * store's codec ([[TableStore.StoreCompression]]) like every Spark-
+    * written store file. */
   def write(path: Path, rows: Seq[Seq[(String, Cell)]]): Unit = {
     require(rows.nonEmpty, "TinyParquet.write needs at least one row")
     val cols = rows.head.map(_._1)
@@ -54,7 +55,7 @@ object TinyParquet {
       new org.apache.hadoop.fs.Path(path.toUri), new Configuration())
     val writer = ExampleParquetWriter.builder(out)
       .withType(schema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withCompressionCodec(TableStore.StoreCompression)
       .build()
     try rows.foreach { row =>
       val g = factory.newGroup()

@@ -83,7 +83,11 @@ class LedgerSpec extends SparkSpec {
         Streaming.intoPipeline(p, Streaming.fileStream(spark, dir,
             options = Map("maxFilesPerTrigger" -> "1")),
           (b, _) => Resource("t", b).withMerge(byId))
-        Seq("s000000000000", "s000000000001")
+        // one drain: one stamp, the batch ids after it
+        val ids = p.dataset.loadIds
+        assert(ids.size === 2 && ids.head.matches("s\\d{16}-000000000000"), ids)
+        assert(ids(1) === ids.head.dropRight(1) + "1")
+        ids
       })
     routes.foreach { case (route, load) =>
       val p = newPipeline()
@@ -95,6 +99,24 @@ class LedgerSpec extends SparkSpec {
       assert(rows(p, ids.last).map(_._3) === Seq(p.registry.versionHash), route)
       assert(p.dataset.loadIds === ids.sorted, route)
     }
+  }
+
+  test("two drains into one pipeline record two load ids") {
+    val p = newPipeline()
+    // a fresh checkpoint per drain: batch ids restart at 0 under each
+    def drain(v: String): Unit = {
+      val dir = Files.createTempDirectory("graft-ledger-src").toString
+      flat(v).coalesce(1).write.mode("append").parquet(dir)
+      Streaming.intoPipeline(p, Streaming.fileStream(spark, dir),
+        (b, _) => Resource("t", b))
+    }
+    drain("a")
+    drain("b")
+    val ids = p.dataset.loadIds
+    assert(ids.distinct.size === 2, ids)
+    ids.foreach(id => assert(rows(p, id).map(r => (r._1, r._2)) === Seq((p.name, 0)), id))
+    assert(p.store.read("t").groupBy("_dlt_load_id").count()
+      .select("count").as[Long].collect().toSeq === Seq(2L, 2L))
   }
 
   test("a drift-quarantined package records one status-0 and one status-2 row") {

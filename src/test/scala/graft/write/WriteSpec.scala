@@ -397,4 +397,118 @@ class WriteSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("tombstones"))
   }
+
+  /** The column-chunk codecs of every parquet file under `dir`, by the
+    * file's path relative to `dir`. */
+  private def codecsUnder(dir: java.nio.file.Path): Map[String, Set[String]] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val files = scala.util.Using.resource(Files.walk(dir))(_.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toVector)
+    files.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), new org.apache.hadoop.conf.Configuration()))
+      try dir.relativize(f).toString -> reader.getFooter.getBlocks.asScala
+        .flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+      finally reader.close()
+    }.toMap
+  }
+
+  test("every parquet file the store writes is zstd") {
+    val root = Files.createTempDirectory("graft-codec")
+    val store = new TableStore(root.toString, spark)
+    val d = dispo(store)
+    val rows = (1L to 40L).map(i => (i, s"v$i")).toDF("id", "v")
+    store.append("appended", rows)
+    // a layout below one split skips the range exchange: force it
+    val split = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+    try store.overwrite("ranged", rows, statsFor = Seq("id"), rangeBy = Seq("id"))
+    finally spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+    store.append("folded", rows.filter(col("id") <= 20L))
+    store.append("folded", rows.filter(col("id") > 20L))
+    store.deleteByIds("folded", "id", Seq(Tuple1(3L)).toDF("id"))
+    assert(store.compact("folded", maxSegments = 1))
+    store.appendWithTombstone("appended", Seq((41L, "w")).toDF("id", "v"), "id",
+      Seq(Tuple1(1L)).toDF("id"))
+    val scd = Scd2Config(trackedColumns = Seq("id", "v"), boundaryTs = "2024-01-01 00:00:00")
+    d.scd2("hist", rows, scd, "1")
+    d.scd2("hist", rows.withColumn("v", concat(col("v"), lit("'"))),
+      scd.copy(boundaryTs = "2024-02-01 00:00:00"), "2")
+    d.recordLoad("2")
+    VectorSink.writeIvf(store, "emb", (0L until 32L).map { i =>
+      (i, Seq.tabulate(4)(k => math.sin(i * 7 + k).toFloat))
+    }.toDF("vec_id", "embedding"), "vec_id", "embedding", nlist = 2)
+    val codecs = codecsUnder(root)
+    def under(prefix: String) = codecs.keys.filter(_.startsWith(prefix))
+    // every file class is present, so the check below is not vacuous
+    Seq("appended/data/", "ranged/data/", "folded/data/", "hist/data/",
+      "_dlt_loads/", "emb").foreach(t => assert(under(t).nonEmpty, t))
+    assert(codecs.keys.exists(_.matches("appended/data/[^/]+-tomb/.*")), codecs.keys)
+    assert(store.segments("folded").size === 1 && store.tombstones("folded").isEmpty)
+    assert(store.segments("hist").size >= 2, "no closed SCD2 segment")
+    val notZstd = codecs.filter(_._2 != Set("ZSTD"))
+    assert(notZstd.isEmpty, s"files not (only) zstd: $notZstd")
+  }
+
+  test("a store written as snappy reads, takes a tombstone and folds to zstd") {
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.rewrite.{ParquetRewriter, RewriteOptions}
+    val root = Files.createTempDirectory("graft-snappy")
+    val store = new TableStore(root.toString, spark)
+    val rows = (1L to 30L).map(i => (i, s"v$i", i * 0.5)).toDF("id", "v", "x")
+    store.append("t", rows.filter(col("id") <= 15L), statsFor = Seq("id"))
+    store.append("t", rows.filter(col("id") > 15L), statsFor = Seq("id"))
+    // rewrite the first segment's files with snappy, as a store written
+    // before the codec change holds them
+    val seg = root.resolve("t").resolve(store.segments("t").head.name)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    scala.util.Using.resource(Files.list(seg))(_.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toVector).foreach { f =>
+      val tmp = Files.createTempDirectory("graft-snappy-tmp").resolve(f.getFileName)
+      val rw = new ParquetRewriter(new RewriteOptions.Builder(conf,
+        new org.apache.hadoop.fs.Path(f.toUri), new org.apache.hadoop.fs.Path(tmp.toUri))
+        .transform(CompressionCodecName.SNAPPY).build())
+      try rw.processBlocks() finally rw.close()
+      Files.move(tmp, f, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+    }
+    val segCodecs = codecsUnder(seg).values.toSet
+    assert(segCodecs === Set(Set("SNAPPY")), "the simulated segment is not snappy")
+    def read = store.read("t").orderBy("id").as[(Long, String, Double)].collect().toSeq
+    val all = rows.orderBy("id").as[(Long, String, Double)].collect().toSeq
+    assert(read === all)
+    store.deleteByIds("t", "id", Seq(Tuple1(2L), Tuple1(20L)).toDF("id"))
+    val kept = all.filterNot(r => r._1 == 2L || r._1 == 20L)
+    assert(read === kept)
+    assert(store.compact("t", maxSegments = 1))
+    assert(read === kept)
+    val live = store.segments("t").map(s => root.resolve("t").resolve(s.name))
+    assert(live.size === 1 && store.tombstones("t").isEmpty)
+    assert(live.flatMap(codecsUnder(_).values).toSet === Set(Set("ZSTD")))
+  }
+
+  test("the store's parquet writers are the only ones that pick a codec") {
+    // a DataFrame parquet write names no `read` before its `.parquet(`;
+    // a destination's own files, Verify's dump and the input fixtures
+    // the bundled queries under graft/queries write are not store files
+    val writes = sourceHits("src/main/scala", """^(?:(?!read).)*\.parquet\(""".r,
+      "graft/write/FilesystemSink.scala", "graft/Verify.scala")
+      .filterNot(_.startsWith("graft/queries/"))
+    val table = Files.readAllLines(java.nio.file.Paths.get(
+      "src/main/scala/graft/write/TableStore.scala")).asScala
+    val start = table.indexWhere(_.contains("private def bloomWrite("))
+    val end = table.indexWhere(_.trim.startsWith("private def "), start + 1)
+    assert(start >= 0 && end > start, "TableStore.bloomWrite not found")
+    val outside = writes.filterNot { h =>
+      h.startsWith("graft/write/TableStore.scala:") &&
+        (start until end).contains(h.split(":")(1).toInt - 1)
+    }
+    assert(outside.isEmpty,
+      s"parquet write(s) outside TableStore.bloomWrite: $outside — write store files through it")
+    assert(writes.size === 1, s"bloomWrite's own write not found: $writes")
+    val codecs = sourceHits("src/main/scala", "withCompressionCodec".r,
+      "graft/write/TinyParquet.scala")
+    assert(codecs.isEmpty, s"codec picked outside TinyParquet: $codecs")
+  }
 }

@@ -23,8 +23,10 @@ the file's segment or tombstone:
 
 A file no manifest names counts in neither. It also counts parquet
 files, segment/tombstone directories under `data/`, and the non-parquet
-bytes (manifests, `_CURRENT`, CRCs). The last row sums the tables.
-`--json` prints the rows as one JSON list.
+bytes (manifests, `_CURRENT`, CRCs), and lists the distinct codecs of
+the column chunks (`codecs`), so a file left in an older codec shows.
+The last row sums the tables and joins their codecs. `--json` prints
+the rows as one JSON list.
 """
 import json
 import os
@@ -66,6 +68,7 @@ def referenced(table_dir):
 
 def table_footprint(table_dir):
     row = dict.fromkeys(COUNTS, 0)
+    codecs = set()
     live, retained = referenced(table_dir)
     data_dir = os.path.join(table_dir, "data")
     if os.path.isdir(data_dir):
@@ -78,9 +81,11 @@ def table_footprint(table_dir):
                 row["non_parquet_bytes"] += size
                 continue
             md = pq.ParquetFile(path).metadata
-            chunks = sum(md.row_group(g).column(c).total_compressed_size
-                         for g in range(md.num_row_groups)
-                         for c in range(md.num_columns))
+            columns = [md.row_group(g).column(c)
+                       for g in range(md.num_row_groups)
+                       for c in range(md.num_columns)]
+            chunks = sum(c.total_compressed_size for c in columns)
+            codecs.update(c.compression for c in columns)
             row["files"] += 1
             row["parquet_bytes"] += size
             row["data_bytes"] += chunks
@@ -93,6 +98,7 @@ def table_footprint(table_dir):
                 row["live_bytes"] += size
             elif owner in retained:
                 row["retained_bytes"] += size
+    row["codecs"] = sorted(codecs)
     return row
 
 
@@ -103,6 +109,7 @@ def footprint(store):
     total = {"table": "(all)"}
     for k in COUNTS:
         total[k] = sum(r[k] for r in rows)
+    total["codecs"] = sorted({c for r in rows for c in r["codecs"]})
     return rows + [total]
 
 
@@ -115,10 +122,11 @@ def main(argv):
     if "--json" in argv:
         print(json.dumps(rows))
         return 0
-    cols = ("table",) + COUNTS + ("other_share",)
-    cells = [cols] + [tuple(str(r[c]) for c in cols[:-1]) +
+    cols = ("table",) + COUNTS + ("other_share", "codecs")
+    cells = [cols] + [tuple(str(r[c]) for c in cols[:-2]) +
                       (f"{r['other_bytes'] / r['parquet_bytes']:.3f}"
-                       if r["parquet_bytes"] else "-",) for r in rows]
+                       if r["parquet_bytes"] else "-",
+                       ",".join(r["codecs"]) or "-") for r in rows]
     widths = [max(len(row[i]) for row in cells) for i in range(len(cols))]
     for row in cells:
         print("  ".join(c.ljust(w) if i == 0 else c.rjust(w)
