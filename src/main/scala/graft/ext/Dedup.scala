@@ -74,15 +74,24 @@ object Dedup {
   /** doc → exploded distinct word-n-gram shingles.
     * Output: (id, shingle). The inverted-index base relation.
     * The token array is projected before the shingle lambda so the
-    * tokenizer runs once per document, not once per shingle. The pair
-    * generators pin it: they feed it into size/df aggregates, the
-    * candidate join and the verify, and unpinned the tokenizer +
-    * explode re-runs once per branch (6x in containment). */
+    * tokenizer runs once per document, not once per shingle. The
+    * prefix-filtered pair generators pin it: they feed it into the df
+    * aggregate and the candidate join. */
   def shingleIndex(docs: DataFrame, id: String, text: String, n: Int): DataFrame =
     docs.select(col(id).as("_id"),
         TextOps.tokens(TextOps.canonicalText(col(text))).as("_ts"))
       .select(col("_id"),
         explode(TextOps.shinglesFromTokens(col("_ts"), n)).as("shingle"))
+
+  /** doc → (_id, _arr): its distinct shingles as one array of
+    * xxhash64(shingle), one row per document, with no shuffle (null text:
+    * no row). The input of every exact verify and MinHash's hashed rows;
+    * a verify-affecting collision needs two distinct shingles of the SAME
+    * pair to collide (~n_sh²/2⁶⁴ ≈ 1e-15 per pair). */
+  def shingleHashes(docs: DataFrame, id: String, text: String, n: Int): DataFrame =
+    docs.select(col(id).as("_id"), graft.functions.TextFunctions.wordShingles(
+        TextOps.tokens(TextOps.canonicalText(col(text))), n, hashed = true).as("_arr"))
+      .filter(size(col("_arr")) > 0)
 
   /** Caches pinned by the pair generators and by the other operators
     * whose plans fan out over one frame. `persist` registers a plan with
@@ -241,13 +250,7 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, id: String, text: String,
       n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    val sh = pin(shingleIndex(docs, id, text, n))
-    val sizes = pin(sh.groupBy("_id").agg(count(lit(1)).as("n_sh")))
-    val docFreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val ranked = sh.join(docFreq, "shingle")
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("_id").orderBy(col("df"), col("shingle"))))
-      .join(sizes, "_id")
+    val (arr, _, ranked) = rankedShingles(docs, id, text, n)
     // pinned: the candidate SELF-join consumes the prefix twice (a and
     // b sides) — unpinned, the docFreq aggregate + rarity window + both
     // joins above execute once per side (two full passes over the
@@ -260,7 +263,20 @@ object Dedup {
           col("b.n_sh") * threshold <= col("a.n_sh"))
       .select(col("a._id").as("id_a"), col("b._id").as("id_b"))
       .distinct()
-    verifyJaccard(cand, sh, threshold)
+    verifyJaccard(cand, arr, arr, threshold)
+  }
+
+  /** The prefix filters' inputs, pinned: [[shingleHashes]], and
+    * [[shingleIndex]] with each document's shingle count `n_sh`; then the
+    * latter ranked `rnk` in its document by rarity (df, then shingle). */
+  private def rankedShingles(docs: DataFrame, id: String, text: String,
+      n: Int): (DataFrame, DataFrame, DataFrame) = {
+    val arr = pin(shingleHashes(docs, id, text, n))
+    val sh = pin(shingleIndex(docs, id, text, n)
+      .join(arr.select(col("_id"), size(col("_arr")).as("n_sh")), "_id"))
+    val docFreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+    (arr, sh, sh.join(docFreq, "shingle").withColumn("rnk", row_number().over(
+      Window.partitionBy("_id").orderBy(col("df"), col("shingle")))))
   }
 
   /** Exact-substring duplicate SPANS (Lee et al. 2022, "Deduplicating
@@ -300,28 +316,21 @@ object Dedup {
     * shares >= t·|a| of a's shingles, so a must share a shingle within
     * its first |a| - ceil(t·|a|) + 1 rarest ones (one-sided prefix
     * filter; the contained side has no size lower bound, so only a's
-    * prefix filters). Exact verify on the inverted index. Output:
+    * prefix filters). Exact verify on [[shingleHashes]] arrays. Output:
     * (id_a, id_b, containment) where id_a is the CONTAINED side. */
   def containmentPairs(docs: DataFrame, id: String, text: String,
       n: Int = 3, threshold: Double = 0.9): DataFrame = {
-    val sh = pin(shingleIndex(docs, id, text, n))
-    val sizes = pin(sh.groupBy("_id").agg(count(lit(1)).as("n_sh")))
-    val docFreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val ranked = sh.join(docFreq, "shingle")
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("_id").orderBy(col("df"), col("shingle"))))
-      .join(sizes, "_id")
+    val (arr, sh, ranked) = rankedShingles(docs, id, text, n)
     val prefixA = ranked.filter(
       col("rnk") <= col("n_sh") - ceil(col("n_sh") * threshold) + 1)
     // size filter: |a∩b| >= t·|a| forces |b| >= t·|a| (b may be any
     // amount bigger — containment is one-sided — but not much smaller)
-    val bSide = sh.join(sizes, "_id")
-    val cand = prefixA.as("a").join(bSide.as("b"),
+    val cand = prefixA.as("a").join(sh.as("b"),
         col("a.shingle") === col("b.shingle") && col("a._id") =!= col("b._id") &&
           col("b.n_sh") >= col("a.n_sh") * threshold)
       .select(col("a._id").as("id_a"), col("b._id").as("id_b"))
       .distinct()
-    withShingleArrays(cand, sh)
+    withArrays(cand, arr, arr)
       .withColumn("containment",
         size(array_intersect(col("_arr_a"), col("_arr_b"))).cast("double") /
           size(col("_arr_a")))
@@ -329,38 +338,12 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("containment"), 6).as("containment"))
   }
 
-  /** Shingle sets of ONLY the docs appearing in `cand`, re-packed as
-    * per-doc arrays of xxhash64(shingle) — the verify-side
-    * representation. Exact verification as an in-expression
-    * `array_intersect` per candidate pair replaces the old
-    * explode-join + groupBy verify, whose intermediate (every candidate
-    * pair × every shingle of both docs) was the largest shuffle of the
-    * whole pipeline (measured: verify was 3.7 of 6.5s warm on
-    * containment at sf0.1). The semi-join keeps the array build
-    * proportional to the CANDIDATE set, not the corpus (LSH verifies a
-    * handful of pairs; building corpus-wide arrays for it would be a
-    * full extra shuffle). Shingles are distinct per doc (WordShingles
-    * distinct=true) and 64-bit hashing keeps arrays ~3x smaller than
-    * strings in flight; a verify-affecting collision needs two distinct
-    * shingles of the SAME pair to collide (~n_sh²/2⁶⁴ ≈ 1e-15 per
-    * pair). */
-  private def docShingleArrays(sh: DataFrame, cand: DataFrame): DataFrame = {
-    val ids = cand.select(explode(array(col("id_a"), col("id_b"))).as("_id"))
-      .distinct()
-    sh.join(ids, Seq("_id"), "left_semi")
-      .groupBy("_id").agg(collect_list(xxhash64(col("shingle"))).as("_arr"))
-  }
-
-  /** Candidate pairs (id_a, id_b) with each side's [[docShingleArrays]]
-    * as `_arr_a` / `_arr_b`: the one head of every exact verify. The
-    * candidates (read by the array build and the pair side) and the
-    * arrays (read by both pair-side joins) are each pinned, built once. */
-  private def withShingleArrays(cand: DataFrame, sh: DataFrame): DataFrame = {
-    val pc = pin(cand)
-    val arrs = pin(docShingleArrays(sh, pc))
-    pc.join(arrs.select(col("_id").as("id_a"), col("_arr").as("_arr_a")), "id_a")
-      .join(arrs.select(col("_id").as("id_b"), col("_arr").as("_arr_b")), "id_b")
-  }
+  /** Candidate pairs (id_a, id_b) with each side's [[shingleHashes]]
+    * array as `_arr_a` / `_arr_b`: the one head of every exact verify,
+    * an `array_intersect` per candidate pair. */
+  private def withArrays(cand: DataFrame, a: DataFrame, b: DataFrame): DataFrame =
+    cand.join(a.select(col("_id").as("id_a"), col("_arr").as("_arr_a")), "id_a")
+      .join(b.select(col("_id").as("id_b"), col("_arr").as("_arr_b")), "id_b")
 
   /** Near-duplicate pairs of one frame under `sig`: `(id_a, id_b,
     * <measures>)` with `id_a < id_b` — `jaccard` over `value`'s word
@@ -374,8 +357,8 @@ object Dedup {
     * join, then exact-verified.
     *
     * PIN LIFECYCLE: a lazy generator ([[pin]]). The band rows (and
-    * MinHash's shingles) are pinned into the caller's [[withPins]]
-    * scope; consume the returned frame inside it. */
+    * MinHash's shingle-hash rows) are pinned into the caller's
+    * [[withPins]] scope; consume the returned frame inside it. */
   def pairs(frame: DataFrame, id: String, value: String, sig: Signature,
       threshold: Double = 0.9): DataFrame = {
     val h = sig.hashed(frame, id, value)
@@ -385,12 +368,11 @@ object Dedup {
     sig.verify(cand, h, h, threshold)
   }
 
-  /** Exact-jaccard verification of a candidate pair set: per-pair
-    * `array_intersect` over [[docShingleArrays]] (see there for why
-    * this beats the explode-join + groupBy form). */
-  private[ext] def verifyJaccard(cand: DataFrame, sh: DataFrame,
+  /** Exact-jaccard verification of a candidate pair set against each
+    * side's [[shingleHashes]] rows (one frame for self pairs). */
+  private[ext] def verifyJaccard(cand: DataFrame, a: DataFrame, b: DataFrame,
       threshold: Double): DataFrame =
-    withShingleArrays(cand, sh)
+    withArrays(cand, a, b)
       .withColumn("n_inter",
         size(array_intersect(col("_arr_a"), col("_arr_b"))).cast("long"))
       .withColumn("jaccard",

@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.write.TableStore
@@ -10,9 +11,10 @@ import graft.write.TableStore
   * indexed once, its hashed rows and band keys land in the lakehouse next
   * to the documents, and every new batch checks ONLY itself against the
   * index — the old corpus is never re-hashed wholesale. Work per batch:
-  * hash the batch, join its band keys against the stored band rows, then
-  * exact-verify the candidates, reading back only the stored rows that
-  * actually collided (a candidate-sized semi-join, never corpus-sized).
+  * hash the batch (one row per document, no shuffle), join its band keys
+  * against the stored band rows, then exact-verify the candidates,
+  * re-hashing only the stored rows that actually collided (a
+  * candidate-sized semi-join, never corpus-sized).
   * One index serves every [[Signature]]: MinHash docs, sign-code vectors
   * and 64-bit media hashes.
   *
@@ -61,11 +63,18 @@ object IncrementalDedup {
         case Some(bands) =>
           val pinned = Dedup.pin(rows)
           store.append(sig.rowTable(table), pinned)
-          store.append(bands, sig.banded(sig.rehash(pinned))
-            .select(("_id" +: sig.keys).map(col): _*))
+          store.append(bands, sig.indexBands(pinned))
       }
     }
   }
+
+  /** Whether every leaf of `df`'s plan is an RDD of ≥ `width` partitions
+    * (a batch re-spread through an RDD round trip); runs no job. */
+  private def spread(df: DataFrame, width: Int): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall {
+      case r: LogicalRDD => r.rdd.getNumPartitions >= width
+      case _ => false
+    }
 
   /** Near-dup pairs of a NEW batch against the indexed corpus:
     * `(new_id, old_id, <measures>)` — `jaccard` (MinHash), `hamming`
@@ -77,10 +86,12 @@ object IncrementalDedup {
     * The meta reads, validation and plan construction run under the
     * table monitor, so a concurrent index rebuild cannot validate the
     * batch against a stale space. A batch whose verify reads rows back is
-    * re-spread before hashing: a micro-batch arrives as ONE file (one
-    * task), and AQE never splits a scan stage, so without this the
-    * shingle or code map side serializes on one core (100× soak: 14 s
-    * 5-task stages inside every curate batch where 32-way runs ~2 s).
+    * re-spread before hashing, unless it is spread already (a
+    * [[graft.streaming.Streaming.curateInto]] batch is): a micro-batch
+    * arrives as ONE file (one task), and AQE never splits a scan stage,
+    * so without this the shingle or code map side serializes on one core
+    * (100× soak: 14 s 5-task stages inside every curate batch where
+    * 32-way runs ~2 s).
     *
     * PIN LIFECYCLE: a lazy generator ([[Dedup.pin]]). The batch's hashed
     * rows and candidates are pinned into the caller's [[Dedup.withPins]]
@@ -90,10 +101,11 @@ object IncrementalDedup {
       id: String, value: String, threshold: Double = 0.9,
       sig: Signature = MinHash()): DataFrame = store.exclusively(table) {
     val space = sig.claim(storedMeta(store, table, sig), table, probe = true)
+    val width = batch.sparkSession.sparkContext.defaultParallelism
     val newH =
       if (!sig.readsBack) space.hashed(batch, id, value)
-      else Dedup.pin(space.hashed(batch.repartition(
-        batch.sparkSession.sparkContext.defaultParallelism), id, value))
+      else Dedup.pin(space.hashed(
+        if (spread(batch, width)) batch else batch.repartition(width), id, value))
     val (a, b) = space.probe(store, table, space.banded(newH))
     val joined = a.as("a").join(b.as("b"),
       space.keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _))

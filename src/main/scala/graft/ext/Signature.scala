@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
+import graft.functions.{TextFunctions, VectorFunctions}
 import graft.write.TableStore
 
 /** A hash space of the near-duplicate engine: one case per space graft
@@ -39,9 +39,9 @@ sealed trait Signature {
 
   /** Whether the verify reads the hashed rows back. A check then pins
     * the batch's hashed rows and the candidates (each has two readers)
-    * and re-spreads the batch before hashing; a [[Blocks]] verify is its
-    * in-join Hamming over hashes the band rows carry, so it does none of
-    * this. */
+    * and re-spreads a batch not yet spread before hashing; a [[Blocks]]
+    * verify is its in-join Hamming over hashes the band rows carry, so it
+    * does none of this. */
   private[ext] def readsBack: Boolean = true
 
   // ---- persisted index ----------------------------------------------------
@@ -59,6 +59,10 @@ sealed trait Signature {
 
   /** Stored rows back to hashed rows. */
   private[ext] def rehash(stored: DataFrame): DataFrame = stored
+
+  /** The band rows an index write appends for its stored rows. */
+  private[ext] def indexBands(stored: DataFrame): DataFrame =
+    banded(rehash(stored)).select(("_id" +: keys).map(col): _*)
 
   /** (batch side, stored side) of a check's band join. */
   private[ext] def probe(store: TableStore, table: String,
@@ -83,7 +87,8 @@ sealed trait Signature {
   * Recall (64 perms / 16 bands × 4 rows): a pair at Jaccard j becomes a
   * candidate with P = 1 - (1 - j⁴)¹⁶ — 1 - 4·10⁻⁸ at j = 0.9 — while
   * unrelated docs (j ≈ 0.1) collide with P ≈ 0.16%, so the verify join
-  * stays tiny next to |corpus|². The index stores the raw text
+  * stays tiny next to |corpus|². The signature and the verify both work
+  * per document, with no shuffle. The index stores the raw text
   * (`<t>` = (_id, _text)), the band rows (`<t>__minhash_bands`) and
   * (n, perms, bands) in `<t>__minhash_meta`. */
 final case class MinHash(n: Int = 3, perms: Int = 64, bands: Int = 16)
@@ -92,31 +97,30 @@ final case class MinHash(n: Int = 3, perms: Int = 64, bands: Int = 16)
 
   private[ext] def keys = Seq("band", "bucket")
 
-  /** Pinned: shingling is the costliest step, and the signature
-    * aggregate and the verify both read it. */
+  /** Pinned [[Dedup.shingleHashes]] rows, one per document: shingling is
+    * the costliest step, and the signature and the verify both read it. */
   private[ext] def hashed(frame: DataFrame, id: String, value: String) =
-    Dedup.pin(Dedup.shingleIndex(frame, id, value, n))
+    Dedup.pin(Dedup.shingleHashes(frame, id, value, n))
 
-  /** (_id, band, bucket): ONE codegen'd hash-aggregate of `perms`
-    * min(xxhash64(shingle, seed)) over the exploded shingles (one shuffle
-    * on _id); band key = hash of the band's r signature slots. */
-  private[ext] def banded(sh: DataFrame) = {
+  /** (_id, band, bucket) per row: band key = hash of the band's r slots
+    * of the [[graft.functions.MinHashSignature]], bit-identical to the
+    * exploded `min(xxhash64(shingle, p))`, so persisted bands match. */
+  private[ext] def banded(h: DataFrame) = {
     val r = perms / bands
-    val sig = sh.groupBy("_id").agg(
-      min(xxhash64(col("shingle"), lit(0))).as("h0"),
-      (1 until perms).map(p =>
-        min(xxhash64(col("shingle"), lit(p))).as(s"h$p")): _*)
-    sig.select(col("_id"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64((lit(b) +: (0 until r).map(i => col(s"h${b * r + i}"))): _*)): _*))
+    h.select(col("_id"), TextFunctions.minHashSignature(col("_arr"), perms).as("_sig"))
+      .select(col("_id"), posexplode(array((0 until bands).map(b =>
+          xxhash64((lit(b) +: (0 until r).map(i => col("_sig").getItem(b * r + i))): _*)): _*))
         .as(Seq("band", "bucket")))
   }
 
-  /** Exact Jaccard; a check's two sides are disjoint id sets, so their
-    * shingles union into one index. */
+  /** Exact Jaccard of each candidate's two shingle-hash arrays. */
   private[ext] def verify(cand: DataFrame, a: DataFrame, b: DataFrame,
-      threshold: Double) =
-    Dedup.verifyJaccard(cand, if (a eq b) a else a.union(b), threshold)
+      threshold: Double) = Dedup.verifyJaccard(cand, a, b, threshold)
+
+  /** Spread on `_id`: per-row bands would land one file per input split;
+    * the shuffle lets the write coalesce to the rows' size. */
+  private[ext] override def indexBands(stored: DataFrame) =
+    super.indexBands(stored).repartition(col("_id"))
 
   private[ext] def bandTable(table: String) = Some(s"${table}__minhash_bands")
 
@@ -124,7 +128,7 @@ final case class MinHash(n: Int = 3, perms: Int = 64, bands: Int = 16)
     frame.select(col(id).as("_id"), col(value).as("_text"))
 
   private[ext] override def rehash(stored: DataFrame) =
-    Dedup.shingleIndex(stored, "_id", "_text", n)
+    Dedup.shingleHashes(stored, "_id", "_text", n)
 
   private[ext] override def meta = Some(("__minhash_meta", (s: SparkSession) => {
     import s.implicits._

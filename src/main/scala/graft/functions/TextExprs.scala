@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -92,22 +92,24 @@ case class CountInSet(child: Expression, words: Seq[String],
   * by a single space); a document shorter than `n` tokens yields its
   * whole text as one shingle. `distinct = true` (the dedup base unit)
   * keeps first occurrences only, like `array_distinct`; `distinct =
-  * false` keeps every occurrence (the counting base unit). */
-case class WordShingles(child: Expression, n: Int, distinct: Boolean = true)
-    extends TokenArrayExpression {
+  * false` keeps every occurrence (the counting base unit). `hashed =
+  * true` emits each as Spark's `xxhash64(shingle)` (seed 42). */
+case class WordShingles(child: Expression, n: Int, distinct: Boolean = true,
+    hashed: Boolean = false) extends TokenArrayExpression {
   require(n >= 1, "shingle size must be >= 1")
   override def prettyName: String = "graft_word_shingles"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def dataType: DataType =
+    ArrayType(if (hashed) LongType else StringType, containsNull = false)
 
   private val space = UTF8String.fromString(" ")
 
   def shingle(arr: ArrayData): ArrayData = {
     val n0 = arr.numElements()
-    if (n0 < n) {
+    val out: Array[Any] = if (n0 < n) {
       val all = new Array[UTF8String](n0)
       var i = 0
       while (i < n0) { all(i) = arr.getUTF8String(i); i += 1 }
-      new GenericArrayData(Array[Any](UTF8String.concatWs(space, all: _*)))
+      Array[Any](UTF8String.concatWs(space, all: _*))
     } else if (distinct) {
       val seen = new java.util.LinkedHashSet[UTF8String](n0 * 2)
       val win = new Array[UTF8String](n)
@@ -122,7 +124,7 @@ case class WordShingles(child: Expression, n: Int, distinct: Boolean = true)
       val it = seen.iterator()
       var k = 0
       while (it.hasNext) { out(k) = it.next(); k += 1 }
-      new GenericArrayData(out)
+      out
     } else {
       val out = new Array[Any](n0 - n + 1)
       val win = new Array[UTF8String](n)
@@ -133,8 +135,10 @@ case class WordShingles(child: Expression, n: Int, distinct: Boolean = true)
         out(i) = UTF8String.concatWs(space, win: _*)
         i += 1
       }
-      new GenericArrayData(out)
+      out
     }
+    new GenericArrayData(if (!hashed) out
+      else out.map(s => XXH64.hashUTF8String(s.asInstanceOf[UTF8String], 42L): Any))
   }
 
   override def nullSafeEval(a: Any): Any = shingle(a.asInstanceOf[ArrayData])
@@ -143,6 +147,44 @@ case class WordShingles(child: Expression, n: Int, distinct: Boolean = true)
     val ref = ctx.addReferenceObj("wordShingles", this, classOf[WordShingles].getName)
     defineCodeGen(ctx, ev, arr =>
       s"(${classOf[ArrayData].getName}) $ref.shingle($arr)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** MinHash signature of an `array<bigint>` of hashes: slot `p` < `perms`
+  * is the min of `XXH64.hashInt(p, h)` over them (`Long.MaxValue` if
+  * none). `xxhash64(s, p)` is `hashInt(p, seed = xxhash64(s))`, so over
+  * hashed [[WordShingles]] slot p = `min(xxhash64(shingle, p))`. */
+case class MinHashSignature(child: Expression, perms: Int) extends UnaryExpression {
+  override def prettyName: String = "graft_minhash_signature"
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<bigint> without nulls, got ${other.sql}")
+  }
+
+  def signature(arr: ArrayData): ArrayData = {
+    val sig = Array.fill(perms)(Long.MaxValue)
+    var i = 0
+    while (i < arr.numElements()) {
+      val h = arr.getLong(i)
+      var p = 0
+      while (p < perms) { sig(p) = math.min(sig(p), XXH64.hashInt(p, h)); p += 1 }
+      i += 1
+    }
+    new GenericArrayData(sig)
+  }
+
+  override def nullSafeEval(a: Any): Any = signature(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("minHashSignature", this, classOf[MinHashSignature].getName)
+    defineCodeGen(ctx, ev, arr =>
+      s"(${classOf[ArrayData].getName}) $ref.signature($arr)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -350,6 +392,10 @@ object TextFunctions {
   def trigramWeightSum(text: Column, profile: Seq[(String, Int)]): Column =
     ColumnBridge.column(TrigramWeightSum(ColumnBridge.expression(text), profile))
 
-  def wordShingles(tokens: Column, n: Int, distinct: Boolean = true): Column =
-    ColumnBridge.column(WordShingles(ColumnBridge.expression(tokens), n, distinct))
+  def wordShingles(tokens: Column, n: Int, distinct: Boolean = true,
+      hashed: Boolean = false): Column =
+    ColumnBridge.column(WordShingles(ColumnBridge.expression(tokens), n, distinct, hashed))
+
+  def minHashSignature(hashes: Column, perms: Int): Column =
+    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(hashes), perms))
 }

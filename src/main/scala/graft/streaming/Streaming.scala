@@ -354,7 +354,8 @@ object Streaming {
         // (re-measured at the 100× soak: the 5-task stages survived a
         // plain repartition). The shuffle moves O(batch) bytes once;
         // every consumer below (PSI gate, scoring filter, screen,
-        // quarantine land) inherits full width. Row content is
+        // quarantine land) inherits full width, and the screen sees the
+        // batch spread and does not shuffle it again. Row content is
         // unchanged (append-disposition lands are orderless).
         val spread0 = rawBatch.repartition(
           rawBatch.sparkSession.sparkContext.defaultParallelism)

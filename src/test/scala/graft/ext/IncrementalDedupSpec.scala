@@ -134,7 +134,7 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(self.size >= 7, s"every twin must pair with its base: $self")
   }
 
-  test("a checkBatch against a small index costs at most 19 Spark jobs") {
+  test("a checkBatch against a small index costs at most 11 Spark jobs") {
     val store = freshStore()
     IncrementalDedup.indexCorpus(store, "c", corpus, "doc_id", "text")
     val batch = Seq(
@@ -149,7 +149,24 @@ class IncrementalDedupSpec extends SparkSpec {
       IncrementalDedup.checkBatch(store, "c", batch, "doc_id", "text")
         .select("new_id", "old_id").as[(Long, Long)].collect().toSeq))
     assert(pairs === Seq((10L, 1L)))
-    assert(jobs <= 19, s"a checkBatch ran $jobs Spark jobs")
+    assert(jobs <= 11, s"a checkBatch ran $jobs Spark jobs")
+  }
+
+  test("checkBatch re-spreads a batch only when it is not spread yet") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    val store = freshStore()
+    IncrementalDedup.indexCorpus(store, "c", corpus, "doc_id", "text")
+    val local = Seq((10L, "the quick brown fox jumps over the lazy dog tonight"))
+      .toDF("doc_id", "text")
+    val width = spark.sparkContext.defaultParallelism
+    val spread = spark.createDataFrame(local.repartition(width).rdd, local.schema)
+    def respreads(batch: DataFrame) = Dedup.withPins(
+      IncrementalDedup.checkBatch(store, "c", batch, "doc_id", "text")
+        .queryExecution.analyzed.collectWithSubqueries {
+          case r: Repartition if r.numPartitions == width => r
+        }.nonEmpty)
+    assert(respreads(local))
+    assert(!respreads(spread))
   }
 
   // ---- embedding (sign-code Hamming) variant -----------------------------

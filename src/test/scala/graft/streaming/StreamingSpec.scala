@@ -469,7 +469,7 @@ class StreamingSpec extends SparkSpec {
     assert(!sites.exists(_.contains("drainAvailableNow")), sites.mkString("\n"))
   }
 
-  test("a curateInto micro-batch costs at most 22 Spark jobs, a replayed one none") {
+  test("a curateInto micro-batch costs at most 16 Spark jobs, a replayed one none") {
     import graft.ext.{IncrementalDedup, QualityClassifier}
     val seeds = Seq((0L, "alpha beta gamma delta epsilon zeta eta theta"))
       .toDF("doc_id", "text")
@@ -489,7 +489,7 @@ class StreamingSpec extends SparkSpec {
     val jobs = curate()
     assert(store.read("curated").select("doc_id").as[Long].collect().toSeq
       === Seq(6L))
-    assert(jobs <= 22, s"one curateInto micro-batch ran $jobs Spark jobs")
+    assert(jobs <= 16, s"one curateInto micro-batch ran $jobs Spark jobs")
     val replayJobs = curate()
     assert(store.read("curated").count() === 1L)
     assert(replayJobs === 0, s"a replayed batch ran $replayJobs Spark jobs")
