@@ -88,31 +88,6 @@ final class GraftDataset(val store: TableStore, val registry: SchemaRegistry,
       df.select("load_id").distinct().collect().map(_.getString(0)).sorted.toSeq
   }
 
-  /** PIN a snapshot of a lakehouse table against retention — the
-    * facade face of [[graft.write.TableStore.pinSnapshot]] (Iceberg tag
-    * semantics): [[asOf]] time travel to the pinned snapshot keeps
-    * working under any retention schedule. The vector twin is
-    * [[VectorCollection.pin]]. */
-  def pinSnapshot(name: String, snapshot: Long): Unit =
-    store.pinSnapshot(Naming.normalizeTableName(name), snapshot)
-
-  /** Withdraw a [[pinSnapshot]] pin (no-op if not pinned). */
-  def unpinSnapshot(name: String, snapshot: Long): Unit =
-    store.unpinSnapshot(Naming.normalizeTableName(name), snapshot)
-
-  /** The pinned snapshot ids of a table (empty if none). */
-  def pinnedSnapshots(name: String): Set[Long] =
-    store.pinnedSnapshots(Naming.normalizeTableName(name))
-
-  /** Apply a snapshot-retention policy (keep-N ∧ TTL; pins and the
-    * current snapshot always retained) to a lakehouse table — see
-    * [[graft.write.TableStore.applyRetention]]. `now` is injectable so
-    * TTL policies replay deterministically from the facade too.
-    * Returns (expired, remaining) snapshot ids, oldest → newest. */
-  def retainTable(name: String, keepLast: Int, ttlMs: Option[Long] = None,
-      now: Long = System.currentTimeMillis()): (Seq[Long], Seq[Long]) =
-    store.applyRetention(Naming.normalizeTableName(name), keepLast, ttlMs, now)
-
   /** Vector-collection facade — the one-stop dataset API over a
     * persisted [[graft.write.VectorSink]] collection (the reference's
     * vector destinations are reached the same way: through the
@@ -150,26 +125,6 @@ final class VectorCollection(store: TableStore, val name: String) {
     VectorSink.topK(store, name, queries, id, vec, k, nprobe,
       at.map(VectorSink.generationAt(store, name, _)), among, where,
       fullVectors, shortlist)
-
-  /** Pin a generation against retention (see
-    * [[graft.write.VectorSink.pinGeneration]]). */
-  def pin(gen: Long): Unit = VectorSink.pinGeneration(store, name, gen)
-
-  /** Withdraw a [[pin]] (see
-    * [[graft.write.VectorSink.unpinGeneration]]). */
-  def unpin(gen: Long): Unit = VectorSink.unpinGeneration(store, name, gen)
-
-  /** The pinned generation numbers. */
-  def pinned: Set[Long] = VectorSink.pinnedGenerations(store, name)
-
-  /** Apply a retention policy (keep-N ∧ TTL; pins always retained) —
-    * see [[graft.write.VectorSink.applyRetention]]. `now` is
-    * injectable like the underlying twin's, so TTL policies replay
-    * deterministically from the facade too. */
-  def retain(keepLast: Int, ttlMs: Option[Long] = None,
-      now: Long = System.currentTimeMillis())
-      : VectorSink.RetentionReport =
-    VectorSink.applyRetention(store, name, keepLast, ttlMs, now)
 }
 
 /** Lazy composable query over one table (reference Relation,

@@ -392,30 +392,12 @@ object Dedup {
     shiftleft(conv(substring(md5(tok), 1, 8), 16, 10).cast("long"), 32)
       .bitwiseOR(conv(substring(md5(tok), 9, 8), 16, 10).cast("long"))
 
-  /** 64-bit SimHash of the token multiset: sign-aggregated bit votes of
-    * [[tokenHash64]](token). Near-identical docs differ in few bits.
-    * Per-row HOF form; [[simhashTable]] is the codegen aggregate form. */
-  def simhash(text: Column): Column = {
-    val hashes = transform(TextOps.tokens(TextOps.canonicalText(text)),
-      t => tokenHash64(t))
-    // one pass over tokens: fold the ±1 vote vector (64 wide) per token
-    def votesOf(h: Column): Column =
-      array((0 until 64).map(b =>
-        when(shiftright(h, b).bitwiseAND(1L) === 1L, lit(1L))
-          .otherwise(lit(-1L))): _*)
-    val votes = aggregate(hashes, array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc, votesOf(h), (a, v) => a + v))
-    // bit set iff vote > 0; pack into one long
-    (0 until 64).map(b =>
-      when(element_at(votes, b + 1) > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce((a, c) => a.bitwiseOR(c))
-  }
-
   /** (_id, sh) simhash per document, as a codegen'd plan: explode
     * tokens → 64 bit-count sums + a token count in one hash aggregate.
     * Bit b of the simhash is set iff more than half the token hashes
-    * have bit b set (votes = 2·ones − n > 0) — identical output to
-    * [[simhash]], without per-element lambda interpretation. */
+    * have bit b set (votes = 2·ones − n > 0): the sign-aggregated bit
+    * votes of [[tokenHash64]](token), so near-identical docs differ in
+    * few bits. */
   def simhashTable(docs: DataFrame, id: String, text: String): DataFrame = {
     val toks = docs.select(col(id).as("_id"),
       explode(TextOps.tokens(TextOps.canonicalText(col(text)))).as("tok"))

@@ -57,17 +57,6 @@ object Coerce {
       .otherwise(lit(null).cast(BooleanType))
   }
 
-  /** bigint → binary, little-endian 8 bytes (type_helpers.py:193). */
-  def bigintToBinary(c: Column): Column = {
-    val h = lpad(hex(c), 16, "0")
-    val pairs = (0 until 8).map(i => substring(h, i * 2 + 1, 2))
-    unhex(concat(pairs.reverse: _*))
-  }
-
-  /** bigint/double ↔ timestamp via epoch seconds (type_helpers.py:224-225). */
-  def epochToTimestamp(c: Column): Column = timestamp_seconds(c)
-  def timestampToEpoch(c: Column): Column = unix_timestamp(c)
-
   /** text → timestamp, ISO-like (Spark's cast already parses ISO8601). */
   def textToTimestamp(c: Column): Column = trim(c).try_cast(TimestampType)
   def textToDate(c: Column): Column = trim(c).try_cast(DateType)

@@ -29,21 +29,12 @@ object JsonIngest {
     * are dropped by `from_json` for this batch — the same
     * batch-evolution contract as the reference, where a later batch
     * widens the schema. Tables under a frozen/evolve-strict contract
-    * should use [[parseColumnFull]]. */
+    * should pass `sampleCap = Long.MaxValue`, so every document
+    * participates at full-scan inference cost. */
   def parseColumn(df: DataFrame, column: String, sampleCap: Long = 10000L): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val schema = spark.read.json(inferenceSample(df, column, sampleCap).as[String]).schema
-    df.withColumn(column, from_json(col(column), schema))
-  }
-
-  /** Full-corpus inference (the pre-sampling behavior): every document
-    * participates, so no field can be missed — the contract-freeze
-    * fallback, at full-scan inference cost. */
-  def parseColumnFull(df: DataFrame, column: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val schema = spark.read.json(df.select(col(column)).as[String]).schema
     df.withColumn(column, from_json(col(column), schema))
   }
 
@@ -64,7 +55,7 @@ object JsonIngest {
       org.slf4j.LoggerFactory.getLogger(getClass).info(
         s"JSON schema inference sampling ~$sampleCap of $n documents of " +
           s"'$column'; fields appearing only outside the sample are dropped " +
-          "this batch (parseColumnFull scans every document)")
+          "this batch (sampleCap = Long.MaxValue scans every document)")
       graft.operators.HashSplit.sample(docs, column, sampleCap.toDouble / n)
     }
   }

@@ -30,10 +30,11 @@ object ConnectedComponents {
     * block of a round's labels recomputes from lineage. */
   def components(edges: DataFrame, srcCol: String, dstCol: String,
       idCol: String = "id", maxIter: Int = 20): DataFrame = {
-    // symmetrize once: propagation then only needs one direction
-    val sym = Dedup.pin(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    // symmetrize once: propagation then only needs one direction; the
+    // pin is built before the first boundary reads it
+    val sym = Dedup.build(Dedup.pin(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .unionByName(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .distinct())
+      .distinct()))
     // init = round 1's result directly: label₀ = min(id, neighbors).
     // The previous identity init (label₀ = id) spent a whole
     // join round computing exactly this aggregate — one

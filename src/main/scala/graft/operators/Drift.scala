@@ -95,10 +95,9 @@ object Drift {
     require(counts.nonEmpty, "empty histogram")
     def bins: Int = counts.length
     /** This histogram with `other`'s per-bin counts folded in — the
-      * ONE owner of profile-fold addition (mergeIntoProfile and the
-      * pipeline's locked reload-add-write both call it, so the
-      * arithmetic cannot drift between the two paths). `other` must be
-      * binned under THIS histogram's (mn, mx, bins). */
+      * ONE owner of profile-fold addition (the pipeline's locked
+      * reload-add-write calls it). `other` must be binned under THIS
+      * histogram's (mn, mx, bins). */
     def plus(other: Array[Long]): Histogram = {
       require(other.length == bins,
         s"fold width ${other.length} != profile bins $bins")
@@ -145,7 +144,7 @@ object Drift {
   }
 
   /** Bin counts of `cur` under the profile's PINNED (mn, mx, bins) —
-    * the batch-side (Spark) half of [[mergeIntoProfile]], exposed so a
+    * the batch-side (Spark) half of a profile fold, exposed so a
     * caller can run the aggregate while its source window is still
     * pinned and fold the (pure driver-side) ADDITION later under a
     * store lock: counts are commutative, so a lock-covered
@@ -163,15 +162,6 @@ object Drift {
     rows.foreach(r => counts(r.getInt(0)) = r.getLong(1))
     counts
   }
-
-  /** Fold `cur`'s values into an existing profile: [[binCounts]] under
-    * the profile's pinned range, then ADD (the documented
-    * streaming-profile trade: the bin range is fixed at seed time;
-    * re-seed with [[saveProfile]] to re-range). The rolling-baseline
-    * step of the O(batch) load-plane drift gate. */
-  def mergeIntoProfile(hist: Histogram, cur: DataFrame,
-      value: String): Histogram =
-    hist.plus(binCounts(hist, cur, value))
 
   /** Read back a [[saveProfile]] table. */
   def loadProfile(store: graft.write.TableStore, table: String): Histogram = {

@@ -256,9 +256,8 @@ object Sketches {
 
   /** Bloom bit table over `value`: k salted md5 hashes per value each
     * set one of m bits; output = the distinct set bits (≤ m rows —
-    * sketch-sized, persistable, mergeable by union+distinct, see
-    * [[bloomMerge]]). The "have we ever seen this fingerprint/URL?"
-    * membership sketch: at 100 TB the bit table answers the question
+    * sketch-sized, persistable, mergeable by union+distinct). The
+    * "have we ever seen this fingerprint/URL?" membership sketch: at 100 TB the bit table answers the question
     * without touching the corpus (one-sided error — false positives
     * only — so a hit falls back to an exact corpus lookup, a miss is
     * definitive). One explode(×k) + distinct; map-side partial
@@ -273,10 +272,6 @@ object Sketches {
         1, 8), 16, 10).cast("long") % m).as("bit"))
       .distinct()
   }
-
-  /** Merge bloom bit tables (same m, k): bits union. */
-  def bloomMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).distinct()
 
   /** Membership probes against a bit table: might_contain(v) ⇔ all k
     * bits of v are set. Output: one row per distinct probe value

@@ -38,13 +38,7 @@ final case class Resource(
   def addMap(f: DataFrame => DataFrame): Resource = copy(frame = f(frame))
   /** FilterItem (items_transform.py:77-100). */
   def addFilter(cond: Column): Resource = copy(frame = frame.filter(cond))
-  /** LimitItem (items_transform.py:174-239): row-count limit. The
-    * reference's max_time / max_pages variants bound the GENERATOR, so
-    * their Spark analog lives at the source: [[graft.sources.Rest
-    * .fetchPages]] takes `maxPages` and `maxTime` — a lazy Spark plan
-    * has no wall-clock to bound. */
-  def addLimit(n: Int): Resource = copy(frame = frame.limit(n))
-  /** Full LimitItem parity on a generic resource: `maxRows` is the row
+  /** LimitItem (items_transform.py:174-239): `maxRows` is the row
     * budget (`frame.limit`); `maxTime` binds a wall-clock deadline at
     * THIS call — the reference starts its clock when the transform
     * binds to the pipe (items_transform.py:185-194) — and a resource
@@ -251,27 +245,6 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
     if (state.nonEmpty) dispositions.recordState(name, loadId, state)
   }
 
-  /** Run resources CONCURRENTLY (reference load thread pool, workers=20,
-    * dlt/load/load.py:290-321): each resource's plan is submitted as its
-    * own Spark job set, overlapping scheduling/IO gaps across resources.
-    * Store commits, registry updates and state writes are synchronized;
-    * resources must target distinct tables (as in the reference). */
-  def runParallel(resources: Seq[Resource], loadId: String,
-      parallelism: Int = 8): Map[String, Seq[String]] = {
-    require(resources.map(r => Naming.normalizeTableName(r.name)).distinct.size ==
-      resources.size, "parallel run requires distinct resource tables")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, resources.size)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val futures = resources.map(r => scala.concurrent.Future(r.name -> runOne(r, loadId)))
-      val out = awaitAll(futures).toMap
-      syncSystemTables(loadId)
-      out
-    } finally pool.shutdown()
-  }
-
   /** Load `resources` through a CUSTOM FUNCTION DESTINATION (reference
     * `@dlt.destination`, dlt/destinations/decorators.py + impl/
     * destination/factory.py): extract + normalize run as for a table
@@ -450,9 +423,9 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
         val values = cached.select(c).distinct().collect()
           .map(_.get(0)).filter(_ != null).map(_.toString).sorted
         // slices target DISTINCT tables by construction (the routing
-        // value is in the table name), so they load concurrently like
-        // runParallel resources — sequential slices serialized one
-        // two-commit load cycle per value (round-3 bench finding)
+        // value is in the table name), so they load concurrently —
+        // sequential slices serialized one two-commit load cycle per
+        // value (round-3 bench finding)
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.max(1, math.min(8, values.length)))
         implicit val ec: scala.concurrent.ExecutionContext =

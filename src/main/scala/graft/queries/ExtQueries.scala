@@ -168,8 +168,6 @@ object ExtQueries {
        |  (SELECT count(*) FROM dups)::BIGINT AS dropped
        |FROM corpus ORDER BY vec_id""".stripMargin
 
-  private val stopsSql = TextOps.EnglishStopwords.map(w => s"'$w'").mkString(", ")
-
   /** Shared config of the four unigram-tokenizer gates (one definition
     * so query and oracle params cannot diverge): 24 multi-char pieces
     * pruned from a 96-piece substring seed over 2 rounds — sized to

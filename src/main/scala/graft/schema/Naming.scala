@@ -56,10 +56,6 @@ object Naming {
     shortenFragments(name.split(PathSeparator, -1).toSeq
       .map(normalizeIdentifier(_, maxLength)), maxLength)
 
-  /** Normalize a raw nested path: normalize each fragment, join with `__`. */
-  def normalizePath(path: Seq[String], maxLength: Int = 127): String =
-    shortenFragments(path.map(normalizeIdentifier(_, maxLength)), maxLength)
-
   /** The shared shortening step for the pluggable conventions
     * ([[NamingConventions]]) — one tag algorithm across all of them,
     * as the reference's base class shares shorten_identifier. */

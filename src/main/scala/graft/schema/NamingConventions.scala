@@ -46,11 +46,6 @@ sealed trait NamingConvention {
   def normalizeTableIdentifier(identifier: String, maxLength: Int = 127): String =
     normalizeIdentifier(identifier, maxLength)
 
-  /** Normalize each fragment, join with this convention's separator,
-    * shorten the whole path (naming.py:57-61). */
-  def normalizePath(path: Seq[String], maxLength: Int = 127): String =
-    joinPath(path.map(normalizeIdentifier(_, maxLength)), maxLength)
-
   /** Join ALREADY-normalized fragments and shorten the whole path
     * (naming.py:72-77's shorten_fragments). */
   def joinPath(fragments: Seq[String], maxLength: Int = 127): String = {

@@ -107,37 +107,6 @@ final class SchemaRegistry(val name: String) {
     merged
   }
 
-  /** Mermaid `erDiagram` export (reference dlt/helpers/mermaid.py,
-    * schema/schema.py:807-931 export family). Relationships come from
-    * declared references and parent links. */
-  def toMermaid: String = {
-    val entities = tables.map { case (t, (s, _)) =>
-      val cols = s.fields.map(f => s"    ${f.dataType.simpleString} ${f.name}").mkString("\n")
-      s"  $t {\n$cols\n  }"
-    }.mkString("\n")
-    val rels = tables.flatMap { case (t, (_, h)) =>
-      h.references.map(r => s"  $t }o--|| ${r.referencedTable} : ${r.columns.mkString("+")}") ++
-        h.parent.map(p => s"  $t }o--|| $p : _dlt_parent_id")
-    }.mkString("\n")
-    s"erDiagram\n$entities\n$rels"
-  }
-
-  /** DBML export (reference dlt/helpers/dbml.py). */
-  def toDbml: String = {
-    val tbls = tables.map { case (t, (s, h)) =>
-      val cols = s.fields.map { f =>
-        val pk = if (h.primaryKey.contains(f.name)) " [pk]" else ""
-        s"  ${f.name} ${f.dataType.simpleString}$pk"
-      }.mkString("\n")
-      s"Table $t {\n$cols\n}"
-    }.mkString("\n\n")
-    val refs = tables.flatMap { case (t, (_, h)) =>
-      h.references.map(r =>
-        s"Ref: $t.${r.columns.mkString("")} > ${r.referencedTable}.${r.referencedColumns.mkString("")}")
-    }.mkString("\n")
-    if (refs.isEmpty) tbls else s"$tbls\n\n$refs"
-  }
-
   /** Stored-schema JSON (the reference's stored schema form,
     * schema/typing.py:396-408). `stripProcessingHints` drops the
     * per-table `x-…` hints — the import/export-folder form

@@ -104,12 +104,4 @@ object Filesystem {
       .option("inferSchema", inferSchema.toString)
       .csv(path)
       .withColumn("_file_name", input_file_name())
-
-  /** read_jsonl transformer — distributed line-JSON parse with inference. */
-  def readJsonl(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path).withColumn("_file_name", input_file_name())
-
-  /** read_parquet transformer. */
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).withColumn("_file_name", input_file_name())
 }

@@ -519,17 +519,11 @@ object Streaming {
   private[graft] val guardManifestReads =
     new java.util.concurrent.atomic.AtomicLong
 
-  /** Exactly-once key dedup across micro-batches: event-time watermark
-    * bounds the dedup state, `dropDuplicates` keeps the first arrival
-    * of each key (the streaming analog of the reference's incremental
-    * boundary-fingerprint dedup, SURVEY.md §2.7). */
-  def dedupByKey(stream: DataFrame, eventTime: String, delay: String,
-      keys: Seq[String]): DataFrame =
-    stream.withWatermark(eventTime, delay)
-      .dropDuplicates(keys :+ eventTime)
-
-  /** Unbounded-state variant for id-keyed streams where keys never
-    * repeat outside the replay window (state = one hash per key). */
+  /** Exactly-once key dedup across micro-batches: `dropDuplicates`
+    * keeps the first arrival of each key (the streaming analog of the
+    * reference's incremental boundary-fingerprint dedup, SURVEY.md
+    * §2.7). The state is one hash per key and unbounded, for id-keyed
+    * streams whose keys never repeat outside the replay window. */
   def dedupByKeyUnbounded(stream: DataFrame, keys: Seq[String]): DataFrame =
     stream.dropDuplicates(keys)
 

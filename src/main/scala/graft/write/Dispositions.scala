@@ -1,7 +1,7 @@
 package graft.write
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, max, min}
+import org.apache.spark.sql.functions.{col, lit, max, min}
 
 import graft.ext.Dedup
 import graft.normalize.Ids
@@ -42,8 +42,8 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
 
   /** Monotone unique load id (reference: epoch-seconds float,
     * load_package.py). Epoch seconds alone collide for two loads in the
-    * same second — likely under `runParallel` — so ids are forced
-    * strictly increasing at microsecond granularity. */
+    * same second, so ids are forced strictly increasing at microsecond
+    * granularity. */
   def newLoadId(): String =
     java.math.BigDecimal.valueOf(Dispositions.nextMicros(), 6).toPlainString
 

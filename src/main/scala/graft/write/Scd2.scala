@@ -89,8 +89,7 @@ object Scd2 {
         // subset of trackedColumns, so two entities can share a row
         // hash — an unscoped retire would let entity A's identical hash
         // keep entity B's stale row active, and an unscoped insert
-        // would suppress B's new row. Same scoping as the JDBC path
-        // (JdbcSink.scd2 entityScope). With mergeKey empty this is the
+        // would suppress B's new row. With mergeKey empty this is the
         // plain hash compare. A null in the key matches nothing, as in
         // an equi-join.
         val hashKey = cfg.rowHashColumn +: cfg.mergeKey

@@ -73,10 +73,10 @@ final case class Tombstone(name: String, column: String, covered: Set[String])
   * Concurrency contract: commits are serialized PER TABLE (a lock per
   * table name), the same single-writer-per-table model the reference
   * runs (one load package writer per table) — but writes to DIFFERENT
-  * tables proceed concurrently, which is what makes
-  * [[graft.pipeline.Pipeline.runParallel]] and the chain load's
-  * child ∥ root commits actually overlap instead of convoying on one
-  * store-wide lock. Two-table operations (clone/adopt/copyInto) take
+  * tables proceed concurrently, which is what makes a table
+  * dispatch's slices and the chain load's child ∥ root commits
+  * actually overlap instead of convoying on one store-wide lock.
+  * Two-table operations (clone/adopt/copyInto) take
   * both locks in name order (no deadlock cycle possible). Two
   * PROCESSES committing to one table concurrently can still lose the
   * earlier commit's manifest entry (last `_CURRENT` swap wins) — run
@@ -777,11 +777,6 @@ final class TableStore(val root: String, val spark: SparkSession) {
     writeSnapshotPins(table, pinnedSnapshots(table) + snapshot)
   }
 
-  /** Remove a [[pinSnapshot]] pin (no-op if not pinned). */
-  def unpinSnapshot(table: String, snapshot: Long): Unit = locked(table) {
-    writeSnapshotPins(table, pinnedSnapshots(table) - snapshot)
-  }
-
   /** The currently pinned snapshot ids (empty if none). A malformed
     * line fails with the FILE named (every GC/pin entry point reads
     * this — a bare NumberFormatException would brick maintenance on
@@ -801,15 +796,11 @@ final class TableStore(val root: String, val spark: SparkSession) {
   }
 
   private def writeSnapshotPins(table: String, pins: Set[Long]): Unit = {
-    val p = tableDir(table).resolve("_PINS")
-    if (pins.isEmpty) { Files.deleteIfExists(p); () }
-    else {
-      val tmp = tableDir(table).resolve(s"_PINS.tmp.${System.nanoTime()}")
-      Files.write(tmp, pins.toSeq.sorted.mkString("\n")
-        .getBytes(StandardCharsets.UTF_8), StandardOpenOption.CREATE)
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    val tmp = tableDir(table).resolve(s"_PINS.tmp.${System.nanoTime()}")
+    Files.write(tmp, pins.toSeq.sorted.mkString("\n")
+      .getBytes(StandardCharsets.UTF_8), StandardOpenOption.CREATE)
+    Files.move(tmp, tableDir(table).resolve("_PINS"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** SNAPSHOT RETENTION policy sweep — Delta/Iceberg snapshot expiry

@@ -1,6 +1,6 @@
 package graft.write
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Similarity}
@@ -441,9 +441,6 @@ object VectorSink {
       countListSizes(store, table, nlist))
   }
 
-  def readMeta(store: TableStore, table: String): IvfMeta =
-    metaFrom(store.readDriverRows(s"${table}__ivf_meta").head)
-
   /** Top-k cosine neighbours per query over the PERSISTED collection,
     * `(query_id, rank, match_id, cosine)` with cosine rounded to 6
     * places. The sub-tables resolve through the collection manifest
@@ -619,6 +616,13 @@ object VectorSink {
     if (total == 0L) 1.0 else sizes.max.toDouble * sizes.length / total
   }
 
+  /** Fraction of the collection's PHYSICAL rows that tombstones may
+    * have killed: tombstoned-id count / census total, no Spark job. An
+    * upper-bound heuristic (absent ids and repeat-deletes inflate the
+    * numerator; duplicate-id rows deflate it): the maintenance trigger
+    * for materializing deletes, not an exact accounting. 0 on a freshly
+    * (re)written collection — full rewrites drop tombstones and reset
+    * the count. [[describeCollection]] reports it as `dead_fraction`. */
   private def deadOf(row: CollectionRow, sizes: Array[Long]): Double = {
     val total = sizes.sum
     if (total == 0L) 0.0
@@ -910,7 +914,7 @@ object VectorSink {
     * segments until a [[rebalance]] materializes the deletes — the
     * occupancy census therefore stays PHYSICAL (it measures probe scan
     * cost, dead rows included) and the manifest's tombstone-id counter
-    * feeds [[deadFraction]], the compaction trigger. The batch must be
+    * feeds the dead fraction, the compaction trigger. The batch must be
     * UNIQUE on `id` — duplicates are rejected before the commit
     * (tombstones never cover the batch's own segment, so both copies
     * would survive; mirrors SQL MERGE's duplicate-staging-key error). */
@@ -1059,7 +1063,7 @@ object VectorSink {
     * tombstones), so the occupancy census is left untouched — it
     * measures probe SCAN cost, which still includes the dead rows —
     * and the manifest's tombstone-id counter grows instead; it feeds
-    * [[deadFraction]], the compaction trigger [[appendAndMaintain]]
+    * the dead fraction, the compaction trigger [[appendAndMaintain]]
     * checks. Returns the number of distinct ids tombstoned (absent ids
     * count too — tombstones are id predicates, not row locators, so
     * the counter is a maintenance heuristic, not an exact dead-row
@@ -1092,18 +1096,6 @@ object VectorSink {
     }
     n
   } }
-
-  /** Fraction of the collection's PHYSICAL rows that tombstones may
-    * have killed: tombstoned-id count / census total — a driver-file
-    * read, no Spark job, like [[listSkew]]. An upper-bound heuristic
-    * (absent ids and repeat-deletes inflate the numerator; duplicate-id
-    * rows deflate it): the maintenance trigger for materializing
-    * deletes, not an exact accounting. 0 on a freshly (re)written
-    * collection — full rewrites drop tombstones and reset the count. */
-  def deadFraction(store: TableStore, table: String): Double = {
-    val row = newestRow(store, table)
-    deadOf(row, sizesOf(store, table, row))
-  }
 
   /** Vacuum every sub-table of a collection WITHOUT breaking ANY
     * still-listed generation: each sub-table retains its newest
@@ -1186,8 +1178,8 @@ object VectorSink {
 
   /** MAINTENANCE: retrain-and-rewrite the collection when coarse-list
     * occupancy skews past `maxSkew` (max/mean, see [[listSkew]]) OR the
-    * tombstoned fraction passes `maxDeadFraction` (see [[deadFraction]]
-    * — the rewrite also MATERIALIZES [[delete]]/[[upsert]] tombstones:
+    * tombstoned fraction passes `maxDeadFraction` (tombstoned ids /
+    * physical rows — the rewrite also MATERIALIZES [[delete]]/[[upsert]] tombstones:
     * dead rows leave the segments, the census recounts to live rows,
     * the tombstone counter resets) — the FAISS "retrain the coarse
     * quantizer" discipline, composed as write-over-read like

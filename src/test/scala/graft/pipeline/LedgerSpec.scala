@@ -66,11 +66,6 @@ class LedgerSpec extends SparkSpec {
       },
       "table dispatch" -> twice(v => Resource("t",
         Seq((1L, v, "x"), (2L, v, "y")).toDF("id", "v", "k")).withTableDispatch("k")),
-      "runParallel" -> { p =>
-        p.runParallel(Seq(Resource("x", flat("a")),
-          Resource("y", nested("a")).withMerge(byId)), "1")
-        Seq("1")
-      },
       "runTo" -> { p =>
         p.runTo(Seq(Resource("x", flat("a")), Resource("y", flat("b"))),
           CustomDestination((_, _) => ()), "1")

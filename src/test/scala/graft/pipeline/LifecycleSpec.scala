@@ -77,21 +77,6 @@ class LifecycleSpec extends SparkSpec {
     assert(p.metrics("t")("mx") === 3L)
   }
 
-  test("runParallel loads distinct resources concurrently and correctly") {
-    val p = new Pipeline("par", tmp("lc-par"), spark)
-    val resources = (1 to 6).map(i =>
-      Resource(s"t$i", Seq((i.toLong, s"v$i")).toDF("id", "v")))
-    val written = p.runParallel(resources, "1", parallelism = 4)
-    assert(written.keySet === resources.map(_.name).toSet)
-    (1 to 6).foreach { i =>
-      val rows = p.store.read(s"t$i").select("id").as[Long].collect().toSeq
-      assert(rows === Seq(i.toLong))
-    }
-    intercept[IllegalArgumentException] {
-      p.runParallel(Seq(Resource("dup", sample), Resource("dup", sample)), "2")
-    }
-  }
-
   test("table dispatch routes rows to per-value tables") {
     val p = new Pipeline("disp", tmp("lc-disp"), spark)
     val events = Seq((1L, "click"), (2L, "view"), (3L, "click"))
@@ -124,21 +109,6 @@ class LifecycleSpec extends SparkSpec {
     val st = p.store.read("_dlt_pipeline_state")
     assert(st.filter(col("_dlt_load_id") === "4").count() === 1)
     assert(st.select("state").as[String].head().nonEmpty)
-  }
-
-  test("schema exports render tables and relationships") {
-    val reg = new SchemaRegistry("exp")
-    reg.register("nation", sample.schema)
-    reg.register("customer", sample.schema, TableHints(
-      primaryKey = Seq("id"),
-      references = Seq(TableReference(Seq("id"), "nation", Seq("id")))))
-    val mermaid = reg.toMermaid
-    assert(mermaid.startsWith("erDiagram"))
-    assert(mermaid.contains("customer }o--|| nation : id"))
-    val dbml = reg.toDbml
-    assert(dbml.contains("Table customer"))
-    assert(dbml.contains("id bigint [pk]"))
-    assert(dbml.contains("Ref: customer.id > nation.id"))
   }
 
   test("registry JSON survives hostile strings in schema metadata") {

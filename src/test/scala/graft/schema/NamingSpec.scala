@@ -43,7 +43,7 @@ class NamingSpec extends AnyFunSuite {
   }
 
   test("path fragments join with double underscore") {
-    assert(Naming.normalizePath(Seq("parent", "ChildList")) == "parent__child_list")
+    assert(Naming.normalizeTableName("parent__ChildList") == "parent__child_list")
   }
 
   test("over-long identifiers shorten deterministically with a tag") {

@@ -17,14 +17,6 @@ class SourcesSpec extends SparkSpec {
     assert(back.count() == 2)
     assert(back.columns.contains("_file_name"))
     assert(back.select("id").as[Int].collect().sorted.toSeq == Seq(1, 2))
-    // the jsonl and parquet readers carry the same provenance column
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.json(s"$dir/jsonl")
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/pq")
-    Seq(Filesystem.readJsonl(spark, s"$dir/jsonl"),
-        Filesystem.readParquet(spark, s"$dir/pq")).foreach { r =>
-      assert(r.columns.contains("_file_name"))
-      assert(r.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-    }
   }
 
   test("filesystem: file listing returns FileItem metadata") {
@@ -125,7 +117,7 @@ class SourcesSpec extends SparkSpec {
     // Spark's JDBC writer creates QUOTED lowercase columns — an unquoted
     // cursor identifier would fold to uppercase in Derby and miss them;
     // the reader must resolve the reflected name
-    JdbcSink.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), cfg)
+    JdbcSink.replace(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), cfg)
     val read = Jdbc.read(spark, cfg.copy(
       partitionColumn = Some("id"), numPartitions = 2,
       lowerBound = Some("0"), upperBound = Some("4"),
@@ -145,8 +137,8 @@ class SourcesSpec extends SparkSpec {
     import graft.write.JdbcSink
     val url = "jdbc:derby:memory:graftschema;create=true"
     val mk = (t: String) => graft.sources.JdbcTableConfig(url, t)
-    JdbcSink.append(Seq((1L, "a")).toDF("id", "v"), mk("t_alpha"))
-    JdbcSink.append(Seq((2L, "b"), (3L, "c")).toDF("id", "v"), mk("t_beta"))
+    JdbcSink.replace(Seq((1L, "a")).toDF("id", "v"), mk("t_alpha"))
+    JdbcSink.replace(Seq((2L, "b"), (3L, "c")).toDF("id", "v"), mk("t_beta"))
     val tables = Jdbc.listTables(url)
     assert(tables === Seq("T_ALPHA", "T_BETA")) // derby folds unquoted up
     val all = Jdbc.readAllTables(spark, url)
@@ -556,119 +548,40 @@ class SourcesSpec extends SparkSpec {
     assert(calls == 3, s"ascending backfill should stop at page 3, made $calls calls")
   }
 
-  test("jdbc sink: append, merge and replace round-trip on in-memory derby") {
+  test("jdbc sink: replace round-trips on in-memory derby") {
     import graft.write.JdbcSink
     val cfg = graft.sources.JdbcTableConfig(
       url = "jdbc:derby:memory:graftsink;create=true", table = "t_users")
     def readBack = Jdbc.read(spark, cfg)
       .select("id", "v").as[(Long, String)].collect().toMap
 
-    JdbcSink.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), cfg)
+    // the first load creates the destination
+    JdbcSink.replace(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), cfg)
     assert(readBack == Map(1L -> "a", 2L -> "b"))
-
-    // merge: key 2 updates, key 3 inserts, key 1 untouched
-    JdbcSink.mergeDeleteInsert(
-      Seq((2L, "B"), (3L, "c")).toDF("id", "v"), cfg, keys = Seq("id"))
-    assert(readBack == Map(1L -> "a", 2L -> "B", 3L -> "c"))
-
+    // drop-and-recreate and truncate-and-insert both replace every row
     JdbcSink.replace(Seq((9L, "z")).toDF("id", "v"), cfg)
     assert(readBack == Map(9L -> "z"))
-
-    // first-load merge creates the destination from the staging shape
-    val cfg2 = cfg.copy(table = "t_fresh")
-    JdbcSink.mergeDeleteInsert(Seq((5L, "e")).toDF("id", "v"), cfg2, Seq("id"))
-    assert(Jdbc.read(spark, cfg2).count() == 1)
-  }
-
-  test("jdbc sink: upsert and insert-only strategies on in-memory derby") {
-    import graft.write.JdbcSink
-    val base = graft.sources.JdbcTableConfig(
-      url = "jdbc:derby:memory:graftsink2;create=true", table = "t_up")
-    def readBack(c: graft.sources.JdbcTableConfig) = Jdbc.read(spark, c)
-      .select("id", "v").as[(Long, String)].collect().toMap
-
-    // upsert (MERGE path on derby): matched updates, unmatched inserts
-    JdbcSink.mergeUpsert(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), base, Seq("id"))
-    JdbcSink.mergeUpsert(Seq((2L, "B"), (3L, "c")).toDF("id", "v"), base, Seq("id"))
-    assert(readBack(base) == Map(1L -> "a", 2L -> "B", 3L -> "c"))
-
-    // insert-only: existing key 2 never changes, fresh key 4 inserts
-    val cfgIo = base.copy(table = "t_io")
-    JdbcSink.mergeInsertOnly(Seq((2L, "x")).toDF("id", "v"), cfgIo, Seq("id"))
-    JdbcSink.mergeInsertOnly(Seq((2L, "y"), (4L, "d")).toDF("id", "v"), cfgIo, Seq("id"))
-    assert(readBack(cfgIo) == Map(2L -> "x", 4L -> "d"))
-
-    // all-key-columns upsert degenerates to insert-of-unmatched
-    val cfgK = base.copy(table = "t_keysonly")
-    JdbcSink.mergeUpsert(Seq(Tuple1(1L)).toDF("id"), cfgK, Seq("id"))
-    JdbcSink.mergeUpsert(Seq(Tuple1(1L), Tuple1(2L)).toDF("id"), cfgK, Seq("id"))
-    assert(Jdbc.read(spark, cfgK).count() == 2)
-  }
-
-  test("jdbc sink: scd2 retires and versions in-database on derby") {
-    import graft.write.{JdbcSink, Scd2Config}
-    val cfg = graft.sources.JdbcTableConfig(
-      url = "jdbc:derby:memory:graftscd;create=true", table = "dim_users")
-    def cfgFor(ts: String) = Scd2Config(
-      trackedColumns = Seq("id", "v"), mergeKey = Seq("id"), boundaryTs = ts)
-
-    JdbcSink.scd2(Seq((1L, "a1"), (2L, "b1")).toDF("id", "v"), cfg,
-      cfgFor("2024-01-01 00:00:00"))
-    // entity 1 revises; entity 2 absent from the batch must NOT retire
-    JdbcSink.scd2(Seq((1L, "a2")).toDF("id", "v"), cfg,
-      cfgFor("2024-01-02 00:00:00"))
-    val out = Jdbc.read(spark, cfg)
-      .select("id", "v", "_dlt_valid_to")
-      .as[(Long, String, Option[java.sql.Timestamp])].collect().toSeq
-    assert(out.size === 3) // a1 retired, a2 + b1 active
-    assert(out.filter(_._3.isEmpty).map(r => (r._1, r._2)).sorted
-      === Seq((1L, "a2"), (2L, "b1")))
-    assert(out.filter(_._3.nonEmpty).map(_._2) === Seq("a1"))
-    // an identical re-delivery is a no-op (hash survives as active)
-    JdbcSink.scd2(Seq((1L, "a2")).toDF("id", "v"), cfg,
-      cfgFor("2024-01-03 00:00:00"))
-    assert(Jdbc.read(spark, cfg).count() === 3)
-
-    // COMPOSITE merge key scopes on the full TUPLE: a batch holding
-    // (1,_) and (_,20) entities must not retire untouched (1,20) —
-    // per-column EXISTS would match it through two different rows
-    val cfg2 = cfg.copy(table = "dim_comp")
-    def compCfg(ts: String) = Scd2Config(
-      trackedColumns = Seq("tenant", "acct", "v"),
-      mergeKey = Seq("tenant", "acct"), boundaryTs = ts)
-    JdbcSink.scd2(
-      Seq((1L, 20L, "keep"), (1L, 30L, "x"), (2L, 20L, "y"))
-        .toDF("tenant", "acct", "v"),
-      cfg2, compCfg("2024-01-01 00:00:00"))
-    JdbcSink.scd2(
-      Seq((1L, 30L, "x2"), (2L, 20L, "y2")).toDF("tenant", "acct", "v"),
-      cfg2, compCfg("2024-01-02 00:00:00"))
-    val comp = Jdbc.read(spark, cfg2)
-      .select("tenant", "acct", "v", "_dlt_valid_to")
-      .as[(Long, Long, String, Option[java.sql.Timestamp])].collect().toSeq
-    // (1,20) untouched-active; x and y retired; x2, y2 active
-    assert(comp.count(_._4.isEmpty) === 3)
-    assert(comp.find(r => r._1 == 1L && r._2 == 20L).get._4.isEmpty,
-      "entity absent from the batch must stay active under a composite key")
+    JdbcSink.replace(Seq((7L, "y"), (8L, "x")).toDF("id", "v"), cfg, truncate = true)
+    assert(readBack == Map(7L -> "y", 8L -> "x"))
   }
 
   test("jdbc sink: destinations evolve to new staged columns (widen-only)") {
     import graft.write.JdbcSink
     val cfg = graft.sources.JdbcTableConfig(
       url = "jdbc:derby:memory:graftevo;create=true", table = "t_evo")
-    JdbcSink.append(Seq((1L, "a")).toDF("id", "v"), cfg)
-    // second load carries a NEW column: destination ALTERs, old rows null
-    JdbcSink.append(Seq((2L, "b", 7L)).toDF("id", "v", "score"), cfg)
+    JdbcSink.replace(Seq((1L, "a")).toDF("id", "v"), cfg)
+    // a truncating load keeps the table: a NEW staged column is ALTERed in
+    JdbcSink.replace(Seq((2L, "b", 7L)).toDF("id", "v", "score"), cfg,
+      truncate = true)
     val out = Jdbc.read(spark, cfg).select("id", "v", "score")
-      .as[(Long, String, Option[Long])].collect()
-      .map { case (i, v, s) => i -> (v, s) }.toMap
-    assert(out === Map(1L -> ("a", None), 2L -> ("b", Some(7L))))
-    // merge path evolves too
-    JdbcSink.mergeDeleteInsert(
-      Seq((2L, "B", 8L, 0.5)).toDF("id", "v", "score", "w"), cfg, Seq("id"))
-    val evolved = Jdbc.read(spark, cfg)
-    assert(evolved.columns.toSeq == Seq("id", "v", "score", "w"))
-    assert(evolved.count() === 2)
+      .as[(Long, String, Option[Long])].collect().toSeq
+    assert(out === Seq((2L, "b", Some(7L))))
+    // widen-only: a load without the column keeps it, and reads it NULL
+    JdbcSink.replace(Seq((3L, "c")).toDF("id", "v"), cfg, truncate = true)
+    val narrowed = Jdbc.read(spark, cfg)
+    assert(narrowed.columns.toSeq == Seq("id", "v", "score"))
+    assert(narrowed.select("id", "v", "score")
+      .as[(Long, String, Option[Long])].collect().toSeq === Seq((3L, "c", None)))
   }
 
   test("jdbc sink: identifiers normalize, casefold and shorten to the destination cap") {
@@ -676,32 +589,22 @@ class SourcesSpec extends SparkSpec {
     // capability inference is per engine (reference capabilities.py)
     assert(JdbcCapabilities.forUrl("jdbc:postgresql://h/db").maxIdentifierLength == 63)
     assert(JdbcCapabilities.forUrl("jdbc:mysql://h/db").quoteChar == '`')
-    assert(JdbcCapabilities.forUrl("jdbc:derby:memory:x").supportsMerge)
+    assert(JdbcCapabilities.forUrl("jdbc:derby:memory:x").casefold("abc") == "ABC")
 
     // a table name over derby's 128-char cap: normalized, shortened with
-    // the stable tag, casefolded, and fully usable through merge + read
+    // the stable tag, casefolded, and fully usable through replace + read
     val longName = "Event Log " + ("x" * 140)
     val cfg = graft.sources.JdbcTableConfig(
       url = "jdbc:derby:memory:graftsink3;create=true", table = longName)
-    JdbcSink.mergeDeleteInsert(
-      Seq((1L, "a")).toDF("id", "the Value"), cfg, keys = Seq("id"))
-    JdbcSink.mergeUpsert(
-      Seq((1L, "A"), (2L, "b")).toDF("id", "the Value"), cfg, keys = Seq("id"))
+    JdbcSink.replace(Seq((1L, "a")).toDF("id", "the Value"), cfg)
+    JdbcSink.replace(
+      Seq((1L, "A"), (2L, "b")).toDF("id", "the Value"), cfg, truncate = true)
     val out = Jdbc.read(spark, cfg.copy(table =
       graft.schema.Naming.normalizeTableName(longName, 128).toUpperCase))
     // column names ride the same normalization ("the Value" → the_value)
     assert(out.columns.toSeq == Seq("id", "the_value"))
     assert(out.select("id", "the_value").as[(Long, String)].collect().toMap
       == Map(1L -> "A", 2L -> "b"))
-
-    // two merges into one destination stage under DIFFERENT load-scoped
-    // names: neither clobbers the other's staging rows
-    val cfg2 = cfg.copy(table = "t_conc")
-    JdbcSink.mergeDeleteInsert(Seq((1L, "a")).toDF("id", "v"), cfg2,
-      Seq("id"), loadId = "load1")
-    JdbcSink.mergeDeleteInsert(Seq((2L, "b")).toDF("id", "v"), cfg2,
-      Seq("id"), loadId = "load2")
-    assert(Jdbc.read(spark, cfg2).count() == 2)
   }
 
   test("rest: config-wired can_close derives the window from state") {

@@ -301,15 +301,10 @@ class StreamingSpec extends SparkSpec {
   test("dedupByKeyUnbounded keeps one row per key") {
     val src = Streaming.fileStream(spark, writeSourceDir())
       .withColumn("_c", explode(array(lit(1), lit(2)))).drop("_c")
-      .withColumn("ts", timestamp_seconds(col("v")))
-    // the same input through the watermarked dedupByKey
-    Seq("dd" -> Streaming.dedupByKeyUnbounded(src, Seq("id")),
-        "ddw" -> Streaming.dedupByKey(src, "ts", "1 hour", Seq("id"))).foreach {
-      case (t, deduped) =>
-        val store = new TableStore(tmp(s"st-$t"), spark)
-        Streaming.drainAvailableNow(deduped)((b, _) => store.append(t, b))
-        assert(store.read(t).select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
-    }
+    val store = new TableStore(tmp("st-dd"), spark)
+    Streaming.drainAvailableNow(Streaming.dedupByKeyUnbounded(src, Seq("id")))(
+      (b, _) => store.append("dd", b))
+    assert(store.read("dd").select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
   }
 
   test("statefulCounts keeps running per-key state across batches") {

@@ -3,26 +3,22 @@ package graft.write
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden statement matrix for the JDBC sink's dialect branches: every
-  * DDL/DML template in [[JdbcCapabilities.forUrl]] and the merge-family
-  * renderers, compared against handwritten expected SQL — catches
-  * template regressions for engines this environment cannot run
-  * (only Derby executes live, in SourcesSpec). */
+  * DDL template in [[JdbcCapabilities.forUrl]], compared against
+  * handwritten expected SQL — catches template regressions for engines
+  * this environment cannot run (only Derby executes live, in
+  * SourcesSpec). */
 class JdbcDialectSpec extends AnyFunSuite {
 
   private def capsOf(scheme: String) =
     JdbcCapabilities.forUrl(s"jdbc:$scheme://host/db")
 
-  // pre-quoted names as stagedMerge hands them to the renderers
+  // a pre-quoted table name, as evolveSchema hands it to addColumnSql
   private def qd(c: JdbcCapabilities) = s"${c.quoteChar}dim${c.quoteChar}"
-  private def qs(c: JdbcCapabilities) =
-    s"${c.quoteChar}dim__staging_l1${c.quoteChar}"
 
   test("capability inference per engine") {
     assert(capsOf("postgresql").maxIdentifierLength === 63)
-    assert(!capsOf("postgresql").supportsMerge)
     assert(capsOf("mysql").quoteChar === '`')
     assert(capsOf("mysql").maxIdentifierLength === 64)
-    assert(capsOf("oracle").supportsMerge)
     assert(capsOf("oracle").casefold("abc") === "ABC")
     assert(capsOf("db2").casefold("abc") === "ABC")
     assert(capsOf("sqlserver").casefold("abc") === "abc")
@@ -31,105 +27,18 @@ class JdbcDialectSpec extends AnyFunSuite {
     assert(capsOf("exoticdb").maxIdentifierLength === 63)
   }
 
-  test("createEmptyLike and addColumn per dialect") {
+  test("addColumn per dialect") {
     val pg = capsOf("postgresql")
-    assert(pg.createEmptyLike(qd(pg), qs(pg)) ===
-      """CREATE TABLE "dim" AS SELECT * FROM "dim__staging_l1" WITH NO DATA""")
     assert(pg.addColumnSql(qd(pg), "\"score\" BIGINT") ===
       """ALTER TABLE "dim" ADD COLUMN "score" BIGINT""")
-
     val my = capsOf("mysql")
-    assert(my.createEmptyLike(qd(my), qs(my)) ===
-      "CREATE TABLE `dim` LIKE `dim__staging_l1`")
     assert(my.addColumnSql(qd(my), "`score` BIGINT") ===
       "ALTER TABLE `dim` ADD COLUMN `score` BIGINT")
-
     val ora = capsOf("oracle")
-    assert(ora.createEmptyLike(qd(ora), qs(ora)) ===
-      """CREATE TABLE "dim" AS SELECT * FROM "dim__staging_l1" WHERE 1 = 0""")
     assert(ora.addColumnSql(qd(ora), "\"score\" NUMBER(19)") ===
       """ALTER TABLE "dim" ADD ("score" NUMBER(19))""")
-
     val ms = capsOf("sqlserver")
-    assert(ms.createEmptyLike(qd(ms), qs(ms)) ===
-      """SELECT * INTO "dim" FROM "dim__staging_l1" WHERE 1 = 0""")
     assert(ms.addColumnSql(qd(ms), "\"score\" BIGINT") ===
       """ALTER TABLE "dim" ADD "score" BIGINT""")
-
-    val db2 = capsOf("db2")
-    assert(db2.createEmptyLike(qd(db2), qs(db2)) ===
-      """CREATE TABLE "dim" LIKE "dim__staging_l1"""")
-  }
-
-  test("delete-insert pair renders identically across ANSI dialects") {
-    val pg = capsOf("postgresql")
-    assert(JdbcSink.deleteInsertStatements(pg, qd(pg), qs(pg),
-      Seq("id"), Seq("id", "v")) === Seq(
-      """DELETE FROM "dim" WHERE EXISTS (SELECT 1 FROM "dim__staging_l1" s WHERE s."id" = "dim"."id")""",
-      """INSERT INTO "dim" ("id", "v") SELECT "id", "v" FROM "dim__staging_l1""""))
-    val my = capsOf("mysql")
-    assert(JdbcSink.deleteInsertStatements(my, qd(my), qs(my),
-      Seq("id"), Seq("id", "v")) === Seq(
-      "DELETE FROM `dim` WHERE EXISTS (SELECT 1 FROM `dim__staging_l1` s WHERE s.`id` = `dim`.`id`)",
-      "INSERT INTO `dim` (`id`, `v`) SELECT `id`, `v` FROM `dim__staging_l1`"))
-  }
-
-  test("upsert renders MERGE on merge dialects, UPDATE+INSERT elsewhere") {
-    val ora = capsOf("oracle")
-    assert(JdbcSink.upsertStatements(ora, qd(ora), qs(ora),
-      Seq("id"), Seq("id", "v")) === Seq(
-      """MERGE INTO "dim" USING "dim__staging_l1" s ON (s."id" = "dim"."id") """ +
-        """WHEN MATCHED THEN UPDATE SET "v" = s."v" """ +
-        """WHEN NOT MATCHED THEN INSERT ("id", "v") VALUES (s."id", s."v")"""))
-
-    val pg = capsOf("postgresql")
-    assert(JdbcSink.upsertStatements(pg, qd(pg), qs(pg),
-      Seq("id"), Seq("id", "v")) === Seq(
-      """UPDATE "dim" SET "v" = (SELECT s."v" FROM "dim__staging_l1" s """ +
-        """WHERE s."id" = "dim"."id") WHERE EXISTS """ +
-        """(SELECT 1 FROM "dim__staging_l1" s WHERE s."id" = "dim"."id")""",
-      """INSERT INTO "dim" ("id", "v") SELECT "id", "v" FROM "dim__staging_l1" s """ +
-        """WHERE NOT EXISTS (SELECT 1 FROM "dim" WHERE s."id" = "dim"."id")"""))
-
-    // key-only shape: no matched-update clause / no UPDATE statement
-    assert(JdbcSink.upsertStatements(ora, qd(ora), qs(ora),
-      Seq("id"), Seq("id")) === Seq(
-      """MERGE INTO "dim" USING "dim__staging_l1" s ON (s."id" = "dim"."id") """ +
-        """WHEN NOT MATCHED THEN INSERT ("id") VALUES (s."id")"""))
-    assert(JdbcSink.upsertStatements(pg, qd(pg), qs(pg),
-      Seq("id"), Seq("id")).length === 1)
-  }
-
-  test("insert-only renders the anti-join insert") {
-    val ms = capsOf("sqlserver")
-    assert(JdbcSink.insertOnlyStatements(ms, qd(ms), qs(ms),
-      Seq("id"), Seq("id", "v")) === Seq(
-      """INSERT INTO "dim" ("id", "v") SELECT "id", "v" FROM "dim__staging_l1" s """ +
-        """WHERE NOT EXISTS (SELECT 1 FROM "dim" WHERE s."id" = "dim"."id")"""))
-  }
-
-  test("scd2 retire+insert: entity scoping, key scoping, ts literals") {
-    val db2 = capsOf("db2")
-    val cfg = Scd2Config(trackedColumns = Seq("id", "v"),
-      boundaryTs = "2024-06-01 00:00:00", mergeKey = Seq("id"))
-    val cols = Seq("id", "v", "_dlt_row_hash", "_dlt_valid_from", "_dlt_valid_to")
-    assert(JdbcSink.scd2Statements(db2, qd(db2), qs(db2), cols, cfg) === Seq(
-      """UPDATE "dim" SET "_dlt_valid_to" = {ts '2024-06-01 00:00:00'} """ +
-        """WHERE "dim"."_dlt_valid_to" IS NULL AND EXISTS """ +
-        """(SELECT 1 FROM "dim__staging_l1" s WHERE s."id" = "dim"."id") """ +
-        """AND NOT EXISTS (SELECT 1 FROM "dim__staging_l1" s """ +
-        """WHERE s."_dlt_row_hash" = "dim"."_dlt_row_hash" AND "dim"."id" = s."id")""",
-      """INSERT INTO "dim" ("id", "v", "_dlt_row_hash", "_dlt_valid_from", "_dlt_valid_to") """ +
-        """SELECT "id", "v", "_dlt_row_hash", "_dlt_valid_from", "_dlt_valid_to" """ +
-        """FROM "dim__staging_l1" s WHERE NOT EXISTS (SELECT 1 FROM "dim" """ +
-        """WHERE "dim"."_dlt_valid_to" IS NULL """ +
-        """AND "dim"."_dlt_row_hash" = s."_dlt_row_hash" AND "dim"."id" = s."id")"""))
-
-    // activeRecordTs swaps the IS NULL predicate for a ts equality
-    val withActive = cfg.copy(mergeKey = Nil,
-      activeRecordTs = Some("9999-12-31 00:00:00"))
-    val stmts = JdbcSink.scd2Statements(db2, qd(db2), qs(db2), cols, withActive)
-    assert(stmts.head.contains(""""dim"."_dlt_valid_to" = {ts '9999-12-31 00:00:00'}"""))
-    assert(!stmts.head.contains("AND EXISTS"), "no key scope without a mergeKey")
   }
 }

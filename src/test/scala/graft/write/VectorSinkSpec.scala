@@ -36,7 +36,7 @@ class VectorSinkSpec extends SparkSpec {
     val store = new TableStore(dir, spark)
     VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
       nlist = 4, seed = 7L, trainFraction = 0.5)
-    val meta = VectorSink.readMeta(store, "emb")
+    val meta = VectorSink.generation(store, "emb").meta
     assert(meta === VectorSink.IvfMeta(4, 7L, 0.5, "cosine", 8))
     val e = intercept[IllegalArgumentException] {
       VectorSink.topK(store, "emb", corpus.limit(1), "vec_id", "embedding",
@@ -62,7 +62,7 @@ class VectorSinkSpec extends SparkSpec {
       nlist = 4, codec = Codec.Sq8)
     // the corpus table holds codes, never vectors
     assert(store.read("emb").columns.toSet === Set("vec_id", "__list", "__q"))
-    assert(VectorSink.readMeta(store, "emb").metric === "cosine-sq8")
+    assert(VectorSink.generation(store, "emb").meta.metric === "cosine-sq8")
     val queries = corpus.limit(2)
     val got = VectorSink.topK(store, "emb", queries, "vec_id", "embedding",
       k = 3, nprobe = 4, fullVectors = Some(corpus), shortlist = 100)
@@ -619,7 +619,7 @@ class VectorSinkSpec extends SparkSpec {
     val good = Seq.tabulate(16)(i => (i.toLong, Seq.tabulate(7)(_.toFloat + i)))
       .toDF("vec_id", "embedding")
     VectorSink.writeIvf(store, "emb3", good, "vec_id", "embedding", nlist = 2)
-    assert(VectorSink.readMeta(store, "emb3").dim === 7,
+    assert(VectorSink.generation(store, "emb3").meta.dim === 7,
       "the observe-carried dim must land in the committed meta")
   }
 
@@ -744,24 +744,6 @@ class VectorSinkSpec extends SparkSpec {
     // unpinned prune now works (no-op at keep=2 history of 1)
     VectorSink.pruneGenerations(store, "emb", keep = 1)
     assert(VectorSink.generations(store, "emb") === Seq(3L))
-  }
-
-  test("dataset-facade vector handle exposes pin/retain (delegation)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vsspec27").toString
-    val store = new TableStore(dir, spark)
-    VectorSink.writeIvf(store, "emb", corpus.filter(col("vec_id") < 32L),
-      "vec_id", "embedding", nlist = 4)
-    VectorSink.append(store, "emb",
-      corpus.filter(col("vec_id") >= 32L), "vec_id", "embedding")
-    val ds = new graft.dataset.GraftDataset(store,
-      new graft.schema.SchemaRegistry("v"), spark)
-    val coll = ds.vectors("emb")
-    coll.pin(1L)
-    assert(coll.pinned === Set(1L))
-    val r = coll.retain(keepLast = 1)
-    assert(r.retainedByPin === Seq(1L) && r.remaining === Seq(1L, 2L))
-    coll.unpin(1L)
-    assert(coll.pinned === Set.empty[Long])
   }
 
   test("appendDedupedAdc screens SQ8/PQ/OPQ on dequantized codes; " +
@@ -1024,7 +1006,7 @@ class VectorSinkSpec extends SparkSpec {
       nlist = 4, codec = Codec.Pq(m = 2, ksub = 8, iters = 2))
     // the corpus table holds PQ codes, never vectors
     assert(store.read("emb").columns.toSet === Set("vec_id", "__list", "__codes"))
-    assert(VectorSink.readMeta(store, "emb").metric === "cosine-pq")
+    assert(VectorSink.generation(store, "emb").meta.metric === "cosine-pq")
     assert(store.read("emb__pq_codebooks").count() === 16) // m * ksub
     val queries = corpus.limit(2)
     val got = VectorSink.topK(store, "emb", queries, "vec_id", "embedding",
@@ -1053,6 +1035,10 @@ class VectorSinkSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.get(1).asInstanceOf[Number].longValue,
         r.getLong(2), r.getDouble(3))).toSeq
 
+  private def deadFraction(store: TableStore): Double =
+    VectorSink.describeCollection(store, "emb").select("dead_fraction")
+      .as[Double].head()
+
   test("delete tombstones rows merge-on-read; pinned history keeps seeing them") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vdel").toString
     val store = new TableStore(dir, spark)
@@ -1067,7 +1053,7 @@ class VectorSinkSpec extends SparkSpec {
     assert(live.filter(col("vec_id") % 3 === 0).isEmpty)
     assert(live.count() === 42L)
     assert(VectorSink.listSizes(store, "emb").map(_._2).sum === 64L)
-    assert(VectorSink.deadFraction(store, "emb") === 22.0 / 64.0)
+    assert(deadFraction(store) === 22.0 / 64.0)
     // probes never return a deleted id and match the exact answer over
     // the live corpus at nprobe = nlist
     val liveCorpus = corpus.filter(col("vec_id") % 3 =!= 0)
@@ -1117,7 +1103,7 @@ class VectorSinkSpec extends SparkSpec {
     // physical census: 64 original + 32 upserted rows; tombstoned ids:
     // 16 (delete) + 32 (upsert) → deadFraction 48/96
     assert(VectorSink.listSizes(store, "emb").map(_._2).sum === 96L)
-    assert(VectorSink.deadFraction(store, "emb") === 0.5)
+    assert(deadFraction(store) === 0.5)
     assert(VectorSink.generations(store, "emb") === Seq(1L, 2L, 3L))
     val q = expected.filter(col("vec_id") < 6)
     assert(probeRows(VectorSink.topK(store, "emb", q,
@@ -1166,7 +1152,7 @@ class VectorSinkSpec extends SparkSpec {
     // the census recounts to live rows, the tombstones are gone
     assert(store.read("emb").count() === 36L)
     assert(VectorSink.listSizes(store, "emb").map(_._2).sum === 36L)
-    assert(VectorSink.deadFraction(store, "emb") === 0.0)
+    assert(deadFraction(store) === 0.0)
     assert(store.tombstones("emb").isEmpty)
     // below the threshold nothing rewrites
     val extra2 = (200L until 204L).map { i =>
@@ -1304,7 +1290,7 @@ class VectorSinkSpec extends SparkSpec {
     VectorSink.writeIvf(store, "emb", corpus, "vec_id", "embedding",
       nlist = 4, codec = Codec.Binary)
     assert(store.read("emb").columns.toSet === Set("vec_id", "__list", "__code"))
-    assert(VectorSink.readMeta(store, "emb").metric === "hamming-bq")
+    assert(VectorSink.generation(store, "emb").meta.metric === "hamming-bq")
     // dim 8 -> one packed word per row
     assert(store.read("emb").select(size(col("__code"))).distinct()
       .as[Int].collect().toSeq === Seq(1))
@@ -1354,7 +1340,7 @@ class VectorSinkSpec extends SparkSpec {
     val ran = VectorSink.rebalance(store, "emb", "vec_id", "embedding",
       fullVectors = Some(corpus), maxSkew = 1.0)
     assert(ran)
-    assert(VectorSink.readMeta(store, "emb").metric === "hamming-bq")
+    assert(VectorSink.generation(store, "emb").meta.metric === "hamming-bq")
     assert(store.read("emb").count() === 64L)
     val q = corpus.filter(col("vec_id") < 4)
     val got = VectorSink.topK(store, "emb", q, "vec_id", "embedding", k = 3,

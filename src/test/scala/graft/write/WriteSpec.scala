@@ -82,38 +82,19 @@ class WriteSpec extends SparkSpec {
     store.vacuum("t", retainManifests = 1)
     assert(store.readAt("t", s1).select("id").as[Long].collect().sorted
       === Array(1L, 2L))
-    // unpin (empty set drops _PINS) + TTL=0 at a future now: expires
-    store.unpinSnapshot("t", s1)
-    assert(store.pinnedSnapshots("t") === Set.empty[Long])
+    // TTL=0 at a future now: the unpinned old snapshot expires, the
+    // pin and the current snapshot survive
+    store.append("t", Seq((5L, "e")).toDF("id", "v"))
+    val s5 = store.snapshots("t").last
     val (r2, rem2) = store.applyRetention("t", keepLast = 1,
       ttlMs = Some(0L), now = System.currentTimeMillis() + 60000L)
-    assert(r2 === Seq(s1) && rem2 === Seq(all.last))
-    intercept[IllegalArgumentException](store.readAt("t", s1))
+    assert(r2 === Seq(all.last) && rem2 === Seq(s1, s5))
+    intercept[IllegalArgumentException](store.readAt("t", all.last))
+    assert(store.readAt("t", s1).select("id").as[Long].collect().sorted
+      === Array(1L, 2L))
     // live reads unaffected throughout
     assert(store.read("t").select("id").as[Long].collect().sorted
-      === Array(1L, 2L, 3L, 4L))
-  }
-
-  test("dataset facade exposes lakehouse snapshot pins and retention") {
-    val store = newStore()
-    store.overwrite("t", Seq((1L, "a")).toDF("id", "v"))
-    val s1 = store.snapshots("t").last
-    store.append("t", Seq((2L, "b")).toDF("id", "v"))
-    store.append("t", Seq((3L, "c")).toDF("id", "v"))
-    val ds = new graft.dataset.GraftDataset(store,
-      new graft.schema.SchemaRegistry("ret"), spark)
-    ds.pinSnapshot("t", s1)
-    assert(ds.pinnedSnapshots("t") === Set(s1))
-    // name normalization rides the facade like every other entry point
-    assert(ds.pinnedSnapshots("T") === Set(s1))
-    val (removed, remaining) = ds.retainTable("t", keepLast = 1)
-    assert(removed.size === 1 && remaining.contains(s1),
-      s"pin must survive the facade sweep: removed=$removed")
-    // time travel through the facade to the pinned snapshot still works
-    assert(ds.asOf("t", s1).df().select("id").as[Long].collect()
-      === Array(1L))
-    ds.unpinSnapshot("t", s1)
-    assert(ds.pinnedSnapshots("t") === Set.empty[Long])
+      === Array(1L, 2L, 3L, 4L, 5L))
   }
 
   test("copyInto gives the destination its own physical bytes and keeps stats") {
