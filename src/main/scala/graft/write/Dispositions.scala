@@ -121,23 +121,43 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     }
   }
 
-  /** SCD2 with SEGMENT PRUNING: active and closed rows live in
-    * separately-tagged segments. A load reads and rewrites ONLY the
-    * active segments, appends the retired rows as a new immutable
-    * closed segment, and leaves all prior closed history untouched —
-    * at 100 TB the history is ~the whole table, so the naive
-    * full-table rewrite is the scale-killer this avoids. Closed
-    * segments are folded together past a threshold to bound the
-    * manifest (small-files control, not a history rewrite per load).
-    * Both segments read the split's one pinned frame; a load that
-    * retires nothing commits no closed segment, and finding that out
-    * costs no job of its own (the closed write counts its rows). */
+  /** SCD2, merge-on-read: active and closed rows live in separately
+    * tagged segments, and a load writes only the rows it adds, in one
+    * commit — the staged rows that become active as a small active
+    * segment, the rows it retires, closed, as a closed segment, and a
+    * tombstone that marks those retired rows dead on the active
+    * segments. The tombstone's id file IS that closed segment, which
+    * holds exactly the retired rows, so it costs no write of its own.
+    * This is dlt's `UPDATE … SET valid_to` on the matched active rows
+    * (sql_jobs.py:964-981) on a write-once store: a delete plus an
+    * insert of the closed version. Unchanged active rows and all closed
+    * history are never rewritten.
+    *
+    * The tombstone column must name exactly the rows that retire:
+    * `_dlt_row_hash` when every merge-key column is hashed (equal
+    * hashes then imply equal scope; the table's tracked columns are
+    * fixed for its life, as the hash stored in its rows assumes), else
+    * `_dlt_id` (on pipeline loads a hash of every non-system column).
+    * The tombstone covers only the active segments, so a re-activated
+    * row hash keeps its closed history and its new active row lands in
+    * a segment no tombstone covers.
+    *
+    * A FOLD rewrites the active set instead (the split of every live
+    * active row, as one new active segment) and clears the tombstones:
+    * when no column qualifies, when the load changes the active
+    * schema, when the active segments or the live tombstones would pass
+    * [[TableStore.compact]]'s 16, and when the closed segments reach
+    * 32, which also folds the closed history into one segment (never
+    * an id file: it holds older retirements). Every segment reads the
+    * split's one pinned frame; an empty write is dropped, and finding
+    * that out costs no job of its own (the write counts its rows). */
   def scd2(table: String, staging: DataFrame, cfg: Scd2Config,
       loadId: String): Unit = Dedup.withPins {
     // same pin rationale as merge: the staged snapshot feeds both
     // sides of the split and the range-layout sampling
     val staged = Dedup.pin(stamp(staging, loadId))
-    def actives(df: DataFrame) = SegmentWrite(df, tags = scd2Tag("active"))
+    def actives(df: DataFrame, dropEmpty: Boolean = false) =
+      SegmentWrite(df, tags = scd2Tag("active"), dropEmpty = dropEmpty)
     // closed rows in the active rows' column order: both segments then
     // memoize one schema, and the table reads with no footer-merge job
     def closeds(df: DataFrame, active: DataFrame) = SegmentWrite(
@@ -147,28 +167,42 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
 
     val segs = if (store.exists(table)) store.segments(table) else Nil
     if (segs.isEmpty) {
-      val (active, _) = Scd2.applySplit(None, staged, cfg)
-      store.commitSegments(table, Nil, Seq(actives(active)))
+      val split = Scd2.applySplit(None, staged, cfg)
+      store.commitSegments(table, Nil, Seq(actives(split.active)))
     } else if (segs.forall(_.stats.contains(Scd2Marker))) {
       val (activeSegs, closedSegs) = segs.partition(_.stats(Scd2Marker).min == "active")
       val dest = if (activeSegs.isEmpty) None
                  else Some(store.readSegmentsApplied(table, activeSegs))
-      val (active, closed) = Scd2.applySplit(dest, staged, cfg)
+      val split = Scd2.applySplit(dest, staged, cfg)
+      val idColumn = dest.flatMap(d => Dispositions.scd2IdColumn(d, staged, cfg))
+      val shape = (df: DataFrame) =>
+        df.schema.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
       val foldClosed = closedSegs.size >= 32 // compact closed history rarely
-      val (keep, closedOut) =
-        if (foldClosed)
-          (Nil, store.readSegments(table, closedSegs)
-            .unionByName(closed, allowMissingColumns = true))
-        else (closedSegs, closed)
-      store.commitSegments(table, keep, Seq(actives(active), closeds(closedOut, active)))
+      val fold = foldClosed || idColumn.isEmpty ||
+        shape(split.active) != dest.map(shape).getOrElse(Nil) ||
+        activeSegs.size >= 16 || store.tombstones(table).size >= 16
+      if (!fold)
+        store.commitSegments(table, segs, Seq(actives(split.inserted, dropEmpty = true),
+          closeds(split.closed, split.active)
+            .copy(tombstone = idColumn.map(_ -> activeSegs.map(_.name).toSet))))
+      else {
+        val (keep, closedOut) =
+          if (foldClosed)
+            (Nil, store.readSegments(table, closedSegs)
+              .unionByName(split.closed, allowMissingColumns = true))
+          else (closedSegs, split.closed)
+        store.commitSegments(table, keep,
+          Seq(actives(split.active), closeds(closedOut, split.active)))
+      }
     } else {
       // legacy un-tagged table: one full rewrite that splits it so every
       // later load prunes
       val d = store.read(table)
-      val (active, closed) = Scd2.applySplit(Some(d.filter(Scd2.isActive(cfg))), staged, cfg)
+      val split = Scd2.applySplit(Some(d.filter(Scd2.isActive(cfg))), staged, cfg)
       val allClosed = d.filter(!Scd2.isActive(cfg))
-        .unionByName(closed, allowMissingColumns = true)
-      store.commitSegments(table, Nil, Seq(actives(active), closeds(allClosed, active)))
+        .unionByName(split.closed, allowMissingColumns = true)
+      store.commitSegments(table, Nil,
+        Seq(actives(split.active), closeds(allClosed, split.active)))
     }
   }
 
@@ -321,6 +355,14 @@ object Dispositions {
     * every engine-minted load id. */
   private[graft] def nextMicros(): Long = lastLoadMicros.updateAndGet(prev =>
     math.max(prev + 1, System.currentTimeMillis() * 1000))
+
+  /** The column whose values name exactly the rows an SCD2 load onto
+    * `dest` retires (see [[Dispositions.scd2]]), or None. */
+  private def scd2IdColumn(dest: DataFrame, staged: DataFrame,
+      cfg: Scd2Config): Option[String] =
+    (if (cfg.mergeKey.forall(Scd2.hashedColumns(cfg).contains)) Some(cfg.rowHashColumn)
+     else Some(Ids.DltId).filter(staged.columns.contains))
+      .filter(dest.columns.contains)
 
   /** Split segments into (touched, untouched) by overlap between each
     * segment's key-range stats and the staged key ranges.

@@ -47,9 +47,7 @@ final case class Scd2Config(
 object Scd2 {
 
   private def withHash(df: DataFrame, cfg: Scd2Config): DataFrame =
-    df.withColumn(cfg.rowHashColumn, Ids.rowHash(
-      cfg.trackedColumns.filterNot(Seq(cfg.validFromColumn, cfg.validToColumn,
-        cfg.rowHashColumn).contains)))
+    df.withColumn(cfg.rowHashColumn, Ids.rowHash(hashedColumns(cfg)))
 
   /** The active-record predicate, exposed so [[Dispositions.scd2]] can
     * split a legacy (un-tagged) table once into active/closed segments. */
@@ -63,15 +61,29 @@ object Scd2 {
   private val Retire = "__scd2_retire"
   private val Drop = "__scd2_drop"
 
+  /** The columns a row hash covers: the tracked columns less the
+    * validity pair, the hash itself and dlt's system columns. */
+  def hashedColumns(cfg: Scd2Config): Seq[String] =
+    cfg.trackedColumns.filterNot(Seq(cfg.validFromColumn, cfg.validToColumn,
+      cfg.rowHashColumn).contains).filterNot(Ids.systemColumns.contains)
+
+  /** One load's split: the rows active after it, the rows it retires
+    * (closed), and the staged rows it inserts — the part of `active`
+    * that is new, in `active`'s columns. */
+  final case class Split(active: DataFrame, closed: DataFrame, inserted: DataFrame)
+
   /** One SCD2 load against the ACTIVE slice only — the scale path.
-    * `activeDest` must contain only currently-active rows; returns
-    * `(newActive, newlyClosed)`. Closed history is immutable, so the
-    * caller keeps its segments untouched and appends `newlyClosed` —
-    * a load costs O(active + staged), never O(history). Both frames
-    * read one tagged frame, pinned into the caller's [[Dedup.withPins]]
-    * scope, so writing both runs the split once. */
+    * `activeDest` must contain only currently-active rows. Closed
+    * history is immutable, so the caller keeps its segments untouched
+    * and appends the newly closed rows — a load costs O(active +
+    * staged), never O(history). Every frame reads one tagged frame,
+    * pinned into the caller's [[Dedup.withPins]] scope, so writing
+    * them runs the split once. A first load's active rows take the
+    * column order every later load gives them (merge key first, the
+    * validity pair and the row hash last), so an untouched first
+    * segment and a later one share one schema. */
   def applySplit(activeDest: Option[DataFrame], staging: DataFrame,
-      cfg: Scd2Config): (DataFrame, DataFrame) = {
+      cfg: Scd2Config): Split = {
     val openTo: Column = cfg.activeRecordTs
       .map(ts => to_timestamp(lit(ts)))
       .getOrElse(lit(null).cast("timestamp"))
@@ -82,7 +94,11 @@ object Scd2 {
       .withColumn(cfg.validToColumn, openTo)
 
     activeDest match {
-      case None => (inserts, inserts.limit(0))
+      case None =>
+        val tail = Seq(cfg.validFromColumn, cfg.validToColumn, cfg.rowHashColumn)
+        val first = inserts.select((cfg.mergeKey ++ inserts.columns
+          .filterNot((cfg.mergeKey ++ tail).contains) ++ tail).map(col): _*)
+        Split(first, first.limit(0), first)
       case Some(a0) =>
         val activeRows = withHash(a0.drop(cfg.rowHashColumn), cfg)
         // hash compares are PER-ENTITY scoped: mergeKey need not be a
@@ -119,14 +135,16 @@ object Scd2 {
         // first (the merge key in active rows, the hash key in closed
         // rows), and closed rows keep the active types
         val activeType = activeRows.schema.fields.map(f => f.name -> f.dataType).toMap
-        val newActive = tagged.filter(!col(Retire)).select((cfg.mergeKey ++
+        val activeCols = (cfg.mergeKey ++
           rows.columns.filterNot(c => c == FromActive || cfg.mergeKey.contains(c)))
-          .map(col): _*)
+          .map(col)
+        val newActive = tagged.filter(!col(Retire)).select(activeCols: _*)
+        val inserted = tagged.filter(!col(FromActive)).select(activeCols: _*)
         val retired = tagged.filter(col(Retire))
           .select((hashKey ++ activeRows.columns.filterNot(hashKey.contains))
             .map(c => col(c).cast(activeType(c)).as(c)): _*)
           .withColumn(cfg.validToColumn, boundary)
-        (newActive, retired)
+        Split(newActive, retired, inserted)
     }
   }
 }

@@ -9,7 +9,8 @@ import scala.util.Try
 
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, max, min}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min}
 import org.apache.spark.sql.types._
 
 import graft.ext.Dedup
@@ -33,19 +34,27 @@ final case class Segment(name: String, stats: Map[String, ColStats])
 
 /** A pending segment for [[TableStore.commitSegments]]. `dropEmpty`:
   * a write of zero rows is deleted instead of committed (the write
-  * counts its own rows, so this costs no extra job). */
+  * counts its own rows, so this costs no extra job). `tombstone`
+  * `(column, covered)`: the segment also serves as the id file of a
+  * tombstone on `column` over the `covered` segments (dropped with an
+  * empty segment, which names no row). */
 final case class SegmentWrite(df: DataFrame, statsFor: Seq[String] = Nil,
     rangeBy: Seq[String] = Nil, tags: Map[String, ColStats] = Map.empty,
-    dropEmpty: Boolean = false)
+    dropEmpty: Boolean = false, tombstone: Option[(String, Set[String])] = None)
 
 /** A merge-on-read deletion marker: rows of the `covered` data segments
-  * whose `column` value appears in the tombstone's id file are dead.
-  * The anti-join applies at read time; [[TableStore.compact]] folds
-  * tombstones away. This is the deletion-vector idea of the lakehouse
-  * formats, keyed by value instead of row position: deleting N rows
-  * from a huge child table costs O(ids) written, not O(table)
-  * rewritten. `covered` pins the generation — segments appended AFTER
-  * the tombstone are not affected, so a re-inserted key survives. */
+  * whose `column` value appears in the tombstone's id file `name` are
+  * dead. The id file is either a file of its own (a `-tomb` directory
+  * of ids) or a data segment of the same commit whose `column` holds
+  * exactly the dead ids (an SCD2 load's closed segment, see
+  * [[Dispositions.scd2]]); a data segment is never covered by its own
+  * tombstone. The delete applies at read time ([[TableStore.read]]);
+  * [[TableStore.compact]] folds tombstones away. This is the
+  * deletion-vector idea of the lakehouse formats, keyed by value
+  * instead of row position: deleting N rows from a huge child table
+  * costs O(ids) written, not O(table) rewritten. `covered` pins the
+  * generation — segments appended AFTER the tombstone are not
+  * affected, so a re-inserted key survives. */
 final case class Tombstone(name: String, column: String, covered: Set[String])
 
 /** A minimal lakehouse: one directory per dataset, one manifest-committed
@@ -232,6 +241,10 @@ final class TableStore(val root: String, val spark: SparkSession) {
   def readSegmentsApplied(table: String, segs: Seq[Segment]): DataFrame =
     appliedRead(table, segs, currentTombstones(table))
 
+  /** Per group and tombstone column, the ids apply as a `NOT IN` filter
+    * when [[driverIds]] reads them (no Spark job), else as a
+    * `left_anti` join, the one path that takes a delete too large for
+    * the driver. Both keep a null id: it matches no tombstone id. */
   private def appliedRead(table: String, segs: Seq[Segment],
       tombs: Seq[Tombstone]): DataFrame = {
     val relevant = tombs.filter(t => segs.exists(s => t.covered(s.name)))
@@ -245,15 +258,32 @@ final class TableStore(val root: String, val spark: SparkSession) {
           .foldLeft(base) { case (acc, (c, ts)) =>
             if (!acc.columns.contains(c)) acc
             else {
-              // no distinct: duplicate ids on an anti-join's right
-              // side cannot change its result, only add a shuffle
-              val ids = ts.map(readTombstone(table, _))
-                .reduce(_ unionByName _).select(c)
-              acc.join(ids, Seq(c), "left_anti")
+              val idType = acc.schema(c).dataType
+              driverIds(table, ts, c).filter(_.forall(Literal(_).dataType == idType)) match {
+                case Some(ids) =>
+                  acc.filter(!coalesce(col(c).isin(ids.distinct: _*), lit(false)))
+                // no distinct: duplicate ids on an anti-join's right
+                // side cannot change its result, only add a shuffle
+                case None => acc.join(ts.map(readTombstone(table, _))
+                  .reduce(_ unionByName _).select(c), Seq(c), "left_anti")
+              }
             }
           }
       }.reduce(_.unionByName(_, allowMissingColumns = true))
     }
+  }
+
+  /** The non-null `c` values of the id files of `ts`, read on the driver
+    * with no Spark job, when those files together fit under
+    * `spark.sql.autoBroadcastJoinThreshold`: the size at which Spark
+    * would broadcast an anti-join's id side anyway. None past it (or
+    * with broadcasting off), or when a file's `c` is not a string,
+    * int or long ([[TinyParquet.readFile]]). */
+  private def driverIds(table: String, ts: Seq[Tombstone], c: String): Option[Seq[Any]] = {
+    val bar = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val files = ts.flatMap(t => segmentFiles(resolve(table, t.name)))
+    if (bar < 0 || files.map(Files.size).sum > bar) None
+    else Try(files.flatMap(f => TinyParquet.readFile(f, Some(c)).flatMap(_.get(c)))).toOption
   }
 
   /** A tombstone's id file, read through [[segmentSchemas]] when its
@@ -396,9 +426,10 @@ final class TableStore(val root: String, val spark: SparkSession) {
       val (s, rows) = writeSegmentCounted(table, w.df, w.statsFor, w.rangeBy,
         countRows = w.dropEmpty)
       if (rows.contains(0L)) { deleteTree(resolve(table, s.name)); None }
-      else Some(s.copy(stats = s.stats ++ w.tags))
+      else Some((s.copy(stats = s.stats ++ w.tags),
+        w.tombstone.map { case (c, covered) => Tombstone(s.name, c, covered) }))
     }
-    commit(table, keep ++ segs, liveTombstones(table, keep))
+    commit(table, keep ++ segs.map(_._1), liveTombstones(table, keep) ++ segs.flatMap(_._2))
   }
 
   /** Zero-copy clone: new table points at the source's current segments
@@ -576,19 +607,21 @@ final class TableStore(val root: String, val spark: SparkSession) {
     lines.map(decodeSegment).flatMap(s => readSegmentDriver(table, s))
   }
 
-  /** One segment's rows via the driver parquet reader — a segment is
-    * either a single driver-written file or a Spark-written directory
-    * of part files (read in name order for determinism). */
+  /** One segment's rows via the driver parquet reader. */
   private def readSegmentDriver(table: String,
-      s: Segment): Seq[Map[String, Any]] = {
-    val p = resolve(table, s.name)
+      s: Segment): Seq[Map[String, Any]] =
+    segmentFiles(resolve(table, s.name)).flatMap(TinyParquet.readFile(_))
+
+  /** A segment's parquet files: a driver-written file is its own one,
+    * a Spark-written directory holds part files (listed in name order
+    * for determinism). */
+  private def segmentFiles(p: Path): Seq[Path] =
     if (Files.isDirectory(p))
       listDir(p).filter { f =>
         val n = f.getFileName.toString
         n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }.sortBy(_.getFileName.toString).flatMap(TinyParquet.readFile)
-    else TinyParquet.readFile(p)
-  }
+      }.sortBy(_.getFileName.toString)
+    else Seq(p)
 
   def importFiles(table: String, paths: Seq[String]): Unit = locked(table) {
     require(paths.nonEmpty, "importFiles needs at least one path")
@@ -641,18 +674,13 @@ final class TableStore(val root: String, val spark: SparkSession) {
     }
   }
 
-  /** Is `value` among a tombstone's dead ids? An equality pushdown over
-    * the (single-file, bloom-filtered) id parquet: the filter and the
-    * row-group stats skip the row groups that cannot hold `value`.
-    * Conservative on any failure: report absent (no pruning). */
+  /** Is `value` among a tombstone's dead ids? Read on the driver
+    * ([[driverIds]]), with no Spark job. Conservative when the id files
+    * pass the broadcast threshold or do not read as string, int or long
+    * ids: report absent (no pruning). */
   private def tombstoneContains(table: String, t: Tombstone,
       value: String): Boolean =
-    Try {
-      val df = readTombstone(table, t)
-      val dt = df.schema(t.column).dataType
-      !df.filter(col(t.column) === org.apache.spark.sql.functions.lit(value)
-        .cast(dt)).isEmpty
-    }.getOrElse(false)
+    driverIds(table, Seq(t), t.column).exists(_.exists(_.toString == value))
 
   /** Compaction (the `OPTIMIZE` analog): rewrite the live segments into
     * one when the table has accumulated more than `maxSegments` data

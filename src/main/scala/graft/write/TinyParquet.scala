@@ -76,15 +76,42 @@ object TinyParquet {
     * load. Reads both this writer's files (required fields) and
     * Spark-written ones (optional fields; a missing value reads as no
     * entry in the row map). Flat primitive schemas only — exactly the
-    * ledger/manifest shapes; anything nested belongs on executors. */
-  def readFile(path: Path): Seq[Map[String, Any]] = {
+    * ledger/manifest shapes; anything nested belongs on executors.
+    * `column` projects the read onto that one column (the requested
+    * schema `parquet.read.schema` sets), so a file whose other columns
+    * this reader cannot decode (INT96 timestamps, nested values), such
+    * as a tombstone's id file that is a data segment, still reads. The
+    * projected column must be a string, int or long: an integer that
+    * stands for a decimal, date or timestamp is refused, since its
+    * value here would not be the one Spark reads. */
+  def readFile(path: Path, column: Option[String] = None): Seq[Map[String, Any]] = {
     import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.api.InitContext
+    import org.apache.parquet.hadoop.api.ReadSupport.ReadContext
     import org.apache.parquet.hadoop.example.GroupReadSupport
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.example.data.Group
     val in = HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(path.toUri), new Configuration())
-    val reader = ParquetReader.builder(new GroupReadSupport(), in.getPath)
+    val support = column.fold(new GroupReadSupport()) { c =>
+      new GroupReadSupport {
+        override def init(ctx: InitContext): ReadContext = {
+          val file = ctx.getFileSchema
+          val f = file.getType(file.getFieldIndex(c))
+          val plain = f.isPrimitive && ((f.asPrimitiveType.getPrimitiveTypeName,
+              f.getLogicalTypeAnnotation) match {
+            case (PrimitiveTypeName.BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
+              true
+            case (PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64, a) =>
+              a == null || a.isInstanceOf[LogicalTypeAnnotation.IntLogicalTypeAnnotation]
+            case _ => false
+          })
+          require(plain, s"TinyParquet.readFile: $c in $path is not a string, int or long")
+          new ReadContext(new MessageType(file.getName, f))
+        }
+      }
+    }
+    val reader = ParquetReader.builder(support, in.getPath)
       .withConf(new Configuration()).build()
     val out = Seq.newBuilder[Map[String, Any]]
     try {

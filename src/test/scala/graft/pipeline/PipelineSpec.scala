@@ -242,6 +242,29 @@ class PipelineSpec extends SparkSpec {
       Option(err.getCause).exists(_.getMessage.contains("row validation failed")))
   }
 
+  test("field validation through Pipeline.run: filter mode drops, raise mode fails the load") {
+    import graft.schema.Validation.FieldRule
+    val p = newPipeline()
+    val rules = Seq(FieldRule("n", dataType = Some(org.apache.spark.sql.types.IntegerType)),
+      FieldRule("v", required = true))
+    val df = Seq(("1", "ok"), ("x", "bad"), ("2", null)).toDF("n", "v")
+    p.run(Seq(Resource("kept", df).addValidateFields(rules, raiseOnViolation = false)), "1")
+    assert(p.store.read("kept").select("n", "v").as[(String, String)].collect().toSeq ===
+      Seq(("1", "ok")))
+    // one violating row, so the failure names it whatever the task order
+    val err = intercept[Exception] {
+      p.run(Seq(Resource("strict", df.limit(2)).addValidateFields(rules)), "2")
+    }
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(messages.exists(_.contains(
+      """field validation failed: [{"field":"n","expected":"int","value":"x"}]""")),
+      messages.mkString("\n"))
+    // the failed load wrote no table and no `_dlt_loads` row
+    assert(!p.store.exists("strict"))
+    assert(p.dataset.loadIds === Seq("1"))
+  }
+
   test("rest pagination honors page and time limits") {
     import graft.sources.Rest
     val endless: Rest.Transport = url => {

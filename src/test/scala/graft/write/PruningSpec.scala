@@ -285,6 +285,85 @@ class PruningSpec extends SparkSpec {
       .collect().toSeq === Seq((1L, "a"), (1L, "b")))
   }
 
+  private def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def joins(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.size
+
+  test("a tombstoned read filters small id files on the driver and joins large ones, to equal rows") {
+    val strings = new TableStore(tmp(), spark)
+    strings.append("t", Seq(("a", "1"), ("b", "2"), ("c", "3")).toDF("id", "v"))
+    strings.deleteByIds("t", "id", Seq("b").toDF("id"))
+    val longs = new TableStore(tmp(), spark)
+    longs.append("t", (1L to 12L).map(i => (i, s"v$i")).toDF("id", "v"))
+    longs.deleteByIds("t", "id", (5L to 9L).toDF("id"))
+    // a null id in the rows and in the id file: the null row survives
+    val nulls = new TableStore(tmp(), spark)
+    nulls.append("t", Seq[(Option[Long], String)](
+      (Some(1L), "a"), (None, "n"), (Some(2L), "b")).toDF("id", "v"))
+    nulls.deleteByIds("t", "id", Seq[Option[Long]](Some(2L), None).toDF("id"))
+    // two tombstones with different coverage sets; the snapshot between
+    // them reads the first one only
+    val two = new TableStore(tmp(), spark)
+    two.append("t", (1L to 4L).map(i => (i, "old")).toDF("id", "v"))
+    two.deleteByIds("t", "id", Seq(1L).toDF("id"))
+    two.append("t", (1L to 4L).map(i => (i, "new")).toDF("id", "v"))
+    val between = two.snapshots("t").last
+    two.deleteByIds("t", "id", Seq(2L, 3L).toDF("id"))
+    // the `id` tombstone covers a segment with no `id` column, alone in
+    // its coverage group: its rows survive
+    val lacking = new TableStore(tmp(), spark)
+    lacking.append("t", Seq("x", "y").toDF("v"))
+    lacking.deleteByIds("t", "v", Seq("x").toDF("v"))
+    lacking.append("t", Seq((1L, "p"), (2L, "q")).toDF("id", "v"))
+    lacking.deleteByIds("t", "id", Seq(2L).toDF("id"))
+    // an SCD2 load's closed segment as the id file
+    val scd2 = new TableStore(tmp(), spark)
+    val d = new Dispositions(scd2, spark)
+    val scfg = Scd2Config(trackedColumns = Seq("id", "v"), boundaryTs = "2024-01-01 00:00:00")
+    d.scd2("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"), scfg, "1")
+    d.scd2("t", Seq((1L, "a2"), (2L, "b")).toDF("id", "v"),
+      scfg.copy(boundaryTs = "2024-02-01 00:00:00"), "2")
+    // each case: how to read it, whether its segments share one schema
+    // (a read of mixed schemas pays the footer merge's job, tombstones
+    // or not) and the rows it holds
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame, Boolean, Seq[String])] = Seq(
+      ("string ids", () => strings.read("t"), true, Seq("a|1", "c|3")),
+      ("long ids", () => longs.read("t"), true,
+        ((1 to 4) ++ (10 to 12)).map(i => s"$i|v$i")),
+      ("a null id", () => nulls.read("t"), true, Seq("1|a", "null|n")),
+      ("two coverage sets", () => two.read("t"), true,
+        Seq("4|old", "1|new", "4|new")),
+      ("readAt between them", () => two.readAt("t", between), true,
+        Seq("2|old", "3|old", "4|old", "1|new", "2|new", "3|new", "4|new")),
+      ("a segment lacking the column", () => lacking.read("t").select("id", "v"), false,
+        Seq("null|y", "1|p")),
+      ("scd2 closed segment", () => scd2.read("t").select("id", "v", "_dlt_valid_to"), true,
+        Seq("1|a2|null", "2|b|null", "1|a|2024-02-01 00:00:00.0")))
+    cases.foreach { case (name, read, oneSchema, want) =>
+      val (df, jobs) = countJobs(read())
+      if (oneSchema) assert(jobs === 0, name)
+      assert(joins(df) === 0, name)
+      val viaDriver = rowsOf(df, df.columns.toSeq)
+      assert(viaDriver === want.sorted, name)
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val joined = read()
+        assert(joins(joined) > 0, name)
+        assert(rowsOf(joined, joined.columns.toSeq) === viaDriver, name)
+      }
+    }
+  }
+
   test("scd2 loads leave closed-history segments untouched") {
     val store = new TableStore(tmp(), spark)
     val d = new Dispositions(store, spark)
@@ -337,6 +416,34 @@ class PruningSpec extends SparkSpec {
     assert(range.filter(col("id").between(1L, 10L)).count() === 10)
     assert(range.filter(col("id") === 5L).select("v").as[String].collect()
       .toSeq === Seq("NEW"))
+    // the membership probe reads the id file on the driver: no job
+    assert(countJobs(store.readPruned("t", "id", Some("5"), Some("5")))._2 === 0)
+    // past the broadcast threshold it answers "absent": the covered
+    // [1,10] segment is scanned again
+    val covered = store.readSegments("t", store.segments("t").take(1)).inputFiles.toSet
+    assert(covered.intersect(hit.inputFiles.toSet).isEmpty)
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val unpruned = store.readPruned("t", "id", Some("5"), Some("5"))
+      assert(covered.subsetOf(unpruned.inputFiles.toSet))
+      assert(unpruned.filter(col("id") === 5L).select("v").as[String].collect().toSeq
+        === Seq("NEW"))
+    }
+  }
+
+  test("a decimal id column is never probed or filtered on the driver") {
+    // decimal(10,2) is an unscaled INT64 in parquet: 123.45 is stored as
+    // 12345, which a driver read would take for the probe value 12345
+    val store = new TableStore(tmp(), spark)
+    def dec(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id").cast("decimal(10,2)").as("id"), col("v"))
+    store.append("t", dec(Seq(("123.45", "a"), ("12345", "b")).toDF("id", "v")),
+      statsFor = Seq("id"))
+    store.deleteByIds("t", "id", dec(Seq(("123.45", "")).toDF("id", "v")).select("id"))
+    val probe = store.readPruned("t", "id", Some("12345"), Some("12345"))
+    assert(probe.filter(col("id") === 12345).select("v").as[String].collect().toSeq
+      === Seq("b"))
+    assert(joins(store.read("t")) === 1)
+    assert(store.read("t").select("v").as[String].collect().toSeq === Seq("b"))
   }
 
   private def parquetFiles(dir: Path): Seq[Path] = {

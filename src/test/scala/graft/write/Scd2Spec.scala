@@ -20,9 +20,10 @@ class Scd2Spec extends SparkSpec {
         cfg.rowHashColumn).contains)))
 
   /** The join-based split the one-pass split replaced (semi/anti joins
-    * plus distincts), kept here as the reference it must agree with. */
+    * plus distincts), kept here as the reference it must agree with:
+    * `(newActive, retired, inserted)`. */
   private def joinSplit(activeDest: Option[DataFrame], staging: DataFrame,
-      cfg: Scd2Config): (DataFrame, DataFrame) = {
+      cfg: Scd2Config): (DataFrame, DataFrame, DataFrame) = {
     val openTo: Column = cfg.activeRecordTs
       .map(ts => to_timestamp(lit(ts)))
       .getOrElse(lit(null).cast("timestamp"))
@@ -33,7 +34,7 @@ class Scd2Spec extends SparkSpec {
         val active = staged
           .withColumn(cfg.validFromColumn, boundary)
           .withColumn(cfg.validToColumn, openTo)
-        (active, active.limit(0))
+        (active, active.limit(0), active)
       case Some(a0) =>
         val activeRows = withHash(a0.drop(cfg.rowHashColumn), cfg)
         val hashKey = cfg.rowHashColumn +: cfg.mergeKey
@@ -58,7 +59,7 @@ class Scd2Spec extends SparkSpec {
         val newActive = outOfScopeActive
           .unionByName(survivors)
           .unionByName(inserted, allowMissingColumns = true)
-        (newActive, retired)
+        (newActive, retired, inserted.select(newActive.columns.map(col): _*))
     }
   }
 
@@ -68,17 +69,20 @@ class Scd2Spec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
 
-  /** The one-pass split and the join-based split agree on both frames:
+  /** The one-pass split and the join-based split agree on every frame:
     * columns, types, and rows as a multiset. Returns the row counts
     * `(newActive, retired)`. */
   private def agree(active: DataFrame, staging: DataFrame,
       cfg: Scd2Config): (Int, Int) = Dedup.withPins {
-    val (wantActive, wantRetired) = joinSplit(Some(active), staging, cfg)
-    val (gotActive, gotRetired) = Scd2.applySplit(Some(active), staging, cfg)
+    val (wantActive, wantRetired, wantInserted) = joinSplit(Some(active), staging, cfg)
+    val Scd2.Split(gotActive, gotRetired, gotInserted) =
+      Scd2.applySplit(Some(active), staging, cfg)
     assert(fields(gotActive) === fields(wantActive))
     assert(fields(gotRetired) === fields(wantRetired))
+    assert(fields(gotInserted) === fields(gotActive))
     assert(rows(gotActive) === rows(wantActive))
     assert(rows(gotRetired) === rows(wantRetired))
+    assert(rows(gotInserted) === rows(wantInserted))
     (rows(gotActive).size, rows(gotRetired).size)
   }
 
@@ -192,5 +196,143 @@ class Scd2Spec extends SparkSpec {
       "_dlt_valid_to", "_dlt_row_hash"))
     assert(rows(out.select("id", "v", "_dlt_load_id", "_dlt_valid_to")) === Seq(
       "1|a|1|null", "2|b2|2|null", "2|b|1|2024-02-01 00:00:00.0", "3|c|1|null").sorted)
+  }
+
+  private def activeSegments(store: TableStore, t: String): Seq[String] =
+    store.segments(t).filter(_.stats.get("__scd2_state").exists(_.min == "active"))
+      .map(_.name)
+
+  test("a load that changes one entity writes no copy of the unchanged active rows") {
+    val dir = tmp()
+    val store = new TableStore(dir, spark)
+    val d = new Dispositions(store, spark)
+    val keyed = cfg.copy(mergeKey = Seq("id"))
+    d.scd2("t", (1L to 50L).map(i => (i, s"v$i")).toDF("id", "v"), keyed, "1")
+    val before = store.segments("t")
+    d.scd2("t", (1L to 50L).map(i => (i, if (i == 7L) "w7" else s"v$i")).toDF("id", "v"),
+      keyed.copy(boundaryTs = next), "2")
+    // the commit keeps every segment and adds the inserted segment, the
+    // closed segment and one tombstone whose id file is that closed
+    // segment, covering the active segments it retires from
+    val after = store.segments("t")
+    assert(after.take(before.size) === before)
+    val added = after.drop(before.size)
+    assert(added.map(_.stats("__scd2_state").min) === Seq("active", "closed"))
+    val Seq(inserted, closed) = added
+    assert(store.tombstones("t") ===
+      Seq(Tombstone(closed.name, "_dlt_row_hash", before.map(_.name).toSet)))
+    assert(rows(store.readSegments("t", Seq(inserted)).select("id", "v", "_dlt_valid_to")) ===
+      Seq("7|w7|null"))
+    assert(rows(store.readSegments("t", Seq(closed)).select("id", "v", "_dlt_valid_to")) ===
+      Seq("7|v7|2024-02-01 00:00:00.0"))
+    // nothing else was written: one data directory per segment
+    val dataDirs = Files.list(java.nio.file.Paths.get(dir, "t", "data"))
+    try assert(dataDirs.count() === 3L)
+    finally dataDirs.close()
+    val out = store.read("t")
+    assert(out.filter(col("_dlt_valid_to").isNull).count() === 50)
+    assert(rows(out.filter(col("id") === 7L).select("v", "_dlt_valid_to")) ===
+      Seq("v7|2024-02-01 00:00:00.0", "w7|null"))
+  }
+
+  /** The table after one load by the rewrite path over plain frames:
+    * the split of its active rows, with its closed history kept. */
+  private def rewritten(table: Option[DataFrame], staged: DataFrame,
+      c: Scd2Config): DataFrame = Dedup.withPins {
+    import scala.jdk.CollectionConverters._
+    val split = Scd2.applySplit(table.map(_.filter(Scd2.isActive(c))), staged, c)
+    val all = table.map(_.filter(!Scd2.isActive(c))).fold(split.closed)(
+      _.unionByName(split.closed, allowMissingColumns = true))
+      .unionByName(split.active, allowMissingColumns = true)
+    spark.createDataFrame(all.collect().toSeq.asJava, all.schema)
+  }
+
+  /** Rows of `df` over `cols` as sorted strings, a multiset to compare. */
+  private def rowsOver(df: DataFrame, cols: Seq[String]): Seq[String] =
+    rows(df.select(cols.map(col): _*))
+
+  test("a merge-on-read SCD2 table reads equal to the rewrite path, load after load") {
+    // each case: a config, the staged loads, the tombstone column its
+    // loads retire by (None: every load folds), and whether `_dlt_id`
+    // rides the frames as a pipeline load's hash of every data column
+    val keyed = cfg.copy(mergeKey = Seq("id"))
+    val shared = cfg.copy(trackedColumns = Seq("v"), mergeKey = Seq("k"))
+    // 34 loads, each changing one of six entities: the active fold at
+    // loads 17 and 33, the closed fold at load 34
+    val long = (0 until 33).scanLeft((1L to 6L).map(i => i -> s"v$i").toMap) {
+      (m, k) => m + ((k % 6 + 1).toLong -> s"v${k % 6 + 1}-$k")
+    }.map(m => m.toSeq.sorted.toDF("id", "v"))
+    val cases: Seq[(String, Scd2Config, Seq[DataFrame], Option[String], Boolean)] = Seq(
+      ("merge key", keyed, Seq(
+        Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"),
+        Seq((2L, "b2"), (4L, "d")).toDF("id", "v"),
+        Seq((2L, "b2"), (3L, "c")).toDF("id", "v"),
+        Seq((1L, "a3"), (2L, "b3"), (3L, "c3"), (4L, "d3")).toDF("id", "v")),
+        Some("_dlt_row_hash"), false),
+      // p1 and p2 share a row hash; a load of p2 alone retires only p2's
+      ("untracked merge key", shared, Seq(
+        Seq(("p1", "a"), ("p2", "a"), ("p3", "q")).toDF("k", "v"),
+        Seq(("p2", "b")).toDF("k", "v"),
+        Seq(("p1", "b"), ("p2", "a")).toDF("k", "v")),
+        Some(Ids.DltId), true),
+      ("untracked merge key, no _dlt_id", shared, Seq(
+        Seq(("p1", "a"), ("p2", "a")).toDF("k", "v"),
+        Seq(("p2", "b")).toDF("k", "v")),
+        None, false),
+      // (1, a) retires, comes back, and retires again; no-retire and
+      // all-retire loads between
+      ("re-activated row hash", cfg, Seq(
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+        Seq((1L, "a2"), (2L, "b")).toDF("id", "v"),
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+        Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"),
+        Seq((9L, "z")).toDF("id", "v"),
+        Seq((1L, "a"), (9L, "z")).toDF("id", "v"),
+        Seq((1L, "a2"), (9L, "z")).toDF("id", "v")),
+        Some("_dlt_row_hash"), false),
+      ("folds", keyed, long, Some("_dlt_row_hash"), false))
+    cases.foreach { case (name, c0, loads, idColumn, withId) =>
+      val store = new TableStore(tmp(), spark)
+      val d = new Dispositions(store, spark)
+      var want = Option.empty[DataFrame]
+      var tombstoned = false
+      val snaps = loads.zipWithIndex.map { case (raw, k) =>
+        val at = s"$name, load ${k + 1}"
+        val c = c0.copy(boundaryTs =
+          s"${java.time.LocalDate.of(2024, 1, 1).plusDays(k.toLong)} 00:00:00")
+        val staged =
+          if (withId) raw.withColumn(Ids.DltId, Ids.rowHash(raw.columns.toSeq)) else raw
+        val activeBefore = activeSegments(store, "t").size
+        val closedBefore = closedSegments(store, "t").size
+        d.scd2("t", staged, c, s"${k + 1}")
+        want = Some(rewritten(want, staged.withColumn(Ids.DltLoadId, lit(s"${k + 1}")), c))
+        val cols = want.get.columns.toSeq.sorted
+        val got = store.read("t")
+        assert(got.columns.toSeq.sorted === cols, at)
+        assert(rowsOver(got, cols) === rowsOver(want.get, cols), at)
+        val tombs = store.tombstones("t")
+        if (idColumn.isEmpty || activeBefore >= 16 || closedBefore >= 32)
+          assert(tombs.isEmpty, at)
+        else assert(tombs.map(_.column).toSet.subsetOf(idColumn.toSet), at)
+        if (k > 0 && activeBefore >= 16) assert(activeSegments(store, "t").size === 1, at)
+        if (closedBefore >= 32) assert(closedSegments(store, "t").size === 1, at)
+        tombstoned ||= tombs.nonEmpty
+        (store.snapshots("t").last, want.get)
+      }
+      assert(tombstoned === idColumn.nonEmpty, name)
+      if (name == "folds") assert(closedSegments(store, "t").size === 1)
+      // time travel to earlier snapshots, then retention and vacuum
+      snaps.zipWithIndex.filter(_._2 % 8 == 1).foreach { case ((snap, w), k) =>
+        val cols = w.columns.toSeq.sorted
+        assert(rowsOver(store.readAt("t", snap), cols) === rowsOver(w, cols),
+          s"$name, readAt ${k + 1}")
+      }
+      val cols = want.get.columns.toSeq.sorted
+      store.vacuum("t")
+      assert(rowsOver(store.read("t"), cols) === rowsOver(want.get, cols), s"$name, vacuumed")
+      store.applyRetention("t", keepLast = 1)
+      assert(store.snapshots("t").size === 1, name)
+      assert(rowsOver(store.read("t"), cols) === rowsOver(want.get, cols), s"$name, retained")
+    }
   }
 }

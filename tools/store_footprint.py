@@ -22,10 +22,14 @@ the file's segment or tombstone:
             a vacuum drops those manifests.
 
 A file no manifest names counts in neither. It also counts parquet
-files, segment/tombstone directories under `data/`, and the non-parquet
-bytes (manifests, `_CURRENT`, CRCs), and lists the distinct codecs of
-the column chunks (`codecs`), so a file left in an older codec shows.
-The last row sums the tables and joins their codecs. `--json` prints
+files, segment/tombstone directories under `data/`, the non-parquet
+bytes (manifests, `_CURRENT`, CRCs) and `tombstones`, the live
+tombstone lines of the current manifest (merge-on-read deletes not yet
+folded away: `compact` and an SCD2 fold clear them past 16), and lists
+the distinct codecs of the column chunks (`codecs`), so a file left in
+an older codec shows. An SCD2 tombstone's id file is that load's closed
+segment, so it adds a tombstone line but no directory or bytes. The
+last row sums the tables and joins their codecs. `--json` prints
 the rows as one JSON list.
 """
 import json
@@ -37,7 +41,7 @@ import pyarrow.parquet as pq
 
 
 COUNTS = ("files", "dirs", "parquet_bytes", "data_bytes", "other_bytes",
-          "live_bytes", "retained_bytes", "non_parquet_bytes")
+          "live_bytes", "retained_bytes", "non_parquet_bytes", "tombstones")
 
 
 def manifest_names(path):
@@ -55,10 +59,14 @@ def manifest_names(path):
     return names
 
 
+def current_manifest(table_dir):
+    with open(os.path.join(table_dir, "_CURRENT"), encoding="utf-8") as f:
+        return f.read().strip()
+
+
 def referenced(table_dir):
     """(names the current manifest references, names only older ones do)."""
-    with open(os.path.join(table_dir, "_CURRENT"), encoding="utf-8") as f:
-        current = f.read().strip()
+    current = current_manifest(table_dir)
     live, older = set(), set()
     for e in os.scandir(table_dir):
         if e.name.startswith("manifest-") and e.name.endswith(".txt"):
@@ -66,10 +74,18 @@ def referenced(table_dir):
     return live, older - live
 
 
+def live_tombstones(table_dir):
+    """The tombstone lines (`!`-prefixed) of the current manifest."""
+    with open(os.path.join(table_dir, current_manifest(table_dir)),
+              encoding="utf-8") as f:
+        return sum(1 for line in f if line.startswith("!"))
+
+
 def table_footprint(table_dir):
     row = dict.fromkeys(COUNTS, 0)
     codecs = set()
     live, retained = referenced(table_dir)
+    row["tombstones"] = live_tombstones(table_dir)
     data_dir = os.path.join(table_dir, "data")
     if os.path.isdir(data_dir):
         row["dirs"] = sum(1 for e in os.scandir(data_dir) if e.is_dir())
