@@ -44,6 +44,18 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  /** `body` run with the session confs `kv` set, each restored (or
+    * unset) after it. */
+  def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Ids of the RDDs the session's context holds persisted. */
   def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 

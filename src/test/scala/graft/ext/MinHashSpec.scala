@@ -43,16 +43,6 @@ class MinHashSpec extends SparkSpec {
   private def kernelBands(sig: MinHash): Set[(Long, Int, Long)] =
     rows(sig.banded(sig.hashed(docs, "doc_id", "text")))
 
-  private def withConf[A](kv: (String, String)*)(body: => A): A = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("the signature kernel's band rows equal the exploded min(xxhash64(shingle, p)) formula") {
     for (sig <- Seq(MinHash(), MinHash(n = 2, perms = 12, bands = 4))) {
       val want = rows(formulaBands(docs, sig))

@@ -285,16 +285,6 @@ class PruningSpec extends SparkSpec {
       .collect().toSeq === Seq((1L, "a"), (1L, "b")))
   }
 
-  private def withConf[A](kv: (String, String)*)(body: => A): A = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def joins(df: org.apache.spark.sql.DataFrame): Int =
     df.queryExecution.optimizedPlan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
