@@ -135,9 +135,13 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     *
     * The tombstone column must name exactly the rows that retire:
     * `_dlt_row_hash` when every merge-key column is hashed (equal
-    * hashes then imply equal scope; the table's tracked columns are
-    * fixed for its life, as the hash stored in its rows assumes), else
-    * `_dlt_id` (on pipeline loads a hash of every non-system column).
+    * hashes then imply equal scope), else `_dlt_id` (on pipeline loads
+    * a hash of every non-system column). The split recomputes the
+    * active rows' hashes, so a tombstone on `_dlt_row_hash` matches the
+    * stored ones only while the hash's inputs ([[Scd2.hashInputs]]:
+    * the tracked columns and the session settings the hash renders
+    * under) are those the active segments were written with; every
+    * active segment is tagged with them.
     * The tombstone covers only the active segments, so a re-activated
     * row hash keeps its closed history and its new active row lands in
     * a segment no tombstone covers.
@@ -145,10 +149,10 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     * A FOLD rewrites the active set instead (the split of every live
     * active row, as one new active segment) and clears the tombstones:
     * when no column qualifies, when the load changes the active
-    * schema, when the active segments or the live tombstones would pass
-    * [[TableStore.compact]]'s 16, and when the closed segments reach
-    * 32, which also folds the closed history into one segment (never
-    * an id file: it holds older retirements). Every segment reads the
+    * schema or the hash's inputs, when the active segments or the live
+    * tombstones would pass [[TableStore.compact]]'s 16, and when the
+    * closed segments reach 32, which also folds the closed history into
+    * one segment (never an id file: it holds older retirements). Every segment reads the
     * split's one pinned frame; an empty write is dropped, and finding
     * that out costs no job of its own (the write counts its rows). */
   def scd2(table: String, staging: DataFrame, cfg: Scd2Config,
@@ -156,8 +160,10 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     // same pin rationale as merge: the staged snapshot feeds both
     // sides of the split and the range-layout sampling
     val staged = Dedup.pin(stamp(staging, loadId))
-    def actives(df: DataFrame, dropEmpty: Boolean = false) =
-      SegmentWrite(df, tags = scd2Tag("active"), dropEmpty = dropEmpty)
+    val hashInputs = Scd2.hashInputs(cfg, spark.conf)
+    def actives(df: DataFrame, dropEmpty: Boolean = false) = SegmentWrite(df,
+      tags = scd2Tag("active") + (Scd2HashMarker -> ColStats(hashInputs, hashInputs,
+        numeric = false)), dropEmpty = dropEmpty)
     // closed rows in the active rows' column order: both segments then
     // memoize one schema, and the table reads with no footer-merge job
     def closeds(df: DataFrame, active: DataFrame) = SegmentWrite(
@@ -180,6 +186,7 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
       val foldClosed = closedSegs.size >= 32 // compact closed history rarely
       val fold = foldClosed || idColumn.isEmpty ||
         shape(split.active) != dest.map(shape).getOrElse(Nil) ||
+        activeSegs.exists(!_.stats.get(Scd2HashMarker).exists(_.min == hashInputs)) ||
         activeSegs.size >= 16 || store.tombstones(table).size >= 16
       if (!fold)
         store.commitSegments(table, segs, Seq(actives(split.inserted, dropEmpty = true),
@@ -207,6 +214,7 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
   }
 
   private val Scd2Marker = "__scd2_state"
+  private val Scd2HashMarker = "__scd2_hash_inputs"
   private def scd2Tag(v: String) = Map(Scd2Marker -> ColStats(v, v, numeric = false))
 
   private def stamp(df: DataFrame, loadId: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.write
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RuntimeConfig}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -66,6 +66,16 @@ object Scd2 {
   def hashedColumns(cfg: Scd2Config): Seq[String] =
     cfg.trackedColumns.filterNot(Seq(cfg.validFromColumn, cfg.validToColumn,
       cfg.rowHashColumn).contains).filterNot(Ids.systemColumns.contains)
+
+  /** What a row hash depends on besides the row: the hashed columns, in
+    * the order the hash reads them, and the session settings `to_json`
+    * renders them under (timestamps in the session time zone; null
+    * fields dropped or written). Hashes taken under different inputs
+    * never compare equal, so [[Dispositions.scd2]] tags its active
+    * segments with these and folds when a load's differ. */
+  def hashInputs(cfg: Scd2Config, conf: RuntimeConfig): String =
+    (hashedColumns(cfg).sorted ++ Seq("spark.sql.session.timeZone",
+      "spark.sql.jsonGenerator.ignoreNullFields").map(conf.get)).mkString(",")
 
   /** One load's split: the rows active after it, the rows it retires
     * (closed), and the staged rows it inserts — the part of `active`

@@ -242,9 +242,10 @@ final class TableStore(val root: String, val spark: SparkSession) {
     appliedRead(table, segs, currentTombstones(table))
 
   /** Per group and tombstone column, the ids apply as a `NOT IN` filter
-    * when [[driverIds]] reads them (no Spark job), else as a
-    * `left_anti` join, the one path that takes a delete too large for
-    * the driver. Both keep a null id: it matches no tombstone id. */
+    * when [[driverIds]] reads them, at most [[DriverIdCap]] (no Spark
+    * job), else as a `left_anti` join, the one path that takes a delete
+    * too large for the driver. Both keep a null id: it matches no
+    * tombstone id. */
   private def appliedRead(table: String, segs: Seq[Segment],
       tombs: Seq[Tombstone]): DataFrame = {
     val relevant = tombs.filter(t => segs.exists(s => t.covered(s.name)))
@@ -259,7 +260,8 @@ final class TableStore(val root: String, val spark: SparkSession) {
             if (!acc.columns.contains(c)) acc
             else {
               val idType = acc.schema(c).dataType
-              driverIds(table, ts, c).filter(_.forall(Literal(_).dataType == idType)) match {
+              driverIds(table, ts, c, DriverIdCap)
+                  .filter(_.forall(Literal(_).dataType == idType)) match {
                 case Some(ids) =>
                   acc.filter(!coalesce(col(c).isin(ids.distinct: _*), lit(false)))
                 // no distinct: duplicate ids on an anti-join's right
@@ -274,17 +276,31 @@ final class TableStore(val root: String, val spark: SparkSession) {
   }
 
   /** The non-null `c` values of the id files of `ts`, read on the driver
-    * with no Spark job, when those files together fit under
-    * `spark.sql.autoBroadcastJoinThreshold`: the size at which Spark
-    * would broadcast an anti-join's id side anyway. None past it (or
-    * with broadcasting off), or when a file's `c` is not a string,
-    * int or long ([[TinyParquet.readFile]]). */
-  private def driverIds(table: String, ts: Seq[Tombstone], c: String): Option[Seq[Any]] = {
+    * with no Spark job, when those files hold at most `maxIds` rows (by
+    * their footers) and fit under `spark.sql.autoBroadcastJoinThreshold`,
+    * the size at which Spark would broadcast an anti-join's id side
+    * anyway. None past either bar (or with broadcasting off), or when a
+    * file's `c` is not a string, int or long ([[TinyParquet.readFile]]). */
+  private def driverIds(table: String, ts: Seq[Tombstone], c: String,
+      maxIds: Long): Option[Seq[Any]] = {
     val bar = spark.sessionState.conf.autoBroadcastJoinThreshold
     val files = ts.flatMap(t => segmentFiles(resolve(table, t.name)))
     if (bar < 0 || files.map(Files.size).sum > bar) None
-    else Try(files.flatMap(f => TinyParquet.readFile(f, Some(c)).flatMap(_.get(c)))).toOption
+    else Try {
+      if (files.map(TinyParquet.rowCount).sum > maxIds) None
+      else Some(files.flatMap(f => TinyParquet.readFile(f, Some(c)).flatMap(_.get(c))))
+    }.toOption.flatten
   }
+
+  /** The most ids [[appliedRead]] filters by on the driver. Every id of
+    * a `NOT IN` filter costs each read of the table tens of microseconds
+    * on the driver (planning the `IN` list, rendering it in the plan
+    * strings): on a
+    * 2M-row table, 1,000 long ids read in about the time the broadcast
+    * join takes with its job, 10,000 take twice that, 100,000 fifteen
+    * times (NOTES). The broadcast join ships its ids once per executor
+    * and costs one job whatever their number. */
+  private val DriverIdCap = 1000
 
   /** A tombstone's id file, read through [[segmentSchemas]] when its
     * schema is memoized (no schema-inference job). */
@@ -675,12 +691,13 @@ final class TableStore(val root: String, val spark: SparkSession) {
   }
 
   /** Is `value` among a tombstone's dead ids? Read on the driver
-    * ([[driverIds]]), with no Spark job. Conservative when the id files
+    * ([[driverIds]]), with no Spark job, and no bar on their number: the
+    * ids are scanned, never planned. Conservative when the id files
     * pass the broadcast threshold or do not read as string, int or long
     * ids: report absent (no pruning). */
   private def tombstoneContains(table: String, t: Tombstone,
       value: String): Boolean =
-    driverIds(table, Seq(t), t.column).exists(_.exists(_.toString == value))
+    driverIds(table, Seq(t), t.column, Long.MaxValue).exists(_.exists(_.toString == value))
 
   /** Compaction (the `OPTIMIZE` analog): rewrite the live segments into
     * one when the table has accumulated more than `maxSegments` data

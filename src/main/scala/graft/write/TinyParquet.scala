@@ -69,6 +69,14 @@ object TinyParquet {
     } finally writer.close()
   }
 
+  /** The row count of one parquet file, read from its footer alone. */
+  def rowCount(path: Path): Long = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(path.toUri), new Configuration())
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try reader.getRecordCount finally reader.close()
+  }
+
   /** Driver-side READ of one tiny parquet file — the other half of the
     * metadata fast path: resolving a collection manifest / index-config
     * row through a Spark job costs the same 100-300 ms fixed overhead

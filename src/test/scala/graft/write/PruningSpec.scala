@@ -352,6 +352,17 @@ class PruningSpec extends SparkSpec {
         assert(rowsOf(joined, joined.columns.toSeq) === viaDriver, name)
       }
     }
+    // up to 1,000 ids in a column's id files filter on the driver; one
+    // more takes the join, whose one job costs less than planning them
+    val many = new TableStore(tmp(), spark)
+    many.append("t", (1L to 3000L).map(i => (i, s"v$i")).toDF("id", "v"))
+    many.deleteByIds("t", "id", (1L to 600L).toDF("id"))
+    many.deleteByIds("t", "id", (601L to 1000L).toDF("id"))
+    assert(joins(many.read("t")) === 0)
+    assert(many.read("t").count() === 2000)
+    many.deleteByIds("t", "id", Seq(1001L).toDF("id"))
+    assert(joins(many.read("t")) > 0)
+    assert(many.read("t").count() === 1999)
   }
 
   test("scd2 loads leave closed-history segments untouched") {

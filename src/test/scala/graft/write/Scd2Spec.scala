@@ -292,47 +292,91 @@ class Scd2Spec extends SparkSpec {
         Some("_dlt_row_hash"), false),
       ("folds", keyed, long, Some("_dlt_row_hash"), false))
     cases.foreach { case (name, c0, loads, idColumn, withId) =>
-      val store = new TableStore(tmp(), spark)
-      val d = new Dispositions(store, spark)
-      var want = Option.empty[DataFrame]
-      var tombstoned = false
-      val snaps = loads.zipWithIndex.map { case (raw, k) =>
-        val at = s"$name, load ${k + 1}"
-        val c = c0.copy(boundaryTs =
-          s"${java.time.LocalDate.of(2024, 1, 1).plusDays(k.toLong)} 00:00:00")
-        val staged =
-          if (withId) raw.withColumn(Ids.DltId, Ids.rowHash(raw.columns.toSeq)) else raw
-        val activeBefore = activeSegments(store, "t").size
-        val closedBefore = closedSegments(store, "t").size
+      agreeLoadAfterLoad(name, loads.map((_, c0, "UTC")), idColumn, withId)
+    }
+  }
+
+  /** Loads `loads` in order, each under its config and session time
+    * zone with load k's day as its boundary, into a merge-on-read table
+    * and by the rewrite path, and checks that the two read equal after
+    * every load, at earlier snapshots, and after vacuum and retention.
+    * `idColumn`: the tombstone column the loads retire by (None: every
+    * load folds); `withId`: `_dlt_id` rides the frames as a pipeline
+    * load's hash of every data column. A load whose tracked columns or
+    * time zone differ from the one before must fold. */
+  private def agreeLoadAfterLoad(name: String, loads: Seq[(DataFrame, Scd2Config, String)],
+      idColumn: Option[String], withId: Boolean): Unit = {
+    val store = new TableStore(tmp(), spark)
+    val d = new Dispositions(store, spark)
+    var want = Option.empty[DataFrame]
+    var tombstoned = false
+    val snaps = loads.zipWithIndex.map { case ((raw, c0, zone), k) =>
+      val at = s"$name, load ${k + 1}"
+      val c = c0.copy(boundaryTs =
+        s"${java.time.LocalDate.of(2024, 1, 1).plusDays(k.toLong)} 00:00:00")
+      val changed = k > 0 && {
+        val (_, prev, prevZone) = loads(k - 1)
+        prev.trackedColumns != c0.trackedColumns || prevZone != zone
+      }
+      val staged =
+        if (withId) raw.withColumn(Ids.DltId, Ids.rowHash(raw.columns.toSeq)) else raw
+      val activeBefore = activeSegments(store, "t").size
+      val closedBefore = closedSegments(store, "t").size
+      withConf("spark.sql.session.timeZone" -> zone) {
         d.scd2("t", staged, c, s"${k + 1}")
         want = Some(rewritten(want, staged.withColumn(Ids.DltLoadId, lit(s"${k + 1}")), c))
-        val cols = want.get.columns.toSeq.sorted
-        val got = store.read("t")
-        assert(got.columns.toSeq.sorted === cols, at)
-        assert(rowsOver(got, cols) === rowsOver(want.get, cols), at)
-        val tombs = store.tombstones("t")
-        if (idColumn.isEmpty || activeBefore >= 16 || closedBefore >= 32)
-          assert(tombs.isEmpty, at)
-        else assert(tombs.map(_.column).toSet.subsetOf(idColumn.toSet), at)
-        if (k > 0 && activeBefore >= 16) assert(activeSegments(store, "t").size === 1, at)
-        if (closedBefore >= 32) assert(closedSegments(store, "t").size === 1, at)
-        tombstoned ||= tombs.nonEmpty
-        (store.snapshots("t").last, want.get)
-      }
-      assert(tombstoned === idColumn.nonEmpty, name)
-      if (name == "folds") assert(closedSegments(store, "t").size === 1)
-      // time travel to earlier snapshots, then retention and vacuum
-      snaps.zipWithIndex.filter(_._2 % 8 == 1).foreach { case ((snap, w), k) =>
-        val cols = w.columns.toSeq.sorted
-        assert(rowsOver(store.readAt("t", snap), cols) === rowsOver(w, cols),
-          s"$name, readAt ${k + 1}")
       }
       val cols = want.get.columns.toSeq.sorted
-      store.vacuum("t")
-      assert(rowsOver(store.read("t"), cols) === rowsOver(want.get, cols), s"$name, vacuumed")
-      store.applyRetention("t", keepLast = 1)
-      assert(store.snapshots("t").size === 1, name)
-      assert(rowsOver(store.read("t"), cols) === rowsOver(want.get, cols), s"$name, retained")
+      val got = store.read("t")
+      assert(got.columns.toSeq.sorted === cols, at)
+      assert(rowsOver(got, cols) === rowsOver(want.get, cols), at)
+      val tombs = store.tombstones("t")
+      if (idColumn.isEmpty || changed || activeBefore >= 16 || closedBefore >= 32)
+        assert(tombs.isEmpty, at)
+      else assert(tombs.map(_.column).toSet.subsetOf(idColumn.toSet), at)
+      if (k > 0 && activeBefore >= 16) assert(activeSegments(store, "t").size === 1, at)
+      if (closedBefore >= 32) assert(closedSegments(store, "t").size === 1, at)
+      tombstoned ||= tombs.nonEmpty
+      (store.snapshots("t").last, want.get)
     }
+    assert(tombstoned === idColumn.nonEmpty, name)
+    if (name == "folds") assert(closedSegments(store, "t").size === 1)
+    // time travel to earlier snapshots, then retention and vacuum
+    snaps.zipWithIndex.filter(_._2 % 8 == 1).foreach { case ((snap, w), k) =>
+      val cols = w.columns.toSeq.sorted
+      assert(rowsOver(store.readAt("t", snap), cols) === rowsOver(w, cols),
+        s"$name, readAt ${k + 1}")
+    }
+    val cols = want.get.columns.toSeq.sorted
+    store.vacuum("t")
+    assert(rowsOver(store.read("t"), cols) === rowsOver(want.get, cols), s"$name, vacuumed")
+    store.applyRetention("t", keepLast = 1)
+    assert(store.snapshots("t").size === 1, name)
+    assert(rowsOver(store.read("t"), cols) === rowsOver(want.get, cols), s"$name, retained")
+  }
+
+  test("a load that changes the hash's inputs folds, and reads equal to the rewrite path") {
+    // load 2 starts tracking `w`, a column the table already holds: the
+    // table's shape is unchanged, but every recomputed hash differs
+    // from the stored one, so a tombstone on the new hash of (2, b)
+    // would match nothing
+    val narrow = cfg.copy(trackedColumns = Seq("id", "v"))
+    val wide = cfg.copy(trackedColumns = Seq("id", "v", "w"))
+    agreeLoadAfterLoad("tracked columns", Seq(
+      (Seq((1L, "a", "x"), (2L, "b", "y"), (3L, "c", "z")).toDF("id", "v", "w"), narrow, "UTC"),
+      (Seq((1L, "a", "x"), (2L, "b2", "y"), (3L, "c", "z")).toDF("id", "v", "w"), wide, "UTC"),
+      (Seq((1L, "a", "x"), (2L, "b2", "y"), (3L, "c3", "z")).toDF("id", "v", "w"), wide, "UTC")),
+      Some("_dlt_row_hash"), withId = false)
+    // a tracked timestamp hashes as rendered in the session time zone:
+    // the same instants hash differently from load 2 on
+    val stamped = cfg.copy(trackedColumns = Seq("id", "at"))
+    def at(rows: (Long, Long)*) =
+      rows.toDF("id", "s").select(col("id"), timestamp_seconds(col("s")).as("at"))
+    val (may, june, july) = (1682935200L, 1685700000L, 1688205600L)
+    agreeLoadAfterLoad("session time zone", Seq(
+      (at((1L, may), (2L, may)), stamped, "UTC"),
+      (at((1L, may), (2L, june)), stamped, "America/New_York"),
+      (at((1L, july), (2L, june)), stamped, "America/New_York")),
+      Some("_dlt_row_hash"), withId = false)
   }
 }
